@@ -47,14 +47,18 @@ case class RegexExtractNull(child: Expression, pattern: String, groupIdx: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val patRef = ctx.addReferenceObj("pattern", compiled, "java.util.regex.Pattern")
+    // its own block: over a non-nullable input nullSafeCodeGen emits the body
+    // unwrapped, and a second extract in the same method would redeclare `m`
     nullSafeCodeGen(ctx, ev, c =>
       s"""
-         |java.util.regex.Matcher m = $patRef.matcher($c.toString());
-         |if (m.find()) {
-         |  String g = m.group($groupIdx);
-         |  if (g == null) { ${ev.isNull} = true; }
-         |  else { ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(g); }
-         |} else { ${ev.isNull} = true; }
+         |{
+         |  java.util.regex.Matcher m = $patRef.matcher($c.toString());
+         |  if (m.find()) {
+         |    String g = m.group($groupIdx);
+         |    if (g == null) { ${ev.isNull} = true; }
+         |    else { ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(g); }
+         |  } else { ${ev.isNull} = true; }
+         |}
        """.stripMargin)
   }
 

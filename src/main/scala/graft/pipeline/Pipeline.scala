@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.dftly.{Compiler, DictParser, Yaml}
 import graft.ops.Dedup
@@ -26,6 +28,12 @@ import graft.ops.Dedup
   *   - orderBy: [-total_rev]
   *   - limit: 100
   * ```
+  *
+  * `withColumns` (and `window.cols`) mean a chain of `withColumn`: each
+  * entry sees the outputs of the entries before it, and an existing name is
+  * replaced in place. They are built as one projection per dependency layer
+  * rather than one per entry, so plan size and analysis cost follow the
+  * dependency depth, not the column count.
   *
   * Scale contract: `select`/`withColumns`/`filter` are shuffle-free;
   * `groupBy` aggregates map-side before its single shuffle; `join` takes an
@@ -63,6 +71,69 @@ object Pipeline {
 
   private def compileExpr(raw: Any, df: DataFrame): Column =
     Compiler.compile(DictParser.parse(raw), Some(df.schema))
+
+  /** One output of a `withColumns`-like step: its name, the column names
+    * its expression reads, and its lowering against the frame it reads.
+    */
+  private final case class Derived(name: String, reads: Set[String], build: DataFrame => Column)
+
+  /** Adds or replaces `entries` with the meaning of a left fold of
+    * `withColumn` — each entry sees every earlier entry's output, a name
+    * that already exists is replaced in place, a new one is appended — but
+    * builds one projection per dependency layer instead of one per entry,
+    * so analysis cost follows the dependency depth, not the entry count.
+    *
+    * Every layer constraint points from an earlier entry to a later one,
+    * so one forward pass gives each entry its lowest legal layer:
+    *   - an entry that reads an earlier entry's output, or redefines its
+    *     name, goes in a later layer;
+    *   - an entry that redefines a name an earlier entry reads goes no
+    *     earlier than that reader, which must not see the new value.
+    * Names match with the session resolver, as `withColumn` matches them.
+    * Each layer lowers against the previous layer's schema, so
+    * schema-directed lowering (string `+`, `??` typing) sees what the fold
+    * would show it, and the last layer emits the fold's column order.
+    */
+  private def withDerived(df: DataFrame, derived: Seq[Derived]): DataFrame = {
+    val entries = derived.toVector
+    val same = df.sparkSession.sessionState.analyzer.resolver
+    val layer = new Array[Int](entries.size)
+    for (i <- entries.indices; j <- 0 until i) {
+      val (e, p) = (entries(i), entries(j))
+      if (same(p.name, e.name) || e.reads.exists(same(p.name, _)))
+        layer(i) = layer(i) max (layer(j) + 1)
+      if (p.reads.exists(same(e.name, _)))
+        layer(i) = layer(i) max layer(j)
+    }
+    // columns as (name, origin): origin i >= 0 is entry i, -1 - p is
+    // source column p; `put` is `withColumn` on names alone
+    def put(cols: Vector[(String, Int)], i: Int): Vector[(String, Int)] = {
+      val n = entries(i).name
+      if (cols.exists(c => same(c._1, n))) cols.map(c => if (same(c._1, n)) (n, i) else c)
+      else cols :+ (n -> i)
+    }
+    val source = df.columns.toVector.zipWithIndex.map { case (n, p) => (n, -1 - p) }
+    val target = entries.indices.foldLeft(source)(put)
+    val layers = entries.indices.groupBy(layer(_)).toSeq.sortBy(_._1).map(_._2)
+    layers.zipWithIndex.foldLeft((df, source)) { case ((cur, cols), (members, k)) =>
+      val built = members.map(i => i -> entries(i).build(cur)).toMap
+      val attrs = cur.queryExecution.analyzed.output
+      // `put` keeps every untouched column at its position in `cur`
+      val placed = members.foldLeft(cols)(put)
+      val proj = placed.zipWithIndex.map { case ((n, o), p) =>
+        built.get(o).fold(ColumnBridge.column(attrs(p)))(_.as(n))
+      }
+      val order =
+        if (k < layers.size - 1) placed.indices
+        else {
+          // one origin can fill several columns (an entry whose name
+          // matched several); pair their occurrences in order
+          val at = placed.indices.groupBy(placed(_)._2).map { case (o, ps) => o -> ps.iterator }
+          target.map(t => at(t._2).next())
+        }
+      (cur.select(order.map(proj): _*), placed)
+    }._1
+  }
 
   /** Driver-side artifact write with the shard commit protocol: create a
     * dot-prefixed temp, rename into place. Rename failure with the
@@ -483,9 +554,11 @@ object Pipeline {
         df.select(cols: _*)
 
       case "withColumns" =>
-        orderedEntries(step("withColumns"), "withColumns").foldLeft(df) {
-          case (acc, (name, raw)) => acc.withColumn(name, compileExpr(raw, acc))
-        }
+        withDerived(df, orderedEntries(step("withColumns"), "withColumns").map {
+          case (name, raw) =>
+            val node = DictParser.parse(raw)
+            Derived(name, node.referencedColumns, d => Compiler.compile(node, Some(d.schema)))
+        })
 
       case "filter" =>
         df.filter(compileExpr(step("filter"), df))
@@ -685,41 +758,45 @@ object Pipeline {
         // cols: {out: row_number|rank|dense_rank|lag:<expr>|lead:<expr>|
         //        sum:<expr>|...}}
         val wspec = asMap(step("window"), "window")
-        val w0 = org.apache.spark.sql.expressions.Window
-          .partitionBy(asSeq(wspec.getOrElse("partitionBy", Seq.empty))
-            .map(s => col(s.toString)): _*)
-        val w = wspec.get("orderBy") match {
-          case Some(o) => w0.orderBy(sortCols(asSeq(o)): _*)
-          case None    => w0
-        }
-        orderedEntries(wspec.getOrElse("cols",
+        val partitionBy = asSeq(wspec.getOrElse("partitionBy", Seq.empty)).map(_.toString)
+        val orderBy = wspec.get("orderBy").map(asSeq).getOrElse(Seq.empty)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(partitionBy.map(col): _*)
+          .orderBy(sortCols(orderBy): _*)
+        // every column reads the spec's keys; all name parts count, so a
+        // nested field or qualified name depends on whatever defines a part
+        val specReads = (partitionBy ++ orderBy.map(_.toString.stripPrefix("-")))
+          .flatMap(UnresolvedAttribute.parseAttributeName).toSet
+        withDerived(df, orderedEntries(wspec.getOrElse("cols",
           throw new IllegalArgumentException("window needs 'cols'")), "window.cols")
-          .foldLeft(df) { case (d, (name, spec)) =>
-            val c = spec match {
-              case "row_number" => row_number()
-              case "rank"       => rank()
-              case "dense_rank" => dense_rank()
+          .map { case (name, spec) =>
+            def ranking(f: Column) = Derived(name, specReads, _ => f.over(w))
+            spec match {
+              case "row_number" => ranking(row_number())
+              case "rank"       => ranking(rank())
+              case "dense_rank" => ranking(dense_rank())
               case m: scala.collection.Map[_, _] =>
                 val fm = asMap(m, s"window col '$name'")
                 require(fm.size == 1, s"window col '$name' needs one {fn: expr}")
                 val (fn, rawExpr) = fm.head
-                val e = compileExpr(rawExpr, d)
-                fn match {
-                  case "sum"   => sum(e)
-                  case "avg"   => avg(e)
-                  case "min"   => min(e)
-                  case "max"   => max(e)
-                  case "count" => count(e)
-                  case "lag"   => lag(e, 1)
-                  case "lead"  => lead(e, 1)
+                val agg: Column => Column = fn match {
+                  case "sum"   => sum
+                  case "avg"   => avg
+                  case "min"   => min
+                  case "max"   => max
+                  case "count" => count
+                  case "lag"   => lag(_, 1)
+                  case "lead"  => lead(_, 1)
                   case other =>
                     throw new IllegalArgumentException(s"Unknown window fn: $other")
                 }
+                val node = DictParser.parse(rawExpr)
+                Derived(name, specReads ++ node.referencedColumns,
+                  d => agg(Compiler.compile(node, Some(d.schema))).over(w))
               case other =>
                 throw new IllegalArgumentException(s"bad window col '$name': $other")
             }
-            d.withColumn(name, c.over(w))
-          }
+          })
 
       case "qualitySignals" =>
         graft.ops.Corpus.withQualitySignals(df, step("qualitySignals").toString)

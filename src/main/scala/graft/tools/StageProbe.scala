@@ -34,8 +34,8 @@ object StageProbe {
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
-    val taskNanos = new AtomicLong   // executorRunTime (ms) summed
-    val cpuNanos = new AtomicLong    // executorCpuTime (ns) summed
+    val taskMs = new AtomicLong   // executorRunTime summed
+    val cpuNs = new AtomicLong    // executorCpuTime summed
     val gcMs = new AtomicLong
     val deserMs = new AtomicLong
     val resultMs = new AtomicLong
@@ -51,8 +51,8 @@ object StageProbe {
         tasks.incrementAndGet()
         val m = t.taskMetrics
         if (m != null) {
-          taskNanos.addAndGet(m.executorRunTime)
-          cpuNanos.addAndGet(m.executorCpuTime)
+          taskMs.addAndGet(m.executorRunTime)
+          cpuNs.addAndGet(m.executorCpuTime)
           gcMs.addAndGet(m.jvmGCTime)
           deserMs.addAndGet(m.executorDeserializeTime)
           resultMs.addAndGet(m.resultSerializationTime)
@@ -71,19 +71,19 @@ object StageProbe {
       q(spark, sfDir).write.format("noop").mode("overwrite").save() // cold
       System.gc()
       jobs.set(0); stages.set(0); tasks.set(0)
-      taskNanos.set(0); cpuNanos.set(0); gcMs.set(0); deserMs.set(0); resultMs.set(0)
+      taskMs.set(0); cpuNs.set(0); gcMs.set(0); deserMs.set(0); resultMs.set(0)
       stageAgg.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       q(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain
+      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       println(f"PROBE $n%-28s wall=$wall%7.3f s jobs=${jobs.get}%3d " +
         f"stages=${stages.get}%4d tasks=${tasks.get}%5d " +
-        f"taskTime=${taskNanos.get / 1e3}%8.2f s cpu=${cpuNanos.get / 1e9}%8.2f s gc=${gcMs.get / 1e3}%6.2f s " +
+        f"taskTime=${taskMs.get / 1e3}%8.2f s cpu=${cpuNs.get / 1e9}%8.2f s gc=${gcMs.get / 1e3}%6.2f s " +
         f"deser=${deserMs.get / 1e3}%6.2f s resSer=${resultMs.get / 1e3}%5.2f s " +
-        f"parallel=${taskNanos.get / 1e3 / wall}%5.2f")
+        f"parallel=${taskMs.get / 1e3 / wall}%5.2f")
       import scala.jdk.CollectionConverters._
       stageAgg.asScala.toSeq.sortBy(-_._2._3.get).take(10).foreach {
         case (id, (nm, tc, tt, gc, de)) =>

@@ -347,6 +347,20 @@ class CompilerSpec extends SparkTestBase {
     assert(!got2.isNullAt(0) && got2.getString(0) == "")
   }
 
+  test("regex extract: two extracts over a non-nullable input compile into one method") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.unsafe.types.UTF8String
+    // no interpreted fallback: a compile error in the generated code throws
+    val s = BoundReference(0, StringType, nullable = false)
+    val proj = GenerateUnsafeProjection.generate(
+      Seq(RegexExtractNull(s, "(\\d+)/(\\d+)", 2), RegexExtractNull(s, "^([a-z]+)", 1)))
+    val row = proj(InternalRow(UTF8String.fromString("ab 12/34")))
+    assert(row.getUTF8String(0).toString == "34")
+    assert(row.getUTF8String(1).toString == "ab")
+  }
+
   test("out-of-range integer literals error instead of wrapping") {
     val e = intercept[IllegalArgumentException] {
       Dftly.compile(Dftly.parse(Map("literal" -> BigInt("18446744073709551616"))), None)

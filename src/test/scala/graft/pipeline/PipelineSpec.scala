@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Window => WindowNode}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.dftly.SparkTestBase
+import graft.dftly.{Compiler, DictParser, SparkTestBase}
 
 class PipelineSpec extends SparkTestBase {
 
@@ -992,6 +995,130 @@ class PipelineSpec extends SparkTestBase {
     assert(ranks("https://a.x.co.uk/1").exists(r => math.abs(r - 1.0) < 1e-12))
     assert(ranks("https://b.x.co.uk/1").exists(r => math.abs(r - 1.0) < 1e-12))
     assert(ranks("https://c.test/1").isEmpty)
+  }
+
+  // withColumns / window build one projection per dependency layer; each
+  // test holds the step to the left fold of `withColumn` it replaces
+
+  private def withColumnFold(df: DataFrame, entries: Seq[(String, String)]): DataFrame =
+    entries.foldLeft(df) { case (acc, (n, e)) =>
+      acc.withColumn(n, Compiler.compile(DictParser.parse(e), Some(acc.schema)))
+    }
+
+  private def withColumnsStep(df: DataFrame, entries: Seq[(String, String)]): DataFrame = {
+    def q(s: String) = "'" + s.replace("'", "''") + "'"
+    val body = entries.map { case (n, e) => s"      ${q(n)}: ${q(e)}" }.mkString("\n")
+    Pipeline.run(spark, s"source: t\nsteps:\n  - withColumns:\n$body\n", Map("t" -> df))
+  }
+
+  /** Projects in `got`'s analyzed plan above those of its source `df`. */
+  private def addedProjects(got: DataFrame, df: DataFrame): Int = {
+    def n(d: DataFrame) = d.queryExecution.analyzed.collect { case p: Project => p }.size
+    n(got) - n(df)
+  }
+
+  private def assertAsFold(df: DataFrame, entries: (String, String)*): DataFrame = {
+    val got = withColumnsStep(df, entries)
+    val want = withColumnFold(df, entries)
+    assert(got.schema == want.schema)
+    assert(got.collect().toSeq == want.collect().toSeq)
+    got
+  }
+
+  private def cells(df: DataFrame): Seq[Seq[String]] =
+    df.collect().toSeq.map(_.toSeq.map(String.valueOf))
+
+  test("withColumns: new columns mixed across layers keep the fold's order") {
+    val df = Seq((1, "p"), (2, "q")).toDF("a", "s")
+    val got = assertAsFold(df,
+      "x" -> "$a + 1", "y" -> "$x * 2", "z" -> "$a - 1", "w" -> "$y + $z", "v" -> "5")
+    assert(got.columns.toSeq == Seq("a", "s", "x", "y", "z", "w", "v"))
+    assert(addedProjects(got, df) == 3)
+  }
+
+  test("withColumns: an overwritten source column, read before and after the overwrite") {
+    val df = Seq((1, 10), (2, 20)).toDF("a", "b")
+    // `before` sits in layer 1 (it reads t), so the overwrite of a, which
+    // reads nothing new, must wait for it there
+    val got = assertAsFold(df,
+      "t" -> "$b + 1", "before" -> "$a + $t", "a" -> "$a * 10", "after" -> "$a + 1")
+    assert(got.columns.toSeq == Seq("a", "b", "t", "before", "after"))
+    assert(cells(got) ==
+      Seq(Seq("10", "10", "11", "12", "11"), Seq("20", "20", "21", "23", "21")))
+  }
+
+  test("withColumns: a chain of depth 3 is three projections") {
+    val df = Seq(1, 2).toDF("a")
+    val got = assertAsFold(df, "c1" -> "$a + 1", "c2" -> "$c1 * 2", "c3" -> "$c2 - 3")
+    assert(cells(got.select("c3")) == Seq(Seq("1"), Seq("3")))
+    assert(addedProjects(got, df) == 3)
+  }
+
+  test("withColumns: string + across layers concatenates") {
+    val df = Seq("p", "q").toDF("s")
+    // d concatenates only if its layer lowers against a schema that shows
+    // a and c as strings; the source schema knows neither
+    val got = assertAsFold(df,
+      "a" -> "$s + \"x\"", "c" -> "$s + \"z\"", "b" -> "$a + \"y\"", "d" -> "$a + $c")
+    assert(cells(got.select("b", "d")) == Seq(Seq("pxy", "pxpz"), Seq("qxy", "qxqz")))
+  }
+
+  test("withColumns: names match case-insensitively, as withColumn matches them") {
+    assert(!spark.conf.get("spark.sql.caseSensitive").toBoolean)
+    val df = Seq(1, 2).toDF("a")
+    // A replaces a in place; y reads X as x; x redefines X after y read it
+    val got = assertAsFold(df,
+      "X" -> "$a + 1", "A" -> "$a * 3", "y" -> "$x * 2", "x" -> "$y + 1")
+    assert(got.columns.toSeq == Seq("A", "x", "y"))
+    assert(cells(got) == Seq(Seq("3", "5", "4"), Seq("6", "7", "6")))
+    // like the fold, a definition is analyzed even when a later one replaces it
+    intercept[org.apache.spark.sql.AnalysisException] {
+      withColumnsStep(df, Seq("X" -> "$nope", "x" -> "$a"))
+    }
+  }
+
+  test("withColumns: output names that contain a dot") {
+    val df = Seq((1, 2)).toDF("x", "p.q")
+    val got = assertAsFold(df,
+      "a.b" -> "$x + 1", "c" -> "$`a.b` * 2", "p.q" -> "$`p.q` * 3")
+    assert(got.columns.toSeq == Seq("x", "p.q", "a.b", "c"))
+    assert(cells(got) == Seq(Seq("1", "6", "2", "4")))
+  }
+
+  test("withColumns: 200 entries of dependency depth 1 analyze to at most 3 Projects") {
+    val df = Seq((1.0, "a")).toDF("v", "s")
+    val entries = (0 until 200).map { k =>
+      f"c$k%03d" -> (if (k >= 100 && k % 2 == 0) f"$$c${k - 100}%03d * 2" else s"$$v + $k")
+    }
+    val got = withColumnsStep(df, entries)
+    assert(addedProjects(got, df) <= 3, got.queryExecution.analyzed.treeString.take(2000))
+    assert(got.columns.toSeq == Seq("v", "s") ++ entries.map(_._1))
+  }
+
+  test("window: one Window per dependency layer, output as the withColumn fold") {
+    val df = Seq((1, 1, 1.0), (1, 2, 2.0), (1, 3, 4.0), (2, 1, 8.0), (2, 2, 16.0))
+      .toDF("g", "t", "v")
+    val got = Pipeline.run(spark,
+      """source: t
+        |steps:
+        |  - window:
+        |      partitionBy: [g]
+        |      orderBy: [t]
+        |      cols:
+        |        rk: row_number
+        |        s: {sum: $v}
+        |        prev: {lag: $s}
+        |""".stripMargin, Map("t" -> df))
+    val w = Window.partitionBy(col("g")).orderBy(col("t").asc)
+    val want = df.withColumn("rk", row_number().over(w))
+      .withColumn("s", sum(col("v")).over(w))
+      .withColumn("prev", lag(col("s"), 1).over(w))
+    assert(got.schema == want.schema)
+    assert(cells(got.orderBy("g", "t")) == cells(want.orderBy("g", "t")))
+    assert(cells(got.orderBy("g", "t").select("prev")).map(_.head) ==
+      Seq("null", "1.0", "3.0", "null", "8.0"))
+    // rk and s share one layer, prev reads s
+    assert(got.queryExecution.analyzed.collect { case x: WindowNode => x }.size == 2)
   }
 
 }
