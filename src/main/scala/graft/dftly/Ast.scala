@@ -12,6 +12,12 @@ package graft.dftly
   *
   * Nodes compile to `org.apache.spark.sql.Column` via [[Compiler]]; Catalyst supplies
   * all optimization and physical execution.
+  *
+  * The dict key, arity and `::` name of each positional node are declared once, in
+  * [[Builtins]]. Adding a built-in node takes a case class here, its line in
+  * [[Builtins.table]] and its arm in `Compiler.lower`; a keyword-argument node also
+  * needs its arms in [[DictParser]] and [[Render]]. The build fails on a node with no
+  * arm in `Compiler.lower` or `Render.toExprString`.
   */
 sealed trait Node extends Product with Serializable {
 

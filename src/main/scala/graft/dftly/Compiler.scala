@@ -197,12 +197,8 @@ object Compiler {
         o.map(x => base.otherwise(lower(x))).getOrElse(base)
 
       // --- strings ---------------------------------------------------------
-      case StringInterpolate(pattern, fields) =>
-        val pat = ConstEval.evalString(pattern).getOrElse(
-          throw new IllegalArgumentException(
-            "The pattern argument of string_interpolate must evaluate to a string literal."
-          )
-        )
+      case si @ StringInterpolate(_, fields) =>
+        val pat = ConstEval.interpolatePattern(si)
         // Split on `{}` placeholders; segments may contain literal braces
         // (already unescaped by the f-string splitter). concat is
         // null-propagating, matching pl.format.
@@ -219,25 +215,8 @@ object Compiler {
         val ps = parts.result()
         if (ps.isEmpty) lit("") else if (ps.size == 1) ps.head.cast(StringType) else concat(ps: _*)
 
-      case RegexExtract(pattern, source, groupIndex) =>
-        val pat = ConstEval.evalString(pattern).getOrElse(
-          throw new IllegalArgumentException(
-            "The pattern argument of regex_extract must evaluate to a string literal."
-          )
-        )
-        val idx = groupIndex
-          .map(g =>
-            ConstEval.evalInt(g).getOrElse(
-              throw new IllegalArgumentException(
-                "The group_index argument of regex_extract must evaluate to a non-negative integer."
-              )
-            )
-          )
-          .getOrElse(0)
-        if (idx < 0)
-          throw new IllegalArgumentException(
-            s"The group_index argument of regex_extract must be non-negative; got $idx"
-          )
+      case re @ RegexExtract(_, source, groupIndex) =>
+        val (pat, idx) = ConstEval.regexExtractArgs(re)
         // Port of the capture-group warning (reference: str.py:360-397).
         if (groupIndex.isEmpty &&
           java.util.regex.Pattern.compile(pat).matcher("").groupCount() > 0) {
@@ -258,8 +237,7 @@ object Compiler {
       case RegexMatch(pattern, source) =>
         regexp_like(lower(source), lower(pattern))
 
-      case Strptime(format, source, strict) =>
-        lowerStrptime(format, source, strict)
+      case sp: Strptime => lowerStrptime(sp)
 
       case LenChars(a) => length(lower(a))
 
@@ -289,20 +267,9 @@ object Compiler {
         }
 
       // --- cast ------------------------------------------------------------
-      case Cast(source, typeName, strictOpt) =>
-        val name = ConstEval.evalString(typeName).getOrElse(
-          throw new IllegalArgumentException(
-            "The type argument of a Cast operation must evaluate to a string literal."
-          )
-        )
-        if (!Types.TYPES.contains(name))
-          throw new IllegalArgumentException(s"Unsupported type: $name")
-        val strict = evalStrict(strictOpt)
-        if (!strict && !Types.lowersToCast(name))
-          throw new IllegalArgumentException(
-            s"Non-strict casting is not supported for unit '$name'; `strict` applies only to dtype casts."
-          )
-        val src = lower(source)
+      case c: Cast =>
+        val (name, strict) = ConstEval.castArgs(c)
+        val src = lower(c.source)
         if (Types.DURATION_UNIT_SECONDS.contains(name)) {
           // numeric → duration via exact decimal seconds-per-unit
           // (reference: types.py:53-64; months/years approximations verbatim).
@@ -396,26 +363,10 @@ object Compiler {
         .cast(LongType)
     }
 
-    private def evalStrict(strictOpt: Option[Node]): Boolean =
-      strictOpt match {
-        case None => true
-        case Some(n) =>
-          ConstEval.evalBool(n).getOrElse(
-            throw new IllegalArgumentException(
-              s"The strict argument must be a boolean, got $n"
-            )
-          )
-      }
-
-    private def lowerStrptime(format: Node, source: Node, strictOpt: Option[Node]): Column = {
-      val fmt = ConstEval.evalString(format).getOrElse(
-        throw new IllegalArgumentException(
-          "The format argument must evaluate to a string."
-        )
-      )
-      val strict = evalStrict(strictOpt)
-      val kind = Strftime.classify(fmt)
-      val src = lower(source)
+    private def lowerStrptime(sp: Strptime): Column = {
+      val (fmt, kind) = ConstEval.strptimeFormat(sp)
+      val strict = ConstEval.strictArg(sp.strict)
+      val src = lower(sp.source)
 
       if (fmt.trim == "%s") {
         // Unix-epoch directive: seconds since 1970 (reference TIME/DATETIME

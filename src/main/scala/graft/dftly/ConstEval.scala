@@ -96,6 +96,69 @@ object ConstEval {
     case l: Long if l.isValidInt        => l.toInt
   }
 
+  // Construction checks of config arguments (the reference's __post_init__),
+  // one per node kind. The parsers call them so bad input fails at parse
+  // time; Compiler calls them for the values, so class-form nodes fail at
+  // compile time with the same messages.
+
+  /** `node`, after `check` accepted it. */
+  private[dftly] def checked[N <: Node](node: N)(check: N => Any): N = { check(node); node }
+
+  /** Cast → (type name, strict) (reference: types.py:266-289). */
+  private[dftly] def castArgs(c: Cast): (String, Boolean) = {
+    val name = evalString(c.typeName).getOrElse(
+      throw new IllegalArgumentException(
+        "The type argument of a Cast operation must evaluate to a string literal."))
+    if (!Types.TYPES.contains(name))
+      throw new IllegalArgumentException(s"Unsupported type: $name")
+    val strict = strictArg(c.strict)
+    if (!strict && !Types.lowersToCast(name))
+      throw new IllegalArgumentException(
+        s"Non-strict casting is not supported for unit '$name'; `strict` applies only to dtype casts.")
+    (name, strict)
+  }
+
+  /** RegexExtract → (pattern, group index; 0 when absent)
+    * (reference: str.py:345-356).
+    */
+  private[dftly] def regexExtractArgs(r: RegexExtract): (String, Int) = {
+    val pat = evalString(r.pattern).getOrElse(
+      throw new IllegalArgumentException(
+        "The pattern argument of regex_extract must evaluate to a string literal."))
+    val idx = r.groupIndex.fold(0) { g =>
+      evalInt(g).getOrElse(
+        throw new IllegalArgumentException(
+          "The group_index argument of regex_extract must evaluate to a non-negative integer."))
+    }
+    if (idx < 0)
+      throw new IllegalArgumentException(
+        s"The group_index argument of regex_extract must be non-negative; got $idx")
+    (pat, idx)
+  }
+
+  /** Strptime → (format, output kind from [[Strftime.classify]])
+    * (reference: str.py:651-662).
+    */
+  private[dftly] def strptimeFormat(s: Strptime): (String, String) = {
+    val fmt = evalString(s.format).getOrElse(
+      throw new IllegalArgumentException(
+        "The format argument must be a NodeBase instance that evaluates to a string."))
+    (fmt, Strftime.classify(fmt))
+  }
+
+  /** StringInterpolate → its pattern (reference: str.py:135-149). */
+  private[dftly] def interpolatePattern(s: StringInterpolate): String =
+    evalString(s.pattern).getOrElse(
+      throw new IllegalArgumentException(
+        "The pattern argument must be a string, Literal, or Literal-evaluatable instance."))
+
+  /** The `strict` argument of a cast or strptime; absent means strict. */
+  private[dftly] def strictArg(strict: Option[Node]): Boolean = strict.forall { s =>
+    evalBool(s).getOrElse(
+      throw new IllegalArgumentException(
+        s"The strict argument must be a boolean, got ${eval(s).getOrElse(s)}"))
+  }
+
   private def eval2(args: Seq[Node])(f: Seq[Any] => Option[Any]): Option[Any] = {
     val vs = args.map(eval)
     if (vs.exists(_.isEmpty)) None else f(vs.map(_.get))

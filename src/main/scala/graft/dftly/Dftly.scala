@@ -27,9 +27,7 @@ object Dftly {
 
   /** Programmatic form: an already-loaded ordered map (or any Scala Map). */
   def toColumns(exprs: Seq[(String, Any)], schema: Option[StructType]): Seq[(String, Column)] =
-    exprs.map { case (name, v) =>
-      name -> Compiler.compile(DictParser.parse(v), schema).as(name)
-    }
+    exprs.map { case (name, v) => name -> Compiler.compile(parse(v), schema).as(name) }
 
   /** Parse any supported form into the AST (reference: parser.py:178-222). */
   def parse(value: Any): Node = DictParser.parse(value)
@@ -43,23 +41,23 @@ object Dftly {
     * `Parser.to_polars` (parser.py:329-334), a string that names an existing
     * file is read and parsed as that file's YAML.
     */
-  def toColumns(yaml: String, schema: Option[StructType], parser: DftlyParser): Seq[(String, Column)] = {
+  def toColumns(yaml: String, schema: Option[StructType], parser: DftlyParser): Seq[(String, Column)] =
+    parser.withActive(toColumns(loadOpMap(yaml), schema))
+
+  /** [[select]] under a custom node registry — custom nodes work in both the
+    * YAML dict form and string-form function calls.
+    */
+  def select(df: DataFrame, yaml: String, parser: DftlyParser): DataFrame =
+    parser.withActive(select(df, loadOpMap(yaml)))
+
+  /** The op-map of YAML text, or of the YAML file that `yaml` names. */
+  private def loadOpMap(yaml: String): Seq[(String, Any)] = {
     val text =
       if (yaml.length < 4096 && !yaml.contains('\n') &&
         java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(yaml)))
         java.nio.file.Files.readString(java.nio.file.Paths.get(yaml))
       else yaml
-    Yaml.loadExprMap(text).map { case (name, v) =>
-      name -> Compiler.compile(parser.parse(v), schema).as(name)
-    }
-  }
-
-  /** [[select]] under a custom node registry — custom nodes work in both the
-    * YAML dict form and string-form function calls.
-    */
-  def select(df: DataFrame, yaml: String, parser: DftlyParser): DataFrame = {
-    val cols = toColumns(yaml, Some(df.schema), parser)
-    df.select(cols.map(_._2): _*)
+    Yaml.loadExprMap(text)
   }
 
   /** Single string-form expression → Column (reference: parser.py:357-384). */
@@ -73,15 +71,11 @@ object Dftly {
     * usage (reference: README.md:80-93). The dataframe's schema drives the
     * type-directed `+` (string concat vs numeric add) dispatch.
     */
-  def select(df: DataFrame, yaml: String): DataFrame = {
-    val cols = toColumns(yaml, Some(df.schema))
-    df.select(cols.map(_._2): _*)
-  }
+  def select(df: DataFrame, yaml: String): DataFrame =
+    select(df, yaml, DftlyParser.active.value)
 
-  def select(df: DataFrame, exprs: Seq[(String, Any)]): DataFrame = {
-    val cols = toColumns(exprs, Some(df.schema))
-    df.select(cols.map(_._2): _*)
-  }
+  def select(df: DataFrame, exprs: Seq[(String, Any)]): DataFrame =
+    df.select(toColumns(exprs, Some(df.schema)).map(_._2): _*)
 
   /** Serialize an AST back to the dict/YAML form (total; round-trips through
     * [[parse]]). Beyond-reference: enables programmatic pipeline builders.

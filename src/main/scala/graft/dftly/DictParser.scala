@@ -2,6 +2,10 @@ package graft.dftly
 
 import java.time.{Instant, LocalDate, LocalDateTime, LocalTime}
 
+import scala.jdk.CollectionConverters._
+
+import ConstEval.checked
+
 /** Parses the dict/YAML "base form" into [[Node]] trees.
   *
   * Mirrors the reference's `Parser.__call__` (src/dftly/parser.py:178-222):
@@ -93,51 +97,38 @@ object DictParser {
     new IllegalArgumentException(lines.mkString("\n"))
   }
 
-  /** Built-in node keys, reference registration order
-    * (nodes/__init__.py:60-113).
-    */
-  private[dftly] val builtinKeys: Seq[String] = Seq(
-    "literal", "column",
-    "hash", "signed_hash", "not", "negate", "len_chars",
-    "and", "or", "add", "multiply", "mean", "min", "max", "coalesce",
-    "subtract", "divide", "power", "set_time",
-    "greater_than", "less_than", "equal", "not_equal",
-    "greater_than_or_equal", "less_than_or_equal",
-    "conditional", "string_interpolate",
-    "regex_extract", "regex_match", "strptime", "substring", "split", "cast",
-    "dt_year", "dt_month_of_year", "dt_day_of_month", "dt_day_of_week",
-    "dt_day_of_year", "dt_hour_of_day", "dt_minute_of_hour",
-    "dt_second_of_minute", "dt_week_of_year", "dt_quarter_of_year",
-    "dt_total_seconds", "dt_total_milliseconds", "dt_total_microseconds",
-    "dt_total_nanoseconds", "dt_total_minutes", "dt_total_hours",
-    "dt_total_days"
-  )
-
-  private[dftly] def isBuiltinKey(k: String): Boolean = builtinKeys.contains(k)
-
-  /** The default registry: one [[NodeSpec]] per built-in node, delegating to
-    * [[buildBuiltin]].
+  /** The default registry: one [[NodeSpec]] per [[Builtins]] table entry,
+    * delegating to [[buildBuiltin]].
     */
   private[dftly] lazy val builtinSpecs: Seq[(String, NodeSpec)] =
-    builtinKeys.map { k =>
-      k -> new NodeSpec {
-        val key: String = k
+    Builtins.table.map { entry =>
+      entry.key -> new NodeSpec {
+        val key: String = entry.key
         def build(value: Any, ctx: NodeSpec.Ctx): Node =
-          buildBuiltin(k, ctx.rawArgs(k, value), value, ctx.nested)
+          buildBuiltin(entry, ctx.rawArgs(key, value), ctx.nested)
       }
     }
+
+  /** A list payload as a Scala `Seq` (SnakeYAML yields `java.util.List`). */
+  private def asList(raw: Any): Option[Seq[Any]] = raw match {
+    case s: Seq[_]            => Some(s)
+    case l: java.util.List[_] => Some(l.asScala.toSeq)
+    case _                    => None
+  }
+
+  /** A raw payload as positional arguments: a list is the arguments, null is
+    * none, anything else is the single argument.
+    */
+  private[dftly] def positional(raw: Any): Seq[Any] =
+    if (raw == null) Nil else asList(raw).getOrElse(Seq(raw))
 
   /** Split raw short-form/resolved-form arguments into positional + keyword
     * (reference: base.py:230-291).
     */
   private def splitArgs(raw: Any): (Seq[Any], Map[String, Any]) = raw match {
-    case null => (Nil, Map.empty)
     case m: collection.Map[_, _] =>
       (Nil, m.asInstanceOf[collection.Map[String, Any]].toSeq.toMap)
-    case s: Seq[_]           => (s, Map.empty)
-    case l: java.util.List[_] =>
-      (scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.toSeq, Map.empty)
-    case other => (Seq(other), Map.empty)
+    case other => (positional(other), Map.empty)
   }
 
   // Ordered kwargs (preserve user order for error messages only).
@@ -157,7 +148,8 @@ object DictParser {
     kwargs.map { case (k, v) => k -> parse0(v, nested = true) }
   }
 
-  private[dftly] def buildBuiltin(key: String, raw: Any, whole: Any, nested: Boolean): Node = {
+  private def buildBuiltin(entry: Builtins.Entry, raw: Any, nested: Boolean): Node = {
+    val key = entry.key
     val (args, kwargs) = splitArgs(raw)
 
     def children: Seq[Node] = {
@@ -165,43 +157,29 @@ object DictParser {
         throw new IllegalArgumentException(s"$key does not accept keyword arguments")
       args.map(parse0(_, nested = true))
     }
-    def variadic(mk: Seq[Node] => Node): Node = {
-      val cs = children
-      if (cs.isEmpty)
-        throw new IllegalArgumentException(s"$key requires at least one argument")
-      mk(cs)
-    }
-    def unary(mk: Node => Node): Node = {
-      val cs = children
-      if (cs.size != 1)
-        throw new IllegalArgumentException(
-          s"$key requires exactly one positional argument; got ${cs.size}"
-        )
-      mk(cs.head)
-    }
-    def binary(mk: (Node, Node) => Node): Node = {
-      val cs = children
-      if (cs.size != 2)
-        throw new IllegalArgumentException(
-          s"$key requires exactly two positional arguments; got ${cs.size}"
-        )
-      mk(cs.head, cs(1))
-    }
 
-    key match {
-      case "literal" =>
+    entry match {
+      case p: Builtins.Positional =>
+        val cs = children
+        p.arity match {
+          case Builtins.One if cs.size != 1 =>
+            throw new IllegalArgumentException(
+              s"$key requires exactly one positional argument; got ${cs.size}")
+          case Builtins.Two if cs.size != 2 =>
+            throw new IllegalArgumentException(
+              s"$key requires exactly two positional arguments; got ${cs.size}")
+          case Builtins.AtLeastOne if cs.isEmpty =>
+            throw new IllegalArgumentException(s"$key requires at least one argument")
+          case _ => p.make(cs)
+        }
+
+      case Builtins.Keyword("literal") =>
         // the WHOLE payload is the one argument (reference
         // Literal.args_from_value, base.py:836-845): {"literal": [1,2,3]}
         // is the LIST literal [1,2,3], {"literal": null} is Literal(None) —
         // generic positional splitting would splat the list into three args
-        Lit(raw match {
-          case v if isPod(v)        => normalizePod(v)
-          case s: Seq[_]            => s
-          case l: java.util.List[_] =>
-            scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.toSeq
-          case other => other
-        })
-      case "column" =>
+        Lit(if (isPod(raw)) normalizePod(raw) else asList(raw).getOrElse(raw))
+      case Builtins.Keyword("column") =>
         if (kwargs.nonEmpty || args.size != 1)
           throw new IllegalArgumentException(s"column takes exactly one name; got $raw")
         args.head match {
@@ -210,107 +188,53 @@ object DictParser {
             throw new IllegalArgumentException(s"column name must be a string; got $other")
         }
 
-      case "hash"        => unary(Hash)
-      case "signed_hash" => unary(SignedHash)
-      case "not"         => unary(Not)
-      case "negate"      => unary(Negate)
-      case "len_chars"   => unary(LenChars)
-
-      case "and"      => variadic(And)
-      case "or"       => variadic(Or)
-      case "add"      => variadic(Add)
-      case "multiply" => variadic(Multiply)
-      case "mean"     => variadic(Mean)
-      case "min"      => variadic(Min)
-      case "max"      => variadic(Max)
-      case "coalesce" => variadic(Coalesce)
-
-      case "subtract" => binary(Subtract)
-      case "divide"   => binary(Divide)
-      case "power"    => binary(Power)
-      case "set_time" => binary(SetTime)
-
-      case "greater_than"          => binary(Gt)
-      case "less_than"             => binary(Lt)
-      case "equal"                 => binary(Eq)
-      case "not_equal"             => binary(Neq)
-      case "greater_than_or_equal" => binary(Gte)
-      case "less_than_or_equal"    => binary(Lte)
-
-      case "conditional" =>
+      case Builtins.Keyword("conditional") =>
         if (args.nonEmpty)
           throw new IllegalArgumentException("conditional only accepts keyword arguments")
         val kw = kwargsNode(key, kwargs, Set("when", "then"), Set("otherwise"), nested)
         Conditional(kw("when"), kw("then"), kw.get("otherwise"))
 
-      case "string_interpolate" =>
+      case Builtins.Keyword("string_interpolate") =>
         val cs = children
         if (cs.size <= 1)
           throw new IllegalArgumentException(
             "StringInterpolate requires more than one argument; it takes both the pattern " +
               "string (first) and the fields to interpolate into the pattern (subsequent)."
           )
-        // parse-time validation, like the reference's __post_init__
-        // (str.py:135-149): the pattern must const-evaluate to a string
-        if (ConstEval.evalString(cs.head).isEmpty)
-          throw new IllegalArgumentException(
-            "The pattern argument must be a string, Literal, or Literal-evaluatable instance.")
-        StringInterpolate(cs.head, cs.tail)
+        checked(StringInterpolate(cs.head, cs.tail))(ConstEval.interpolatePattern)
 
-      case "regex_extract" =>
+      case Builtins.Keyword("regex_extract") =>
         if (args.nonEmpty)
           throw new IllegalArgumentException("regex_extract only accepts keyword arguments")
         val kw = kwargsNode(key, kwargs, Set("pattern", "source"), Set("group_index"), nested)
-        // parse-time validation like the reference __post_init__
-        // (str.py:345-356): pattern const-evaluates to a string, group_index
-        // to a non-negative int
-        if (ConstEval.evalString(kw("pattern")).isEmpty)
-          throw new IllegalArgumentException(
-            "The pattern argument of regex_extract must evaluate to a string literal.")
-        kw.get("group_index").foreach { g =>
-          val i = ConstEval.evalInt(g).getOrElse(
-            throw new IllegalArgumentException(
-              "The group_index argument of regex_extract must evaluate to a non-negative integer."))
-          if (i < 0)
-            throw new IllegalArgumentException(
-              s"The group_index argument of regex_extract must be non-negative; got $i")
-        }
-        RegexExtract(kw("pattern"), kw("source"), kw.get("group_index"))
+        checked(RegexExtract(kw("pattern"), kw("source"), kw.get("group_index")))(
+          ConstEval.regexExtractArgs)
 
-      case "regex_match" =>
+      case Builtins.Keyword("regex_match") =>
         if (args.nonEmpty)
           throw new IllegalArgumentException("regex_match only accepts keyword arguments")
         val kw = kwargsNode(key, kwargs, Set("pattern", "source"), Set.empty, nested)
         RegexMatch(kw("pattern"), kw("source"))
 
-      case "strptime" =>
+      case Builtins.Keyword("strptime") =>
         if (args.nonEmpty)
           throw new IllegalArgumentException("strptime only accepts keyword arguments")
         val kw = kwargsNode(key, kwargs, Set("format", "source"), Set("strict"), nested)
-        val node = Strptime(kw("format"), kw("source"), kw.get("strict"))
-        // Parse-time validation, like the reference's __post_init__
-        // (str.py:651-662): format must const-evaluate to a classifiable string.
-        val fmt = ConstEval.evalString(kw("format")).getOrElse(
-          throw new IllegalArgumentException(
-            "The format argument must be a NodeBase instance that evaluates to a string."
-          )
-        )
-        Strftime.classify(fmt)
-        node
+        checked(Strptime(kw("format"), kw("source"), kw.get("strict")))(ConstEval.strptimeFormat)
 
-      case "substring" =>
+      case Builtins.Keyword("substring") =>
         if (args.nonEmpty)
           throw new IllegalArgumentException("substring only accepts keyword arguments")
         val kw = kwargsNode(key, kwargs, Set("source", "start"), Set("stop"), nested)
         Substring(kw("source"), kw("start"), kw.get("stop"))
 
-      case "split" =>
+      case Builtins.Keyword("split") =>
         if (args.nonEmpty)
           throw new IllegalArgumentException("split only accepts keyword arguments")
         val kw = kwargsNode(key, kwargs, Set("source", "by"), Set.empty, nested)
         Split(kw("source"), kw("by"))
 
-      case "cast" =>
+      case Builtins.Keyword("cast") =>
         // Positional sugar Cast(source, type) normalizes to the keyword form
         // (reference: types.py:248-264).
         val node =
@@ -328,51 +252,10 @@ object DictParser {
             val kw = kwargsNode(key, kwargs, Set("source", "type"), Set("strict"), nested)
             Cast(kw("source"), kw("type"), kw.get("strict"))
           }
-        validateCast(node)
-        node
+        checked(node)(ConstEval.castArgs)
 
-      case "dt_year"             => unary(DtYear)
-      case "dt_month_of_year"    => unary(DtMonthOfYear)
-      case "dt_day_of_month"     => unary(DtDayOfMonth)
-      case "dt_day_of_week"      => unary(DtDayOfWeek)
-      case "dt_day_of_year"      => unary(DtDayOfYear)
-      case "dt_hour_of_day"      => unary(DtHourOfDay)
-      case "dt_minute_of_hour"   => unary(DtMinuteOfHour)
-      case "dt_second_of_minute" => unary(DtSecondOfMinute)
-      case "dt_week_of_year"     => unary(DtWeekOfYear)
-      case "dt_quarter_of_year"  => unary(DtQuarterOfYear)
-
-      case "dt_total_seconds"      => unary(DtTotalSeconds)
-      case "dt_total_milliseconds" => unary(DtTotalMilliseconds)
-      case "dt_total_microseconds" => unary(DtTotalMicroseconds)
-      case "dt_total_nanoseconds"  => unary(DtTotalNanoseconds)
-      case "dt_total_minutes"      => unary(DtTotalMinutes)
-      case "dt_total_hours"        => unary(DtTotalHours)
-      case "dt_total_days"         => unary(DtTotalDays)
-
-      case other => throw fail(whole, Nil)
-    }
-  }
-
-  /** Cast construction-time validation (reference: types.py:266-289). */
-  private[dftly] def validateCast(c: Cast): Unit = {
-    val name = ConstEval.evalString(c.typeName).getOrElse(
-      throw new IllegalArgumentException(
-        "The type argument of a Cast operation must evaluate to a string literal."
-      )
-    )
-    if (!Types.TYPES.contains(name))
-      throw new IllegalArgumentException(s"Unsupported type: $name")
-    c.strict.foreach { s =>
-      val strict = ConstEval.evalBool(s).getOrElse(
-        throw new IllegalArgumentException(
-          s"The strict argument must be a boolean, got ${ConstEval.eval(s).getOrElse(s)}"
-        )
-      )
-      if (!strict && !Types.lowersToCast(name))
-        throw new IllegalArgumentException(
-          s"Non-strict casting is not supported for unit '$name'; `strict` applies only to dtype casts."
-        )
+      case Builtins.Keyword(other) =>
+        throw new IllegalStateException(s"no dict-form arm for built-in '$other'")
     }
   }
 }

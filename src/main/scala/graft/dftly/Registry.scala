@@ -41,13 +41,7 @@ object NodeSpec {
     def rawArgs(key: String, value: Any): Any = NodeSpec.rawArgs(key, value)
 
     /** Normalize a raw payload to a positional-argument list. */
-    def positional(raw: Any): Seq[Any] = raw match {
-      case null                 => Nil
-      case s: Seq[_]            => s
-      case l: java.util.List[_] =>
-        scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.toSeq
-      case other => Seq(other)
-    }
+    def positional(raw: Any): Seq[Any] = DictParser.positional(raw)
   }
 
   def standardMatch(key: String, value: Any): Boolean =
@@ -130,8 +124,10 @@ final class DftlyParser(val registeredNodes: Seq[(String, NodeSpec)]) {
     }
   }
 
-  private[dftly] def specForKey(k: String): Option[NodeSpec] =
-    registeredNodes.collectFirst { case (_, s) if s.key == k => s }
+  private val specsByKey: Map[String, NodeSpec] =
+    registeredNodes.map { case (_, s) => s.key -> s }.toMap
+
+  private[dftly] def specForKey(k: String): Option[NodeSpec] = specsByKey.get(k)
 
   /** Parse any supported form into the AST with THIS registry active (it
     * scopes dynamically, so nested string-form function calls resolve custom

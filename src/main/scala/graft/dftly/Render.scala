@@ -26,33 +26,6 @@ object Render {
     case Lit(v)         => v
     case Col(name)      => Map("column" -> name)
 
-    case Hash(a)       => Map("hash" -> Seq(toDict(a)))
-    case SignedHash(a) => Map("signed_hash" -> Seq(toDict(a)))
-    case Not(a)        => Map("not" -> Seq(toDict(a)))
-    case Negate(a)     => Map("negate" -> Seq(toDict(a)))
-    case LenChars(a)   => Map("len_chars" -> Seq(toDict(a)))
-
-    case And(as)      => Map("and" -> as.map(toDict))
-    case Or(as)       => Map("or" -> as.map(toDict))
-    case Add(as)      => Map("add" -> as.map(toDict))
-    case Multiply(as) => Map("multiply" -> as.map(toDict))
-    case Mean(as)     => Map("mean" -> as.map(toDict))
-    case Min(as)      => Map("min" -> as.map(toDict))
-    case Max(as)      => Map("max" -> as.map(toDict))
-    case Coalesce(as) => Map("coalesce" -> as.map(toDict))
-
-    case Subtract(l, r) => Map("subtract" -> Seq(toDict(l), toDict(r)))
-    case Divide(l, r)   => Map("divide" -> Seq(toDict(l), toDict(r)))
-    case Power(b, e)    => Map("power" -> Seq(toDict(b), toDict(e)))
-    case SetTime(d, t)  => Map("set_time" -> Seq(toDict(d), toDict(t)))
-
-    case Gt(l, r)  => Map("greater_than" -> Seq(toDict(l), toDict(r)))
-    case Lt(l, r)  => Map("less_than" -> Seq(toDict(l), toDict(r)))
-    case Eq(l, r)  => Map("equal" -> Seq(toDict(l), toDict(r)))
-    case Neq(l, r) => Map("not_equal" -> Seq(toDict(l), toDict(r)))
-    case Gte(l, r) => Map("greater_than_or_equal" -> Seq(toDict(l), toDict(r)))
-    case Lte(l, r) => Map("less_than_or_equal" -> Seq(toDict(l), toDict(r)))
-
     case Conditional(w, t, o) =>
       Map("conditional" ->
         (Map("when" -> toDict(w), "then" -> toDict(t)) ++
@@ -80,12 +53,11 @@ object Render {
         (Map("source" -> toDict(s), "type" -> toDict(t)) ++
           st.map(x => "strict" -> toDict(x))))
 
-    case d: DtAccessor => Map(dtAccessorKey(d) -> Seq(toDict(d.arg)))
-    case d: DtTotal    => Map(dtTotalKey(d) -> Seq(toDict(d.arg)))
-
     case Extension(name, args, _) => Map(name -> args.map(toDict))
     case BareWordNode(w) =>
       throw new RenderError(s"bare word '$w' is a parse-time marker, not a renderable node")
+    // every positional node: its children, in order, under its key
+    case n => Map(Builtins.of(n).key -> n.children.map(toDict))
   }
 
   // --------------------------------------------------------------- string
@@ -94,9 +66,6 @@ object Render {
     case Lit(v)    => litStr(v)
     case Col(name) => colStr(name)
 
-    case Hash(a)       => s"hash(${toExprString(a)})"
-    case SignedHash(a) => s"signed_hash(${toExprString(a)})"
-    case LenChars(a)   => s"len_chars(${toExprString(a)})"
     // unary binds tighter than `::` in the ladder, so the operand must be
     // parenthesized or a trailing cast would re-associate onto the result
     case Not(a)        => s"(not (${toExprString(a)}))"
@@ -117,12 +86,6 @@ object Render {
     case Or(as) =>
       throw new RenderError(
         s"or of arity ${as.size} has no string form ('or' is a keyword, not callable); use toDict")
-    case Add(as)      => fnCall("add", as)
-    case Multiply(as) => fnCall("multiply", as)
-    case Coalesce(as) => fnCall("coalesce", as)
-    case Mean(as)     => fnCall("mean", as)
-    case Min(as)      => fnCall("min", as)
-    case Max(as)      => fnCall("max", as)
 
     case Subtract(l, r) => s"(${toExprString(l)} - ${toExprString(r)})"
     case Divide(l, r)   => s"(${toExprString(l)} / ${toExprString(r)})"
@@ -162,10 +125,11 @@ object Render {
       if (t.getNano != 0)
         throw new RenderError("sub-second literal times have no string form")
       s"(${toExprString(d)} @ $hhmmss)"
-    case SetTime(d, t) => fnCall("set_time", Seq(d, t))
-
-    case d: DtAccessor => s"(${toExprString(d.arg)})::${dtAccessorCast(d)}"
-    case d: DtTotal    => s"(${toExprString(d.arg)})::${dtTotalCast(d)}"
+    case n @ (_: Hash | _: SignedHash | _: LenChars | _: Add | _: Multiply | _: Coalesce |
+        _: Mean | _: Min | _: Max | _: SetTime) =>
+      fnCall(Builtins.of(n).key, n.children)
+    case d @ (_: DtAccessor | _: DtTotal) =>
+      s"(${toExprString(d.children.head)})::${Builtins.of(d).castName.get}"
 
     case StringInterpolate(_, _) =>
       throw new RenderError(
@@ -226,51 +190,5 @@ object Render {
     if (!s.contains('\'')) s"'$s'"
     else if (!s.contains('"')) "\"" + s + "\""
     else throw new RenderError(s"string with both quote kinds has no string form: $s")
-  }
-
-  private def dtAccessorKey(d: DtAccessor): String = d match {
-    case _: DtYear           => "dt_year"
-    case _: DtMonthOfYear    => "dt_month_of_year"
-    case _: DtDayOfMonth     => "dt_day_of_month"
-    case _: DtDayOfWeek      => "dt_day_of_week"
-    case _: DtDayOfYear      => "dt_day_of_year"
-    case _: DtHourOfDay      => "dt_hour_of_day"
-    case _: DtMinuteOfHour   => "dt_minute_of_hour"
-    case _: DtSecondOfMinute => "dt_second_of_minute"
-    case _: DtWeekOfYear     => "dt_week_of_year"
-    case _: DtQuarterOfYear  => "dt_quarter_of_year"
-  }
-
-  private def dtAccessorCast(d: DtAccessor): String = d match {
-    case _: DtYear           => "year_of_date"
-    case _: DtMonthOfYear    => "month_of_year"
-    case _: DtDayOfMonth     => "day_of_month"
-    case _: DtDayOfWeek      => "day_of_week"
-    case _: DtDayOfYear      => "day_of_year"
-    case _: DtHourOfDay      => "hour_of_day"
-    case _: DtMinuteOfHour   => "minute_of_hour"
-    case _: DtSecondOfMinute => "second_of_minute"
-    case _: DtWeekOfYear     => "week_of_year"
-    case _: DtQuarterOfYear  => "quarter_of_year"
-  }
-
-  private def dtTotalKey(d: DtTotal): String = d match {
-    case _: DtTotalSeconds      => "dt_total_seconds"
-    case _: DtTotalMilliseconds => "dt_total_milliseconds"
-    case _: DtTotalMicroseconds => "dt_total_microseconds"
-    case _: DtTotalNanoseconds  => "dt_total_nanoseconds"
-    case _: DtTotalMinutes      => "dt_total_minutes"
-    case _: DtTotalHours        => "dt_total_hours"
-    case _: DtTotalDays         => "dt_total_days"
-  }
-
-  private def dtTotalCast(d: DtTotal): String = d match {
-    case _: DtTotalSeconds      => "total_seconds"
-    case _: DtTotalMilliseconds => "total_milliseconds"
-    case _: DtTotalMicroseconds => "total_microseconds"
-    case _: DtTotalNanoseconds  => "total_nanoseconds"
-    case _: DtTotalMinutes      => "total_minutes"
-    case _: DtTotalHours        => "total_hours"
-    case _: DtTotalDays         => "total_days"
   }
 }

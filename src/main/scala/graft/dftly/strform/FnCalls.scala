@@ -1,6 +1,7 @@
 package graft.dftly.strform
 
 import graft.dftly._
+import graft.dftly.ConstEval.checked
 
 /** Builds nodes from the string grammar's function-call form `fn(a, b, …)`
   * (reference: str_form/parser.py:377-386 → `NODES[name].from_lark(args)`).
@@ -34,8 +35,8 @@ object FnCalls {
       }
     case "regex_extract" =>
       args match {
-        case Seq(p, s)    => RegexExtract(p, s, None)
-        case Seq(g, p, s) => RegexExtract(p, s, Some(g))
+        case Seq(p, s)    => checked(RegexExtract(p, s, None))(ConstEval.regexExtractArgs)
+        case Seq(g, p, s) => checked(RegexExtract(p, s, Some(g)))(ConstEval.regexExtractArgs)
         case _ =>
           throw new ParseError(
             s"regex_extract takes (pattern, source) or (group_index, pattern, source); got ${args.size} arguments"
@@ -49,12 +50,7 @@ object FnCalls {
       }
     case "strptime" =>
       args match {
-        case Seq(src, fmt) =>
-          val f = ConstEval.evalString(fmt).getOrElse(
-            throw new ParseError("The format argument of strptime must evaluate to a string.")
-          )
-          Strftime.classify(f) // eager validation, like Strptime.__post_init__
-          Strptime(fmt, src, None)
+        case Seq(src, fmt) => checked(Strptime(fmt, src, None))(ConstEval.strptimeFormat)
         case _ =>
           throw new ParseError(s"strptime(source, format) takes 2 arguments; got ${args.size}")
       }
@@ -75,10 +71,7 @@ object FnCalls {
       }
     case "cast" =>
       args match {
-        case Seq(src, ty) =>
-          val c = Cast(src, ty, None)
-          DictParser.validateCast(c)
-          c
+        case Seq(src, ty) => checked(Cast(src, ty, None))(ConstEval.castArgs)
         case _ => throw new ParseError(s"cast(source, type) takes 2 arguments; got ${args.size}")
       }
     case "string_interpolate" =>

@@ -3,6 +3,7 @@ package graft.dftly.strform
 import java.time.{LocalDate, LocalDateTime, LocalTime}
 
 import graft.dftly._
+import graft.dftly.ConstEval.checked
 
 final class ParseError(msg: String) extends IllegalArgumentException(msg)
 
@@ -87,27 +88,6 @@ object StrParser {
       s"[dftly] Warning: Bare word '$w' interpreted as string literal in a subexpression. " +
         s"Did you mean the column '$$$w'?"
     )
-
-  /** CAST_NAME → accessor constructor (reference: nodes/__init__.py:138-202). */
-  private val DT_CAST: Map[String, Node => Node] = Map(
-    "year_of_date"     -> DtYear.apply,
-    "month_of_year"    -> DtMonthOfYear.apply,
-    "day_of_month"     -> DtDayOfMonth.apply,
-    "day_of_week"      -> DtDayOfWeek.apply,
-    "day_of_year"      -> DtDayOfYear.apply,
-    "hour_of_day"      -> DtHourOfDay.apply,
-    "minute_of_hour"   -> DtMinuteOfHour.apply,
-    "second_of_minute" -> DtSecondOfMinute.apply,
-    "week_of_year"     -> DtWeekOfYear.apply,
-    "quarter_of_year"  -> DtQuarterOfYear.apply,
-    "total_seconds"      -> DtTotalSeconds.apply,
-    "total_milliseconds" -> DtTotalMilliseconds.apply,
-    "total_microseconds" -> DtTotalMicroseconds.apply,
-    "total_nanoseconds"  -> DtTotalNanoseconds.apply,
-    "total_minutes"      -> DtTotalMinutes.apply,
-    "total_hours"        -> DtTotalHours.apply,
-    "total_days"         -> DtTotalDays.apply
-  )
 
   private final class P(input: String, prefixMode: Boolean) {
     private val lexer = new Lexer(input, prefixMode)
@@ -354,18 +334,18 @@ object StrParser {
       tok match {
         case TName(name, _, _) =>
           advance(operandPos = false)
-          DT_CAST.get(name) match {
-            case Some(mk) =>
+          // CAST_NAME → accessor (reference: nodes/__init__.py:138-202)
+          Builtins.byCastName.get(name) match {
+            case Some(accessor) =>
               if (nonstrict)
                 throw new ParseError(
                   s"Non-strict casting (`::?`) is not supported for accessor '$name'; " +
                     "`strict` applies only to dtype casts."
                 )
-              mk(src)
+              accessor.make(Seq(src))
             case None =>
-              val c = Cast(src, Lit(name), if (nonstrict) Some(Lit(false)) else None)
-              DictParser.validateCast(c)
-              c
+              checked(Cast(src, Lit(name), if (nonstrict) Some(Lit(false)) else None))(
+                ConstEval.castArgs)
           }
         case TStr(fmt, _, _) =>
           advance(operandPos = false)

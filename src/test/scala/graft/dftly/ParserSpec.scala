@@ -352,6 +352,96 @@ class ParserSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("pattern"), e2.getMessage)
   }
 
+  // --- the built-in node table, pinned from outside it ------------------
+
+  test("the default registry holds the 50 reference nodes in reference order") {
+    assert(DftlyParser.defaultSpecs.map(_._1) == Seq(
+      "literal", "column",
+      "hash", "signed_hash", "not", "negate", "len_chars",
+      "and", "or", "add", "multiply", "mean", "min", "max", "coalesce",
+      "subtract", "divide", "power", "set_time",
+      "greater_than", "less_than", "equal", "not_equal",
+      "greater_than_or_equal", "less_than_or_equal",
+      "conditional", "string_interpolate",
+      "regex_extract", "regex_match", "strptime", "substring", "split", "cast",
+      "dt_year", "dt_month_of_year", "dt_day_of_month", "dt_day_of_week",
+      "dt_day_of_year", "dt_hour_of_day", "dt_minute_of_hour",
+      "dt_second_of_minute", "dt_week_of_year", "dt_quarter_of_year",
+      "dt_total_seconds", "dt_total_milliseconds", "dt_total_microseconds",
+      "dt_total_nanoseconds", "dt_total_minutes", "dt_total_hours",
+      "dt_total_days"))
+  }
+
+  private val (a, b, c) = (Col("a"), Col("b"), Col("c"))
+
+  /** Every positional node, built over `$a`, `$b`, `$c` as its arity allows. */
+  private val positionalNodes: Seq[(String, Node)] = Seq(
+    "hash" -> Hash(a), "signed_hash" -> SignedHash(a), "not" -> Not(a),
+    "negate" -> Negate(a), "len_chars" -> LenChars(a),
+    "and" -> And(Seq(a, b, c)), "or" -> Or(Seq(a, b, c)), "add" -> Add(Seq(a, b, c)),
+    "multiply" -> Multiply(Seq(a, b, c)), "mean" -> Mean(Seq(a, b, c)),
+    "min" -> Min(Seq(a, b, c)), "max" -> Max(Seq(a, b, c)), "coalesce" -> Coalesce(Seq(a)),
+    "subtract" -> Subtract(a, b), "divide" -> Divide(a, b), "power" -> Power(a, b),
+    "set_time" -> SetTime(a, b), "greater_than" -> Gt(a, b), "less_than" -> Lt(a, b),
+    "equal" -> Eq(a, b), "not_equal" -> Neq(a, b), "greater_than_or_equal" -> Gte(a, b),
+    "less_than_or_equal" -> Lte(a, b),
+    "dt_year" -> DtYear(a), "dt_month_of_year" -> DtMonthOfYear(a),
+    "dt_day_of_month" -> DtDayOfMonth(a), "dt_day_of_week" -> DtDayOfWeek(a),
+    "dt_day_of_year" -> DtDayOfYear(a), "dt_hour_of_day" -> DtHourOfDay(a),
+    "dt_minute_of_hour" -> DtMinuteOfHour(a), "dt_second_of_minute" -> DtSecondOfMinute(a),
+    "dt_week_of_year" -> DtWeekOfYear(a), "dt_quarter_of_year" -> DtQuarterOfYear(a),
+    "dt_total_seconds" -> DtTotalSeconds(a), "dt_total_milliseconds" -> DtTotalMilliseconds(a),
+    "dt_total_microseconds" -> DtTotalMicroseconds(a),
+    "dt_total_nanoseconds" -> DtTotalNanoseconds(a), "dt_total_minutes" -> DtTotalMinutes(a),
+    "dt_total_hours" -> DtTotalHours(a), "dt_total_days" -> DtTotalDays(a))
+
+  test("each positional key builds its node in short, resolved and function-call form") {
+    assert(positionalNodes.size == 40)
+    for ((key, node) <- positionalNodes) {
+      val args = node.children.map { case Col(n) => "$" + n; case other => other }
+      assert(Dftly.parse(Map(key -> args)) == node, key)
+      assert(Dftly.parse(Map("expression" -> Map("type" -> key, "arguments" -> args))) == node, key)
+      // `and`/`or` are grammar keywords, so they have no function-call form
+      if (key != "and" && key != "or")
+        assert(p(args.mkString(s"$key(", ", ", ")")) == node, key)
+    }
+  }
+
+  test("all 17 :: accessor names parse to their nodes") {
+    val accessors = Seq(
+      "year_of_date" -> DtYear(a), "month_of_year" -> DtMonthOfYear(a),
+      "day_of_month" -> DtDayOfMonth(a), "day_of_week" -> DtDayOfWeek(a),
+      "day_of_year" -> DtDayOfYear(a), "hour_of_day" -> DtHourOfDay(a),
+      "minute_of_hour" -> DtMinuteOfHour(a), "second_of_minute" -> DtSecondOfMinute(a),
+      "week_of_year" -> DtWeekOfYear(a), "quarter_of_year" -> DtQuarterOfYear(a),
+      "total_seconds" -> DtTotalSeconds(a), "total_milliseconds" -> DtTotalMilliseconds(a),
+      "total_microseconds" -> DtTotalMicroseconds(a),
+      "total_nanoseconds" -> DtTotalNanoseconds(a), "total_minutes" -> DtTotalMinutes(a),
+      "total_hours" -> DtTotalHours(a), "total_days" -> DtTotalDays(a))
+    for ((name, node) <- accessors) {
+      assert(p(s"$$a::$name") == node, name)
+      assert(p(s"$$a as $name") == node, name)
+    }
+  }
+
+  test("a wrong argument count names the arity the node needs") {
+    def cause(v: Any): String = intercept[IllegalArgumentException](Dftly.parse(v)).getMessage
+    assert(cause(Map("hash" -> Seq("$a", "$b")))
+      .contains("- hash: hash requires exactly one positional argument; got 2"))
+    assert(cause(Map("dt_total_days" -> Nil))
+      .contains("- dt_total_days: dt_total_days requires exactly one positional argument; got 0"))
+    assert(cause(Map("power" -> Seq("$a")))
+      .contains("- power: power requires exactly two positional arguments; got 1"))
+    assert(cause(Map("expression" -> Map("type" -> "set_time", "arguments" -> Seq(1, 2, 3))))
+      .contains("- set_time: set_time requires exactly two positional arguments; got 3"))
+    assert(cause(Map("coalesce" -> Nil))
+      .contains("- coalesce: coalesce requires at least one argument"))
+    assert(cause(Map("negate" -> Map("x" -> 1)))
+      .contains("- negate: negate does not accept keyword arguments"))
+    assert(intercept[Exception](p("subtract($a)")).getMessage
+      .contains("subtract requires exactly two positional arguments; got 1"))
+  }
+
   test("unicode whitespace does not silently separate tokens") {
     intercept[Exception](p("1\u3000+ 2")) // ideographic space: reference rejects
     assert(p("1 + 2") == Add(Seq(Lit(1), Lit(2))))

@@ -42,6 +42,7 @@ object RenderProps extends Properties("Render") {
         lit,
         col,
         sub.map(Hash(_)),
+        sub.map(SignedHash(_)),
         sub.map(Not(_)),
         sub.map(Negate(_)),
         sub.map(LenChars(_)),
@@ -52,6 +53,8 @@ object RenderProps extends Properties("Render") {
         Gen.zip(sub, sub).map { case (a, b) => Power(a, b) },
         Gen.listOfN(2, sub).map(Coalesce(_)),
         Gen.listOfN(3, sub).map(Mean(_)),
+        Gen.listOfN(2, sub).map(Min(_)),
+        Gen.listOfN(3, sub).map(Max(_)),
         Gen.zip(sub, sub).map { case (a, b) => And(Seq(a, b)) },
         Gen.zip(sub, sub).map { case (a, b) => Or(Seq(a, b)) },
         Gen.zip(sub, sub).map { case (a, b) => Gt(a, b) },
@@ -62,11 +65,16 @@ object RenderProps extends Properties("Render") {
         sub.map(a => Cast(a, Lit("int64"), None)),
         sub.map(a => Cast(a, Lit("float"), Some(Lit(false)))),
         sub.map(a => Strptime(Lit("%Y-%m-%d"), a, None)),
-        sub.map(DtDayOfWeek(_)),
-        sub.map(DtTotalMinutes(_)),
+        Gen.zip(sub, Gen.oneOf[Node => Node](
+          DtYear(_), DtMonthOfYear(_), DtDayOfMonth(_), DtDayOfWeek(_), DtDayOfYear(_),
+          DtHourOfDay(_), DtMinuteOfHour(_), DtSecondOfMinute(_), DtWeekOfYear(_),
+          DtQuarterOfYear(_), DtTotalSeconds(_), DtTotalMilliseconds(_),
+          DtTotalMicroseconds(_), DtTotalNanoseconds(_), DtTotalMinutes(_), DtTotalHours(_),
+          DtTotalDays(_))).map { case (a, dt) => dt(a) },
         Gen.zip(sub, Gen.choose(0, 23), Gen.choose(0, 59)).map { case (d, h, m) =>
           SetTime(d, Lit(LocalTime.of(h, m, 0)))
         },
+        Gen.zip(sub, sub).map { case (d, t) => SetTime(d, t) }, // renders as set_time(d, t)
         sub.map(s => RegexMatch(Lit("ab+c"), s))
       )
     }
