@@ -41,12 +41,24 @@ import graft.ops.Dedup
   * strategy to Catalyst statistics + AQE); `orderBy`+`limit` adjacency lowers
   * to TakeOrderedAndProject (no global sort); `dedupExact` / `nearDupFilter`
   * reuse the graft.ops implementations.
+  *
+  * Options: the keys of every option map — each step verb's, each `source`
+  * and `sink` format's — are declared once, in `Keys`. A key outside its
+  * declared set is rejected with an error that names the verb or format,
+  * the key and the accepted keys; a missing required key or a malformed
+  * value names the verb, the key and the value. Values are read through
+  * `Opts`, which converts a YAML string like the bare scalar it spells
+  * (`"0.8"` reads as 0.8, `'false'` as false).
+  *
+  * Adding a verb takes a line in `Keys.steps` declaring its keys, an arm in
+  * `applyStep` reading them through `Opts`, and a row in README's verb
+  * table (PipelineSpec checks that every declared key appears there).
   */
 object Pipeline {
 
   /** Aggregate spec → Column. Arg is a dftly expression (or "*" for count). */
   private def aggColumn(name: String, spec: Any, df: DataFrame): Column = {
-    val m = asMap(spec, s"agg '$name'")
+    val m = Opts.mapping(spec, s"agg '$name'")
     require(m.size == 1, s"agg '$name' needs exactly one {fn: expr} entry, got $m")
     val (fn, rawExpr) = m.head
     def e: Column = compileExpr(rawExpr, df)
@@ -163,363 +175,19 @@ object Pipeline {
     }
   }
 
-  private def asMap(v: Any, what: String): Map[String, Any] = v match {
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, value) => k.toString -> (value: Any) }.toMap
-    case other => throw new IllegalArgumentException(s"$what must be a mapping; got $other")
-  }
-
-  private def asSeq(v: Any): Seq[Any] = v match {
-    case s: Seq[_]  => s
-    case other      => Seq(other)
-  }
-
-  private def orderedEntries(v: Any, what: String): Seq[(String, Any)] = v match {
-    case m: scala.collection.SeqMap[_, _] =>
-      m.toSeq.map { case (k, value) => k.toString -> (value: Any) }
-    case m: scala.collection.Map[_, _] =>
-      m.toSeq.map { case (k, value) => k.toString -> (value: Any) }
-    case other => throw new IllegalArgumentException(s"$what must be a mapping; got $other")
-  }
-
   /** Run a pipeline over `resolve`-provided tables. The `source` is a table
-    * name for `resolve`, or an inline reader spec
-    * `{format: csv|json|parquet|orc, path: ..., options: {...}}`.
+    * name for `resolve`, or an inline reader spec (`Keys.sources`).
     */
   def run(spark: SparkSession, yaml: String, resolve: String => DataFrame): DataFrame = {
-    val cfg = asMap(Yaml.load(yaml), "pipeline")
-    val srcDf = cfg.getOrElse("source",
-      throw new IllegalArgumentException("pipeline needs a 'source'")) match {
-      case m: scala.collection.Map[_, _] =>
-        val sm = asMap(m, "source")
-        val path = sm.getOrElse("path",
-          throw new IllegalArgumentException("inline source needs a 'path'")).toString
-        sm.getOrElse("format", "parquet").toString match {
-          // jsonl(.gz/.zst) corpus source: {format: jsonl, path: ...,
-          //   schema: "doc_id BIGINT, text STRING", badRecords: keep|drop|fail,
-          //   options: {...}} — options thread through like every other format
-          case "jsonl" =>
-            val opts = sm.get("options") match {
-              case Some(o) => asMap(o, "options").map {
-                case (k, v) => k -> v.toString
-              }.toMap
-              case None => Map.empty[String, String]
-            }
-            graft.sources.Readers.readJsonl(spark, path,
-              schema = sm.get("schema").map(_.toString).orNull,
-              badRecords = sm.getOrElse("badRecords", "drop").toString,
-              options = opts)
-          // CSV/TSV tabular source: {format: csv|tsv, path: ...,
-          //   schema: "id BIGINT, url STRING", badRecords: keep|drop|fail,
-          //   header: false, sep: ",", options: {...}} — the jsonl
-          //   contract (explicit schema, authoritative bad-record policy)
-          //   for the sidecar-table shape. tsv = csv with a tab separator.
-          case f @ ("csv" | "tsv") =>
-            val opts = sm.get("options") match {
-              case Some(o) => asMap(o, "options").map {
-                case (k, v) => k -> v.toString
-              }.toMap
-              case None => Map.empty[String, String]
-            }
-            val unsupported = sm.keySet --
-              Set("format", "path", "schema", "badRecords", "header", "sep",
-                "options")
-            if (unsupported.nonEmpty)
-              throw new IllegalArgumentException(
-                s"$f source supports format/path/schema/badRecords/header/" +
-                  s"sep/options; remove: " +
-                  unsupported.toSeq.sorted.mkString(", "))
-            // precedence: dedicated YAML keys > options map > format
-            // default — readCsv's named args are authoritative (applied
-            // after options), so fold the options-map spellings in here
-            // to keep the legacy `options: {header: "true"}` shape working
-            graft.sources.Readers.readCsv(spark, path,
-              schema = sm.get("schema").map(_.toString).orNull,
-              badRecords = sm.getOrElse("badRecords", "drop").toString,
-              sep = sm.get("sep").map(_.toString)
-                .orElse(opts.get("sep"))
-                .getOrElse(if (f == "tsv") "\t" else ","),
-              header = sm.get("header").map(_.toString.toBoolean)
-                .orElse(opts.get("header").map(_.toBoolean))
-                .getOrElse(false),
-              options = opts)
-          // WebDataset-style tar shards: {format: tar, path: ...} →
-          // (shard, key, data map) sample rows. No reader options exist;
-          // an options key is an error, not a silent no-op (the jsonl
-          // options-threading lesson)
-          case "tar" =>
-            // ANY unsupported key is an error — 'schema'/'badRecords' are
-            // jsonl-only and would otherwise be silent no-ops here
-            val unsupported = sm.keySet -- Set("format", "path")
-            if (unsupported.nonEmpty)
-              throw new IllegalArgumentException(
-                s"tar source supports only 'format' and 'path'; remove: " +
-                  unsupported.toSeq.sorted.mkString(", "))
-            graft.sources.TarShards.readTarShards(spark, path)
-          // WARC crawl archives: {format: warc, path: ...,
-          //   maxPayloadBytes: 67108864, text: true} → one row per record
-          //   (type, uri, date, http status/content-type, payload,
-          //   truncated flag). text (default TRUE) adds the charset-aware
-          //   decoded `text` column (BOM → header charset → meta prescan →
-          //   UTF-8; WebText.payloadText) — the front-door materialization
-          //   real crawls need (~10% of CommonCrawl HTML is
-          //   legacy-encoded, and a blind UTF-8 cast mojibakes it).
-          //   Column-pruned away when no step reads it.
-          case "warc" =>
-            // parseHeaders (default true): false skips the per-record
-            // http_headers map for hot pipelines that only read
-            // payload/status. decodePayloads (default true): false is
-            // the raw_stream split — stored block bodies verbatim,
-            // chunked/gzip codings left in place
-            val unsupported =
-              sm.keySet -- Set("format", "path", "maxPayloadBytes", "text",
-                "parseHeaders", "decodePayloads")
-            if (unsupported.nonEmpty)
-              throw new IllegalArgumentException(
-                s"warc source supports 'format', 'path', 'maxPayloadBytes', " +
-                  s"'text', 'parseHeaders', 'decodePayloads'; remove: " +
-                  unsupported.toSeq.sorted.mkString(", "))
-            // ensureParallelism: a WARC scan has exactly one task per
-            // shard file (whole-archive decode), so an archive with fewer
-            // shards than cores would run EVERY downstream CPU-dense leg
-            // (text decode, extractContent, langId, signals) at shard
-            // width — measured 4-wide on a 32-core box, 3.5 s/stage vs
-            // 0.6 s at full width. At crawl scale (shards >> cores) the
-            // guard is a planning-time no-op; when it does fire, the one
-            // round-robin exchange of parsed records costs far less than
-            // the serialized extraction it unblocks.
-            val raw = graft.ops.Dedup.ensureParallelism(
-              graft.sources.Warc.readWarc(spark, path,
-                maxPayloadBytes = sm.get("maxPayloadBytes")
-                  .map(_.toString.toInt).getOrElse(64 << 20),
-                parseHeaders = sm.get("parseHeaders")
-                  .forall(_.toString.toBoolean),
-                decodePayloads = sm.get("decodePayloads")
-                  .forall(_.toString.toBoolean)))
-            if (sm.get("text").forall(_.toString.toBoolean))
-              raw.withColumn("text", graft.ops.WebText.payloadText(
-                col("payload"), col("http_content_type")))
-            else raw
-          case "cdxj" =>
-            // capture index shards (sources/Cdx.readCdxj): typed capture
-            // rows; 'glob' restricts the listing (e.g. "*.cdxj" when the
-            // sidecars share a directory with the .warc.gz shards)
-            val unsupported = sm.keySet -- Set("format", "path", "glob")
-            if (unsupported.nonEmpty)
-              throw new IllegalArgumentException(
-                s"cdxj source supports 'format', 'path', 'glob'; remove: " +
-                  unsupported.toSeq.sorted.mkString(", "))
-            graft.sources.Cdx.readCdxj(spark, path,
-              glob = sm.get("glob").map(_.toString))
-          case "warcIndex" =>
-            // build a capture index from sidecar-less .warc.gz/.warc.zst
-            // archives (Warc.indexWarc — streaming gzip-member/zstd-frame
-            // offset recovery); the frame is readCdxj-shaped and feeds
-            // cdxPlan/fetchWarc or the zipnum sink directly. {format:
-            // warcIndex, path, maxPayloadBytes?, detectText?} —
-            // detectText (default true) populates languages/charset the
-            // way the published cc-index does
-            // languageCodes (default iso639_1): "iso639_3" emits the
-            // published cc-index spelling natively
-            val unsupported =
-              sm.keySet -- Set("format", "path", "maxPayloadBytes",
-                "detectText", "languageCodes")
-            if (unsupported.nonEmpty)
-              throw new IllegalArgumentException(
-                s"warcIndex source supports 'format', 'path', " +
-                  s"'maxPayloadBytes', 'detectText', 'languageCodes'; " +
-                  s"remove: " + unsupported.toSeq.sorted.mkString(", "))
-            graft.sources.Warc.indexWarc(spark, path,
-              maxPayloadBytes = sm.get("maxPayloadBytes")
-                .map(_.toString.toInt).getOrElse(64 << 20),
-              detectText = sm.get("detectText")
-                .forall(_.toString.toBoolean),
-              languageCodes = sm.get("languageCodes")
-                .map(_.toString).getOrElse("iso639_1"))
-          case "zipnum" =>
-            // ZipNum-clustered capture index (sources/Cdx.queryZipnum):
-            // the published cc-index two-level layout — a SURT-prefix
-            // query reads the cluster.idx sidecars plus only the matching
-            // compressed blocks. {format: zipnum, path, prefix,
-            // gapBytes?}; prefix is mandatory (an unprefixed query would
-            // fetch the whole index — use the cdxj source for full scans)
-            val unsupported =
-              sm.keySet -- Set("format", "path", "prefix", "gapBytes")
-            if (unsupported.nonEmpty)
-              throw new IllegalArgumentException(
-                s"zipnum source supports 'format', 'path', 'prefix', " +
-                  s"'gapBytes'; remove: " +
-                  unsupported.toSeq.sorted.mkString(", "))
-            graft.sources.Cdx.queryZipnum(spark, path,
-              sm.getOrElse("prefix", throw new IllegalArgumentException(
-                "zipnum source needs 'prefix' (a SURT range key, e.g. " +
-                  "from Cdx.surtHostPrefix)")).toString,
-              sm.get("gapBytes").map(_.toString.toLong).getOrElse(0L))
-          case "zipnumLines" =>
-            // raw CDXJ lines of a ZipNum directory (Cdx.readZipnumLines):
-            // the full-scan/merge entry — feed straight into a zipnum
-            // sink to merge N crawls' indexes (path may glob over several
-            // directories). {format: zipnumLines, path}
-            val unsupported = sm.keySet -- Set("format", "path")
-            if (unsupported.nonEmpty)
-              throw new IllegalArgumentException(
-                s"zipnumLines source supports 'format', 'path'; remove: " +
-                  unsupported.toSeq.sorted.mkString(", "))
-            graft.sources.Cdx.readZipnumLines(spark, path)
-          case fmt =>
-            val reader = spark.read.format(fmt)
-            val withOpts = sm.get("options") match {
-              case Some(o) => asMap(o, "options").foldLeft(reader) {
-                case (r, (k, v)) => r.option(k, v.toString)
-              }
-              case None => reader
-            }
-            withOpts.load(path)
-        }
+    val cfg = new Opts("pipeline", Keys.pipeline, Yaml.load(yaml))
+    val srcDf = cfg.need[Any]("source") match {
+      case m: scala.collection.Map[_, _] => readSource(spark, m)
       case name => resolve(name.toString)
     }
-    val steps = asSeq(cfg.getOrElse("steps", Seq.empty))
-    val out = steps.foldLeft(srcDf) { (df, rawStep) =>
-      applyStep(df, asMap(rawStep, "step"), resolve)
+    val out = Opts.asSeq(cfg.get[Any]("steps", Nil)).foldLeft(srcDf) { (df, rawStep) =>
+      applyStep(df, Opts.mapping(rawStep, "step").toMap, resolve)
     }
-    // optional sink: {path, format: parquet, mode: overwrite, partitionBy: [...]}
-    // or a bucketed TABLE sink: {table: name, bucketBy: {n: 8, cols: [...]},
-    // sortBy: [...]} — bucketing pre-shuffles once at write time so every
-    // later equi-join/aggregation on the bucket columns runs exchange-free
-    // (the co-located-join setup for repeatedly-joined 100 TB tables;
-    // requires saveAsTable, Spark's bucket metadata lives in the catalog).
-    cfg.get("sink").foreach { s =>
-      val sm = asMap(s, "sink")
-      // WARC response-record sink: {format: warc, path, uri: col,
-      // body: col, mode?: overwrite|errorifexists, codec?:
-      // gzip|zstd|zstd-dict|none, warcinfo?: true} — one shard per task
-      // via Warc.writeWarcResponses (not a DataFrameWriter format);
-      // warcinfo: true opens every shard with the conventional
-      // warcinfo record
-      if (sm.get("format").exists(_.toString == "warc")) {
-        // contentEncoding?: gzip stores each HTTP entity content-coded
-        // (the real-crawl shape; readers decode by default)
-        val unsupported = sm.keySet --
-          Set("format", "path", "uri", "body", "mode", "codec",
-            "contentType", "warcinfo", "contentEncoding")
-        if (unsupported.nonEmpty)
-          throw new IllegalArgumentException(
-            s"warc sink supports format/path/uri/body/mode/codec/" +
-              s"contentType/warcinfo/contentEncoding; remove: " +
-              unsupported.toSeq.sorted.mkString(", "))
-        graft.sources.Warc.writeWarcResponses(out,
-          sm.getOrElse("path", throw new IllegalArgumentException(
-            "warc sink needs a 'path'")).toString,
-          uriCol = sm.getOrElse("uri", "uri").toString,
-          bodyCol = sm.getOrElse("body", "body").toString,
-          overwrite = sm.getOrElse("mode", "overwrite").toString == "overwrite",
-          contentTypeCol = sm.get("contentType").map(_.toString),
-          codec = sm.getOrElse("codec", "gzip").toString,
-          warcinfo = sm.get("warcinfo").exists(_.toString.toBoolean),
-          contentEncoding = sm.get("contentEncoding")
-            .map(_.toString).getOrElse("identity"))
-      } else if (sm.get("format").exists(_.toString == "wat")) {
-        // WAT metadata sink (Wat.writeWat): one metadata record per row
-        // with the links/title envelope JSON — the link-graph artifact
-        // next to a warc sink. {format: wat, path, uri, html, mode?,
-        // codec?, headers?} — `headers` names a map<string,string>
-        // column rendered as the envelope's HTTP Headers.
-        val unsupported = sm.keySet --
-          Set("format", "path", "uri", "html", "mode", "codec", "headers")
-        if (unsupported.nonEmpty)
-          throw new IllegalArgumentException(
-            s"wat sink supports format/path/uri/html/mode/codec/headers; " +
-              "remove: " + unsupported.toSeq.sorted.mkString(", "))
-        graft.sources.Wat.writeWat(out,
-          sm.getOrElse("path", throw new IllegalArgumentException(
-            "wat sink needs a 'path'")).toString,
-          uriCol = sm.getOrElse("uri", "uri").toString,
-          htmlCol = sm.getOrElse("html", "html").toString,
-          overwrite = sm.getOrElse("mode", "overwrite").toString == "overwrite",
-          codec = sm.getOrElse("codec", "gzip").toString,
-          headersCol = sm.get("headers").map(_.toString))
-      } else if (sm.get("format").exists(_.toString == "warcDedup")) {
-        // cross-crawl deduplicating WARC sink (Warc.writeWarcDeduped):
-        // responses + revisit stubs interleaved, split against a prior
-        // crawl's digest index resolved as a TABLE (same hook as
-        // decontaminate's evalset). {format: warcDedup, path, uri, body,
-        // prior: <table>, priorDigestCol?, withinBatch?, mode?, codec?,
-        // contentType?, index?}
-        val unsupported = sm.keySet -- Set("format", "path", "uri", "body",
-          "prior", "priorDigestCol", "withinBatch", "mode", "codec",
-          "contentType", "index")
-        if (unsupported.nonEmpty)
-          throw new IllegalArgumentException(
-            s"warcDedup sink supports format/path/uri/body/prior/" +
-              s"priorDigestCol/withinBatch/mode/codec/contentType/index; " +
-              "remove: " + unsupported.toSeq.sorted.mkString(", "))
-        graft.sources.Warc.writeWarcDeduped(out,
-          sm.getOrElse("path", throw new IllegalArgumentException(
-            "warcDedup sink needs a 'path'")).toString,
-          uriCol = sm.getOrElse("uri", "uri").toString,
-          bodyCol = sm.getOrElse("body", "body").toString,
-          priorDigests = resolve(sm.getOrElse("prior",
-            throw new IllegalArgumentException(
-              "warcDedup sink needs 'prior' (a table with the prior " +
-                "crawl's digests — an indexWarc/cdxj frame)")).toString),
-          priorDigestCol = sm.getOrElse("priorDigestCol", "digest").toString,
-          withinBatch = sm.get("withinBatch").forall(_.toString.toBoolean),
-          overwrite = sm.getOrElse("mode", "overwrite").toString == "overwrite",
-          contentTypeCol = sm.get("contentType").map(_.toString),
-          codec = sm.getOrElse("codec", "gzip").toString,
-          index = sm.get("index").exists(_.toString.toBoolean))
-      } else if (sm.get("format").exists(_.toString == "zipnum")) {
-        // ZipNum index sink (Cdx.writeZipnum): a capture frame (the
-        // warcIndex/cdxj sources' shape) renders to CDXJ lines first; a
-        // frame that already IS lines (single 'value' string column)
-        // clusters as-is. {format: zipnum, path, linesPerBlock?,
-        // numShards?, mode?}
-        val unsupported = sm.keySet --
-          Set("format", "path", "linesPerBlock", "numShards", "mode")
-        if (unsupported.nonEmpty)
-          throw new IllegalArgumentException(
-            s"zipnum sink supports format/path/linesPerBlock/numShards/" +
-              s"mode; remove: " + unsupported.toSeq.sorted.mkString(", "))
-        val lines =
-          if (out.columns.sameElements(Array("value"))) out
-          else graft.sources.Cdx.cdxjLines(out)
-        graft.sources.Cdx.writeZipnum(lines,
-          sm.getOrElse("path", throw new IllegalArgumentException(
-            "zipnum sink needs a 'path'")).toString,
-          linesPerBlock = sm.get("linesPerBlock")
-            .map(_.toString.toInt).getOrElse(3000),
-          numShards = sm.get("numShards").map(_.toString.toInt).getOrElse(0),
-          overwrite = sm.getOrElse("mode", "overwrite").toString == "overwrite")
-      } else {
-      var w = out.write
-        .format(sm.getOrElse("format", "parquet").toString)
-        .mode(sm.getOrElse("mode", "overwrite").toString)
-      sm.get("partitionBy").foreach(p => w = w.partitionBy(asSeq(p).map(_.toString): _*))
-      sm.get("bucketBy").foreach { b =>
-        val bm = asMap(b, "bucketBy")
-        val cols = asSeq(bm("cols")).map(_.toString)
-        w = w.bucketBy(bm("n").toString.toInt, cols.head, cols.tail: _*)
-        sm.get("sortBy").foreach { sb =>
-          val scols = asSeq(sb).map(_.toString)
-          w = w.sortBy(scols.head, scols.tail: _*)
-        }
-      }
-      require(sm.get("sortBy").isEmpty || sm.get("bucketBy").nonEmpty,
-        "sink sortBy requires bucketBy (Spark only sorts within buckets)")
-      (sm.get("table"), sm.get("path")) match {
-        case (Some(_), Some(_)) =>
-          throw new IllegalArgumentException(
-            "sink takes 'table' OR 'path', not both (a table's location is catalog-managed)")
-        case (Some(t), None) => w.saveAsTable(t.toString)
-        case (None, Some(p)) =>
-          require(sm.get("bucketBy").isEmpty,
-            "bucketBy requires a 'table' sink (bucket metadata lives in the catalog)")
-          w.save(p.toString)
-        case (None, None) =>
-          throw new IllegalArgumentException("sink needs a 'path' or a 'table'")
-      }
-      }
-    }
+    cfg.opt[Any]("sink").foreach(writeSink(out, _, resolve))
     out
   }
 
@@ -538,6 +206,190 @@ object Pipeline {
   ): DataFrame =
     parser.withActive(run(spark, yaml, resolve))
 
+  private def readSource(spark: SparkSession, raw: Any): DataFrame = {
+    val fmt = Opts.format(raw, "source")
+    val o = new Opts(s"$fmt source", Keys.sources.getOrElse(fmt, Keys.sources("parquet")), raw)
+    val path = o.str("path")
+    fmt match {
+      // jsonl(.gz/.zst) corpus: explicit schema, authoritative bad-record
+      // policy, reader options threaded through
+      case "jsonl" =>
+        graft.sources.Readers.readJsonl(spark, path,
+          schema = o.opt[String]("schema").orNull,
+          badRecords = o.get("badRecords", "drop"),
+          options = o.strings("options"))
+      // CSV/TSV tabular source: the jsonl contract for the sidecar-table
+      // shape; tsv = csv with a tab separator
+      case "csv" | "tsv" =>
+        val opts = o.strings("options")
+        // precedence: dedicated YAML keys > options map > format
+        // default — readCsv's named args are authoritative (applied
+        // after options), so fold the options-map spellings in here
+        // to keep the legacy `options: {header: "true"}` shape working
+        graft.sources.Readers.readCsv(spark, path,
+          schema = o.opt[String]("schema").orNull,
+          badRecords = o.get("badRecords", "drop"),
+          sep = o.opt[String]("sep").orElse(opts.get("sep"))
+            .getOrElse(if (fmt == "tsv") "\t" else ","),
+          header = o.opt[Boolean]("header")
+            .orElse(opts.get("header").map(Opts.scalar[Boolean](s"$fmt source option 'header'", _)))
+            .getOrElse(false),
+          options = opts)
+      // WebDataset-style tar shards → (shard, key, data map) sample rows
+      case "tar" =>
+        graft.sources.TarShards.readTarShards(spark, path)
+      // WARC crawl archives: one row per record (type, uri, date, http
+      // status/content-type, payload, truncated flag). `text` (default
+      // true) adds the charset-aware decoded `text` column (BOM → header
+      // charset → meta prescan → UTF-8; WebText.payloadText) — the
+      // front-door materialization real crawls need (~10% of CommonCrawl
+      // HTML is legacy-encoded, and a blind UTF-8 cast mojibakes it).
+      // Column-pruned away when no step reads it. `parseHeaders: false`
+      // skips the per-record http_headers map for hot pipelines that only
+      // read payload/status; `decodePayloads: false` is the raw_stream
+      // split — stored block bodies verbatim, codings left in place.
+      case "warc" =>
+        // ensureParallelism: a WARC scan has exactly one task per
+        // shard file (whole-archive decode), so an archive with fewer
+        // shards than cores would run EVERY downstream CPU-dense leg
+        // (text decode, extractContent, langId, signals) at shard
+        // width — measured 4-wide on a 32-core box, 3.5 s/stage vs
+        // 0.6 s at full width. At crawl scale (shards >> cores) the
+        // guard is a planning-time no-op; when it does fire, the one
+        // round-robin exchange of parsed records costs far less than
+        // the serialized extraction it unblocks.
+        val records = graft.ops.Dedup.ensureParallelism(
+          graft.sources.Warc.readWarc(spark, path,
+            maxPayloadBytes = o.get("maxPayloadBytes", 64 << 20),
+            parseHeaders = o.get("parseHeaders", true),
+            decodePayloads = o.get("decodePayloads", true)))
+        if (o.get("text", true))
+          records.withColumn("text", graft.ops.WebText.payloadText(
+            col("payload"), col("http_content_type")))
+        else records
+      // capture index shards (sources/Cdx.readCdxj): typed capture rows;
+      // `glob` restricts the listing (e.g. "*.cdxj" when the sidecars
+      // share a directory with the .warc.gz shards)
+      case "cdxj" =>
+        graft.sources.Cdx.readCdxj(spark, path, glob = o.opt[String]("glob"))
+      // a capture index built from sidecar-less .warc.gz/.warc.zst
+      // archives (Warc.indexWarc — streaming gzip-member/zstd-frame
+      // offset recovery); the frame is readCdxj-shaped and feeds
+      // cdxPlan/fetchWarc or the zipnum sink directly. `detectText`
+      // (default true) populates languages/charset the way the published
+      // cc-index does; `languageCodes: iso639_3` emits its spelling
+      case "warcIndex" =>
+        graft.sources.Warc.indexWarc(spark, path,
+          maxPayloadBytes = o.get("maxPayloadBytes", 64 << 20),
+          detectText = o.get("detectText", true),
+          languageCodes = o.get("languageCodes", "iso639_1"))
+      // ZipNum-clustered capture index (sources/Cdx.queryZipnum): the
+      // published cc-index two-level layout — a SURT-prefix query reads
+      // the cluster.idx sidecars plus only the matching compressed
+      // blocks. `prefix` (a SURT range key, e.g. from Cdx.surtHostPrefix)
+      // is mandatory: an unprefixed query would fetch the whole index —
+      // use the cdxj source for full scans
+      case "zipnum" =>
+        graft.sources.Cdx.queryZipnum(spark, path, o.str("prefix"), o.get("gapBytes", 0L))
+      // raw CDXJ lines of a ZipNum directory (Cdx.readZipnumLines): the
+      // full-scan/merge entry — feed straight into a zipnum sink to merge
+      // N crawls' indexes (path may glob over several directories)
+      case "zipnumLines" =>
+        graft.sources.Cdx.readZipnumLines(spark, path)
+      case _ =>
+        spark.read.format(fmt).options(o.strings("options")).load(path)
+    }
+  }
+
+  /** Write the pipeline's output: a path sink, a bucketed TABLE sink —
+    * bucketing pre-shuffles once at write time so every later
+    * equi-join/aggregation on the bucket columns runs exchange-free (the
+    * co-located-join setup for repeatedly-joined 100 TB tables; requires
+    * saveAsTable, Spark's bucket metadata lives in the catalog) — or one of
+    * the crawl-archive formats, which are not DataFrameWriter formats.
+    */
+  private def writeSink(out: DataFrame, raw: Any, resolve: String => DataFrame): Unit = {
+    val fmt = Opts.format(raw, "sink")
+    val o = new Opts(s"$fmt sink", Keys.sinks.getOrElse(fmt, Keys.sinks("parquet")), raw)
+    def overwrite = o.get("mode", "overwrite") == "overwrite"
+    fmt match {
+      // WARC response records, one shard per task (Warc.writeWarcResponses);
+      // `warcinfo: true` opens every shard with the conventional warcinfo
+      // record, `contentEncoding: gzip` stores each HTTP entity
+      // content-coded (the real-crawl shape; readers decode by default)
+      case "warc" =>
+        graft.sources.Warc.writeWarcResponses(out, o.str("path"),
+          uriCol = o.get("uri", "uri"),
+          bodyCol = o.get("body", "body"),
+          overwrite = overwrite,
+          contentTypeCol = o.opt[String]("contentType"),
+          codec = o.get("codec", "gzip"),
+          warcinfo = o.get("warcinfo", false),
+          contentEncoding = o.get("contentEncoding", "identity"))
+      // WAT metadata (Wat.writeWat): one metadata record per row with the
+      // links/title envelope JSON — the link-graph artifact next to a warc
+      // sink; `headers` names a map<string,string> column rendered as the
+      // envelope's HTTP Headers
+      case "wat" =>
+        graft.sources.Wat.writeWat(out, o.str("path"),
+          uriCol = o.get("uri", "uri"),
+          htmlCol = o.get("html", "html"),
+          overwrite = overwrite,
+          codec = o.get("codec", "gzip"),
+          headersCol = o.opt[String]("headers"))
+      // cross-crawl deduplicating WARC (Warc.writeWarcDeduped): responses
+      // and revisit stubs interleaved, split against a prior crawl's
+      // digest index (an indexWarc/cdxj frame) resolved as a TABLE (same
+      // hook as decontaminate's evalset)
+      case "warcDedup" =>
+        graft.sources.Warc.writeWarcDeduped(out, o.str("path"),
+          uriCol = o.get("uri", "uri"),
+          bodyCol = o.get("body", "body"),
+          priorDigests = resolve(o.str("prior")),
+          priorDigestCol = o.get("priorDigestCol", "digest"),
+          withinBatch = o.get("withinBatch", true),
+          overwrite = overwrite,
+          contentTypeCol = o.opt[String]("contentType"),
+          codec = o.get("codec", "gzip"),
+          index = o.get("index", false))
+      // ZipNum index (Cdx.writeZipnum): a capture frame (the
+      // warcIndex/cdxj sources' shape) renders to CDXJ lines first; a
+      // frame that already IS lines (single 'value' string column)
+      // clusters as-is
+      case "zipnum" =>
+        val lines =
+          if (out.columns.sameElements(Array("value"))) out
+          else graft.sources.Cdx.cdxjLines(out)
+        graft.sources.Cdx.writeZipnum(lines, o.str("path"),
+          linesPerBlock = o.get("linesPerBlock", 3000),
+          numShards = o.get("numShards", 0),
+          overwrite = overwrite)
+      case _ =>
+        var w = out.write.format(fmt).mode(o.get("mode", "overwrite"))
+        o.opt[Seq[String]]("partitionBy").foreach(p => w = w.partitionBy(p: _*))
+        if (o.has("bucketBy")) {
+          val b = new Opts(s"${o.what} bucketBy", Keys.bucketBy, o.need[Any]("bucketBy"))
+          val cols = b.list("cols")
+          w = w.bucketBy(b.need[Int]("n"), cols.head, cols.tail: _*)
+          o.opt[Seq[String]]("sortBy").foreach(s => w = w.sortBy(s.head, s.tail: _*))
+        }
+        require(!o.has("sortBy") || o.has("bucketBy"),
+          "sink sortBy requires bucketBy (Spark only sorts within buckets)")
+        (o.opt[String]("table"), o.opt[String]("path")) match {
+          case (Some(_), Some(_)) =>
+            throw new IllegalArgumentException(
+              "sink takes 'table' OR 'path', not both (a table's location is catalog-managed)")
+          case (Some(t), None) => w.saveAsTable(t)
+          case (None, Some(p)) =>
+            require(!o.has("bucketBy"),
+              "bucketBy requires a 'table' sink (bucket metadata lives in the catalog)")
+            w.save(p)
+          case (None, None) =>
+            throw new IllegalArgumentException("sink needs a 'path' or a 'table'")
+        }
+    }
+  }
+
   private def applyStep(
       df: DataFrame,
       step: Map[String, Any],
@@ -546,64 +398,67 @@ object Pipeline {
     // one verb per step; groupBy carries its agg in the same mapping
     val verbs = step.keySet -- Set("agg")
     require(verbs.size == 1, s"each step needs exactly one verb; got ${step.keySet}")
-    verbs.head match {
+    val verb = verbs.head
+    if (!Keys.steps.contains(verb))
+      throw new IllegalArgumentException(s"Unknown pipeline verb: $verb")
+    require(verb == "groupBy" || !step.contains("agg"), s"$verb does not take 'agg'; groupBy does")
+    lazy val o = new Opts(verb, Keys.steps(verb), step(verb))
+    verb match {
       case "select" =>
-        val cols = orderedEntries(step("select"), "select").map {
+        df.select(Opts.mapping(step(verb), verb).map {
           case (name, raw) => compileExpr(raw, df).as(name)
-        }
-        df.select(cols: _*)
+        }: _*)
 
       case "withColumns" =>
-        withDerived(df, orderedEntries(step("withColumns"), "withColumns").map {
+        withDerived(df, Opts.mapping(step(verb), verb).map {
           case (name, raw) =>
             val node = DictParser.parse(raw)
             Derived(name, node.referencedColumns, d => Compiler.compile(node, Some(d.schema)))
         })
 
       case "filter" =>
-        df.filter(compileExpr(step("filter"), df))
+        df.filter(compileExpr(step(verb), df))
 
       case "drop" =>
-        df.drop(asSeq(step("drop")).map(_.toString): _*)
+        df.drop(Opts.scalar[Seq[String]](verb, step(verb)): _*)
 
       case "join" =>
-        val j = asMap(step("join"), "join")
-        val how = j.getOrElse("how", "inner").toString
-        var right = resolve(j.getOrElse("table",
-          throw new IllegalArgumentException("join needs a 'table'")).toString)
-        if (j.get("broadcast").exists(_.toString.toBoolean)) right = broadcast(right)
-        // YAML 1.1 resolves a bare `on` key to boolean true — accept both.
-        j.get("on").orElse(j.get("true")).getOrElse(
-          throw new IllegalArgumentException("join needs 'on'")) match {
-          case m: scala.collection.Map[_, _] =>
+        // YAML 1.1 resolves a bare `on` key to boolean true — accept both
+        val j = new Opts(verb, Keys.steps(verb), Opts.mapping(step(verb), verb).map {
+          case ("true", v) => "on" -> v
+          case kv => kv
+        }.toMap)
+        val how = j.get("how", "inner")
+        var right = resolve(j.str("table"))
+        if (j.get("broadcast", false)) right = broadcast(right)
+        // a join with no key columns has no condition: a silent cross join
+        def noKeys = throw new IllegalArgumentException(
+          "join needs at least one key column in 'on'")
+        j.need[Any]("on") match {
+          case _: scala.collection.Map[_, _] =>
             // {leftCol: rightCol} pairs — equi-join on differently-named keys
-            val cond = m.map { case (l, r) => df(l.toString) === right(r.toString) }
-              .reduce(_ && _)
-            df.join(right, cond, how)
-          case cols =>
-            df.join(right, asSeq(cols).map(_.toString), how)
+            df.join(right, j.entries("on").map { case (l, r) => df(l) === right(r.toString) }
+              .reduceOption(_ && _).getOrElse(noKeys), how)
+          case _ =>
+            df.join(right, Some(j.list("on")).filter(_.nonEmpty).getOrElse(noKeys), how)
         }
 
       case "groupBy" =>
-        // plain list of keys, or {cols: [...], mode: group|rollup|cube} —
+        // plain list of keys, or the map form with a mode —
         // rollup/cube emit subtotal grouping sets (NULL key = subtotal row)
-        val (keys, mode) = step("groupBy") match {
-          case m: scala.collection.Map[_, _] =>
-            val gm = asMap(m, "groupBy")
-            (asSeq(gm.getOrElse("cols",
-              throw new IllegalArgumentException("groupBy map needs 'cols'"))).map(_.toString),
-              gm.getOrElse("mode", "group").toString)
-          case other => (asSeq(other).map(_.toString), "group")
+        val (keys, mode) = step(verb) match {
+          case _: scala.collection.Map[_, _] =>
+            (o.list("cols"), o.oneOf("mode", "group|rollup|cube", "group"))
+          case other => (Opts.scalar[Seq[String]](verb, other), "group")
         }
-        val aggs = orderedEntries(step.getOrElse("agg",
-          throw new IllegalArgumentException("groupBy needs 'agg'")), "agg")
+        val aggs = Opts.mapping(step.getOrElse("agg",
+          throw new IllegalArgumentException("groupBy needs 'agg'")), "groupBy 'agg'")
           .map { case (name, spec) => aggColumn(name, spec, df) }
+        require(aggs.nonEmpty, "groupBy needs at least one aggregate in 'agg'")
         val grouped = mode match {
           case "group"  => df.groupBy(keys.map(col): _*)
           case "rollup" => df.rollup(keys.map(col): _*)
-          case "cube"   => df.cube(keys.map(col): _*)
-          case other => throw new IllegalArgumentException(
-            s"groupBy mode must be group|rollup|cube, got $other")
+          case _        => df.cube(keys.map(col): _*)
         }
         grouped.agg(aggs.head, aggs.tail: _*)
 
@@ -611,13 +466,9 @@ object Pipeline {
         // multiset semantics with `all: true` (EXCEPT ALL / INTERSECT ALL),
         // set semantics otherwise; `cols` projects the right table first so
         // the sides line up positionally
-        val verb = verbs.head
-        val s = asMap(step(verb), verb)
-        var right = resolve(s("table").toString)
-        s.get("cols").foreach(c =>
-          right = right.select(asSeq(c).map(x => col(x.toString)): _*))
-        val all = s.get("all").exists(_.toString.toBoolean)
-        (verb, all) match {
+        val table = resolve(o.str("table"))
+        val right = o.opt[Seq[String]]("cols").fold(table)(c => table.select(c.map(col): _*))
+        (verb, o.get("all", false)) match {
           case ("except", true)     => df.exceptAll(right)
           case ("except", false)    => df.except(right)
           case ("intersect", true)  => df.intersectAll(right)
@@ -625,64 +476,47 @@ object Pipeline {
         }
 
       case "orderBy" =>
-        df.orderBy(sortCols(asSeq(step("orderBy"))): _*)
+        df.orderBy(sortCols(Opts.scalar[Seq[String]](verb, step(verb))): _*)
 
       case "limit" =>
-        df.limit(step("limit").toString.toInt)
+        df.limit(Opts.scalar[Int](verb, step(verb)))
 
       case "distinct" =>
         df.distinct()
 
       case "union" =>
-        val u = asMap(step("union"), "union")
-        df.unionByName(resolve(u("table").toString),
-          allowMissingColumns = u.get("allowMissingColumns").exists(_.toString.toBoolean))
+        df.unionByName(resolve(o.str("table")),
+          allowMissingColumns = o.get("allowMissingColumns", false))
 
       case "repartition" =>
-        step("repartition") match {
-          case n: Integer => df.repartition(n.intValue())
-          case m: scala.collection.Map[_, _] =>
-            val mm = asMap(m, "repartition")
-            val cols = asSeq(mm.getOrElse("by", Seq.empty)).map(s => col(s.toString))
-            mm.get("n") match {
-              case Some(n) => df.repartition(n.toString.toInt, cols: _*)
-              case None    => df.repartition(cols: _*)
-            }
-          case other => throw new IllegalArgumentException(s"bad repartition: $other")
+        step(verb) match {
+          case _: scala.collection.Map[_, _] =>
+            val cols = o.get("by", Seq.empty[String]).map(col)
+            o.opt[Int]("n").fold(df.repartition(cols: _*))(df.repartition(_, cols: _*))
+          case n => df.repartition(Opts.scalar[Int](verb, n))
         }
 
       case "dedupExact" =>
-        val d = asMap(step("dedupExact"), "dedupExact")
-        Dedup.dropExactDuplicates(df,
-          d("id").toString, asSeq(d("keys")).map(_.toString))
+        Dedup.dropExactDuplicates(df, o.str("id"), o.list("keys"))
 
       case "dedupSegments" =>
-        // {id: col, text: col, sep?: "\n", mode?: keep_first|unique_only}
-        // — CCNet-style cross-corpus line/paragraph dedup; adds
+        // CCNet-style cross-corpus line/paragraph dedup; adds
         // `text_dedup` + `n_segments_removed`
-        val d = asMap(step("dedupSegments"), "dedupSegments")
-        Dedup.dedupSegmentsAcrossCorpus(df,
-          d("id").toString, d("text").toString,
-          sep = d.getOrElse("sep", "\n").toString,
-          mode = d.getOrElse("mode", "keep_first").toString)
+        Dedup.dedupSegmentsAcrossCorpus(df, o.str("id"), o.str("text"),
+          sep = o.get("sep", "\n"), mode = o.get("mode", "keep_first"))
 
       case "textStats" =>
-        graft.ops.TextStats.withTextStats(df, step("textStats").toString)
+        graft.ops.TextStats.withTextStats(df, step(verb).toString)
 
       case "dropNearDuplicates" =>
-        // {id, text, threshold?: 0.8, targetRecall?} — with targetRecall
-        // the banding layout is auto-tuned from the S-curve
-        // (minhashParamsFor) instead of the fixed 64/16 default
-        val d = asMap(step("dropNearDuplicates"), "dropNearDuplicates")
-        val thr = d.get("threshold").map(_.toString.toDouble).getOrElse(0.8)
-        d.get("targetRecall").map(_.toString.toDouble) match {
+        // with targetRecall the banding layout is auto-tuned from the
+        // S-curve (minhashParamsFor) instead of the fixed 64/16 default
+        val (id, text, thr) = (o.str("id"), o.str("text"), o.get("threshold", 0.8))
+        o.opt[Double]("targetRecall") match {
           case Some(rec) =>
-            Dedup.dropNearDuplicatesAuto(df,
-              d("id").toString, d("text").toString,
-              threshold = thr, targetRecall = rec)
+            Dedup.dropNearDuplicatesAuto(df, id, text, threshold = thr, targetRecall = rec)
           case None =>
-            Dedup.dropNearDuplicates(df,
-              d("id").toString, d("text").toString, threshold = thr)
+            Dedup.dropNearDuplicates(df, id, text, threshold = thr)
         }
 
       case "dedupEmbeddings" =>
@@ -692,40 +526,34 @@ object Pipeline {
         // threshold scale path); method ivf = cell-bucketed pairs (the
         // low-threshold path; trains k-means centroids driver-side,
         // k·dim doubles). dim is read from the first row when absent.
-        val d = asMap(step("dedupEmbeddings"), "dedupEmbeddings")
-        val id = d("id").toString
-        val vec = d("embedding").toString
-        val thr = d.get("threshold").map(_.toString.toDouble).getOrElse(0.9)
-        val pairs = d.getOrElse("method", "lsh").toString match {
+        val id = o.str("id")
+        val vec = o.str("embedding")
+        val thr = o.get("threshold", 0.9)
+        val pairs = o.oneOf("method", "lsh|ivf", "lsh") match {
           case "lsh" =>
-            val dim = d.get("dim").map(_.toString.toInt).getOrElse(
-              df.select(size(col(vec))).head().getInt(0))
-            graft.ops.Similarity.cosineNearDuplicatePairsAuto(
-              df, id, vec, thr, dim,
-              targetRecall = d.get("targetRecall").map(_.toString.toDouble).getOrElse(0.9))
-          case "ivf" =>
+            graft.ops.Similarity.cosineNearDuplicatePairsAuto(df, id, vec, thr,
+              o.get("dim", df.select(size(col(vec))).head().getInt(0)),
+              targetRecall = o.get("targetRecall", 0.9))
+          case _ =>
             // cells: auto sizes the cell count from the corpus (cells ∝ n,
             // constant expected per-cell population — the scale-safe
             // setting; a fixed count means per-cell pair work grows n²)
-            val cells = d.get("cells").map(_.toString) match {
-              case Some("auto") => graft.ops.Similarity.ivfCellsFor(df.count(),
-                targetCellSize = d.get("targetCellSize").map(_.toString.toInt)
-                  .getOrElse(2000))
-              case Some(n) => n.toInt
-              case None => 16
-            }
-            val nProbe = d.get("nProbe").map(_.toString.toInt).getOrElse(2)
+            val cells =
+              if (o.opt[String]("cells").contains("auto"))
+                graft.ops.Similarity.ivfCellsFor(df.count(),
+                  targetCellSize = o.get("targetCellSize", 2000))
+              else o.get("cells", 16)
+            val nProbe = o.get("nProbe", 2)
             // trainSample: true (auto target) or an explicit row target —
             // k-means++-seeded training on a bounded sample, the 100 TB
             // path (full-corpus Lloyd iterations are a cost hole there)
-            val cents = d.get("trainSample").map(_.toString) match {
+            val cents = o.opt[String]("trainSample") match {
               case Some("true") =>
                 graft.ops.Similarity.trainCentroidsSampled(df, vec, cells)
               case Some(n) if n.nonEmpty && n.forall(_.isDigit) =>
                 graft.ops.Similarity.trainCentroidsSampled(df, vec, cells,
-                  sampleTarget = n.toInt)
-              case Some(other) => throw new IllegalArgumentException(
-                s"trainSample must be true or a row target, got $other")
+                  sampleTarget = o.need[Int]("trainSample"))
+              case Some(other) => o.fail("trainSample", other, "true or a row target")
               case None => graft.ops.Similarity.trainCentroids(df, vec, cells)
             }
             // quantized: true rides int8 payloads through the bucket
@@ -733,173 +561,131 @@ object Pipeline {
             // exact re-score join on survivors) — for memory-bound
             // clusters / wide embeddings; costs extra stages when the
             // buckets fit comfortably (measured ~3x wall at SF1/64-dim)
-            if (d.get("quantized").exists(_.toString.toBoolean))
+            if (o.get("quantized", false))
               graft.ops.Similarity.cosineNearDuplicatePairsIvfQuantized(
                 df, id, vec, thr, cents, nProbe)
             else graft.ops.Similarity.cosineNearDuplicatePairsIvf(
               df, id, vec, thr, cents, nProbe)
-          case other => throw new IllegalArgumentException(
-            s"dedupEmbeddings method must be lsh|ivf, got $other")
         }
         val drops = pairs.select(col("id_b").as("__drop_id")).distinct()
         df.join(drops, df(id) === col("__drop_id"), "left_anti")
 
       case "asOfJoin" =>
-        val j = asMap(step("asOfJoin"), "asOfJoin")
         graft.ops.TemporalJoin.asOfJoin(
-          df, resolve(j("table").toString),
-          asSeq(j("keys")).map(_.toString),
-          j("leftTs").toString, j("rightTs").toString,
-          asSeq(j("rightCols")).map(_.toString),
-          j.get("tolerance").map(t => org.apache.spark.sql.functions.expr(t.toString)))
+          df, resolve(o.str("table")), o.list("keys"),
+          o.str("leftTs"), o.str("rightTs"), o.list("rightCols"),
+          o.opt[String]("tolerance").map(expr))
 
       case "window" =>
-        // windowed analytics: {partitionBy: [...], orderBy: [...: "-col" desc],
-        // cols: {out: row_number|rank|dense_rank|lag:<expr>|lead:<expr>|
-        //        sum:<expr>|...}}
-        val wspec = asMap(step("window"), "window")
-        val partitionBy = asSeq(wspec.getOrElse("partitionBy", Seq.empty)).map(_.toString)
-        val orderBy = wspec.get("orderBy").map(asSeq).getOrElse(Seq.empty)
+        // windowed analytics: each col is row_number|rank|dense_rank or a
+        // one-entry {fn: expr} with fn ∈ sum|avg|min|max|count|lag|lead;
+        // "-col" in orderBy sorts descending
+        val partitionBy = o.get("partitionBy", Seq.empty[String])
+        val orderBy = o.get("orderBy", Seq.empty[String])
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(partitionBy.map(col): _*)
           .orderBy(sortCols(orderBy): _*)
         // every column reads the spec's keys; all name parts count, so a
         // nested field or qualified name depends on whatever defines a part
-        val specReads = (partitionBy ++ orderBy.map(_.toString.stripPrefix("-")))
+        val specReads = (partitionBy ++ orderBy.map(_.stripPrefix("-")))
           .flatMap(UnresolvedAttribute.parseAttributeName).toSet
-        withDerived(df, orderedEntries(wspec.getOrElse("cols",
-          throw new IllegalArgumentException("window needs 'cols'")), "window.cols")
-          .map { case (name, spec) =>
-            def ranking(f: Column) = Derived(name, specReads, _ => f.over(w))
-            spec match {
-              case "row_number" => ranking(row_number())
-              case "rank"       => ranking(rank())
-              case "dense_rank" => ranking(dense_rank())
-              case m: scala.collection.Map[_, _] =>
-                val fm = asMap(m, s"window col '$name'")
-                require(fm.size == 1, s"window col '$name' needs one {fn: expr}")
-                val (fn, rawExpr) = fm.head
-                val agg: Column => Column = fn match {
-                  case "sum"   => sum
-                  case "avg"   => avg
-                  case "min"   => min
-                  case "max"   => max
-                  case "count" => count
-                  case "lag"   => lag(_, 1)
-                  case "lead"  => lead(_, 1)
-                  case other =>
-                    throw new IllegalArgumentException(s"Unknown window fn: $other")
-                }
-                val node = DictParser.parse(rawExpr)
-                Derived(name, specReads ++ node.referencedColumns,
-                  d => agg(Compiler.compile(node, Some(d.schema))).over(w))
-              case other =>
-                throw new IllegalArgumentException(s"bad window col '$name': $other")
-            }
-          })
+        withDerived(df, o.entries("cols").map { case (name, spec) =>
+          def ranking(f: Column) = Derived(name, specReads, _ => f.over(w))
+          spec match {
+            case "row_number" => ranking(row_number())
+            case "rank"       => ranking(rank())
+            case "dense_rank" => ranking(dense_rank())
+            case m: scala.collection.Map[_, _] =>
+              val fm = Opts.mapping(m, s"window col '$name'")
+              require(fm.size == 1, s"window col '$name' needs one {fn: expr}")
+              val (fn, rawExpr) = fm.head
+              val agg: Column => Column = fn match {
+                case "sum"   => sum
+                case "avg"   => avg
+                case "min"   => min
+                case "max"   => max
+                case "count" => count
+                case "lag"   => lag(_, 1)
+                case "lead"  => lead(_, 1)
+                case other =>
+                  throw new IllegalArgumentException(s"Unknown window fn: $other")
+              }
+              val node = DictParser.parse(rawExpr)
+              Derived(name, specReads ++ node.referencedColumns,
+                d => agg(Compiler.compile(node, Some(d.schema))).over(w))
+            case other =>
+              throw new IllegalArgumentException(s"bad window col '$name': $other")
+          }
+        })
 
       case "qualitySignals" =>
-        graft.ops.Corpus.withQualitySignals(df, step("qualitySignals").toString)
+        graft.ops.Corpus.withQualitySignals(df, step(verb).toString)
 
-      // extended Gopher repetition/format signals + keep_full:
-      // {repetitionSignals: text} or {repetitionSignals: {text: ...,
-      // n: 5, lang: en}} — lang keys the stopword-hits gate (LangId's
-      // 28-language table; stoplist-less languages disable the gate)
+      // extended Gopher repetition/format signals + keep_full over a text
+      // column, or the map form — `lang` keys the stopword-hits gate
+      // (LangId's 28-language table; stoplist-less languages disable it)
       case "repetitionSignals" =>
-        step("repetitionSignals") match {
-          case m: scala.collection.Map[_, _] =>
-            val rm = asMap(m, "repetitionSignals")
-            graft.ops.Corpus.withRepetitionSignals(df, rm("text").toString,
-              rm.get("n").map(_.toString.toInt).getOrElse(5),
-              lang = rm.getOrElse("lang", "en").toString)
+        step(verb) match {
+          case _: scala.collection.Map[_, _] =>
+            graft.ops.Corpus.withRepetitionSignals(df, o.str("text"),
+              o.get("n", 5), lang = o.get("lang", "en"))
           case c => graft.ops.Corpus.withRepetitionSignals(df, c.toString)
         }
 
-      // engine-portable KMV distinct estimate per group:
-      // {approxDistinct: {by: [cols], value: col, k: 256, seed: 42}}
+      // engine-portable KMV distinct estimate per group
       case "approxDistinct" =>
-        val ad = asMap(step("approxDistinct"), "approxDistinct")
-        graft.ops.Corpus.approxDistinct(df,
-          asSeq(ad("by")).map(_.toString),
-          ad("value").toString,
-          ad.get("k").map(_.toString.toInt).getOrElse(256),
-          ad.get("seed").map(_.toString.toLong).getOrElse(42L))
+        graft.ops.Corpus.approxDistinct(df, o.list("by"), o.str("value"),
+          o.get("k", 256), o.get("seed", 42L))
 
-      // URL canonicalization: {canonicalizeUrl: {url: col, as?: in-place}}
+      // URL canonicalization, in place unless `as` names a new column
       case "canonicalizeUrl" =>
-        val cu = asMap(step("canonicalizeUrl"), "canonicalizeUrl")
-        val urlCol = cu("url").toString
-        df.withColumn(cu.get("as").map(_.toString).getOrElse(urlCol),
-          graft.ops.WebText.canonicalizeUrl(col(urlCol)))
+        val url = o.str("url")
+        df.withColumn(o.get("as", url), graft.ops.WebText.canonicalizeUrl(col(url)))
 
-      // One-row corpus data card: {report: textCol}
+      // One-row corpus data card over a text column
       case "report" =>
-        graft.ops.Corpus.report(df, step("report").toString)
+        graft.ops.Corpus.report(df, step(verb).toString)
 
-      // Bloom cross-corpus membership: {bloomSeen: {ref: table, column: c,
-      //   expectedItems: N, fpp: 0.01, mode: mark|drop, flag: seen}} —
-      // build the filter from the resolved reference table (driver holds
-      // only the bit array), then mark or drop map-side.
+      // Bloom cross-corpus membership: build the filter from the resolved
+      // reference table (driver holds only the bit array), then mark or
+      // drop map-side.
       case "bloomSeen" =>
-        val bs = asMap(step("bloomSeen"), "bloomSeen")
-        val refDf = resolve(bs("ref").toString)
-        val column = bs("column").toString
-        val bloom = graft.ops.Decontam.buildBloom(refDf, column,
-          bs("expectedItems").toString.toLong,
-          bs.get("fpp").map(_.toString.toDouble).getOrElse(0.01))
-        bs.getOrElse("mode", "mark").toString match {
-          case "mark" => graft.ops.Decontam.markSeenBloom(df, column, bloom,
-            bs.get("flag").map(_.toString).getOrElse("seen"))
-          case "drop" => graft.ops.Decontam.dropSeenBloom(df, column, bloom)
-          case other => throw new IllegalArgumentException(
-            s"bloomSeen mode must be mark|drop, got $other")
-        }
+        val column = o.str("column")
+        val mode = o.oneOf("mode", "mark|drop", "mark")
+        val bloom = graft.ops.Decontam.buildBloom(resolve(o.str("ref")), column,
+          o.need[Long]("expectedItems"), o.get("fpp", 0.01))
+        if (mode == "mark")
+          graft.ops.Decontam.markSeenBloom(df, column, bloom, o.get("flag", "seen"))
+        else graft.ops.Decontam.dropSeenBloom(df, column, bloom)
 
-      // Snapshot diff/delta against a resolved old snapshot:
-      // {snapshotDiff: {old: table, id: doc_id, content: [text],
-      //   mode: diff|delta}} — diff returns (id, status); delta returns
-      // the new/changed rows of the CURRENT frame.
+      // Snapshot diff/delta against a resolved old snapshot: diff returns
+      // (id, status); delta returns the new/changed rows of the CURRENT
+      // frame.
       case "snapshotDiff" =>
-        val sd = asMap(step("snapshotDiff"), "snapshotDiff")
-        val oldDf = resolve(sd("old").toString)
-        val id = sd("id").toString
-        val content = asSeq(sd("content")).map(_.toString)
-        sd.getOrElse("mode", "diff").toString match {
-          case "diff"  => graft.ops.SnapshotDiff.diff(oldDf, df, id, content)
-          case "delta" => graft.ops.SnapshotDiff.delta(oldDf, df, id, content)
-          case other => throw new IllegalArgumentException(
-            s"snapshotDiff mode must be diff|delta, got $other")
-        }
+        val (oldDf, id, content) = (resolve(o.str("old")), o.str("id"), o.list("content"))
+        if (o.oneOf("mode", "diff|delta", "diff") == "diff")
+          graft.ops.SnapshotDiff.diff(oldDf, df, id, content)
+        else graft.ops.SnapshotDiff.delta(oldDf, df, id, content)
 
-      // SemDeDup semantic dedup: {semanticDedup: {id: ..., embedding: ...,
-      //   threshold: 0.85, targetCellSize: 2000}} — dominance prune within
-      // auto-trained k-means cells (see Similarity.semanticDedup)
+      // SemDeDup semantic dedup: dominance prune within auto-trained
+      // k-means cells (see Similarity.semanticDedup)
       case "semanticDedup" =>
-        val sd = asMap(step("semanticDedup"), "semanticDedup")
-        graft.ops.Similarity.semanticDedup(df,
-          sd("id").toString,
-          sd("embedding").toString,
-          sd.get("threshold").map(_.toString.toDouble).getOrElse(0.9),
-          targetCellSize =
-            sd.get("targetCellSize").map(_.toString.toInt).getOrElse(2000),
-          seed = sd.get("seed").map(_.toString.toLong).getOrElse(42L))
+        graft.ops.Similarity.semanticDedup(df, o.str("id"), o.str("embedding"),
+          o.get("threshold", 0.9),
+          targetCellSize = o.get("targetCellSize", 2000),
+          seed = o.get("seed", 42L))
 
       case "quota" =>
-        val q = asMap(step("quota"), "quota")
-        graft.ops.Corpus.perKeyQuota(df,
-          asSeq(q("keys")).map(_.toString),
-          sortCols(asSeq(q("orderBy"))),
-          q("k").toString.toInt)
+        graft.ops.Corpus.perKeyQuota(df, o.list("keys"), sortCols(o.list("orderBy")),
+          o.need[Int]("k"))
 
       case "sample" =>
-        // {fraction: 0.1, seed: 42} or stratified {fraction: {..per-key..},
-        // by: col, seed}: seeded => deterministic and reproducible run-to-run
-        val sp = asMap(step("sample"), "sample")
-        val seed = sp.getOrElse("seed", 42).toString.toLong
-        sp("fraction") match {
-          case m: scala.collection.Map[_, _] =>
-            val by = sp.getOrElse("by",
-              throw new IllegalArgumentException("stratified sample needs 'by'")).toString
+        // a fraction, or per-stratum fractions over a `by` column; seeded
+        // => deterministic and reproducible run-to-run
+        val seed = o.get("seed", 42L)
+        o.need[Any]("fraction") match {
+          case _: scala.collection.Map[_, _] =>
+            val by = o.str("by")
             // Stratify on the column CAST to string (YAML keys are strings;
             // sampleBy silently drops any stratum whose value isn't a key).
             // Only string/integral columns cast to strings that can equal a
@@ -912,88 +698,68 @@ object Pipeline {
                 s"stratified sample 'by' column must be string/integral/boolean " +
                   s"(YAML keys are strings; $other values never equal them textually) — cast upstream")
             }
-            // materialize to a plain immutable Map — the YAML-backed mapping
-            // is not serializable and sampleBy ships the fractions to tasks
-            val fracs: Map[String, Double] = asMap(m, "sample.fraction").toSeq
-              .map { case (k, v) => k -> v.toString.toDouble }.toMap
+            // a plain immutable Map — the YAML-backed mapping is not
+            // serializable and sampleBy ships the fractions to tasks
+            val fracs = o.numbers("fraction").toMap
             val stratum = Iterator.from(0).map(i => s"__stratum$i")
               .find(n => !df.columns.contains(n)).get
             df.withColumn(stratum, col(by).cast("string"))
               .stat.sampleBy(stratum, fracs, seed)
               .drop(stratum)
-          case f => df.sample(withReplacement = false, f.toString.toDouble, seed)
+          case _ => df.sample(withReplacement = false, o.need[Double]("fraction"), seed)
         }
 
       case "sampleDeterministic" =>
         // content-keyed md5-rank sample (ops/Sampling.scala): the row set is
         // a pure function of the data — reproducible across engines,
         // cluster sizes, and partitionings, unlike the RNG `sample` above
-        val sp = asMap(step("sampleDeterministic"), "sampleDeterministic")
-        graft.ops.Sampling.deterministicSample(
-          df, sp("key").toString, sp("fraction").toString.toDouble,
-          sp.get("seed").map(_.toString.toLong).getOrElse(42L))
+        graft.ops.Sampling.deterministicSample(df, o.str("key"),
+          o.need[Double]("fraction"), o.get("seed", 42L))
 
       case "takePerStratum" =>
-        val sp = asMap(step("takePerStratum"), "takePerStratum")
-        graft.ops.Sampling.topKPerStratum(
-          df, asSeq(sp("by")).map(_.toString), sp("k").toString.toInt,
-          sp("key").toString,
-          sp.get("seed").map(_.toString.toLong).getOrElse(42L),
-          sp.get("saltBuckets").map(_.toString.toInt).getOrElse(32))
+        graft.ops.Sampling.topKPerStratum(df, o.list("by"), o.need[Int]("k"),
+          o.str("key"), o.get("seed", 42L), o.get("saltBuckets", 32))
 
       case "sitemaps" =>
         // explode sitemap XML documents into one row per discovered URL
-        // (urlset entries + sitemapindex children); {xml: column}
-        val p = asMap(step("sitemaps"), "sitemaps")
-        graft.ops.Sitemaps.parseSitemaps(df, p("xml").toString)
+        // (urlset entries + sitemapindex children)
+        graft.ops.Sitemaps.parseSitemaps(df, o.str("xml"))
 
       case "cdxPlan" =>
         // captures (the cdxj source's frame, filtered) → per-WARC-file
-        // coalesced byte ranges; {gapBytes: 0}
-        val p = asMap(step("cdxPlan"), "cdxPlan")
-        graft.sources.Cdx.fetchPlan(df,
-          p.get("gapBytes").map(_.toString.toLong).getOrElse(0L))
+        // coalesced byte ranges
+        graft.sources.Cdx.fetchPlan(df, o.get("gapBytes", 0L))
 
       case "fetchWarc" =>
         // the frame IS a fetch plan (filename/range_start/range_end) —
         // replace it with the decoded records of exactly those byte
-        // ranges; {dir: archiveDir, maxPayloadBytes?, maxRangeBytes?}
-        val p = asMap(step("fetchWarc"), "fetchWarc")
-        graft.sources.Warc.readWarcRanges(df.sparkSession,
-          p.getOrElse("dir", throw new IllegalArgumentException(
-            "fetchWarc needs 'dir' (the archive directory)")).toString,
-          df,
-          p.get("maxPayloadBytes").map(_.toString.toInt).getOrElse(64 << 20),
-          p.get("maxRangeBytes").map(_.toString.toLong).getOrElse(1L << 30))
+        // ranges read from the archive directory `dir`
+        graft.sources.Warc.readWarcRanges(df.sparkSession, o.str("dir"), df,
+          o.get("maxPayloadBytes", 64 << 20), o.get("maxRangeBytes", 1L << 30))
 
       case "resolveRevisits" =>
         // the frame is a WARC record frame (warc source / fetchWarc):
         // resolve revisit stubs to their originals' payloads by payload
         // digest (the CommonCrawl multi-crawl dedup convention); adds
-        // `resolved_from`. No options: the linkage is entirely in the
+        // `resolved_from`. Takes `{}`: the linkage is entirely in the
         // records' own headers.
+        val _ = o
         graft.sources.Warc.resolveRevisits(df)
 
       case "dsirSelect" =>
         // DSIR data selection (ops/Dsir.scala): importance weights of each
         // row against a TARGET exemplar table under hashed-n-gram bag
-        // models. {target: table, id:, text:, k?, nibbles: 3, maxN: 2,
-        // seed: 42} — with k the frame BECOMES the Gumbel top-k sample
+        // models. With k the frame BECOMES the Gumbel top-k sample
         // (softmax(log_weight) without replacement); without k it just
         // gains log_weight for downstream thresholds/analysis.
-        val p = asMap(step("dsirSelect"), "dsirSelect")
-        val target = resolve(p.getOrElse("target",
-          throw new IllegalArgumentException("dsirSelect needs 'target'")).toString)
-        val id = p("id").toString
-        val text = p("text").toString
-        val nib = p.get("nibbles").map(_.toString.toInt).getOrElse(3)
-        val mN = p.get("maxN").map(_.toString.toInt).getOrElse(2)
-        p.get("k") match {
-          case Some(k) => graft.ops.Dsir.dsirSample(df, target, id, text,
-            k.toString.toInt, nib, mN,
-            p.get("seed").map(_.toString.toLong).getOrElse(42L))
+        val target = resolve(o.str("target"))
+        val (id, text) = (o.str("id"), o.str("text"))
+        val (nib, maxN) = (o.get("nibbles", 3), o.get("maxN", 2))
+        o.opt[Int]("k") match {
+          case Some(k) =>
+            graft.ops.Dsir.dsirSample(df, target, id, text, k, nib, maxN, o.get("seed", 42L))
           case None =>
-            graft.ops.Dsir.dsirLogWeights(df, target, id, text, nib, mN)
+            graft.ops.Dsir.dsirLogWeights(df, target, id, text, nib, maxN)
         }
 
       case "hostRank" =>
@@ -1002,16 +768,12 @@ object Pipeline {
         // power iteration, join each page's host rank back as `as`. Hosts
         // with no cross-host edge on either side stay null — the graph has
         // no evidence about them; coalesce downstream if a floor is wanted.
-        val p = asMap(step("hostRank"), "hostRank")
-        val as = p.getOrElse("as", "host_rank").toString
+        val as = o.get("as", "host_rank")
         require(!df.columns.contains(as),
           s"hostRank adds '$as'; rename the existing column or set 'as'")
-        val ranks = graft.ops.LinkGraph.rankHosts(
-          df, p("url").toString, p("html").toString,
-          p.get("iterations").map(_.toString.toInt).getOrElse(10),
-          p.get("damping").map(_.toString.toDouble).getOrElse(0.85))
-        df.withColumn("__lg_host",
-            graft.ops.WebText.urlHost(col(p("url").toString)))
+        val ranks = graft.ops.LinkGraph.rankHosts(df, o.str("url"), o.str("html"),
+          o.get("iterations", 10), o.get("damping", 0.85))
+        df.withColumn("__lg_host", graft.ops.WebText.urlHost(col(o.str("url"))))
           .join(ranks.withColumnRenamed("host", "__lg_host")
             .withColumnRenamed("rank", as), Seq("__lg_host"), "left")
           .drop("__lg_host")
@@ -1022,25 +784,15 @@ object Pipeline {
         // (PSL eTLD+1) and joined back as `as`. Same options as hostRank
         // plus pslFile (full published Public Suffix List; default the
         // compact built-in subset).
-        val p = asMap(step("domainRank"), "domainRank")
-        val as = p.getOrElse("as", "domain_rank").toString
+        val as = o.get("as", "domain_rank")
         require(!df.columns.contains(as),
           s"domainRank adds '$as'; rename the existing column or set 'as'")
-        val rules = p.get("pslFile") match {
-          case Some(f) =>
-            graft.ops.expr.PslRules.parse(new String(
-              java.nio.file.Files.readAllBytes(
-                java.nio.file.Paths.get(f.toString)), "UTF-8"))
-          case None => graft.ops.expr.PslRules.default
-        }
-        val ranks = graft.ops.LinkGraph.rankDomains(
-          df, p("url").toString, p("html").toString,
-          p.get("iterations").map(_.toString.toInt).getOrElse(10),
-          p.get("damping").map(_.toString.toDouble).getOrElse(0.85),
-          rules)
+        val rules = o.opt[String]("pslFile").fold(graft.ops.expr.PslRules.default)(readPsl)
+        val ranks = graft.ops.LinkGraph.rankDomains(df, o.str("url"), o.str("html"),
+          o.get("iterations", 10), o.get("damping", 0.85), rules)
         df.withColumn("__lg_domain",
             graft.ops.WebText.registrableDomainPsl(
-              graft.ops.WebText.urlHost(col(p("url").toString)), rules))
+              graft.ops.WebText.urlHost(col(o.str("url"))), rules))
           .join(ranks.withColumnRenamed("domain", "__lg_domain")
             .withColumnRenamed("rank", as), Seq("__lg_domain"), "left")
           .drop("__lg_domain")
@@ -1049,531 +801,358 @@ object Pipeline {
         // deterministic data mixture over named sources ('$self' = the
         // current frame); exact-count mode (total + weights) or the
         // map-only fraction mode (fractions)
-        val sp = asMap(step("mix"), "mix")
-        val named = orderedEntries(sp("sources"), "mix.sources").map {
-          case (name, tbl) =>
-            name -> (if (tbl == "$self") df else resolve(tbl.toString))
+        val named = o.entries("sources").map {
+          case (name, tbl) => name -> (if (tbl == "$self") df else resolve(tbl.toString))
         }
-        val key = sp("key").toString
-        val seed = sp.get("seed").map(_.toString.toLong).getOrElse(42L)
-        (sp.get("total"), sp.get("weights"), sp.get("fractions")) match {
-          case (Some(total), Some(w), None) =>
-            graft.ops.Sampling.mixCorpora(
-              named,
-              orderedEntries(w, "mix.weights").map { case (n, v) =>
-                n -> v.toString.toDouble },
-              total.toString.toLong, key, seed)
-          case (None, None, Some(f)) =>
-            graft.ops.Sampling.mixCorporaByFraction(
-              named,
-              orderedEntries(f, "mix.fractions").map { case (n, v) =>
-                n -> v.toString.toDouble },
-              key, seed)
+        val (key, seed) = (o.str("key"), o.get("seed", 42L))
+        (o.has("total"), o.has("weights"), o.has("fractions")) match {
+          case (true, true, false) =>
+            graft.ops.Sampling.mixCorpora(named, o.numbers("weights"),
+              o.need[Long]("total"), key, seed)
+          case (false, false, true) =>
+            graft.ops.Sampling.mixCorporaByFraction(named, o.numbers("fractions"), key, seed)
           case _ => throw new IllegalArgumentException(
             "mix needs either (total + weights) or (fractions), not a blend")
         }
 
       case "split" =>
-        val sp = asMap(step("split"), "split")
         // ordered: weight order defines the bucket-threshold layout
-        val weights = orderedEntries(sp("weights"), "split.weights")
-          .map { case (k, v) => k -> v.toString.toDouble }
-        graft.ops.Corpus.assignSplit(df, sp("id").toString, weights,
-          seed = sp.get("seed").map(_.toString.toLong).getOrElse(0L))
+        graft.ops.Corpus.assignSplit(df, o.str("id"), o.numbers("weights"),
+          seed = o.get("seed", 0L))
 
       case "sessionize" =>
-        val sz = asMap(step("sessionize"), "sessionize")
-        graft.ops.StreamingOps.sessionize(df,
-          asSeq(sz("keys")).map(_.toString),
-          sz("ts").toString, sz("gap").toString,
-          sz.getOrElse("delay", "0 seconds").toString)
+        graft.ops.StreamingOps.sessionize(df, o.list("keys"), o.str("ts"), o.str("gap"),
+          o.get("delay", "0 seconds"))
 
       case "rangeJoin" =>
-        val j = asMap(step("rangeJoin"), "rangeJoin")
         graft.ops.TemporalJoin.rangeJoin(
-          df, resolve(j("table").toString),
-          asSeq(j("keys")).map(_.toString),
-          j("leftTs").toString, j("rightStart").toString, j("rightEnd").toString,
-          j("bucketMicros").toString.toLong)
+          df, resolve(o.str("table")), o.list("keys"),
+          o.str("leftTs"), o.str("rightStart"), o.str("rightEnd"),
+          o.need[Long]("bucketMicros"))
 
       case "chunk" =>
-        val c = asMap(step("chunk"), "chunk")
-        graft.ops.Corpus.chunkDocuments(df,
-          c("id").toString, c("text").toString,
-          c("chunkTokens").toString.toInt,
-          c.get("overlapTokens").map(_.toString.toInt).getOrElse(0))
+        graft.ops.Corpus.chunkDocuments(df, o.str("id"), o.str("text"),
+          o.need[Int]("chunkTokens"), o.get("overlapTokens", 0))
 
       case "bm25" =>
-        // {id:, text:, query: [tokens], k: optional top-k}
-        val b = asMap(step("bm25"), "bm25")
-        val query = asSeq(b("query")).map(_.toString)
-        b.get("k") match {
-          case Some(k) => graft.ops.Retrieval.bm25TopK(df,
-            b("id").toString, b("text").toString, query, k.toString.toInt)
-          case None => graft.ops.Retrieval.bm25(df,
-            b("id").toString, b("text").toString, query)
+        // top-k rows with k, every row scored without
+        val (id, text, query) = (o.str("id"), o.str("text"), o.list("query"))
+        o.opt[Int]("k") match {
+          case Some(k) => graft.ops.Retrieval.bm25TopK(df, id, text, query, k)
+          case None    => graft.ops.Retrieval.bm25(df, id, text, query)
         }
 
       case "clusterDuplicates" =>
         // transitive near-dup families from exact-Jaccard pairs;
         // mode: keep (default — one representative per family) | assign
         // (adds a `cluster` column)
-        val c = asMap(step("clusterDuplicates"), "clusterDuplicates")
-        val id = c("id").toString
-        val pairs = Dedup.jaccardPairs(df, id, c("text").toString,
-          threshold = c.get("threshold").map(_.toString.toDouble).getOrElse(0.8),
+        val id = o.str("id")
+        val mode = o.oneOf("mode", "keep|assign", "keep")
+        val pairs = Dedup.jaccardPairs(df, id, o.str("text"),
+          threshold = o.get("threshold", 0.8),
           // optional stop-gram ceiling: bounded candidate volume on
           // boilerplate-heavy corpora (lossy — see jaccardPairs scaladoc)
-          maxGramDf = c.get("maxGramDf").map(_.toString.toLong).getOrElse(0L))
-        c.getOrElse("mode", "keep").toString match {
-          case "keep"   => graft.ops.Cluster.keepClusterRepresentatives(df, id, pairs)
-          case "assign" => graft.ops.Cluster.assignClusters(df, id, pairs)
-          case other => throw new IllegalArgumentException(
-            s"clusterDuplicates mode must be keep|assign, got $other")
-        }
+          maxGramDf = o.get("maxGramDf", 0L))
+        if (mode == "keep") graft.ops.Cluster.keepClusterRepresentatives(df, id, pairs)
+        else graft.ops.Cluster.assignClusters(df, id, pairs)
 
       case "profile" =>
-        // list of columns, or {cols: [...], approx: false, accuracy: N} —
-        // quartiles are approx_percentile (bounded sketch state, the only
-        // scale-safe default) unless `approx: false` opts into the exact
-        // percentile's distinct-value-map state
-        step("profile") match {
-          case m: scala.collection.Map[_, _] =>
-            val pm = asMap(m, "profile")
-            graft.ops.Corpus.profile(df,
-              asSeq(pm.getOrElse("cols",
-                throw new IllegalArgumentException("profile map needs 'cols'")))
-                .map(_.toString),
-              // toString.toBoolean like every other boolean option here:
-              // a YAML STRING 'false' must behave like the bare boolean
-              approx = pm.get("approx").forall(_.toString.toBoolean),
-              accuracy = pm.get("accuracy").map(_.toString.toInt).getOrElse(10000))
-          case cols => graft.ops.Corpus.profile(df, asSeq(cols).map(_.toString))
+        // a list of columns, or the map form — quartiles are
+        // approx_percentile (bounded sketch state, the only scale-safe
+        // default) unless `approx: false` opts into the exact percentile's
+        // distinct-value-map state
+        step(verb) match {
+          case _: scala.collection.Map[_, _] =>
+            graft.ops.Corpus.profile(df, o.list("cols"),
+              approx = o.get("approx", true), accuracy = o.get("accuracy", 10000))
+          case cols => graft.ops.Corpus.profile(df, Opts.scalar[Seq[String]](verb, cols))
         }
 
       case "globalIndex" =>
-        // {orderBy: [...("-col" desc)], as: pos} — contiguous 0-based index
-        // in the total order (range exchange + broadcast offsets, never a
-        // single-partition window)
-        val g = asMap(step("globalIndex"), "globalIndex")
-        graft.ops.Packing.withGlobalIndex(df,
-          sortCols(asSeq(g.getOrElse("orderBy",
-            throw new IllegalArgumentException("globalIndex needs 'orderBy'")))),
-          g.getOrElse("as", "pos").toString)
+        // contiguous 0-based index in the total order (range exchange +
+        // broadcast offsets, never a single-partition window)
+        graft.ops.Packing.withGlobalIndex(df, sortCols(o.list("orderBy")), o.get("as", "pos"))
 
       case "shuffle" =>
-        // {id: uniqueCol, seed: N, as: pos} — reproducible global permutation
-        // (same data+seed => same order on any cluster size; new epoch = new
-        // seed)
-        val sh = asMap(step("shuffle"), "shuffle")
-        graft.ops.Packing.deterministicShuffle(df, sh("id").toString,
-          sh.getOrElse("seed", 0).toString.toLong,
-          sh.getOrElse("as", "pos").toString)
+        // reproducible global permutation keyed by a unique column (same
+        // data+seed => same order on any cluster size; new epoch = new seed)
+        graft.ops.Packing.deterministicShuffle(df, o.str("id"), o.get("seed", 0L),
+          o.get("as", "pos"))
 
       case "pack" =>
-        // {id:, text: col | tokens: expr, seqTokens: L, orderBy: [...]} —
         // concat-and-cut fragments; default order is by id (shuffle first
         // and order by its pos column to pack a shuffled epoch)
-        val p = asMap(step("pack"), "pack")
-        val id = p("id").toString
-        val nToks = (p.get("tokens"), p.get("text")) match {
-          case (Some(e), None) => compileExpr(e, df)
-          case (None, Some(t)) => graft.ops.TextStats.tokenCountWs(col(t.toString))
-          case _ => throw new IllegalArgumentException(
-            "pack needs exactly one of 'text' (column) or 'tokens' (expression)")
-        }
-        val orderCols = p.get("orderBy").map(o => sortCols(asSeq(o)))
-          .getOrElse(Seq(col(id).asc))
-        graft.ops.Packing.packSequences(df, id, nToks,
-          p("seqTokens").toString.toInt, orderCols)
+        val id = o.str("id")
+        graft.ops.Packing.packSequences(df, id, tokenCount(o, df), o.need[Int]("seqTokens"),
+          o.opt[Seq[String]]("orderBy").fold(Seq(col(id).asc))(sortCols))
 
-      case "maskSpans" =>
-        // {id:, text:, window: 8, minRepeats: 2} — corpus-repeated window
-        // masking (Dedup.maskRepeatedSpans): adds text_clean,
-        // n_repeated_windows, n_tokens_removed alongside the input columns
-        val m = asMap(step("maskSpans"), "maskSpans")
-        Dedup.maskRepeatedSpans(df, m("id").toString, m("text").toString,
-          windowTokens = m.get("window").map(_.toString.toInt).getOrElse(8),
-          minRepeats = m.get("minRepeats").map(_.toString.toInt).getOrElse(2))
-
-      case "stripBoilerplate" =>
-        // maskSpans + drop: rewrites the text column with the masked text
-        // and removes documents that were entirely repeated spans
-        val m = asMap(step("stripBoilerplate"), "stripBoilerplate")
-        Dedup.removeRepeatedSpans(df, m("id").toString, m("text").toString,
-          windowTokens = m.get("window").map(_.toString.toInt).getOrElse(8),
-          minRepeats = m.get("minRepeats").map(_.toString.toInt).getOrElse(2))
+      case "maskSpans" | "stripBoilerplate" =>
+        // maskSpans: corpus-repeated window masking (Dedup.maskRepeatedSpans)
+        // adds text_clean, n_repeated_windows, n_tokens_removed alongside
+        // the input columns; stripBoilerplate rewrites the text column with
+        // the masked text and removes documents that were entirely
+        // repeated spans
+        val f = if (verb == "maskSpans") Dedup.maskRepeatedSpans _ else Dedup.removeRepeatedSpans _
+        f(df, o.str("id"), o.str("text"), o.get("window", 8), o.get("minRepeats", 2))
 
       case "perplexity" =>
-        // {id, text, train?: table (default: self), smoothing?:
-        // laplace|kn, discount?: 0.75} — bigram-LM quality scores joined
-        // back onto the frame (left: docs with <2 tokens get null ppl),
-        // so `- filter: $ppl < N` composes downstream. `kn` = interpolated
-        // Kneser–Ney, the KenLM-class smoothing of real CCNet filtering.
-        val pp = asMap(step("perplexity"), "perplexity")
-        val id = pp("id").toString
-        val train = pp.get("train").map(tn => resolve(tn.toString)).getOrElse(df)
-        val trainText = pp.getOrElse("trainText", pp("text")).toString
-        val scores = pp.getOrElse("smoothing", "laplace").toString match {
-          case "laplace" => graft.ops.LangModel.scorePerplexity(
-            df, id, pp("text").toString, train, trainText)
-          case "kn" => graft.ops.LangModel.scorePerplexityKneserNey(
-            df, id, pp("text").toString, train, trainText,
-            discount = pp.getOrElse("discount", 0.75).toString.toDouble)
-          case other => throw new IllegalArgumentException(
-            s"perplexity smoothing must be laplace|kn, got '$other'")
-        }
+        // bigram-LM quality scores (trained on `train`, default: self)
+        // joined back onto the frame (left: docs with <2 tokens get null
+        // ppl), so `- filter: $ppl < N` composes downstream. `kn` =
+        // interpolated Kneser–Ney, the KenLM-class smoothing of real CCNet
+        // filtering.
+        val (id, text) = (o.str("id"), o.str("text"))
+        val smoothing = o.oneOf("smoothing", "laplace|kn", "laplace")
+        val train = o.opt[String]("train").fold(df)(resolve)
+        val trainText = o.get("trainText", text)
+        val scores =
+          if (smoothing == "laplace")
+            graft.ops.LangModel.scorePerplexity(df, id, text, train, trainText)
+          else graft.ops.LangModel.scorePerplexityKneserNey(df, id, text, train, trainText,
+            discount = o.get("discount", 0.75))
         df.join(scores, Seq(id), "left")
 
       case "tokenize" =>
-        // {text: col, as?: tokens, merges?: path, vocab?: path,
-        // vocabTxt?: path, lowercase?: false} — exact byte-level BPE ids
-        // under a published merges.txt, Unigram-LM ids under a
-        // SentencePiece-style .vocab text file, OR WordPiece ids under a
-        // BERT-family vocab.txt (at most one of merges/vocab/vocabTxt;
-        // none: BPE over the bare byte alphabet). The model loads
-        // driver-side once and rides the task binary; all three kernels
-        // are codegen'd and map-only.
-        val tk = asMap(step("tokenize"), "tokenize")
-        val out = tk.getOrElse("as", "tokens").toString
-        val text = col(tk("text").toString)
-        (tk.get("merges"), tk.get("vocab"), tk.get("vocabTxt")) match {
+        // exact byte-level BPE ids under a published merges.txt,
+        // Unigram-LM ids under a SentencePiece-style .vocab text file, OR
+        // WordPiece ids under a BERT-family vocab.txt (none: BPE over the
+        // bare byte alphabet). The model loads driver-side once and rides
+        // the task binary; all three kernels are codegen'd and map-only.
+        val out = o.get("as", "tokens")
+        val text = col(o.str("text"))
+        (o.opt[String]("merges"), o.opt[String]("vocab"), o.opt[String]("vocabTxt")) match {
           case (m, v, w) if Seq(m, v, w).count(_.isDefined) > 1 =>
             throw new IllegalArgumentException(
               "tokenize takes at most one of 'merges' (BPE), 'vocab' " +
                 "(Unigram), 'vocabTxt' (WordPiece)")
           case (_, Some(v), _) =>
             df.withColumn(out, graft.ops.TextStats.tokenizeUnigram(text,
-              graft.ops.expr.UnigramModel.fromVocabFile(v.toString)))
+              graft.ops.expr.UnigramModel.fromVocabFile(v)))
           case (_, _, Some(w)) =>
             df.withColumn(out, graft.ops.TextStats.tokenizeWordPiece(text,
-              graft.ops.expr.WordPieceModel.fromVocabFile(w.toString,
-                lowercase = tk.get("lowercase").exists(_.toString.toBoolean))))
+              graft.ops.expr.WordPieceModel.fromVocabFile(w,
+                lowercase = o.get("lowercase", false))))
           case (m, None, None) =>
-            val model = m match {
-              case Some(p) => graft.ops.expr.BpeModel.fromMergesFile(p.toString)
-              case None    => graft.ops.expr.BpeModel.empty
-            }
-            df.withColumn(out, graft.ops.TextStats.tokenizeBpe(text, model))
+            df.withColumn(out, graft.ops.TextStats.tokenizeBpe(text,
+              m.fold(graft.ops.expr.BpeModel.empty)(p => graft.ops.expr.BpeModel.fromMergesFile(p))))
         }
 
       case "trainTokenizer" =>
-        // {kind: bpe|unigram|wordpiece, text: col, out: path,
-        //  numMerges: N (bpe) | vocabSize: N (unigram/wordpiece),
-        //  maxWords?: 65536, lowercase?: false (wordpiece)} — train a
-        // tokenizer ON the pipeline's current frame and write the model
-        // artifact (merges.txt / .vocab / vocab.txt) that the `tokenize:`
-        // verb consumes, closing the config-only loop: a YAML user can
-        // now build the vocabulary AND apply it without touching Scala.
-        // EAGER (training is an action); the frame passes through
+        // train a tokenizer ON the pipeline's current frame and write the
+        // model artifact (merges.txt / .vocab / vocab.txt) that the
+        // `tokenize:` verb consumes, closing the config-only loop: a YAML
+        // user can build the vocabulary AND apply it without touching
+        // Scala. EAGER (training is an action); the frame passes through
         // unchanged so tokenize can follow in the same pipeline. The
         // artifact commits via write-temp-then-rename (the tar-shard
         // protocol): a transient rename failure throws rather than
         // leaving a half-written model.
-        val tt = asMap(step("trainTokenizer"), "trainTokenizer")
-        val ttText = tt.getOrElse("text",
-          throw new IllegalArgumentException(
-            "trainTokenizer needs a 'text' column")).toString
-        val ttOut = tt.getOrElse("out",
-          throw new IllegalArgumentException(
-            "trainTokenizer needs an 'out' artifact path")).toString
-        val maxWords = tt.get("maxWords").map(_.toString.toInt).getOrElse(65536)
-        val lines: Seq[String] = tt.getOrElse("kind",
-          throw new IllegalArgumentException(
-            "trainTokenizer needs kind: bpe|unigram|wordpiece")).toString match {
+        val (text, artifact) = (o.str("text"), o.str("out"))
+        val maxWords = o.get("maxWords", 65536)
+        val lines: Seq[String] = o.oneOf("kind", "bpe|unigram|wordpiece") match {
           case "bpe" =>
-            val (_, ls) = graft.ops.BpeTrain.trainFromCorpus(df, ttText,
-              numMerges = tt.getOrElse("numMerges",
-                throw new IllegalArgumentException(
-                  "trainTokenizer kind=bpe needs numMerges")).toString.toInt,
-              maxWords = maxWords)
-            ls
+            graft.ops.BpeTrain.trainFromCorpus(df, text,
+              numMerges = o.need[Int]("numMerges"), maxWords = maxWords)._2
           case "unigram" =>
-            graft.ops.UnigramTrain.trainFromCorpus(df, ttText,
-              vocabSize = tt.getOrElse("vocabSize",
-                throw new IllegalArgumentException(
-                  "trainTokenizer kind=unigram needs vocabSize")).toString.toInt,
-              maxWords = maxWords)._1.toVocabLines
-          case "wordpiece" =>
-            graft.ops.WordPieceTrain.trainFromCorpus(df, ttText,
-              vocabSize = tt.getOrElse("vocabSize",
-                throw new IllegalArgumentException(
-                  "trainTokenizer kind=wordpiece needs vocabSize")).toString.toInt,
-              maxWords = maxWords,
-              lowercase = tt.get("lowercase").exists(_.toString.toBoolean))._2
-          case other => throw new IllegalArgumentException(
-            s"trainTokenizer kind must be bpe|unigram|wordpiece, got $other")
+            graft.ops.UnigramTrain.trainFromCorpus(df, text,
+              vocabSize = o.need[Int]("vocabSize"), maxWords = maxWords)._1.toVocabLines
+          case _ =>
+            graft.ops.WordPieceTrain.trainFromCorpus(df, text,
+              vocabSize = o.need[Int]("vocabSize"), maxWords = maxWords,
+              lowercase = o.get("lowercase", false))._2
         }
-        writeArtifact(df.sparkSession, ttOut, lines)
+        writeArtifact(df.sparkSession, artifact, lines)
         df
 
       case "fixEncoding" =>
-        // {text: col, as: out (default: rewrite in place), passes: 3} —
-        // mojibake repair (cp1252/latin-1-misdecoded UTF-8, incl. double
-        // encoding); see graft.ops.expr.Mojibake for the contract
-        val fe = asMap(step("fixEncoding"), "fixEncoding")
-        val src = fe("text").toString
-        df.withColumn(fe.getOrElse("as", src).toString,
-          graft.ops.TextStats.fixEncoding(col(src),
-            fe.get("passes").map(_.toString.toInt).getOrElse(3)))
+        // mojibake repair in place unless `as` names a new column
+        // (cp1252/latin-1-misdecoded UTF-8, incl. double encoding); see
+        // graft.ops.expr.Mojibake for the contract
+        val src = o.str("text")
+        df.withColumn(o.get("as", src),
+          graft.ops.TextStats.fixEncoding(col(src), o.get("passes", 3)))
 
       case "stripHtml" =>
-        // {html: col, as: out (default: rewrite in place)} — lexical HTML
-        // strip: script/style/head blocks with content, tags, common
-        // entities, whitespace collapse (graft.ops.WebText.stripHtml)
-        val sh = asMap(step("stripHtml"), "stripHtml")
-        val src = sh("html").toString
-        df.withColumn(sh.getOrElse("as", src).toString,
-          graft.ops.WebText.stripHtml(col(src)))
+        // lexical HTML strip in place unless `as` names a new column:
+        // script/style/head blocks with content, tags, common entities,
+        // whitespace collapse (graft.ops.WebText.stripHtml)
+        val src = o.str("html")
+        df.withColumn(o.get("as", src), graft.ops.WebText.stripHtml(col(src)))
 
       case "extractContent" =>
-        // {html: col, as: out (default: rewrite in place), lang?: en,
-        // lengthLow?, lengthHigh?, maxLinkDensity?} — DOM-block
-        // main-content extraction (jusText-style block classification;
-        // see graft.ops.expr.HtmlContent): keeps content blocks, drops
-        // nav/header/footer/link-list/short-chrome boilerplate. `lang`
-        // keys the stopword list (the LangId 28-language table;
-        // stoplist-less languages run jusText's no-stoplist mode)
-        val ec = asMap(step("extractContent"), "extractContent")
-        val src = ec("html").toString
-        val base = graft.ops.expr.HtmlContent.rulesForLang(
-          ec.getOrElse("lang", "en").toString)
+        // DOM-block main-content extraction (jusText-style block
+        // classification; see graft.ops.expr.HtmlContent): keeps content
+        // blocks, drops nav/header/footer/link-list/short-chrome
+        // boilerplate. `lang` keys the stopword list (the LangId
+        // 28-language table; stoplist-less languages run jusText's
+        // no-stoplist mode); the other keys override its thresholds
+        val src = o.str("html")
+        val base = graft.ops.expr.HtmlContent.rulesForLang(o.get("lang", "en"))
         val rules = base.copy(
-          lengthLow = ec.get("lengthLow").map(_.toString.toInt)
-            .getOrElse(base.lengthLow),
-          lengthHigh = ec.get("lengthHigh").map(_.toString.toInt)
-            .getOrElse(base.lengthHigh),
-          maxLinkDensity = ec.get("maxLinkDensity").map(_.toString.toDouble)
-            .getOrElse(base.maxLinkDensity),
-          stopwordsLow = ec.get("stopwordsLow").map(_.toString.toDouble)
-            .getOrElse(base.stopwordsLow),
-          stopwordsHigh = ec.get("stopwordsHigh").map(_.toString.toDouble)
-            .getOrElse(base.stopwordsHigh))
-        df.withColumn(ec.getOrElse("as", src).toString,
-          graft.ops.WebText.extractMainContent(col(src), rules))
+          lengthLow = o.get("lengthLow", base.lengthLow),
+          lengthHigh = o.get("lengthHigh", base.lengthHigh),
+          maxLinkDensity = o.get("maxLinkDensity", base.maxLinkDensity),
+          stopwordsLow = o.get("stopwordsLow", base.stopwordsLow),
+          stopwordsHigh = o.get("stopwordsHigh", base.stopwordsHigh))
+        df.withColumn(o.get("as", src), graft.ops.WebText.extractMainContent(col(src), rules))
 
       case "langId" =>
-        // {text: col, as: out (default 'lang'), maxLangs: k?, iso3: bool?}
-        // — the 28-language token+script classifier
-        // (graft.ops.expr.LangModel); codegen'd, map-only. maxLangs > 1
-        // emits up to k comma-joined codes, primary first — the cc-index
-        // `languages` shape indexWarc writes, so config-only curation
-        // matches the indexer's column; iso3: true re-spells the codes as
-        // ISO 639-3 (the PUBLISHED index's spelling — join-ready against
-        // the real artifact). Compose with `filter` for language gating.
-        val li = asMap(step("langId"), "langId")
-        val kLangs = li.get("maxLangs").map(_.toString.toInt).getOrElse(1)
-        val raw =
-          if (kLangs == 1) graft.ops.TextStats.langId(col(li("text").toString))
-          else graft.ops.TextStats.langId(col(li("text").toString), kLangs)
-        df.withColumn(li.getOrElse("as", "lang").toString,
-          if (li.get("iso3").exists(_.toString.toBoolean))
-            graft.ops.TextStats.toIso639_3(raw)
-          else raw)
+        // the 28-language token+script classifier (graft.ops.expr.LangModel);
+        // codegen'd, map-only. maxLangs > 1 emits up to k comma-joined
+        // codes, primary first — the cc-index `languages` shape indexWarc
+        // writes, so config-only curation matches the indexer's column;
+        // iso3: true re-spells the codes as ISO 639-3 (the PUBLISHED
+        // index's spelling — join-ready against the real artifact).
+        // Compose with `filter` for language gating.
+        val text = col(o.str("text"))
+        val kLangs = o.get("maxLangs", 1)
+        val langs =
+          if (kLangs == 1) graft.ops.TextStats.langId(text)
+          else graft.ops.TextStats.langId(text, kLangs)
+        df.withColumn(o.get("as", "lang"),
+          if (o.get("iso3", false)) graft.ops.TextStats.toIso639_3(langs) else langs)
 
       case "normalizeUnicode" =>
-        // {text: col, form: NFC|NFD|NFKC|NFKD (default NFC), as: out
-        // (default: rewrite in place)} — run NFC before hashing/dedup,
-        // NFKC before tokenization
-        val nu = asMap(step("normalizeUnicode"), "normalizeUnicode")
-        val src = nu("text").toString
-        df.withColumn(nu.getOrElse("as", src).toString,
-          graft.ops.WebText.normalizeUnicode(col(src),
-            nu.getOrElse("form", "NFC").toString))
+        // in place unless `as` names a new column — run NFC before
+        // hashing/dedup, NFKC before tokenization
+        val src = o.str("text")
+        df.withColumn(o.get("as", src),
+          graft.ops.WebText.normalizeUnicode(col(src), o.get("form", "NFC")))
 
       case "domainOf" =>
-        // {url: col, as: out (default 'domain'), pslFile: path?} —
         // registrable domain (eTLD+1) of a URL column: the key per-site
         // quotas and blocklists group by; compose with `quota`/`filter`
         // downstream. With pslFile, the FULL published Public Suffix List
         // is loaded driver-side at pipeline build (wildcard/exception
         // rules, private suffixes) and rides the task binary; without it,
         // the compact built-in subset applies.
-        val dm = asMap(step("domainOf"), "domainOf")
-        val host = graft.ops.WebText.urlHost(col(dm("url").toString))
-        val domain = dm.get("pslFile") match {
-          case Some(p) =>
-            val text = new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(p.toString)), "UTF-8")
-            graft.ops.WebText.registrableDomainPsl(host,
-              graft.ops.expr.PslRules.parse(text))
-          case None => graft.ops.WebText.registrableDomain(host)
-        }
-        df.withColumn(dm.getOrElse("as", "domain").toString, domain)
+        val host = graft.ops.WebText.urlHost(col(o.str("url")))
+        df.withColumn(o.get("as", "domain"), o.opt[String]("pslFile").fold(
+          graft.ops.WebText.registrableDomain(host))(
+          p => graft.ops.WebText.registrableDomainPsl(host, readPsl(p))))
 
       case "robotsFilter" =>
-        // {url: col, robots: table, host?: 'host', txt?: 'robots_txt',
-        // agent?: '*', mode?: filter|mark} — RFC 9309 compliance gate:
-        // compile each domain's robots.txt ONCE (per-agent group
-        // selection, A:/D: rules), left-join to URLs by lowercased host
-        // (missing robots ⇒ allowed, the protocol default), evaluate
-        // longest-match per URL. mode=mark adds `robots_ok` instead of
-        // filtering. An URL whose host/path cannot be parsed has no
-        // robots.txt to consult — robots_ok is TRUE for it (the protocol's
-        // default-allow, made explicit), never a silent null-drop; route
-        // such rows to a URL-validity filter if they should go.
-        val rf = asMap(step("robotsFilter"), "robotsFilter")
-        val urlCol = col(rf("url").toString)
-        val robots = resolve(rf.getOrElse("robots",
-          throw new IllegalArgumentException("robotsFilter needs a 'robots' table")).toString)
-        val hostCol = rf.getOrElse("host", "host").toString
-        val txtCol = rf.getOrElse("txt", "robots_txt").toString
-        val agent = rf.getOrElse("agent", "*").toString
-        val compiled = robots.select(
-          lower(col(hostCol)).as("__rb_host"),
-          graft.ops.WebText.robotsRules(col(txtCol), agent).as("__rb_rules"))
+        // RFC 9309 compliance gate: compile each domain's robots.txt ONCE
+        // (per-agent group selection, A:/D: rules), left-join to URLs by
+        // lowercased host (missing robots ⇒ allowed, the protocol
+        // default), evaluate longest-match per URL. mode=mark adds
+        // `robots_ok` instead of filtering. An URL whose host/path cannot
+        // be parsed has no robots.txt to consult — robots_ok is TRUE for
+        // it (the protocol's default-allow, made explicit), never a silent
+        // null-drop; route such rows to a URL-validity filter if they
+        // should go.
+        val urlCol = col(o.str("url"))
+        val mode = o.oneOf("mode", "filter|mark", "filter")
+        val compiled = resolve(o.str("robots")).select(
+          lower(col(o.get("host", "host"))).as("__rb_host"),
+          graft.ops.WebText.robotsRules(col(o.get("txt", "robots_txt")), o.get("agent", "*"))
+            .as("__rb_rules"))
         val joined = df
           .withColumn("__rb_h", graft.ops.WebText.urlHost(urlCol))
           .join(compiled, col("__rb_h") === col("__rb_host"), "left")
           .withColumn("robots_ok", coalesce(graft.ops.WebText.robotsAllowed(
             col("__rb_rules"), graft.ops.WebText.urlPath(urlCol)), lit(true)))
           .drop("__rb_h", "__rb_host", "__rb_rules")
-        rf.getOrElse("mode", "filter").toString match {
-          case "filter" => joined.filter(col("robots_ok")).drop("robots_ok")
-          case "mark"   => joined
-          case other => throw new IllegalArgumentException(
-            s"robotsFilter mode must be filter|mark, got $other")
-        }
+        if (mode == "filter") joined.filter(col("robots_ok")).drop("robots_ok")
+        else joined
 
       case "redact" =>
-        // {text: col, as: out (default 'redacted'), validated: bool
-        // (default false)} — PII → typed tokens; validated additionally
-        // runs the checksum/entropy classes (Luhn cards, mod-97 IBANs,
-        // high-entropy secrets) before the regex classes
-        val r = asMap(step("redact"), "redact")
-        val outCol = r.getOrElse("as", "redacted").toString
-        val textCol = r("text").toString
-        if (r.get("validated").exists(_.toString.toBoolean))
-          graft.ops.Corpus.redactPiiAll(df, textCol, outCol)
+        // PII → typed tokens; validated additionally runs the
+        // checksum/entropy classes (Luhn cards, mod-97 IBANs, high-entropy
+        // secrets) before the regex classes
+        val (textCol, outCol) = (o.str("text"), o.get("as", "redacted"))
+        if (o.get("validated", false)) graft.ops.Corpus.redactPiiAll(df, textCol, outCol)
         else graft.ops.Corpus.redactPii(df, textCol, outCol)
 
       case "tokenBudget" =>
-        // {text: col | tokens: expr, budget: N, orderBy: [...]} — longest
-        // in-budget prefix of the ordered stream, whole docs
-        val b = asMap(step("tokenBudget"), "tokenBudget")
-        val tokens = (b.get("tokens"), b.get("text")) match {
-          case (Some(e), None) => compileExpr(e, df)
-          case (None, Some(t)) => graft.ops.TextStats.tokenCountWs(col(t.toString))
-          case _ => throw new IllegalArgumentException(
-            "tokenBudget needs exactly one of 'text' (column) or 'tokens' (expression)")
-        }
-        graft.ops.Packing.takeTokenBudget(df, tokens,
-          b("budget").toString.toLong,
-          sortCols(asSeq(b.getOrElse("orderBy",
-            throw new IllegalArgumentException("tokenBudget needs 'orderBy'")))))
+        // longest in-budget prefix of the ordered stream, whole docs
+        graft.ops.Packing.takeTokenBudget(df, tokenCount(o, df),
+          o.need[Long]("budget"), sortCols(o.list("orderBy")))
 
       case "decontaminate" =>
-        // {table: evalSet, id:, text:, evalText: (defaults to text),
-        //  evalId: (fraction mode; defaults to id), n: 8,
-        //  mode: mark|remove|fraction} — mark/remove transform the
-        //  current (train) frame; fraction REPLACES it with the per-eval
-        //  graded overlap report (eval_id, n_grams, n_seen, contamination)
-        val d = asMap(step("decontaminate"), "decontaminate")
-        val eval = resolve(d.getOrElse("table",
-          throw new IllegalArgumentException("decontaminate needs 'table'")).toString)
-        val evalText = d.getOrElse("evalText", d("text")).toString
-        val n = d.get("n").map(_.toString.toInt).getOrElse(8)
-        d.getOrElse("mode", "mark").toString match {
+        // mark/remove transform the current (train) frame; fraction
+        // REPLACES it with the per-eval graded overlap report (eval_id,
+        // n_grams, n_seen, contamination), keyed by evalId (default: id)
+        val eval = resolve(o.str("table"))
+        val text = o.str("text")
+        val evalText = o.get("evalText", text)
+        val n = o.get("n", 8)
+        o.oneOf("mode", "mark|remove|fraction", "mark") match {
           case "mark" => graft.ops.Decontam.markContaminated(
-            df, d("id").toString, d("text").toString, eval, evalText, n)
+            df, o.str("id"), text, eval, evalText, n)
           case "remove" => graft.ops.Decontam.removeContaminated(
-            df, d("id").toString, d("text").toString, eval, evalText, n)
-          case "fraction" => graft.ops.Decontam.contaminationFraction(
-            eval, d.getOrElse("evalId", d("id")).toString, evalText,
-            df, d("text").toString, n)
-          case other => throw new IllegalArgumentException(
-            s"decontaminate mode must be mark|remove|fraction, got $other")
+            df, o.str("id"), text, eval, evalText, n)
+          case _ => graft.ops.Decontam.contaminationFraction(
+            eval, o.get("evalId", o.str("id")), evalText, df, text, n)
         }
 
       case "mediaFeatures" =>
-        // {kind: image|audio} over a MediaRow-schema frame
-        // (media_id, meta struct, payload binary)
-        asMap(step("mediaFeatures"), "mediaFeatures")("kind").toString match {
-          case "image" => graft.ops.Multimodal.imageFeatures(asMedia(df)).toDF()
-          case "audio" => graft.ops.Multimodal.audioFeatures(asMedia(df)).toDF()
-          case other => throw new IllegalArgumentException(
-            s"mediaFeatures kind must be image|audio, got $other")
-        }
+        // over a MediaRow-schema frame (media_id, meta struct, payload binary)
+        if (o.oneOf("kind", "image|audio") == "image")
+          graft.ops.Multimodal.imageFeatures(asMedia(df)).toDF()
+        else graft.ops.Multimodal.audioFeatures(asMedia(df)).toDF()
 
       case "resizeImages" =>
-        val r = asMap(step("resizeImages"), "resizeImages")
-        graft.ops.Multimodal.resizeImages(asMedia(df),
-          r("maxDim").toString.toInt).toDF()
+        graft.ops.Multimodal.resizeImages(asMedia(df), o.need[Int]("maxDim")).toDF()
 
       case "sampleFrames" =>
-        val r = asMap(step("sampleFrames"), "sampleFrames")
-        graft.ops.Multimodal.sampleFrames(asMedia(df),
-          r("everyN").toString.toInt,
-          r.get("frameBytes").map(_.toString.toInt).getOrElse(256)).toDF()
+        graft.ops.Multimodal.sampleFrames(asMedia(df), o.need[Int]("everyN"),
+          o.get("frameBytes", 256)).toDF()
 
       case "mediaDedup" =>
-        // {kind: image|audio|video, maxHamming: (10/8/10 by kind),
-        //  maxBucketSize: 1000, decoder: jdk|stub (jdk = real codecs),
-        //  mode: drop|pairs} over a MediaRow-schema frame. drop keeps the
-        // first copy of every near-duplicate cluster edge (the q50-style
-        // corpus-cleaning policy); pairs REPLACES the frame with the
-        // verified (id_a, id_b, hamming) pair report.
-        val r = asMap(step("mediaDedup"), "mediaDedup")
-        val kind = r.getOrElse("kind",
-          throw new IllegalArgumentException("mediaDedup needs 'kind'")).toString
+        // over a MediaRow-schema frame. drop keeps the first copy of every
+        // near-duplicate cluster edge (the q50-style corpus-cleaning
+        // policy); pairs REPLACES the frame with the verified (id_a, id_b,
+        // hamming) pair report. decoder jdk = real codecs.
+        val kind = o.oneOf("kind", "image|audio|video")
         val decoder: graft.ops.MediaDecoder =
-          r.getOrElse("decoder", "jdk").toString match {
+          o.oneOf("decoder", "jdk|stub|ffmpeg", "jdk") match {
             case "jdk" => graft.ops.JdkMediaDecoder()
             case "stub" => graft.ops.StubDecoder()
             // production codecs (MP3/MP4/WebP/...) via the ffmpeg CLI;
             // fails loudly at plan time when the binary is absent rather
             // than silently emitting empty features task-side
-            case "ffmpeg" =>
+            case _ =>
               if (!graft.ops.FfmpegMediaDecoder.available())
                 throw new IllegalArgumentException(
                   "mediaDedup decoder 'ffmpeg' requested but no ffmpeg " +
                     "binary is on PATH")
               graft.ops.FfmpegMediaDecoder()
-            case other => throw new IllegalArgumentException(
-              s"mediaDedup decoder must be jdk|stub|ffmpeg, got $other")
           }
-        val defaultHamming = kind match {
-          case "image" | "video" => 10
-          case "audio" => 8
-          case other => throw new IllegalArgumentException(
-            s"mediaDedup kind must be image|audio|video, got $other")
-        }
-        val maxHamming = r.get("maxHamming").map(_.toString.toInt)
-          .getOrElse(defaultHamming)
-        val cap = r.get("maxBucketSize").map(_.toString.toInt).getOrElse(1000)
+        val maxHamming = o.get("maxHamming", if (kind == "audio") 8 else 10)
+        val cap = o.get("maxBucketSize", 1000)
         val media = asMedia(df)
-        r.getOrElse("mode", "drop").toString match {
-          case "drop" => (kind match {
-            case "image" =>
-              graft.ops.Multimodal.dropNearDuplicateImages(media, decoder, maxHamming, cap)
-            case "audio" =>
-              graft.ops.Multimodal.dropNearDuplicateAudio(media, decoder, maxHamming, cap)
-            case "video" =>
-              graft.ops.Multimodal.dropNearDuplicateVideos(media, decoder, maxHamming, cap)
-          }).toDF()
-          case "pairs" => kind match {
-            case "image" =>
-              graft.ops.Multimodal.imageNearDuplicatePairs(media, decoder, maxHamming, cap)
-            case "audio" =>
-              graft.ops.Multimodal.audioNearDuplicatePairs(media, decoder, maxHamming, cap)
-            case "video" =>
-              graft.ops.Multimodal.videoNearDuplicatePairs(media, decoder, maxHamming, cap)
-          }
-          case other => throw new IllegalArgumentException(
-            s"mediaDedup mode must be drop|pairs, got $other")
+        val mm = graft.ops.Multimodal
+        (o.oneOf("mode", "drop|pairs", "drop"), kind) match {
+          case ("drop", "image") => mm.dropNearDuplicateImages(media, decoder, maxHamming, cap).toDF()
+          case ("drop", "audio") => mm.dropNearDuplicateAudio(media, decoder, maxHamming, cap).toDF()
+          case ("drop", _)       => mm.dropNearDuplicateVideos(media, decoder, maxHamming, cap).toDF()
+          case (_, "image")      => mm.imageNearDuplicatePairs(media, decoder, maxHamming, cap)
+          case (_, "audio")      => mm.audioNearDuplicatePairs(media, decoder, maxHamming, cap)
+          case _                 => mm.videoNearDuplicatePairs(media, decoder, maxHamming, cap)
         }
-
-      case other =>
-        throw new IllegalArgumentException(s"Unknown pipeline verb: $other")
     }
   }
+
+  /** Token counts of pack/tokenBudget: exactly one of `text` (a column,
+    * whitespace tokens) or `tokens` (a dftly expression).
+    */
+  private def tokenCount(o: Opts, df: DataFrame): Column =
+    (o.opt[Any]("tokens"), o.opt[String]("text")) match {
+      case (Some(e), None) => compileExpr(e, df)
+      case (None, Some(t)) => graft.ops.TextStats.tokenCountWs(col(t))
+      case _ => throw new IllegalArgumentException(
+        s"${o.what} needs exactly one of 'text' (column) or 'tokens' (expression)")
+    }
+
+  private def readPsl(path: String): graft.ops.expr.PslRules =
+    graft.ops.expr.PslRules.parse(new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8"))
 
   private def asMedia(df: DataFrame) =
     df.as(org.apache.spark.sql.Encoders.product[graft.ops.MediaRow])
 
   /** The "-col" descending convention shared by orderBy-style verb args. */
-  private def sortCols(specs: Seq[Any]): Seq[Column] =
-    specs.map(_.toString).map { s =>
-      if (s.startsWith("-")) col(s.drop(1)).desc else col(s).asc
-    }
+  private def sortCols(specs: Seq[String]): Seq[Column] =
+    specs.map(s => if (s.startsWith("-")) col(s.drop(1)).desc else col(s).asc)
 }

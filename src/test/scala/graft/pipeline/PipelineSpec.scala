@@ -275,6 +275,73 @@ class PipelineSpec extends SparkTestBase {
     assert(e2.getMessage.contains("source"))
   }
 
+  private def stepError(step: String): IllegalArgumentException =
+    intercept[IllegalArgumentException](
+      Pipeline.runOnDir(spark, s"source: documents\nsteps:\n  - $step\n", dir))
+
+  test("a mistyped step key is rejected, naming the verb, the key and the accepted keys") {
+    val e = stepError("dropNearDuplicates: {id: doc_id, text: text, threshhold: 0.5}")
+    assert(e.getMessage.contains("dropNearDuplicates"), e.getMessage)
+    assert(e.getMessage.contains("'threshhold'"), e.getMessage)
+    assert(e.getMessage.contains("id, text, threshold, targetRecall"), e.getMessage)
+    // only groupBy takes an `agg` beside its verb
+    val agg = stepError("filter: $doc_id > 0\n    agg: {n: {count: \"*\"}}")
+    assert(agg.getMessage.contains("filter") && agg.getMessage.contains("'agg'"), agg.getMessage)
+  }
+
+  test("a missing required step key names the verb and the key") {
+    val e = stepError("dedupExact: {keys: [text]}")
+    assert(e.getMessage.contains("dedupExact") && e.getMessage.contains("'id'"), e.getMessage)
+  }
+
+  test("a malformed number names the verb, the key and the value") {
+    val e = stepError("dropNearDuplicates: {id: doc_id, text: text, threshold: high}")
+    for (part <- Seq("dropNearDuplicates", "'threshold'", "high"))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
+  test("unknown keys on a jsonl source, the default parquet sink and the config are rejected") {
+    val src = intercept[IllegalArgumentException](Pipeline.run(spark,
+      "source: {format: jsonl, path: /nonexistent/docs.jsonl, bogus: 1}\n",
+      _ => fail("no table resolve expected")))
+    assert(src.getMessage.contains("jsonl source") && src.getMessage.contains("'bogus'"),
+      src.getMessage)
+    val out = java.nio.file.Files.createTempDirectory("graft_sink_keys").resolve("out")
+    val sink = intercept[IllegalArgumentException](Pipeline.runOnDir(spark,
+      s"source: region\nsink: {path: $out, partitionby: [r_name]}\n", dir))
+    assert(sink.getMessage.contains("parquet sink") && sink.getMessage.contains("'partitionby'"),
+      sink.getMessage)
+    assert(!java.nio.file.Files.exists(out), "a rejected sink must write nothing")
+    val top = intercept[IllegalArgumentException](Pipeline.runOnDir(spark,
+      s"source: region\nsinks: {path: $out}\n", dir))
+    assert(top.getMessage.contains("'sinks'"), top.getMessage)
+  }
+
+  test("an empty join 'on' or an empty 'agg' fails, naming the verb") {
+    for (on <- Seq("[]", "{}")) {
+      val e = stepError(s"join: {table: region, on: $on}")
+      assert(e.getMessage.contains("join"), e.getMessage)
+    }
+    val e = stepError("groupBy: [doc_id]\n    agg: {}")
+    assert(e.getMessage.contains("groupBy"), e.getMessage)
+  }
+
+  test("README's verb table has one row per verb and names every declared key") {
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8")
+    val rows = try readme.getLines().dropWhile(_ != "| Verb | Args | Lowers to |")
+      .drop(2).takeWhile(_.startsWith("|")).toList finally readme.close()
+    assert(rows.nonEmpty, "README has no verb table")
+    val verbsOf = rows.map(r => r -> "`([A-Za-z0-9]+)`".r.findAllMatchIn(r.split('|')(1))
+      .map(_.group(1)).toList)
+    val named = verbsOf.flatMap(_._2)
+    assert(named.toSet == Keys.steps.keySet,
+      s"rows without a verb: ${named.toSet -- Keys.steps.keySet}; " +
+        s"verbs without a row: ${Keys.steps.keySet -- named}")
+    for ((row, verbs) <- verbsOf; verb <- verbs; key <- Keys.steps(verb))
+      assert(s"(?<![A-Za-z0-9_])$key(?![A-Za-z0-9_])".r.findFirstIn(row).isDefined,
+        s"README row of $verb does not name its key '$key'")
+  }
+
   test("curation verbs: qualitySignals -> quota -> split in one config") {
     val out = Pipeline.runOnDir(spark,
       """source: documents
