@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import scala.util.chaining._
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query wall times.
@@ -37,7 +35,7 @@ object Bench {
     * to distort in-sweep neighbors (streaming state stores, candidate-pair
     * explosions, quantized-IVF/PQ codebooks, whole-table profile buffers).
     */
-  private val SoloQueries = Set(
+  private[graft] val SoloQueries = Set(
     "q56_stream_e2e", "q48_cluster_shuffle", "q38_cluster",
     "q29_jaccard_pairs", "q31c_ivf_quant_props", "q60_pq_topk",
     "q52_substring_mask", "q41_profile", "q80_stream_media_e2e",
@@ -48,17 +46,20 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val nofork = sys.env.get("SPARK_GRAFT_NOFORK").contains("1")
-    if (only.isEmpty && !nofork) runForked(sfDir)
-    else runInProcess(sfDir, only)
+    // a typo'd isolated probe must not emit an empty-but-legit-looking
+    // artifact
+    val names = SparkEntry.select(only)
+    if (only.isEmpty && !nofork) runForked(sfDir, names)
+    else runInProcess(sfDir, names)
   }
 
   // ---------------------------------------------------------------- parent
 
-  private def runForked(sfDir: String): Unit = {
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val solo = names.filter(SoloQueries.contains).map(Seq(_))
+  private def runForked(sfDir: String, names: Seq[String]): Unit = {
+    // select, not filter: a typo'd solo row must fail, not silently run in
+    // a bucket
+    val solo = SparkEntry.select(Some(SoloQueries.mkString(","))).map(Seq(_))
     val rest = names.filterNot(SoloQueries.contains)
     val buckets = solo ++ rest.grouped(BucketSize).toSeq
     val javaBin = new java.io.File(
@@ -143,16 +144,8 @@ object Bench {
 
   // ----------------------------------------------------------------- child
 
-  private def runInProcess(sfDir: String, only: Option[Set[String]]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .pipe(SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def runInProcess(sfDir: String, names: Seq[String]): Unit = {
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
@@ -160,14 +153,6 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
-    only.foreach { req =>
-      val unknown = req -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")} " +
-          "— a typo'd isolated probe must not emit an empty-but-legit-looking artifact")
-    }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     // Per-query schedule (round 14): the gate-construction rows' fixtures
     // (media renders, WARC archive writes, signature corpora) materialize
     // via SparkEntry.prepare OUTSIDE the timed region, then the query runs

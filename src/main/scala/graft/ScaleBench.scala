@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.util.chaining._
 
 /** Scale rehearsal: runs the heavy-operator subset at TWO scale factors in
   * one JVM and reports, per query and per scale, wall time plus the
@@ -271,10 +270,7 @@ object ScaleBench {
     // (commit = rename), read is map-only; rows_out must equal the corpus
     // size, so the artifact itself proves no record was lost or split.
     "x_warc_roundtrip" -> ((s, dir) => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_scale_warc_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid()).getPath
+      val out = graft.driver.scratchDir("graft_scale_warc_", dir).getPath
       val src = s.read.parquet(s"$dir/documents.parquet").select(
         concat(lit("https://site"), (col("doc_id") % 1000).cast("string"),
           lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
@@ -296,10 +292,7 @@ object ScaleBench {
     // (1/1000 of the corpus by construction) — a wrong block plan loses
     // rows at block edges and shows here.
     "x_zipnum_roundtrip" -> ((s, dir) => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_scale_zipnum_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid()).getPath
+      val out = graft.driver.scratchDir("graft_scale_zipnum_", dir).getPath
       val lines = s.read.parquet(s"$dir/documents.parquet").select(concat(
         lit("com,site"), (col("doc_id") % 1000).cast("string"),
         lit(")/doc/"), col("doc_id").cast("string"),
@@ -325,10 +318,7 @@ object ScaleBench {
     // size (one index row per record; organic duplicate texts become
     // in-batch revisits but still index).
     "x_warc_dedup_index" -> ((s, dir) => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_scale_warcdedup_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid()).getPath
+      val out = graft.driver.scratchDir("graft_scale_warcdedup_", dir).getPath
       val src = s.read.parquet(s"$dir/documents.parquet").select(
         concat(lit("https://site"), (col("doc_id") % 1000).cast("string"),
           lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
@@ -350,10 +340,7 @@ object ScaleBench {
     // (explicit-schema from_json, map-only). rows_out = corpus size; a
     // torn envelope or dropped record shows as a lost row.
     "x_wat_roundtrip" -> ((s, dir) => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_scale_wat_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid()).getPath
+      val out = graft.driver.scratchDir("graft_scale_wat_", dir).getPath
       val src = s.read.parquet(s"$dir/documents.parquet").select(
         concat(lit("https://site"), (col("doc_id") % 1000).cast("string"),
           lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
@@ -445,16 +432,9 @@ object ScaleBench {
     val outFile = if (args.length > 2) args(2) else "SF1_BENCH.json"
     val onlyQs: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .pipe(SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE").fold(cpus)(_.toInt)
+    val spark = GraftSession.local(cpus, shufflePartitions)
     val metrics = new Metrics
     spark.sparkContext.addSparkListener(metrics)
 

@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-level performance settings shared by every entry point (Bench,
-  * Verify, ScaleBench, plan/probe tools), so the measured configuration is
-  * the shipped one.
+  * Verify, ScaleBench, plan/probe tools, all through [[GraftSession]]), so
+  * the measured configuration is the shipped one. A session built
+  * elsewhere (a downstream job, another harness) should apply it too:
+  * `SparkSession.builder().pipe(SessionTuning.apply)`.
   *
   * == Why `spark.shuffle.sort.bypassMergeThreshold = 1` ==
   *

@@ -1,15 +1,25 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.dftly.Dftly
-import graft.ops.{Dedup, Similarity, TextStats}
+import graft.driver._
 
-/** Driver contract — one query per implemented operator family from
-  * SURVEY.md §2, each expressed as a dftly YAML op-map applied with
-  * `Dftly.select` (exercising the full YAML → AST → Column stack), plus a
-  * DuckDB oracle in [[SparkEntry.oracleSql]].
+/** Driver contract: one query per implemented operator family from
+  * SURVEY.md §2, each checked against a DuckDB oracle. Every query is
+  * declared once, as a [[graft.driver.Case]] in a family file under
+  * `graft/driver` (`ExprCases`, `DedupCases`, ...). This object derives
+  * what the mains read ([[queries]], [[oracleSql]], [[prepare]],
+  * [[releaseFixture]]) from the single [[cases]] list, and holds the
+  * fixture constants the cases and the tests share.
+  *
+  * Adding a query: append one `Case(name, (s, dir) => ..., Sql(...))` to
+  * its family, the DuckDB SQL right below the run. A query whose rows no
+  * SQL engine can restate takes `Exempt(reason)` instead of `Sql`, naming
+  * the oracle-checked property query that covers it. Give it a `fixture`
+  * only when Bench must build its input outside the timed region: a
+  * `FrameFixture` for a persisted frame, a `FilesFixture` for files written
+  * once per sf dir and JVM.
   *
   * Oracle notes: aggregate/computed columns are aliased identically on both
   * sides (the driver sorts columns by name before hashing); integer-ish
@@ -17,31 +27,60 @@ import graft.ops.{Dedup, Similarity, TextStats}
   */
 object SparkEntry {
 
-  /** Table reader. For the CPU-dense-per-row corpus tables (documents'
-    * text, embeddings' vectors) the scan-parallelism guard applies: a
-    * single-row-group parquet file cannot split (the driver's testdata is
-    * written exactly that way), so without it every text/vector kernel
-    * would run its source on ONE task regardless of cores — measured
-    * 1.5–2× on the text queries. For the cheap-per-row relational tables
-    * the guard is deliberately NOT applied: a map-only projection over
-    * lineitem finishes faster on 3 scan tasks than it can pay for a full
-    * 600k-row exchange (measured 4× the other way), and every
-    * aggregation/join over them re-parallelizes at its own shuffle anyway.
-    * At real corpus scale both paths are no-ops/irrelevant: thousands of
-    * splits.
+  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  def entry(spark: SparkSession): DataFrame =
+    Dftly.select(
+      t(spark, "/root/testdata/sf0.001", "lineitem"),
+      """l_orderkey: $l_orderkey
+        |l_linenumber: $l_linenumber
+        |revenue: $l_extendedprice * (1 - $l_discount)
+        |big: "YES if $l_quantity >= 30 else NO"
+        |""".stripMargin
+    )
+
+  /** Every driver query, declared once; a name declared twice fails here. */
+  lazy val cases: Seq[Case] = Case.unique(
+    ExprCases.cases ++ PipelineCases.cases ++ DedupCases.cases ++
+      VectorCases.cases ++ MediaCases.cases ++ TextCases.cases ++
+      TokenizerCases.cases ++ CrawlCases.cases ++ IndexCases.cases)
+
+  /** Each query's run over an sf directory, by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    cases.map(c => c.name -> c.run).toMap
+
+  /** DuckDB oracle per query (same parquet tables, same column names);
+    * `Exempt` queries have none.
     */
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "documents" || name == "embeddings") Dedup.ensureParallelism(raw)
-    else raw
+  def oracleSql: Map[String, String] =
+    cases.collect { case Case(name, _, Sql(text), _) => name -> text }.toMap
+
+  /** Per-query fixture materialization hooks; Bench invokes them OUTSIDE
+    * the timed region.
+    */
+  def prepare: Map[String, (SparkSession, String) => Unit] =
+    cases.collect { case Case(name, _, _, Some(f)) => name -> (f.prepare _) }.toMap
+
+  /** Drop a query's prepared fixture (Bench, after the last timed run of
+    * that query). A query without a fixture is a no-op.
+    */
+  def releaseFixture(name: String, dir: String): Unit =
+    cases.find(_.name == name).flatMap(_.fixture).foreach(_.release(dir))
+
+  /** The queries a run covers, sorted: all of them for `None`, else the
+    * comma-separated names in `only`. An unknown name fails, listing every
+    * unknown one: a typo must not produce a short run that looks clean.
+    */
+  def select(only: Option[String]): Seq[String] = {
+    val all = cases.map(_.name).sorted
+    only.fold(all) { csv =>
+      val wanted = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = wanted -- all
+      require(unknown.isEmpty,
+        s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      all.filter(wanted.contains)
+    }
   }
 
-  /** Deterministic real PNG for the q76 perceptual-hash gate: a gradient
-    * textured by the text bytes, encoded with the JDK's PNG writer (pure
-    * function of the raster — no timestamps), decoded back by the REAL
-    * [[graft.ops.JdkMediaDecoder]] inside the query. Identical text ⇒
-    * identical pixels ⇒ identical pHash.
-    */
   /** The shared raster both media fixtures draw (gradient textured by the
     * text bytes) — q76's PNGs and q79's MJPEG frames must not drift apart
     * on a future tweak to the pixel math.
@@ -64,22 +103,17 @@ object SparkEntry {
     img
   }
 
+  /** Deterministic real PNG for the q76 perceptual-hash gate: a gradient
+    * textured by the text bytes, encoded with the JDK's PNG writer (pure
+    * function of the raster — no timestamps), decoded back by the REAL
+    * [[graft.ops.JdkMediaDecoder]] inside the query. Identical text ⇒
+    * identical pixels ⇒ identical pHash.
+    */
   def renderTestPng(text: String, w: Int, h: Int): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(renderTestRaster(text, w, h), "png", bos)
     bos.toByteArray
   }
-
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    Dftly.select(
-      t(spark, "/root/testdata/sf0.001", "lineitem"),
-      """l_orderkey: $l_orderkey
-        |l_linenumber: $l_linenumber
-        |revenue: $l_extendedprice * (1 - $l_discount)
-        |big: "YES if $l_quantity >= 30 else NO"
-        |""".stripMargin
-    )
 
   /** Deterministic real 16-bit PCM WAV for the q78 audio-fingerprint
     * gate. Base samples are even multiples of 128, so `halfGain` halves
@@ -126,3662 +160,6 @@ object SparkEntry {
     }
     out.toByteArray
   }
-
-  // ------------------------------------------------------------- fixtures
-  //
-  // Bench fixture split (VERDICT r13 #6): the gate-construction queries
-  // synthesize worst-case corpora (PNG/WAV/MJPEG renders, WARC archive
-  // writes, 200k-signature tables) INSIDE the query, so their committed
-  // bench numbers measured fixture synthesis as much as the operator and
-  // needed a fork-bucket adjudication ritual every round. `prepare`
-  // materializes those fixtures OUTSIDE the timed region (Bench calls it
-  // per query before the cold run and `releaseFixture` after the last
-  // timed run); Verify never calls it — every query stays self-contained
-  // and falls back to inline synthesis when nothing is prepared.
-
-  private val fixtureFrames =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val preparedDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def cachedFrame(key: String)(build: => DataFrame): DataFrame = {
-    val c = fixtureFrames.get(key)
-    if (c != null) c else build
-  }
-
-  private def materializeFrame(key: String, df: => DataFrame): Unit =
-    if (!fixtureFrames.containsKey(key)) {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      fixtureFrames.put(key, p)
-      ()
-    }
-
-  /** Drop a query's prepared in-memory fixtures (Bench, after the last
-    * timed run of that query — a bucket of 12 queries must not carry
-    * every earlier query's fixture in executor memory). Disk-side
-    * fixtures (written archives) stay — they are tmp-dir files reused by
-    * later runs in the same JVM.
-    */
-  def releaseFixture(name: String, dir: String): Unit = {
-    val df = fixtureFrames.remove(s"$name:$dir")
-    if (df != null) df.unpersist(blocking = false)
-    // the streaming gates' per-run sink/checkpoint dirs are dead once the
-    // query's frame has been consumed — drop the last run's set with the
-    // fixture
-    if (name == "q80_stream_media_e2e") q80WipeRunDirs(q80FixtureDir(dir))
-    if (name == "q56_stream_e2e") q56WipeRunDirs(q56FixtureDir(dir))
-    ()
-  }
-
-  /** Media fixtures for the q76/q78/q79 near-dup gates (doubled documents
-    * rendered to real PNG/WAV/MJPEG payloads — the expensive half of those
-    * queries).
-    */
-  private def mediaFixture(s: SparkSession, dir: String, kind: String): DataFrame = {
-    import s.implicits._
-    val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val dd = d0.unionByName(
-      d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    kind match {
-      case "image" => dd.as[(Long, String)].map { case (id, text) =>
-        graft.ops.MediaRow(id,
-          graft.ops.MediaMeta("image", "png", 48, 32, 0, 0L),
-          renderTestPng(text, 48, 32))
-      }.toDF()
-      case "audio" => dd.as[(Long, String)].map { case (id, text) =>
-        graft.ops.MediaRow(id,
-          graft.ops.MediaMeta("audio", "wav", 0, 0, 8000, 256L),
-          renderTestWav(text, halfGain = id >= 1000000L))
-      }.toDF()
-      case "video" => dd.as[(Long, String)].map { case (id, text) =>
-        graft.ops.MediaRow(id,
-          graft.ops.MediaMeta("video", "mjpeg", 48, 32, 0, 3000L),
-          renderTestMjpeg(text))
-      }.toDF()
-    }
-  }
-
-  /** Signature corpora for the q82/q93 multi-index Hamming gates. */
-  private def sigFixture(s: SparkSession, dir: String, withHot: Boolean): DataFrame = {
-    val base = t(s, dir, "lineitem")
-      .filter(col("l_orderkey") % 3 === 0)
-      .select((col("l_orderkey") * 10 + col("l_linenumber")).as("id"),
-        xxhash64(col("l_orderkey"), col("l_linenumber")).as("sig"))
-      .distinct()
-    if (!withHot) {
-      val planted = base.filter(col("id") % 97 === 0)
-        .select((col("id") + 1000000000L).as("id"), col("sig"))
-      base.unionByName(planted)
-    } else {
-      val planted = base.filter(col("id") % 97 === 0)
-        .select((col("id") + 1000000000L).as("id"),
-          col("sig").bitwiseXOR(lit(0x111111L)).as("sig")) // 6 bit flips
-      val hot = s.range(50000)
-        .select((col("id") + 5000000000L).as("id"), lit(0x0BADCAFEL).as("sig"))
-      base.unionByName(planted).unionByName(hot)
-    }
-  }
-
-  /** q99's fixture archive location — deterministic per (sf dir, JVM), so
-    * a prepared write is found by every later run in the same process.
-    */
-  private def q99ArchiveDir(dir: String): String =
-    new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_warc_cap_" +
-        java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-        "_" + ProcessHandle.current().pid()), "cap").getPath
-
-  /** q99's fixture archive write (the capstone's planted corpus rendered
-    * to a zstd-dict WARC archive — the fixture half of the gate; the
-    * pipeline half is [[q99Pipeline]]). See the q99 entry's comments for
-    * the construction's intent.
-    */
-  private def q99WriteArchive(s: SparkSession, dir: String): Unit = {
-    require(CapstonePromo.length > 200 && CapstoneRu.length > 200)
-    val out = q99ArchiveDir(dir)
-    val base0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val base = base0.unionByName(
-      base0.select((col("doc_id") + 1001000L).as("doc_id"), col("text")))
-    val pagePrefix = "<html><body><nav><a href=\"/\">Home</a> " +
-      "<a href=\"/a\">About</a></nav>"
-    val pageSuffix = "<footer><a href=\"/t\">Terms</a></footer></body></html>"
-    // %13==2: machine-repeated spam — dup 5-gram coverage blows the
-    // Gopher cap, so the keep_full gate must FIRE on this class (the
-    // promo paragraph makes every other signal healthy on every page;
-    // the copy shift 1001000 = 7·11·13·1000 keeps this class aligned
-    // between originals and copies too)
-    val inner = when(col("doc_id") % 13 === 2, lit(CapstoneSpam))
-      .otherwise(concat(col("text"),
-        when(col("doc_id") % 5 === 0, lit(" pay 4111 1111 1111 1111 now"))
-          .when(col("doc_id") % 5 === 1, lit(" ref 4111 1111 1111 1112 end"))
-          .otherwise(lit(""))))
-    // ORIGINAL page bytes: ASCII chrome UTF-8-encoded, the marker as
-    // raw cp1252 bytes under an iso-8859-1 label (Spark's encode()
-    // cannot emit cp1252 for ’/…; a binary literal can). The +1001000
-    // COPY of the same page is UTF-8 bytes under a utf-8 label —
-    // byte-divergent, decode-CONVERGENT twins: only the WHATWG label
-    // remap makes them equal, so the exact-dedup collapse downstream
-    // is the charset detector (see CapstoneMarker's scaladoc).
-    val isCopy = col("doc_id") >= 1001000L
-    val body = when(col("doc_id") % 11 === 0,
-        lit((pagePrefix + "<p>" + CapstoneRu + "</p>" + pageSuffix)
-          .getBytes("UTF-8")))
-      .when(isCopy,
-        encode(concat(
-          lit(pagePrefix + "<p>" + CapstonePromo + "</p><p>"), inner,
-          lit(CapstoneMarker + "</p>" + pageSuffix)), "UTF-8"))
-      .otherwise(concat(
-        encode(concat(
-          lit(pagePrefix + "<p>" + CapstonePromo + "</p><p>"), inner),
-          "UTF-8"),
-        lit(CapstoneMarker.getBytes("windows-1252")),
-        encode(lit("</p>" + pageSuffix), "UTF-8")))
-    val src = base.select(
-      concat(lit("https://site"), (col("doc_id") % 50).cast("string"),
-        lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
-      body.as("body"),
-      when(col("doc_id") % 11 === 0 || isCopy, lit("text/html; charset=utf-8"))
-        .otherwise(lit("text/html; charset=iso-8859-1")).as("ct"))
-    // Shard count scales with the session: a WARC scan is one task per
-    // shard (whole-archive decode), so a 4-shard fixture pinned the
-    // TIMED pipeline's scan stage to 4 tasks on any box — measuring the
-    // fixture's narrowness, not the operator (real crawl segments carry
-    // far more shards than a node has cores; the lower-core driver bench
-    // gets proportionally fewer shards, keeping the scaling row honest).
-    // Payloads are byte-identical under any sharding, so the declared
-    // query's result set is unchanged (oracle-verified).
-    graft.sources.Warc.writeWarcResponses(
-      src.repartition(math.max(4, s.sparkContext.defaultParallelism)),
-      out, "uri", "body", overwrite = true,
-      contentTypeCol = Some("ct"), codec = "zstd-dict")
-  }
-
-  /** q99's 13-leg pipeline over the fixture archive — the TIMED half. */
-  private def q99Pipeline(s: SparkSession, dir: String, out: String): DataFrame =
-    graft.pipeline.Pipeline.run(s,
-      s"""source: {format: warc, path: "$out"}
-         |steps:
-         |  - filter: "$$http_status == 200"
-         |  - withColumns:
-         |      doc_id: "(extract group 1 of /([0-9]+)$$/ from $$target_uri)::int"
-         |  - extractContent: {html: text, as: main,
-         |      stopwordsLow: 0.0, stopwordsHigh: 0.0}
-         |  - filter: "len_chars($$main) > 0"
-         |  - langId: {text: main, as: lang}
-         |  - filter: "$$lang != 'ru'"
-         |  - repetitionSignals: {text: main}
-         |  - filter: "$$keep_full"
-         |  - dedupExact: {id: doc_id, keys: [main]}
-         |  - dedupSegments: {id: doc_id, text: main}
-         |  - decontaminate: {table: evalset, id: doc_id,
-         |      text: text_dedup, evalText: text, mode: remove}
-         |  - redact: {text: text_dedup, as: clean, validated: true}
-         |  - pack: {id: doc_id, text: clean, seqTokens: 256, orderBy: [doc_id]}
-         |""".stripMargin,
-      name =>
-        if (name == "evalset")
-          t(s, dir, "documents").filter(col("doc_id") % 7 === 0)
-        else t(s, dir, name))
-      .select(col("doc_id").cast("long").as("doc_id"), col("seq_id"),
-        col("seq_offset"), col("doc_offset"), col("n_tokens"))
-
-  /** q80's fixture root — deterministic per (sf dir, JVM). */
-  private def q80FixtureDir(dir: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_media_" +
-        java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-        "_" + ProcessHandle.current().pid())
-
-  /** Wipe prior q80 invocations' per-run `sink_*`/`ckpt_*` dirs (the
-    * reusable input shards under `in/` stay). Called at the start of each
-    * q80 run and from [[releaseFixture]].
-    */
-  private def q80WipeRunDirs(fixture: java.io.File): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    val entries = fixture.listFiles
-    if (entries != null)
-      entries.filter(f => f.getName.startsWith("sink_") ||
-        f.getName.startsWith("ckpt_")).foreach(rm)
-  }
-
-  /** q80's fixture build: the doubled corpus rendered to PNGs and written
-    * as TS-RANGE-partitioned tar shards landing in event-time order (see
-    * the q80 entry's comments — the watermark advances with landing, so
-    * nothing is declared late; the +2 min copy offset still straddles
-    * shard boundaries, exercising cross-batch join state).
-    */
-  private def q80WriteShards(s: SparkSession, dir: String): Unit = {
-    import s.implicits._
-    val fixture = q80FixtureDir(dir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(fixture); fixture.mkdirs()
-    val in = new java.io.File(fixture, "in"); in.mkdirs()
-    val staging = new java.io.File(fixture, "_staging")
-    val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val dd = d0.unionByName(
-      d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    // event time: doc_id%1e6 minutes; the planted copy lands 2 minutes
-    // later (inside the 10-minute horizon)
-    val evMin = (col("doc_id") % 1000000L) +
-      when(col("doc_id") >= 1000000L, 2L).otherwise(0L)
-    val media = dd
-      .withColumn("ev_min", evMin)
-      .as[(Long, String, Long)]
-      .map { case (id, text, m) => (id, renderTestPng(text, 48, 32), m) }
-      .toDF("doc_id", "png", "ev_min")
-    graft.sources.TarShards.writeTarShards(
-      media.repartitionByRange(4, col("ev_min"), col("doc_id"))
-        .sortWithinPartitions("ev_min", "doc_id"),
-      staging.getPath,
-      keyCol = "doc_id", parts = Seq("png" -> col("png")))
-    var i = 0
-    for (f <- staging.listFiles.sortBy(_.getName) if f.getName.endsWith(".tar")) {
-      val dst = new java.io.File(in, f"shard-$i%05d.tar")
-      java.nio.file.Files.move(f.toPath, dst.toPath)
-      dst.setLastModified(1000000L * (i + 1))
-      i += 1
-    }
-    rm(staging)
-  }
-
-  /** q56's fixture root — deterministic per (sf dir, JVM), q80's pattern. */
-  private def q56FixtureDir(dir: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_e2e_" +
-        java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-        "_" + ProcessHandle.current().pid())
-
-  /** Wipe prior q56 invocations' per-run `sink_*`/`ckpt_*` dirs (the
-    * reusable input shards under `in/` stay).
-    */
-  private def q56WipeRunDirs(fixture: java.io.File): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    val entries = fixture.listFiles
-    if (entries != null)
-      entries.filter(f => f.getName.startsWith("sink_") ||
-        f.getName.startsWith("ckpt_")).foreach(rm)
-  }
-
-  /** q56's fixture build: the doubled event corpus written as ts-ordered
-    * JSONL shards plus the two flush sentinels — the construction half of
-    * the gate (see the q56 entry's comments). Bench runs this OUTSIDE the
-    * timed region (the q80/q99 "bench-prepared" pattern): the timed
-    * region measures the streaming dedup + sessionization, not the
-    * fixture's JSON write.
-    */
-  private def q56WriteShards(s: SparkSession, dir: String): Unit = {
-    val fixture = q56FixtureDir(dir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(fixture); fixture.mkdirs()
-    val in = new java.io.File(fixture, "in"); in.mkdirs()
-    val ev = graft.sources.Readers.readEvents(s, dir)
-      .select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"),
-        col("user_id"))
-    val maxUs = ev.agg(max(col("ts_us"))).head().getLong(0)
-    // each event twice, ts-ordered shards (equal keys co-partition)
-    val staging = new java.io.File(fixture, "_staging")
-    ev.unionAll(ev).repartitionByRange(4, col("ts_us"))
-      .sortWithinPartitions("ts_us")
-      .write.json(staging.getPath)
-    var i = 0
-    for (f <- staging.listFiles.sortBy(_.getName) if f.getName.startsWith("part-")) {
-      val dst = new java.io.File(in, f"shard-$i%05d.jsonl")
-      java.nio.file.Files.move(f.toPath, dst.toPath)
-      dst.setLastModified(1000000L * (i + 1))
-      i += 1
-    }
-    rm(staging)
-    for ((off, j) <- Seq(3600000000L, 7200000000L).zipWithIndex) {
-      val f = new java.io.File(in, s"zz-flush-$j.jsonl")
-      val w = new java.io.FileWriter(f)
-      try w.write(s"""{"event_id":-1,"ts_us":${maxUs + off},"user_id":-1}""" + "\n")
-      finally w.close()
-      f.setLastModified(1000000L * (i + j + 1))
-    }
-  }
-
-  /** Per-query fixture materialization hooks — keys are the exact query
-    * names; Bench invokes them OUTSIDE the timed region.
-    */
-  def prepare: Map[String, (SparkSession, String) => Unit] = Map(
-    "q76_phash_neardup" -> ((s, dir) =>
-      materializeFrame(s"q76_phash_neardup:$dir", mediaFixture(s, dir, "image"))),
-    "q78_audio_neardup" -> ((s, dir) =>
-      materializeFrame(s"q78_audio_neardup:$dir", mediaFixture(s, dir, "audio"))),
-    "q79_video_neardup" -> ((s, dir) =>
-      materializeFrame(s"q79_video_neardup:$dir", mediaFixture(s, dir, "video"))),
-    "q82_mih_collapse_gate" -> ((s, dir) =>
-      materializeFrame(s"q82_mih_collapse_gate:$dir",
-        sigFixture(s, dir, withHot = false))),
-    "q93_mih_dupheavy_gate" -> ((s, dir) =>
-      materializeFrame(s"q93_mih_dupheavy_gate:$dir",
-        sigFixture(s, dir, withHot = true))),
-    "q99_crawl_capstone" -> ((s, dir) =>
-      if (preparedDirs.add(s"q99_crawl_capstone:$dir"))
-        q99WriteArchive(s, dir)),
-    "q80_stream_media_e2e" -> ((s, dir) =>
-      if (preparedDirs.add(s"q80_stream_media_e2e:$dir"))
-        q80WriteShards(s, dir)),
-    "q56_stream_e2e" -> ((s, dir) =>
-      if (preparedDirs.add(s"q56_stream_e2e:$dir"))
-        q56WriteShards(s, dir))
-  )
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_arith" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "lineitem"),
-        """l_orderkey: $l_orderkey
-          |l_linenumber: $l_linenumber
-          |revenue: $l_extendedprice * (1 - $l_discount)
-          |charge: $l_extendedprice * (1 - $l_discount) * (1 + $l_tax)
-          |qdiff: $l_quantity - 10
-          |half_q: $l_quantity / 2
-          |neg_disc: -$l_discount
-          |pow2: 2 ** $l_linenumber
-          |""".stripMargin
-      )),
-    "q02_logic" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "lineitem"),
-        """l_orderkey: $l_orderkey
-          |l_linenumber: $l_linenumber
-          |is_big: $l_quantity >= 30 and $l_discount < 0.05
-          |is_r: $l_returnflag == 'R'
-          |flag_or: $l_returnflag == 'R' or $l_linestatus == 'F'
-          |not_big: not ($l_quantity >= 30)
-          |neq: $l_returnflag != $l_linestatus
-          |minv: min($l_quantity, $l_extendedprice)
-          |maxv: max($l_quantity, $l_extendedprice)
-          |meanv: mean($l_quantity, $l_extendedprice, $l_discount)
-          |""".stripMargin
-      )),
-    "q03_conditional" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "orders"),
-        """o_orderkey: $o_orderkey
-          |status_desc: "'open' if $o_orderstatus == 'O' else ('final' if $o_orderstatus == 'F' else 'partial')"
-          |maybe_high: $o_totalprice if $o_totalprice > 150000
-          |high_or_zero: ($o_totalprice if $o_totalprice > 150000) ?? 0
-          |""".stripMargin
-      )),
-    "q04_strings" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "part"),
-        """p_partkey: $p_partkey
-          |name_len: len_chars($p_name)::int64
-          |name_start: $p_name[0:8]
-          |name_end: $p_name[-4:]
-          |brand_sz: f"{$p_brand}#{$p_size}"
-          |type_words: split($p_type, ' ')
-          |first3: $p_name[:3]
-          |""".stripMargin
-      // The driver's pandas compare cannot sort/hash array cells, so the
-      // split output is joined back to a scalar for the contract; the raw
-      // array behavior stays covered in ScalaTest (GoldenReadmeSpec).
-      ).withColumn("type_words", concat_ws(",", col("type_words")))),
-    "q05_regex" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "orders"),
-        """o_orderkey: $o_orderkey
-          |prio_num: (extract group 1 of /^(\d+)-/ from $o_orderpriority)::?int
-          |is_urgent: /URGENT/ in $o_orderpriority
-          |prio_word: extract /[A-Z]+$/ from $o_orderpriority
-          |""".stripMargin
-      )),
-    "q06_cast" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "customer"),
-        """c_custkey: $c_custkey
-          |key_str: $c_custkey::str
-          |key_back: ($c_custkey::str)::int64
-          |seg_int_null: $c_mktsegment::?int32
-          |nation_long: $c_nationkey::int64
-          |nation_short: $c_nationkey::int16
-          |""".stripMargin
-      )),
-    "q07_datetime" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "orders"),
-        """o_orderkey: $o_orderkey
-          |yr: $o_orderdate::year_of_date::int64
-          |mo: $o_orderdate::month_of_year::int64
-          |dom: $o_orderdate::day_of_month::int64
-          |dow: $o_orderdate::day_of_week::int64
-          |doy: $o_orderdate::day_of_year::int64
-          |wk: $o_orderdate::week_of_year::int64
-          |qtr: $o_orderdate::quarter_of_year::int64
-          |hr: $o_orderdate::hour_of_day::int64
-          |""".stripMargin
-      )),
-    "q08_duration" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "lineitem"),
-        """l_orderkey: $l_orderkey
-          |l_linenumber: $l_linenumber
-          |age_secs: ($l_shipdate - 1990-01-01 00:00:00)::total_seconds
-          |age_hours: ($l_shipdate - 1990-01-01 00:00:00)::total_hours
-          |age_days: ($l_shipdate - 1990-01-01 00:00:00)::total_days
-          |age_ns: ($l_shipdate - 1990-01-01 00:00:00)::total_nanoseconds
-          |plus_week: $l_shipdate + 1::weeks
-          |""".stripMargin
-      )),
-    "q09_strptime" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "orders"),
-        """o_orderkey: $o_orderkey
-          |date_str: $o_orderdate::str
-          |reparsed: ($o_orderdate::str)::"%Y-%m-%d %H:%M:%S"
-          |date_only: (($o_orderdate::str)[0:10])::"%Y-%m-%d"
-          |""".stripMargin
-      )),
-    "q10_settime" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "orders"),
-        """o_orderkey: $o_orderkey
-          |at_1130: ($o_orderdate::date) @ 11:30
-          |""".stripMargin
-      )),
-    "q11_units" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "lineitem"),
-        // ln_year stays inside pandas' datetime64[ns] range (1677–2262):
-        // years 1–7 are identical proleptic-Gregorian dates in Spark and
-        // DuckDB, but the driver's pandas normalization can't represent them
-        // and hashes them engine-dependently.
-        """l_orderkey: $l_orderkey
-          |l_linenumber: $l_linenumber
-          |qty_min_secs: ($l_quantity::int32)::minutes::total_seconds
-          |qty_hr_mins: ($l_quantity::int32)::hours::total_minutes
-          |qty_mo_secs: ($l_quantity::int32)::months::total_seconds
-          |qty_yr_secs: ($l_quantity::int32)::years::total_seconds
-          |qty_ms_us: ($l_quantity::int32)::milliseconds::total_microseconds
-          |ln_year: ($l_linenumber + 1990)::year
-          |""".stripMargin
-      )),
-    // hash bits are engine-specific (SURVEY.md §2.8.1): no SQL oracle; the
-    // driver records a rows-only check.
-    "q12_hash" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "customer"),
-        """c_custkey: $c_custkey
-          |h: hash($c_name)
-          |sh: signed_hash($c_name)
-          |hnull: hash($c_mktsegment::?int32)
-          |""".stripMargin
-      )),
-    // Structural hash properties ARE oracle-checkable even though the bits
-    // aren't (reference arithmetic.py:10-24): null-in → null-out,
-    // determinism, and input sensitivity, each reduced to a boolean/long the
-    // oracle can state independently of the hash function.
-    "q12b_hash_props" -> ((s, dir) =>
-      Dftly.select(
-        t(s, dir, "customer"),
-        """c_custkey: $c_custkey
-          |null_in_null_out: (hash($c_mktsegment::?int32) ?? -1) == -1
-          |null_guard: (hash($c_custkey if $c_acctbal > 0) ?? -1) == -1
-          |det: hash($c_name) - hash($c_name) == 0
-          |sdet: signed_hash($c_name) - signed_hash($c_name) == 0
-          |differs: hash($c_custkey::str) != hash(($c_custkey + 1)::str)
-          |""".stripMargin
-      )),
-
-    // ---- beyond-reference pipeline operators (graft.ops) ----
-    "q13_dedup_exact" -> ((s, dir) =>
-      Dedup.markExactDuplicates(t(s, dir, "documents"), "doc_id", Seq("text"))
-        .select(col("doc_id"), col("is_dup"))),
-    "q14_textstats" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(
-        col("doc_id"),
-        TextStats.tokenCountWs(col("text")).cast("long").as("tok_ws"),
-        TextStats.tokenCountBpe(col("text")).cast("long").as("tok_bpe"),
-        round(TextStats.punctRatio(col("text")), 6).as("punct_ratio"),
-        round(TextStats.stopwordRatio(col("text"), TextStats.EnglishStopwords), 6)
-          .as("stop_ratio"),
-        TextStats.langId(col("text")).as("lang_id"),
-        round(TextStats.qualityScore(col("text"), col("n_chars")), 6).as("quality")
-      )
-    }),
-    "q15_ann_scores" -> ((s, dir) =>
-      Similarity.scoreAgainst(t(s, dir, "embeddings"), "embedding", AnnQueryVec)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))),
-    "q16_ann_topk" -> ((s, dir) =>
-      Similarity.bruteForceTopK(t(s, dir, "embeddings"), "vec_id", "embedding", AnnQueryVec, 20)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))),
-    // LSH candidate generation uses xxhash64 banding — engine-specific →
-    // rows-only driver check; recall is covered by OpsSpec's planted-dup test.
-    "q17_minhash_pairs" -> ((s, dir) =>
-      Dedup.nearDuplicatePairs(t(s, dir, "documents"), "doc_id", "text", threshold = 0.5)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))),
-    "q18_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextStats.fingerprint(col("text")).as("fp"))),
-    // Fingerprint PROPERTY oracle (bits are engine-specific → q18 stays
-    // rows-only; this states the structure): the fingerprint is exactly a
-    // function of the token sequence — equal token sequences share one
-    // fingerprint, and no two distinct sequences collide on this corpus.
-    // Linear shape (two aggregations), no pair table.
-    "q18b_fingerprint_props" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        TextStats.fingerprint(col("text")).as("fp"),
-        TextStats.tokens(col("text")).as("toks"))
-      val byToks = d.groupBy(col("toks")).agg(count_distinct(col("fp")).as("nfp"))
-      val byFp = d.groupBy(col("fp")).agg(count_distinct(col("toks")).as("ntk"))
-      d.join(byToks, "toks").join(byFp, "fp")
-        .select(col("doc_id"),
-          ((col("nfp") === 1) && (col("ntk") === 1)).as("ok"))
-    }),
-    // Exact all-pairs baseline, fully oracle-checked (DuckDB does the same
-    // 125k-pair cosine sweep). Threshold 0.40 yields 59 pairs on this data;
-    // nearest pair cosine is >1e-4 from the threshold, so cross-engine FP
-    // noise cannot flip membership.
-    "q19_cosine_neardup" -> ((s, dir) =>
-      Similarity.bruteForceCosinePairs(
-        t(s, dir, "embeddings"), "vec_id", "embedding", threshold = 0.40)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))),
-    // Hyperplane-LSH scale path (native sign-bit kernel). Bucket collisions
-    // are hash-layout-specific → rows-only driver check; recall against the
-    // brute-force baseline is asserted in ScalaTest. Params chosen so the
-    // output is non-empty on random sf embeddings (6 planes × 8 tables ≈
-    // 35% per-pair recall at cosine 0.35 — this check can fail).
-    "q19b_cosine_lsh" -> ((s, dir) =>
-      Similarity.cosineNearDuplicatePairs(
-        t(s, dir, "embeddings"), "vec_id", "embedding", threshold = 0.35,
-        dim = 64, planesPerTable = 6, numTables = 8)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))),
-    // Hyperplane-LSH PROPERTY oracle (bucket layout is hash-specific → q19b
-    // stays rows-only; this states a recall floor): identical embeddings
-    // get identical sign-bit signatures in EVERY table, must share a bucket,
-    // and score cosine 1.0 ≥ threshold — so every identical-vector pair is
-    // guaranteed reported. Corpus unioned with an id-shifted copy so the
-    // guaranteed set is non-vacuous. Two conditions make the guarantee
-    // unconditional here: the skew cap is lifted (maxBucketSize would drop
-    // an overfull bucket from ALL tables at once, taking the pair with it)
-    // and zero-norm vectors are excluded on BOTH sides (cosine defines
-    // 0-vector similarity as 0 < threshold).
-    "q19c_cosine_lsh_props" -> ((s, dir) => {
-      val e0 = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .filter(aggregate(col("embedding"), lit(0.0),
-          (a, x) => a + x.cast("double") * x.cast("double")) > 0)
-      val ee = e0.unionByName(
-        e0.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-      val found = Similarity.cosineNearDuplicatePairs(ee, "vec_id", "embedding",
-        threshold = 0.35, dim = 64, planesPerTable = 6, numTables = 8,
-        maxBucketSize = Int.MaxValue)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      ee.as("x").join(ee.as("y"),
-        col("x.embedding") === col("y.embedding") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // AUTO-TUNED hyperplane LSH under the same recall-floor construction as
-    // q19c: lshParamsFor picks (planes, tables) from the corpus size and
-    // threshold, and identical embeddings still collide in every table at
-    // ANY parameterization — so the guarantee is parameter-independent,
-    // which is exactly what makes the auto path gateable.
-    "q19d_cosine_lsh_auto_props" -> ((s, dir) => {
-      val e0 = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .filter(aggregate(col("embedding"), lit(0.0),
-          (a, x) => a + x.cast("double") * x.cast("double")) > 0)
-      val ee = e0.unionByName(
-        e0.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-      // targetRecall 0.5, not the 0.9 default: at θ = acos(0.35) ≈ 69° the
-      // recall model demands 16 tables for 0.9 (the ρ ≈ 0.7 regime — see
-      // lshParamsFor's cost law), and the floor being pinned here holds at
-      // ANY parameterization — identical vectors collide in every table.
-      // The gate query shouldn't pay 3× for recall it doesn't assert.
-      val found = Similarity.cosineNearDuplicatePairsAuto(ee, "vec_id", "embedding",
-        threshold = 0.35, dim = 64, targetRecall = 0.5,
-        maxBucketSize = Int.MaxValue)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      ee.as("x").join(ee.as("y"),
-        col("x.embedding") === col("y.embedding") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    "q20_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashNearDuplicatePairs(t(s, dir, "documents"), "doc_id", "text", maxHamming = 8)
-        .select(col("id_a"), col("id_b"), col("hamming"))),
-    // SimHash PROPERTY oracle (bucket layout is hash-specific → q20 stays
-    // rows-only; this states a recall floor): every text-identical pair
-    // MUST be reported — identical text ⇒ identical signature ⇒ hamming 0 ⇒
-    // pigeonhole banding cannot miss it. The corpus is unioned with an
-    // id-shifted copy of itself on BOTH sides so the guaranteed pair set is
-    // non-vacuous (≥ one pair per document).
-    "q20b_simhash_props" -> ((s, dir) => {
-      val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dd = d0.unionByName(
-        d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val found = Dedup.simhashNearDuplicatePairs(dd, "doc_id", "text", maxHamming = 8)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      dd.as("x").join(dd.as("y"),
-        col("x.text") === col("y.text") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // Perceptual-hash image near-dup (the q20b construction, for images):
-    // real PNGs rendered deterministically from document text, decoded by
-    // the REAL JdkMediaDecoder, pHashed (32x32 DCT), Hamming-banded via
-    // the generic SimHash engine. The corpus is unioned with an id-shifted
-    // copy, planting one pixel-identical duplicate pair per document —
-    // identical pixels => identical pHash => hamming 0 => the pigeonhole
-    // banding cannot miss it. Re-encode/resize robustness is MEASURED
-    // (RECALL.json `phash`), not gated: only the identity floor is a
-    // guarantee.
-    "q76_phash_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dd = d0.unionByName(
-        d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val media = cachedFrame(s"q76_phash_neardup:$dir")(
-        mediaFixture(s, dir, "image")).as[graft.ops.MediaRow]
-      val found = graft.ops.Multimodal.imageNearDuplicatePairs(media,
-          decoder = graft.ops.JdkMediaDecoder(), maxHamming = 10)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      dd.as("x").join(dd.as("y"),
-        col("x.text") === col("y.text") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // Full-PSL registrable domain: planted hosts under multi-label
-    // registries ABSENT from the compact subset (co.il, com.pl), a
-    // PRIVATE-section suffix (github.io), wildcard (*.ck) and exception
-    // (!www.ck) rules, an unlisted TLD (implicit *), a host that IS a
-    // public suffix, and a single label. The fixture rule text is in the
-    // published PSL format; the oracle pins every answer hand-derived
-    // from the published algorithm.
-    "q77_psl_domain" -> ((s, dir) => {
-      import s.implicits._
-      val rules = graft.ops.expr.PslRules.parse(
-        """// fixture excerpt in the published format
-          |uk
-          |co.uk
-          |il
-          |co.il
-          |ac.il
-          |pl
-          |com.pl
-          |net.pl
-          |ck
-          |*.ck
-          |!www.ck
-          |jp
-          |// PRIVATE section
-          |github.io
-          |""".stripMargin)
-      Seq(
-        1L -> "shop.example.co.uk", 2L -> "site.example.co.il",
-        3L -> "deep.sub.blog.github.io", 4L -> "foo.bar.ck",
-        5L -> "www.ck", 6L -> "a.www.ck", 7L -> "example.com",
-        8L -> "keta.jp", 9L -> "co.uk", 10L -> "localhost",
-        11L -> "x.y.com.pl", 12L -> "sub.host.example.org")
-        .toDF("hid", "host")
-        .select(col("hid"),
-          graft.ops.WebText.registrableDomainPsl(col("host"), rules).as("rdomain"))
-    }),
-    // Audio near-dup via the gain-invariant energy-contour fingerprint:
-    // real WAVs (JDK decode); the id-shifted copy is the SAME signal at
-    // EXACTLY half gain, so its contour is bit-identical by construction
-    // (see renderTestWav) — the oracle pins both the identity floor AND
-    // gain invariance as guarantees.
-    "q78_audio_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dd = d0.unionByName(
-        d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val media = cachedFrame(s"q78_audio_neardup:$dir")(
-        mediaFixture(s, dir, "audio")).as[graft.ops.MediaRow]
-      val found = graft.ops.Multimodal.audioNearDuplicatePairs(media,
-          decoder = graft.ops.JdkMediaDecoder(), maxHamming = 8)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      dd.as("x").join(dd.as("y"),
-        col("x.text") === col("y.text") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // Video near-dup via the majority-pHash signature over REAL MJPEG
-    // frames (SOI/EOI split + JPEG decode per frame): identical payloads
-    // ⇒ identical frames ⇒ identical signature — the q76 floor, one
-    // level up the media stack.
-    "q79_video_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dd = d0.unionByName(
-        d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val media = cachedFrame(s"q79_video_neardup:$dir")(
-        mediaFixture(s, dir, "video")).as[graft.ops.MediaRow]
-      val found = graft.ops.Multimodal.videoNearDuplicatePairs(media,
-          decoder = graft.ops.JdkMediaDecoder(), maxHamming = 10)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      dd.as("x").join(dd.as("y"),
-        col("x.text") === col("y.text") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    "q21_events" -> ((s, dir) => {
-      val ev = graft.sources.Readers.readEvents(s, dir)
-      Dftly.select(
-        ev,
-        """event_id: $event_id
-          |k_val: '(extract group 1 of /"k": (\d+)/ from $props)::?int'
-          |is_err: $event_type == 'error'
-          |ev_hour: $ts::hour_of_day::int64
-          |ev_min: $ts::minute_of_hour::int64
-          |ev_sec: $ts::second_of_minute::int64
-          |ev_us: ($ts - 2024-01-01 00:00:00)::total_microseconds
-          |ev_ms: ($ts - 2024-01-01 00:00:00)::total_milliseconds
-          |""".stripMargin
-      )
-    }),
-    // Multimodal plumbing: binary payloads (synthesized deterministically
-    // from document text) → typed per-partition batch decode (stub) →
-    // feature rows. Decode is engine-specific → rows-only driver check.
-    "q23_multimodal" -> ((s, dir) => {
-      import s.implicits._
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          graft.ops.MediaRow(id,
-            graft.ops.MediaMeta("image", "stub", 100, 80, 0, 0L),
-            text.getBytes("UTF-8"))
-        }
-      // Histogram is an array column — joined to a scalar string so the
-      // driver's pandas compare can sort/hash the rows (rows-only check).
-      graft.ops.Multimodal.imageFeatures(media).toDF()
-        .select(col("media_id"), col("width"), col("height"), col("channels"),
-          round(col("meanLuma"), 6).as("mean_luma"),
-          concat_ws(",", col("histogram").cast("array<string>")).as("histogram"))
-    }),
-    // Multimodal PROPERTY oracle (stub decode bits are engine-specific →
-    // q23 stays rows-only; this states the feature-extraction invariants):
-    // dims within the stub's declared range, 3 channels, 16 histogram bins
-    // summing to exactly width × height pixels, mean luma within [0, 255].
-    "q23c_multimodal_props" -> ((s, dir) => {
-      import s.implicits._
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          graft.ops.MediaRow(id,
-            graft.ops.MediaMeta("image", "stub", 100, 80, 0, 0L),
-            text.getBytes("UTF-8"))
-        }
-      graft.ops.Multimodal.imageFeatures(media).toDF()
-        .select(col("media_id"),
-          (col("width").between(16, 79) && col("height").between(16, 79) &&
-            col("channels") === 3 &&
-            col("meanLuma").between(0.0, 255.0) &&
-            (size(col("histogram")) === 16) &&
-            (aggregate(col("histogram"), lit(0L), (a, x) => a + x)
-              === col("width").cast("long") * col("height"))).as("ok"))
-    }),
-    // Audio/video PROPERTY oracle: one PCM sample per payload byte (so
-    // nFrames == octet length of the text), RMS within [0, 1], and the
-    // every-4th-of-256-byte-chunks frame sampler yields exactly
-    // ceil(ceil(olen/256)/4) frames — including ZERO for empty payloads
-    // (left join keeps frame-less videos).
-    "q23d_av_props" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val media = docs.as[(Long, String)].map { case (id, text) =>
-        val bytes = text.getBytes("UTF-8")
-        val mt = if (id % 2 == 0) "audio" else "video"
-        graft.ops.MediaRow(id,
-          graft.ops.MediaMeta(mt, "stub", 0, 0, 16000, bytes.length.toLong), bytes)
-      }
-      val audio = graft.ops.Multimodal.audioFeatures(media).toDF()
-        .select(col("media_id"), col("rms"), col("nFrames"))
-      val vframes = graft.ops.Multimodal.sampleFrames(media, everyN = 4).toDF()
-        .groupBy(col("media_id"))
-        .agg(count(lit(1)).as("nf"), max(col("frameIndex")).as("maxIdx"))
-      val base = docs.select(col("doc_id"),
-        octet_length(col("text")).cast("long").as("olen"))
-      val audioOk = base.filter(col("doc_id") % 2 === 0)
-        .join(audio, base("doc_id") === audio("media_id"), "left")
-        .select(col("doc_id").as("media_id"),
-          (col("nFrames") === col("olen") && col("rms").between(0.0, 1.0)).as("ok"))
-      val chunks = ceil(col("olen") / 256.0).cast("long")
-      val expFrames = ceil(chunks / 4.0).cast("long")
-      val videoOk = base.filter(col("doc_id") % 2 === 1)
-        .join(vframes, base("doc_id") === vframes("media_id"), "left")
-        .select(col("doc_id").as("media_id"),
-          ((coalesce(col("nf"), lit(0L)) === expFrames) &&
-            (coalesce(col("maxIdx"), lit(0)) % 4 === 0)).as("ok"))
-      audioOk.unionByName(videoOk)
-    }),
-    // Audio decode (stub) + video frame sampling over the same payload
-    // plumbing as q23 — rows-only (decode is engine-specific), scalar
-    // columns only.
-    "q23b_multimodal_av" -> ((s, dir) => {
-      import s.implicits._
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          val bytes = text.getBytes("UTF-8")
-          val mt = if (id % 2 == 0) "audio" else "video"
-          graft.ops.MediaRow(id,
-            graft.ops.MediaMeta(mt, "stub", 0, 0, 16000, bytes.length.toLong),
-            bytes)
-        }
-      val audio = graft.ops.Multimodal.audioFeatures(media).toDF()
-        .select(col("media_id"), lit("audio").as("kind"),
-          col("nFrames").as("n"), round(col("rms"), 6).as("metric"))
-      val frames = graft.ops.Multimodal.sampleFrames(media, everyN = 4).toDF()
-        .groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("media_id"), lit("video").as("kind"), col("n"),
-          lit(0.0).as("metric"))
-      audio.unionByName(frames)
-    }),
-    // As-of join (single-shuffle union+window formulation) vs DuckDB's
-    // native ASOF JOIN: for each purchase, the latest prior signup per user.
-    "q24_asof" -> ((s, dir) => {
-      val ev = graft.sources.Readers.readEvents(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("sts"), col("event_id").as("signup_id"))
-      graft.ops.TemporalJoin.asOfJoin(
-        purchases, signups, Seq("user_id"), "ts", "sts", Seq("signup_id"))
-        .select(col("event_id"), col("signup_id"))
-    }),
-    // Range join (bucketized interval containment) vs a plain DuckDB
-    // inequality join: purchases within 2 days after any signup, per user.
-    "q25_range" -> ((s, dir) => {
-      val ev = graft.sources.Readers.readEvents(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val windows = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("w_start"),
-          (col("ts") + expr("INTERVAL 2 DAYS")).as("w_end"),
-          col("event_id").as("signup_id"))
-      graft.ops.TemporalJoin.rangeJoin(
-        purchases, windows, Seq("user_id"), "ts", "w_start", "w_end",
-        bucketMicros = 6L * 3600 * 1000000)
-        .select(col("event_id"), col("signup_id"))
-    }),
-    // Gopher-style quality signals: token count, top-2-gram repetition,
-    // mean word length, composite keep decision. All ratios are exact
-    // integer-over-integer divisions, so the oracle hash-matches.
-    "q26_quality" -> ((s, dir) =>
-      graft.ops.Corpus.withQualitySignals(t(s, dir, "documents"), "text")
-        .select(col("doc_id"),
-          col("token_count").cast("long").as("token_count"),
-          round(col("top_ngram_frac"), 6).as("rep2"),
-          round(col("mean_word_len"), 6).as("mean_wlen"),
-          col("keep"))),
-    // Per-source quota: top-3 documents per source by quality — the
-    // per-domain cap every corpus-curation pipeline applies.
-    "q27_quota" -> ((s, dir) => {
-      val scored = t(s, dir, "documents")
-        .withColumn("q", TextStats.qualityScore(col("text"), col("n_chars")))
-      graft.ops.Corpus.perKeyQuota(
-        scored, Seq("source"), Seq(col("q").desc, col("doc_id").asc), 3)
-        .select(col("source"), col("doc_id"))
-    }),
-    // Deterministic hash split: assignment bits are engine-specific
-    // (xxhash64), but the *properties* are oracle-checkable — every split
-    // non-empty and within tolerance of its weight.
-    "q28_split" -> ((s, dir) => {
-      val sp = graft.ops.Corpus.assignSplit(
-        t(s, dir, "documents"), "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      val expected = when(col("split") === "train", 0.8).otherwise(0.1)
-      // tolerance ≈ 4σ of the binomial at n=500 (sd ~0.018): passes hash
-      // noise (train is 0.746 on this data), fails wrong thresholds.
-      // total via a broadcast 1-row cross join, not a global window — an
-      // unpartitioned window funnels everything to one task (and WARNs);
-      // the grouped frame re-aggregates for the total, which AQE broadcasts.
-      val grouped = sp.groupBy(col("split")).agg(count(lit(1)).as("n"))
-      grouped
-        .crossJoin(broadcast(grouped.groupBy().agg(sum(col("n")).as("total"))))
-        .select(col("split"),
-          (abs(col("n") / col("total") - expected) < lit(0.08)).as("frac_ok"))
-    }),
-    // Exact n-gram Jaccard near-dup pairs via prefix filtering (equi-join on
-    // rare prefix shingles — the brute-force formulation is O(n²)-dead past
-    // a few thousand docs). Fully oracle-checked: DuckDB computes the same
-    // exact output with an all-pairs sweep; nearest pair is 0.4 from the
-    // threshold. Cross-checks q17 (MinHash+LSH finds the same pairs).
-    "q29_jaccard_pairs" -> ((s, dir) =>
-      Dedup.jaccardPairs(
-        t(s, dir, "documents"), "doc_id", "text", threshold = 0.5)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))),
-    // Dup-FAMILY clustering: connected components over the exact-Jaccard
-    // pair graph (distributed min-label propagation with pointer jumping);
-    // members get the family min id, singletons keep their own id, and the
-    // min-id representative of each family is the keeper.
-    "q38_cluster" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.5)
-      graft.ops.Cluster.assignClusters(docs, "doc_id", pairs)
-        .select(col("doc_id"), col("cluster"),
-          (col("doc_id") === col("cluster")).as("keep"))
-    }),
-    // MinHash signature ESTIMATES vs exact Jaccard, on the exactly-known
-    // pair set: |estimate − exact| ≤ 0.25 (4σ at k=64) for every pair. The
-    // signatures are deterministic (fixed coefficients), so this either
-    // always passes or catches a real estimator/kernel regression — it
-    // upgrades q17's rows-only status to an oracle-checked claim about
-    // MinHash itself.
-    "q17b_minhash_est" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.5)
-      val sigs = docs
-        .select(col("doc_id").as("id"), Dedup.shingles(col("text"), 3).as("sh"))
-        .select(col("id"), graft.ops.expr.NativeSig.minhashSignature(col("sh"), 64).as("sig"))
-      val est = size(filter(zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => x === y), b => b)).cast("double") / 64
-      pairs
-        .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-        .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          (abs(est - col("jaccard")) <= 0.25).as("est_ok"))
-    }),
-    // Fixed-size overlapping token-window chunks (64 tokens, 16 overlap) —
-    // map-side explode, no shuffle.
-    "q39_chunks" -> ((s, dir) =>
-      graft.ops.Corpus.chunkDocuments(
-        t(s, dir, "documents"), "doc_id", "text", chunkTokens = 64, overlapTokens = 16)),
-    // Okapi BM25 for one tokenized query: map-side isin filter before any
-    // shuffle, broadcast df/N/avgdl constants.
-    "q40_bm25" -> ((s, dir) =>
-      graft.ops.Retrieval.bm25(
-        t(s, dir, "documents"), "doc_id", "text", Seq("the", "data", "model"))
-        .select(col("doc_id"), round(col("bm25"), 6).as("bm25"))),
-    // One-scan numeric profile with EXACT quartiles (DuckDB quantile_cont
-    // and Spark percentile share the linear-interpolation definition).
-    // approx = false is EXPLICIT here — the library default is the
-    // sketch-state approx_percentile (scale-safe); the oracle needs exact.
-    "q41_profile" -> ((s, dir) =>
-      // exact percentile's per-row aggregation state is CPU-dense: worth
-      // the one exchange to escape the 3-split scan (2.4 s vs 3.3 s)
-      graft.ops.Corpus.profile(
-        Dedup.ensureParallelism(t(s, dir, "lineitem")),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-        approx = false)
-        .select(col("column"), col("n"), col("nulls"),
-          round(col("mean"), 6).as("mean"), col("min"), col("max"),
-          round(col("p25"), 6).as("p25"), round(col("p50"), 6).as("p50"),
-          round(col("p75"), 6).as("p75"))),
-    // SemDeDup-style semantic dedup: transitive duplicate FAMILIES in
-    // embedding space (exact cosine pairs → connected components → keep the
-    // min-id representative). Fully oracle-checked: recursive-CTE closure
-    // over DuckDB's own exact cosine pair set.
-    "q42_semantic_dedup" -> ((s, dir) => {
-      val embs = t(s, dir, "embeddings")
-      val pairs = Similarity.bruteForceCosinePairs(
-        embs, "vec_id", "embedding", threshold = 0.40)
-      graft.ops.Cluster.assignClusters(embs.select(col("vec_id")), "vec_id", pairs)
-        .select(col("vec_id"), col("cluster"),
-          (col("vec_id") === col("cluster")).as("keep"))
-    }),
-    // Rollup aggregation through the pipeline verb — subtotal rows per
-    // returnflag and a grand total, aggregates integral-valued so the
-    // oracle hash-matches exactly.
-    "q43_rollup" -> ((s, dir) =>
-      graft.pipeline.Pipeline.runOnDir(s,
-        """source: lineitem
-          |steps:
-          |  - groupBy: {cols: [l_returnflag, l_linestatus], mode: rollup}
-          |    agg:
-          |      total_qty: {sum: $l_quantity}
-          |      n: {count: "*"}
-          |""".stripMargin, dir)),
-    // Multiset set-ops through the pipeline verb: order keys with no
-    // lineitem rows (EXCEPT ALL == anti-join here since keys are unique).
-    "q44_setops" -> ((s, dir) =>
-      graft.pipeline.Pipeline.runOnDir(s,
-        """source: orders
-          |steps:
-          |  - select: {o_orderkey: $o_orderkey}
-          |  - except: {table: lineitem, cols: [l_orderkey], all: true}
-          |""".stripMargin, dir)),
-    // Contiguous global row index — the scale-safe ORDER BY row_number:
-    // range exchange + per-partition window + broadcast per-partition
-    // offsets, never a single-partition window.
-    "q45_global_index" -> ((s, dir) =>
-      graft.ops.Packing.withGlobalIndex(
-        t(s, dir, "documents"), Seq(col("doc_id").asc), "pos")
-        .select(col("doc_id"), col("pos"))),
-    // Concat-and-cut sequence packing: whitespace token counts laid
-    // end-to-end in doc_id order, cut every 128 slots; one fragment row per
-    // (document × overlapped sequence).
-    "q46_packing" -> ((s, dir) =>
-      graft.ops.Packing.packSequencesByText(
-        t(s, dir, "documents"), "doc_id", "text", seqTokens = 128)),
-    // Exact byte-level BPE (empty merge table): count == UTF-8 byte length
-    // for every document — the pre-tokenizer must partition the string
-    // exactly (no dropped/double-counted bytes on unicode, contractions,
-    // whitespace runs). DuckDB's strlen() is byte length, so the oracle
-    // checks the whole kernel foundation over real corpus text.
-    "q54_bpe_bytes" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.TextStats.tokenCountBpeExact(col("text"),
-          graft.ops.expr.BpeModel.empty).cast("long").as("n_bytes"))),
-    // Exact BPE under a real merge table: planted strings spanning full
-    // merge chains, partial chains, contractions, case sensitivity, and
-    // multi-byte UTF-8, counted by the codegen'd kernel; the oracle is the
-    // same strings with REFERENCE counts hand-derived from the merge table
-    // (each derivation pinned in BpeSpec) as literal VALUES.
-    "q54b_bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      val model = graft.ops.expr.BpeModel.fromMergesLines(Seq(
-        "h e", "l l", "he ll", "hell o", "Ġ w", "o r", "Ġw or", "l d",
-        "Ġwor ld"))
-      Seq(
-        1L -> "hello world", 2L -> "hello", 3L -> "hell or ld",
-        4L -> "Hello", 5L -> "it's", 6L -> "é", 7L -> "a  b",
-        8L -> "hellohello world world")
-        .toDF("tid", "text")
-        .select(col("tid"),
-          graft.ops.TextStats.tokenCountBpeExact(col("text"), model)
-            .cast("long").as("n_tokens"))
-    }),
-    // Exact BPE ENCODE over the same merge table and strings as q54b: the
-    // oracle pins the full id SEQUENCES (hand-derived; each step in
-    // BpeSpec) under the standard vocab numbering — byte symbols 0-255 in
-    // byte-alphabet discovery order ('!'=0, 'A'=32, space=220), merge r
-    // emits 256+r. size(ids) must equal q54b's counts by construction.
-    "q54d_bpe_encode" -> ((s, dir) => {
-      import s.implicits._
-      val model = graft.ops.expr.BpeModel.fromMergesLines(Seq(
-        "h e", "l l", "he ll", "hell o", "Ġ w", "o r", "Ġw or", "l d",
-        "Ġwor ld"))
-      Seq(
-        1L -> "hello world", 2L -> "hello", 3L -> "hell or ld",
-        4L -> "Hello", 5L -> "it's", 6L -> "é", 7L -> "a  b",
-        8L -> "hellohello world world")
-        .toDF("tid", "text")
-        .select(col("tid"),
-          graft.ops.TextStats.tokenizeBpe(col("text"), model).as("raw"))
-        // Scalar projection: the driver's pandas compare cannot hash array
-        // cells (SURVEY §7.5b — the q04/q23 rule; r9's red row was exactly
-        // this), so emit the id sequence as a CSV string plus its length.
-        .select(col("tid"), concat_ws(",", col("raw")).as("ids_csv"),
-          size(col("raw")).cast("long").as("n_ids"))
-    }),
-    // vocab.json interop: the SAME strings and merge table as q54d, but
-    // emission re-keyed through a released-style vocab.json (built with
-    // Jackson from the standard vocab offset by +1000, with a special
-    // token at id 0 — the shape real released vocabs have). The JSON text
-    // round-trips through BpeModel.vocabFromJson, so parse + remap are
-    // both under the gate; expected ids are q54d's hand-derived sequences
-    // shifted by exactly 1000.
-    "q54e_bpe_vocab_ids" -> ((s, dir) => {
-      import s.implicits._
-      val base = graft.ops.expr.BpeModel.fromMergesLines(Seq(
-        "h e", "l l", "he ll", "hell o", "Ġ w", "o r", "Ġw or", "l d",
-        "Ġwor ld"))
-      val vocabMap = new java.util.HashMap[String, Integer]()
-      vocabMap.put("<|endoftext|>", 0)
-      base.standardVocab.foreach { case (tok, id) => vocabMap.put(tok, 1000 + id) }
-      val json = new com.fasterxml.jackson.databind.ObjectMapper()
-        .writeValueAsString(vocabMap)
-      val model = base.withVocab(graft.ops.expr.BpeModel.vocabFromJson(json))
-      Seq(
-        1L -> "hello world", 2L -> "hello", 3L -> "hell or ld",
-        4L -> "Hello", 5L -> "it's", 6L -> "é", 7L -> "a  b",
-        8L -> "hellohello world world")
-        .toDF("tid", "text")
-        .select(col("tid"),
-          graft.ops.TextStats.tokenizeBpe(col("text"), model).as("raw"))
-        .select(col("tid"), concat_ws(",", col("raw")).as("ids_csv"),
-          size(col("raw")).cast("long").as("n_ids"))
-    }),
-    // Concat-and-cut packing METERED BY THE EXACT BPE COUNTER (empty table
-    // ⇒ bytes): same fragment contract as q46, but the slot unit is what a
-    // byte-level tokenizer would see; DuckDB replays with strlen.
-    "q54c_bpe_pack" -> ((s, dir) =>
-      graft.ops.Packing.packSequences(
-        t(s, dir, "documents"), "doc_id",
-        graft.ops.TextStats.tokenCountBpeExact(col("text"),
-          graft.ops.expr.BpeModel.empty),
-        seqTokens = 256, orderCols = Seq(col("doc_id").asc))),
-    // Benchmark decontamination: training docs sharing a word 8-gram with
-    // the eval subset (doc_id % 7 == 0 — every eval doc is its own train
-    // hit, plus any true cross-document overlaps).
-    "q47_decontam" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ops.Decontam.markContaminated(
-        docs, "doc_id", "text",
-        docs.filter(col("doc_id") % 7 === 0), "text", n = 8)
-        .select(col("doc_id"), col("contaminated"))
-    }),
-    // Per-eval-doc contamination FRACTION (the graded number benchmark
-    // cards report, vs q47's binary train-side mark): eval = doc_id%7==0,
-    // train = the REST of the corpus (eval docs excluded, else every
-    // fraction is trivially 1.0) — fractions measure true cross-document
-    // 8-gram overlap. DuckDB replays shingling + the distinct-gram
-    // semi-join + per-doc counting verbatim.
-    "q81_contamination_frac" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ops.Decontam.contaminationFraction(
-        docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-        docs.filter(col("doc_id") % 7 =!= 0), "text", n = 8)
-    }),
-    // MULTI-INDEX HAMMING COLLAPSE GATE: the corpus regime where the old
-    // 1-of-(h+1) banding silently lost everything. At h=10 banding has
-    // 11 × 2⁵ = 352 corpus-wide buckets; at sf0.1 this corpus is ~200k
-    // signatures (lineitem ÷ 3, ~6.3k rows per banded bucket ≫ the 1000
-    // cap) — the old shape dropped every bucket and emitted ZERO pairs
-    // (pinned with truncation stats in MultiIndexHammingSpec). The
-    // dispatcher now routes h ≥ 5 to multi-index search (4 × 16-bit
-    // substrings, radius-2 ball probes — Norouzi et al., CVPR'12), whose
-    // key space never collapses. Planted identical-signature duplicates
-    // (id + 10⁹) are the floor; the oracle derives them arithmetically —
-    // hamming-0 pairs are exactly the planted copies (xxhash64 collisions
-    // across ~2×10⁵ keys: P ≈ 1e-9).
-    "q82_mih_collapse_gate" -> ((s, dir) => {
-      // sig corpus in sigFixture (distinct: the synthetic lineitem repeats
-      // (orderkey, linenumber) pairs, and a repeated key is a repeated id
-      // AND sig — one item)
-      graft.ops.Dedup.hammingNearDuplicatePairs(
-          cachedFrame(s"q82_mih_collapse_gate:$dir")(
-            sigFixture(s, dir, withHot = false)), "id", "sig",
-          maxHamming = 10, maxBucketSize = 1000)
-        .filter(col("hamming") === 0)
-        .select(col("id_a"), col("id_b"))
-    }),
-    // Config-driven media dedup (the YAML surface the round-10 verdict
-    // flagged missing): the q76 planted-floor construction driven ENTIRELY
-    // through the pipeline's `mediaDedup` verb — a config user can now
-    // dedup images without touching the Scala API. Same oracle guarantee:
-    // pixel-identical copies must be reported.
-    "q83_pipeline_media_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dd = d0.unionByName(
-        d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val media = dd.as[(Long, String)].map { case (id, text) =>
-        graft.ops.MediaRow(id,
-          graft.ops.MediaMeta("image", "png", 48, 32, 0, 0L),
-          renderTestPng(text, 48, 32))
-      }.toDF()
-      val found = graft.pipeline.Pipeline.run(s,
-        """source: media
-          |steps:
-          |  - mediaDedup: {kind: image, mode: pairs, maxHamming: 10}
-          |""".stripMargin,
-        name => if (name == "media") media else t(s, dir, name))
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      dd.as("x").join(dd.as("y"),
-        col("x.text") === col("y.text") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // Unigram-LM (SentencePiece-style) tokenization: Viterbi segmentation
-    // under a hand-built piece/logprob vocabulary with byte fallback. The
-    // oracle pins full hand-derived id SEQUENCES (each derivation written
-    // out in UnigramSpec): single-piece wins, compositional splits, byte
-    // fallback on multi-byte UTF-8 and contractions, per-pre-token
-    // segmentation. Ids: listed pieces 0-8, then the 255 missing bytes in
-    // byte order (b<111 → 9+b, b>111 → 8+b; 'o'=111 is piece 2).
-    "q84_unigram_encode" -> ((s, dir) => {
-      import s.implicits._
-      Seq(
-        1L -> "hello", 2L -> "hello world", 3L -> "hell", 4L -> "helloo",
-        5L -> "é", 6L -> "it's", 7L -> "hellohello world", 8L -> "world")
-        .toDF("tid", "text")
-        .select(col("tid"),
-          graft.ops.TextStats.tokenizeUnigram(col("text"), UnigramFixtureModel)
-            .as("raw"))
-        .select(col("tid"), concat_ws(",", col("raw")).as("ids_csv"),
-          size(col("raw")).cast("long").as("n_ids"))
-    }),
-    // SentencePiece .vocab text-format interop: the SAME model serialized
-    // to `piece<TAB>logprob` lines (merges.txt byte alphabet) and parsed
-    // back inside the query — render + parse are both under the gate; the
-    // expected ids are identical to q84's.
-    "q84b_unigram_vocab_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      val model = graft.ops.expr.UnigramModel.fromVocabLines(
-        UnigramFixtureModel.toVocabLines)
-      Seq(
-        1L -> "hello", 2L -> "hello world", 3L -> "hell", 4L -> "helloo",
-        5L -> "é", 6L -> "it's", 7L -> "hellohello world", 8L -> "world")
-        .toDF("tid", "text")
-        .select(col("tid"),
-          graft.ops.TextStats.tokenizeUnigram(col("text"), model).as("raw"))
-        .select(col("tid"), concat_ws(",", col("raw")).as("ids_csv"),
-          size(col("raw")).cast("long").as("n_ids"))
-    }),
-    // Unigram with the pure byte-fallback vocabulary over the real corpus:
-    // every UTF-8 byte is one piece, so count == DuckDB's strlen (byte
-    // length) — the same whole-kernel foundation check as q54, but through
-    // the Viterbi path (pre-tokenizer partition + lattice + backtrack).
-    "q85_unigram_bytes" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.TextStats.tokenCountUnigram(col("text"),
-          graft.ops.expr.UnigramModel.withByteFallback(Nil))
-          .cast("long").as("n_bytes"))),
-    // DOM-block main-content extraction: planted page fixtures (nav
-    // chrome, good paragraph, link-list footer; short-between-goods
-    // context rescue; entity/br/script handling) segmented and classified
-    // by the jusText-style kernel, every block's features exploded to
-    // scalars. The oracle pins EVERY feature of EVERY block as literal
-    // VALUES — hand derivations in HtmlBlocksSpec.
-    "q86_html_blocks" -> ((s, dir) => {
-      import s.implicits._
-      val p = HtmlFixturePara
-      Seq(
-        1L -> ("<html><head><title>T</title></head><body>" +
-          "<nav><a href=\"/\">Home</a> <a href=\"/about\">About</a></nav>" +
-          s"<p>$p</p>" +
-          "<div class=\"foot\"><a href=\"/tos\">Terms</a></div>" +
-          "</body></html>"),
-        2L -> s"<p>$p</p><p>Nice short note.</p><p>$p</p>",
-        3L -> ("<div>A &amp; B &#8217;x&#8217; costs &#x24;5<br>" +
-          "second <script>var x=1;</script>part</div>"))
-        .toDF("tid", "html")
-        .select(col("tid"),
-          explode(graft.ops.WebText.htmlBlocks(col("html"))).as("b"))
-        .select(col("tid"), col("b.idx").as("idx"), col("b.tag").as("tag"),
-          col("b.in_chrome").as("in_chrome"), col("b.text").as("text"),
-          col("b.n_chars").cast("long").as("n_chars"),
-          col("b.n_words").cast("long").as("n_words"),
-          col("b.link_density").as("link_density"),
-          col("b.stop_ratio").as("stop_ratio"),
-          col("b.label").as("label"), col("b.content").as("content"))
-    }),
-    // Main-content extraction end-to-end over the same fixtures: the
-    // kept-block join IS the document text a crawl pipeline stores.
-    "q86b_main_content" -> ((s, dir) => {
-      import s.implicits._
-      val p = HtmlFixturePara
-      Seq(
-        1L -> ("<html><head><title>T</title></head><body>" +
-          "<nav><a href=\"/\">Home</a> <a href=\"/about\">About</a></nav>" +
-          s"<p>$p</p>" +
-          "<div class=\"foot\"><a href=\"/tos\">Terms</a></div>" +
-          "</body></html>"),
-        2L -> s"<p>$p</p><p>Nice short note.</p><p>$p</p>",
-        3L -> ("<div>A &amp; B &#8217;x&#8217; costs &#x24;5<br>" +
-          "second <script>var x=1;</script>part</div>"))
-        .toDF("tid", "html")
-        .select(col("tid"),
-          graft.ops.WebText.extractMainContent(col("html")).as("main_text"))
-    }),
-    // DOM-block classifier over the REAL corpus (q86 pins 3 fixtures;
-    // this replays the context-free classification + keep decision on
-    // every document): each doc's text wrapped in chrome (nav + footer,
-    // both bad by declaration/link-density) around one <p>. The corpus is
-    // single-spaced punctuation-free ASCII (checked), so DuckDB replays
-    // the whole classifier arithmetic — length, per-occurrence stopword
-    // ratio, the good/near-good/short/bad ladder, and kept = good.
-    // Thresholds 0.12/0.05 (vs the 0.20/0.10 defaults) so all four labels
-    // actually occur on this keyword-salad corpus (13/294/177/16 at
-    // sf0.01).
-    "q87_content_classify_corpus" -> ((s, dir) => {
-      val rules = graft.ops.expr.HtmlContent.ContentRules(
-        stopwordsLow = 0.05, stopwordsHigh = 0.12)
-      val page = concat(
-        lit("<html><body><nav><a href=\"/\">Home</a> " +
-          "<a href=\"/a\">About</a></nav><p>"),
-        col("text"),
-        lit("</p><footer><a href=\"/t\">Terms</a></footer></body></html>"))
-      t(s, dir, "documents").select(col("doc_id"),
-          graft.ops.WebText.htmlBlocks(page, rules).as("bs"),
-          graft.ops.WebText.extractMainContent(page, rules).as("kept"))
-        .select(col("doc_id"),
-          element_at(filter(col("bs"),
-            b => b.getField("tag") === "p"), 1).getField("label").as("label"),
-          col("kept"))
-    }),
-    // WARC crawl-archive round trip (ISO 28500, the CommonCrawl shipping
-    // format): every document becomes one HTTP-response record, written as
-    // record-per-gzip-member .warc.gz shards (attempt-unique temp + rename
-    // commit), read back by the per-file streaming parser. The oracle
-    // replays every projected field from `documents` — uri construction,
-    // the constant status/content-type the writer stamps, byte-exact body
-    // text, and the WARC Content-Length arithmetic (77 bytes of fixed
-    // HTTP chrome + the digits of the body length + the body itself).
-    // MULTILINGUAL jusText GATE (the r12 verdict's quality-ladder item):
-    // the same block classifier driven by rulesForLang — a German page
-    // under the German function-word table classifies good, a French one
-    // under fr likewise, and the ENGLISH paragraph under the GERMAN rules
-    // drops to bad (zero stopword hits) — the lang key changes the
-    // decision, not just a list. Every block's features and labels are
-    // hand-derived VALUES literals (the q86 pattern).
-    "q86c_justext_lang" -> ((s, dir) => {
-      import s.implicits._
-      val deRules = graft.ops.expr.HtmlContent.rulesForLang("de")
-      val frRules = graft.ops.expr.HtmlContent.rulesForLang("fr")
-      val de = Seq(
-        1L -> ("<html><body><nav><a href=\"/\">Start</a> " +
-          "<a href=\"/u\">Über uns</a></nav>" +
-          s"<p>$DeFixturePara</p>" +
-          "<footer><a href=\"/i\">Impressum</a></footer></body></html>"),
-        2L -> s"<p>$EnUnderDePara</p>")
-        .toDF("tid", "html")
-        .select(col("tid"),
-          explode(graft.ops.WebText.htmlBlocks(col("html"), deRules)).as("b"))
-      val fr = Seq(3L -> s"<p>$FrFixturePara</p>")
-        .toDF("tid", "html")
-        .select(col("tid"),
-          explode(graft.ops.WebText.htmlBlocks(col("html"), frRules)).as("b"))
-      de.unionByName(fr)
-        .select(col("tid"), col("b.idx").as("idx"), col("b.tag").as("tag"),
-          col("b.in_chrome").as("in_chrome"), col("b.text").as("text"),
-          col("b.n_chars").cast("long").as("n_chars"),
-          col("b.n_words").cast("long").as("n_words"),
-          col("b.link_density").as("link_density"),
-          col("b.stop_ratio").as("stop_ratio"),
-          col("b.label").as("label"), col("b.content").as("content"))
-    }),
-    // LANG-KEYED GOPHER GATE: a third of the corpus gets a German
-    // function-word suffix planted; the de ladder counts hits against the
-    // German table (en stays on the shipped list), and a stoplist-less
-    // lang (zh) DISABLES the ≥2 floor instead of rejecting everything.
-    // Full q65-style signal + keep_full replay per lang in DuckDB.
-    "q87b_gopher_lang" -> ((s, dir) => {
-      val planted = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" der die und das ist von mit den")))
-          .otherwise(col("text")).as("t2"))
-      def one(lang: String, sfx: String) =
-        graft.ops.Corpus.withRepetitionSignals(planted, "t2", lang = lang)
-          .select(col("doc_id"),
-            col("stopword_hits").cast("long").as(s"hits_$sfx"),
-            col("keep_full").as(s"keep_$sfx"))
-      one("de", "de").join(one("zh", "zh"), "doc_id")
-        .join(one("en", "en"), "doc_id")
-    }),
-    "q88_warc_roundtrip" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warc_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "rt").getPath
-      val src = t(s, dir, "documents").select(
-        concat(lit("https://site"), (col("doc_id") % 50).cast("string"),
-          lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
-        col("text").as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(4), out, "uri", "body", overwrite = true)
-      graft.sources.Warc.readWarc(s, out).select(
-        regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-          .cast("long").as("doc_id"),
-        col("target_uri").as("uri"),
-        col("warc_type"),
-        col("http_status").as("status"),
-        col("http_content_type").as("ctype"),
-        col("payload").cast("string").as("body"),
-        col("content_length").as("clen"),
-        col("truncated"))
-    }),
-    // Crawl-curation e2e from YAML over the warc source: the config-driven
-    // user's CommonCrawl opening move — read the archive, keep HTTP 200s,
-    // group by registrable domain (PSL) with per-domain doc and char
-    // totals. Fully oracle-replayed (domains are site<N>.com by
-    // construction, so eTLD+1 arithmetic is replayable).
-    "q88b_warc_curation" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warc_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "cur").getPath
-      val src = t(s, dir, "documents").select(
-        concat(lit("https://site"), (col("doc_id") % 50).cast("string"),
-          lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
-        col("text").as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(4), out, "uri", "body", overwrite = true)
-      graft.pipeline.Pipeline.run(s,
-        s"""source: {format: warc, path: "$out"}
-           |steps:
-           |  - filter: "$$http_status == 200"
-           |  - withColumns:
-           |      body: $$payload::str
-           |  - domainOf: {url: target_uri, as: domain}
-           |  - groupBy: [domain]
-           |    agg:
-           |      n_docs: {count: "*"}
-           |      total_chars: {sum: "len_chars($$body)"}
-           |""".stripMargin,
-        name => t(s, dir, name))
-    }),
-    // THE CRAWL-OPENING CAPSTONE (r12 verdict item 5): ONE YAML config
-    // chaining the full curation path — dictionary-zstd WARC read →
-    // charset decode (iso-8859-1-labeled cp1252 originals vs utf-8
-    // twins; any mis-decode breaks the twin collapse at the dedup leg
-    // and the whole keep-set goes red — see CapstoneMarker) →
-    // jusText extractContent → langId gate (planted Cyrillic pages must
-    // drop; an a-z corpus can never classify ru, so the keep-set is
-    // constructive) → full-Gopher keep_full → exact dedup (planted
-    // whole-corpus copies at +1001000 ≡ 0 mod 5·7·11, so every plant
-    // aligns) → cross-corpus segment dedup (the promo paragraph on every
-    // page collapses to its keep-first winner) → 8-gram decontamination
-    // against an eval slice → checksum-validated redaction (grouped
-    // Luhn-valid card collapses 4 tokens to one; the invalid twin must
-    // not) → sequence packing. The oracle replays the ENTIRE keep-set
-    // and the exact packed-sequence arithmetic in DuckDB.
-    "q99_crawl_capstone" -> ((s, dir) => {
-      val out = q99ArchiveDir(dir)
-      // bench-prepared: the archive is already on disk for this JVM — the
-      // timed region measures the 13-leg pipeline, not the fixture write
-      if (!preparedDirs.contains(s"q99_crawl_capstone:$dir"))
-        q99WriteArchive(s, dir)
-      q99Pipeline(s, dir, out)
-    }),
-    // WET (conversion-record) gate: CommonCrawl's extracted-text sibling
-    // format — WARC-Type: conversion, record Content-Type text/plain,
-    // content block = the text itself (no HTTP envelope). The generic
-    // reader must surface these with null HTTP fields and the raw text
-    // payload; every reader field replayed arithmetically in DuckDB.
-    "q88e_wet_conversion" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warc_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "wet").getPath
-      val src = t(s, dir, "documents").select(
-        concat(lit("https://site"), (col("doc_id") % 50).cast("string"),
-          lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
-        col("text"))
-      graft.sources.Warc.writeWetConversions(
-        src.repartition(4), out, "uri", "text", overwrite = true)
-      graft.sources.Warc.readWarc(s, out).select(
-        regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-          .cast("long").as("doc_id"),
-        col("target_uri").as("uri"),
-        col("warc_type"),
-        col("content_type").as("ctype"),
-        col("http_status").isNull.as("no_http"),
-        col("payload").cast("string").as("text"),
-        col("content_length").as("clen"),
-        col("truncated"))
-    }),
-    // .warc.zst roundtrip: the same reader-field replay as q88 over
-    // ZSTD-compressed shards (newer CommonCrawl segments ship zstd;
-    // member-per-record concatenated frames, no shared dictionary —
-    // the reader's continuous-mode decode). Same oracle arithmetic.
-    "q88c_warc_zst_roundtrip" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warc_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "zst").getPath
-      val src = t(s, dir, "documents").select(
-        concat(lit("https://site"), (col("doc_id") % 50).cast("string"),
-          lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
-        col("text").as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(4), out, "uri", "body", overwrite = true,
-        codec = "zstd")
-      graft.sources.Warc.readWarc(s, out).select(
-        regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-          .cast("long").as("doc_id"),
-        col("target_uri").as("uri"),
-        col("warc_type"),
-        col("http_status").as("status"),
-        col("payload").cast("string").as("body"),
-        col("content_length").as("clen"),
-        col("truncated"))
-    }),
-    // Same reader-field replay through the DICTIONARY-compressed layout:
-    // each shard leads with a trained per-shard dictionary in the iipc
-    // 0x184D2A5D skippable frame, members compress against it, and the
-    // reader must decode every field identically to the plain-frame path.
-    "q88d_warc_zst_dict_roundtrip" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warc_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "zstdict").getPath
-      val src = t(s, dir, "documents").select(
-        concat(lit("https://site"), (col("doc_id") % 50).cast("string"),
-          lit(".com/doc/"), col("doc_id").cast("string")).as("uri"),
-        col("text").as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(2), out, "uri", "body", overwrite = true,
-        codec = "zstd-dict")
-      graft.sources.Warc.readWarc(s, out).select(
-        regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-          .cast("long").as("doc_id"),
-        col("target_uri").as("uri"),
-        col("warc_type"),
-        col("http_status").as("status"),
-        col("payload").cast("string").as("body"),
-        col("content_length").as("clen"),
-        col("truncated"))
-    }),
-    // WordPiece (BERT-family) tokenization: greedy longest-match-first
-    // with ## continuation pieces, punctuation isolation, and the
-    // published whole-word-to-[UNK] rule. The oracle pins hand-derived id
-    // SEQUENCES (each greedy derivation written out in WordPieceSpec);
-    // the model is built through the vocab.txt render→parse round trip,
-    // so the interop path is under the gate too.
-    "q91_wordpiece_encode" -> ((s, dir) => {
-      import s.implicits._
-      Seq(
-        1L -> "hello", 2L -> "hello world", 3L -> "hellol", 4L -> "hello hell",
-        5L -> "hellolo", 6L -> "unaffable", 7L -> "helloz", 8L -> "it's",
-        9L -> "ab", 10L -> "")
-        .toDF("tid", "text")
-        .select(col("tid"),
-          graft.ops.TextStats.tokenizeWordPiece(col("text"), WordPieceFixtureModel)
-            .as("raw"))
-        .select(col("tid"), concat_ws(",", col("raw")).as("ids_csv"),
-          size(col("raw")).cast("long").as("n_ids"))
-    }),
-    // Corpus-scale WordPiece identity: under a letters-only vocabulary
-    // (each word = first letter + ## continuations), the token count of
-    // this punctuation-free lowercase corpus is exactly its non-space
-    // character count — DuckDB replays the arithmetic on every document.
-    "q91b_wordpiece_corpus" -> ((s, dir) => {
-      val letters = ('a' to 'z').map(_.toString)
-      val model = graft.ops.expr.WordPieceModel.fromTokens(
-        Seq("[UNK]") ++ letters ++ letters.map("##" + _))
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.TextStats.tokenCountWordPiece(col("text"), model)
-          .cast("long").as("n_tokens"))
-    }),
-    // robots.txt compliance filtering (RFC 9309) over the corpus: three
-    // planted robots files (longest-match + allow-override, an
-    // agent-specific group with wildcard/anchor patterns, an
-    // empty-Disallow allow-all) plus a domain with NO robots row (the
-    // protocol's default-allow). URLs derive from doc_id so the oracle is
-    // the hand-derived decision table over (domain, path) — every branch
-    // of group selection, precedence, and wildcard matching is exercised
-    // through the YAML verb (compile-once-per-domain, left join, eval).
-    "q92_robots_filter" -> ((s, dir) => {
-      import s.implicits._
-      val robots = Seq(
-        ("site0.com", "User-agent: *\nDisallow: /private/\nAllow: /private/ok"),
-        ("site1.com", "User-agent: graftbot\nDisallow: /x*z$\nUser-agent: *\nDisallow: /"),
-        ("site2.com", "User-agent: *\nDisallow:")
-      ).toDF("host", "robots_txt")
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://site"), (col("doc_id") % 4).cast("string"),
-          lit(".com"),
-          element_at(typedLit(Seq(
-            "/private/ok", "/private/no", "/xz", "/xz/deep", "/open")),
-            (col("doc_id") % 5).cast("int") + 1)).as("url"))
-      graft.pipeline.Pipeline.run(s,
-        """source: docs
-          |steps:
-          |  - robotsFilter: {url: url, robots: robots, agent: graftbot, mode: mark}
-          |""".stripMargin,
-        name => if (name == "docs") docs
-                else if (name == "robots") robots
-                else t(s, dir, name))
-        .select(col("doc_id"), col("url"), col("robots_ok"))
-    }),
-    // WORDPIECE TRAINER, word-table gate: the trainer's one corpus-scale
-    // pass under the ENCODER's word boundaries (whitespace split +
-    // punctuation isolation — not the BPE regex). The corpus text is pure
-    // alphanumeric, so punctuation is planted by construction; the oracle
-    // replays the boundary rule with the ASCII punctuation class.
-    "q95_wordpiece_wordcounts" -> ((s, dir) => {
-      val norm = t(s, dir, "documents").select(
-        concat(col("text"), lit(" it's #"), (col("doc_id") % 10).cast("string"),
-          lit("!")).as("t"))
-      graft.ops.WordPieceTrain.wordCounts(norm, "t")
-        .orderBy(col("n").desc, col("word").asc).limit(30)
-    }),
-    // WordPiece training, selection gate (the q67b pattern): ONE round —
-    // words split [c0, ##c1, …], winner = max freq(ab)/(freq(a)·freq(b))
-    // with ties to the smallest (left, right) — replays fully in SQL
-    // (exact integer counts; both engines compare the same IEEE
-    // quotients). Multi-merge training is spec-pinned on the published
-    // teaching fixture (WordPieceTrainSpec hand derivation).
-    "q95b_wordpiece_first_merge" -> ((s, dir) => {
-      import s.implicits._
-      val norm = t(s, dir, "documents").select(
-        concat(col("text"), lit(" it's #"), (col("doc_id") % 10).cast("string"),
-          lit("!")).as("t"))
-      val wc = graft.ops.WordPieceTrain.wordCounts(norm, "t")
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      graft.ops.WordPieceTrain.trainMerges(wc, numMerges = 1).toDF("merged")
-    }),
-    // CHARSET-AWARE WARC DECODE GATE: plant pages in the legacy encodings
-    // real crawls carry (~10% of CommonCrawl HTML is non-UTF-8) and
-    // replay the whole sniffing chain — HTTP header charset param,
-    // meta-tag prescan (both spellings), BOM precedence over a LYING
-    // header, unknown-label fallthrough, UTF-16 — through the pipeline's
-    // `format: warc` source (text: true default). The oracle pins the
-    // expected DECODED strings as literals (the q55c convention).
-    "q94_warc_charset" -> ((s, dir) => {
-      import s.implicits._
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warc_cs_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "cs").getPath
-      def b(text: String, cs: String) = text.getBytes(cs)
-      val utf16le = {
-        val body = "utf16 page é".getBytes("UTF-16LE")
-        Array(0xff.toByte, 0xfe.toByte) ++ body
-      }
-      val bomUtf8 =
-        Array(0xef.toByte, 0xbb.toByte, 0xbf.toByte) ++ b("bom wins: é", "UTF-8")
-      val pages: Seq[(String, Array[Byte], String)] = Seq(
-        ("https://enc.test/p1", b("café – déjà vu €", "windows-1252"),
-          "text/html; charset=windows-1252"),
-        ("https://enc.test/p2", b("こんにちは世界", "Shift_JIS"),
-          "text/html; charset=Shift_JIS"),
-        ("https://enc.test/p3",
-          b("<html><head><meta charset=\"shift_jis\"></head>" +
-            "<body>日本語テキスト</body></html>", "Shift_JIS"),
-          "text/html"),
-        ("https://enc.test/p4", bomUtf8, "text/html; charset=windows-1252"),
-        ("https://enc.test/p5", b("plain utf-8: ünïcödé ✓", "UTF-8"),
-          "text/html"),
-        ("https://enc.test/p6", utf16le, "text/html"),
-        ("https://enc.test/p7",
-          b("<html><head><meta http-equiv=\"Content-Type\" " +
-            "content=\"text/html; charset=windows-1252\"></head>" +
-            "<body>smart “quotes”</body></html>", "windows-1252"),
-          "text/html"),
-        ("https://enc.test/p8", b("fallback äßç", "UTF-8"),
-          "text/html; charset=x-bogus-enc"))
-      graft.sources.Warc.writeWarcResponses(
-        pages.toDF("uri", "body", "ct"), out, "uri", "body",
-        overwrite = true, contentTypeCol = Some("ct"))
-      graft.pipeline.Pipeline.run(s,
-        s"""source: {format: warc, path: "$out"}
-           |steps:
-           |  - filter: "$$http_status == 200"
-           |""".stripMargin,
-        name => t(s, dir, name))
-        .select(
-          regexp_extract(col("target_uri"), "/p(\\d+)$", 1)
-            .cast("long").as("page"),
-          col("text"))
-    }),
-    // WHATWG LABEL-TABLE + PRESCAN-CONFINEMENT GATE (the r12 verdict's top
-    // item): the latin-1/ascii label family must decode as windows-1252
-    // (0x80–0x9F punctuation survives instead of becoming C1 controls),
-    // spec remaps (iso-8859-9→cp1254), the replacement-encoding firewall,
-    // decoy charset= in comments/scripts/other tags must NOT win the
-    // prescan, the http-equiv content form needs its pragma, and the two
-    // meta quirks (utf-16 label→utf-8, x-user-defined→cp1252). Expected
-    // DECODED strings pinned as DuckDB literals (the q94 pattern).
-    "q94b_whatwg_labels" -> ((s, dir) => {
-      import s.implicits._
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warc_lbl_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "lbl").getPath
-      def b(text: String, cs: String) = text.getBytes(cs)
-      val decoyHtml = "<!-- charset=shift_jis --><script>var s='charset=big5';" +
-        "</script><a href=\"/x?charset=utf-16be\">x</a>" +
-        "<meta charset=windows-1252>quotes “–€”"
-      val pages: Seq[(String, Array[Byte], String)] = Seq(
-        ("https://lbl.test/p1", b("euro € smart “quotes” – dash", "windows-1252"),
-          "text/html; charset=iso-8859-1"),
-        ("https://lbl.test/p2", b("naïve café – €", "windows-1252"),
-          "text/html; charset=latin1"),
-        ("https://lbl.test/p3", b("price € — em", "windows-1252"),
-          "text/html; charset=us-ascii"),
-        ("https://lbl.test/p4", b(decoyHtml, "windows-1252"), "text/html"),
-        ("https://lbl.test/p5",
-          b("<meta name=\"description\" content=\"charset=big5 tutorial\">é ok",
-            "UTF-8"), "text/html"),
-        ("https://lbl.test/p6", b("<html>attack</html>", "UTF-8"),
-          "text/html; charset=iso-2022-kr"),
-        ("https://lbl.test/p7", b("<meta charset=utf-16le>tricky é", "UTF-8"),
-          "text/html"),
-        ("https://lbl.test/p8", b("<meta charset=x-user-defined>€–", "windows-1252"),
-          "text/html"),
-        ("https://lbl.test/p9", b("türkçe € “tr” şğ", "windows-1254"),
-          "text/html; charset=iso-8859-9"),
-        // header x-user-defined: the spec's byte→PUA decode (0x80+b →
-        // U+F780+b); the meta quirk (cp1252) applies only in meta position
-        ("https://lbl.test/p10",
-          "ab".getBytes("US-ASCII") ++ Array(0x80.toByte, 0xff.toByte),
-          "text/html; charset=x-user-defined"))
-      graft.sources.Warc.writeWarcResponses(
-        pages.toDF("uri", "body", "ct"), out, "uri", "body",
-        overwrite = true, contentTypeCol = Some("ct"))
-      graft.pipeline.Pipeline.run(s,
-        s"""source: {format: warc, path: "$out"}
-           |steps:
-           |  - filter: "$$http_status == 200"
-           |""".stripMargin,
-        name => t(s, dir, name))
-        .select(
-          regexp_extract(col("target_uri"), "/p(\\d+)$", 1)
-            .cast("long").as("page"),
-          col("text"))
-    }),
-    // DUPLICATE-HEAVY MULTI-INDEX GATE (the r11 probe-side skew regime):
-    // 50k copies of ONE signature — pixel-identical re-encodes, the
-    // canonical near-dup population — alongside ~sf-scaled distinct sigs
-    // with planted 6-bit-flip near pairs. The distinct-signature engine
-    // must (a) find every planted DISTINCT-sig pair through the hot
-    // regime, and (b) pair every hot copy with the group keeper (min id)
-    // via the linear star join-back — both families arithmetically
-    // oracle-able, and nothing quadratic crosses an exchange
-    // (MultiIndexHammingSpec pins the per-task shuffle bound at k=100k).
-    "q93_mih_dupheavy_gate" -> ((s, dir) => {
-      graft.ops.Dedup.hammingNearDuplicatePairs(
-          cachedFrame(s"q93_mih_dupheavy_gate:$dir")(
-            sigFixture(s, dir, withHot = true)), "id", "sig",
-          maxHamming = 10, maxBucketSize = 1000)
-        // the two arithmetically-derivable families: planted near pairs
-        // (ids differ by exactly 1e9, hamming = popcount(0x111111) = 6)
-        // and hot-group keeper-star pairs (keeper = 5e9, hamming 0);
-        // retained-sample in-group pairs are cap-arbitrary and excluded
-        .filter((col("hamming") === 6 &&
-            col("id_b") === col("id_a") + 1000000000L) ||
-          (col("hamming") === 0 && col("id_a") === 5000000000L))
-        .select(col("id_a"), col("id_b"),
-          when(col("hamming") === 6, lit("near")).otherwise(lit("star"))
-            .as("kind"))
-    }),
-    // AUTO-TUNED MinHash banding under the q20b recall-floor construction:
-    // minhashParamsFor picks (numHashes, bands) from the threshold via the
-    // S-curve 1-(1-s^r)^b — the MinHash counterpart of q19d's cosine auto
-    // path. The floor is parameter-independent: identical text ⇒ identical
-    // shingle set ⇒ identical minhash signature at ANY (h, b) ⇒ same band
-    // hash in every band, and jaccard = 1 passes any threshold — so the
-    // planted identical pairs MUST be reported whatever the tuner chose.
-    "q96_minhash_auto_props" -> ((s, dir) => {
-      val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .filter(size(graft.ops.Dedup.shingles(col("text"), 3)) > 0)
-      val dd = d0.unionByName(
-        d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val found = graft.ops.Dedup.nearDuplicatePairsAuto(dd, "doc_id", "text",
-          threshold = 0.8, targetRecall = 0.9, maxBucketSize = Int.MaxValue)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      dd.as("x").join(dd.as("y"),
-        col("x.text") === col("y.text") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // CHECKSUM-VALIDATED PII, corpus-scale Luhn arithmetic: one synthetic
-    // 16-digit number per order (pure integer arithmetic, no hashes — both
-    // engines agree bit-for-bit), redacted only when Luhn mod-10 passes
-    // (~1 in 10 naturally). The oracle re-derives the ENTIRE decision —
-    // digit doubling, 9-subtraction, mod 10 — per row in DuckDB and
-    // reconstructs the expected text either way.
-    "q97_redact_card" -> ((s, dir) =>
-      t(s, dir, "lineitem").filter(col("l_linenumber") === 1)
-        .select(col("l_orderkey"),
-          concat(lit("pay card 4"),
-            lpad(((col("l_orderkey") % 100000000L) * 7919L + 11L)
-              .cast("string"), 15, "0"),
-            lit(" today")).as("text"))
-        .select(col("l_orderkey"),
-          graft.ops.Corpus.redactValidated(col("text")).as("text_redacted"))),
-    // Fixture matrix for the validated classes a corpus query can't plant:
-    // valid/corrupted IBAN (ISO 13616 mod-97), high-entropy secret vs
-    // low-entropy lookalike, hex-digest rule, separator-grouped card, and
-    // the validated→regex composition (card+IBAN+email+IP in one string).
-    // Every expected output is a DuckDB literal (the q94 pattern).
-    "q97b_redact_fixtures" -> ((s, dir) => {
-      import s.implicits._
-      Seq(
-        (1L, "iban GB82WEST12345698765432 ok"),
-        (2L, "iban GB82WEST12345698765433 ok"),
-        (3L, "key A1b2C3d4E5f6G7h8J9k0LmNoPqRs end"),
-        (4L, "low aaaaaaaaaaaaaaaaaaaaaaaaaaaaaa end"),
-        (5L, "sha e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855 x"),
-        (6L, "mix 4111111111111111 GB82WEST12345698765432 a@b.co 10.1.2.3"),
-        (7L, "card 4111-1111-1111-1111 and bad 4111111111111112")
-      ).toDF("id", "text")
-        .select(col("id"),
-          graft.ops.Corpus.redactPiiAll(col("text")).as("text_redacted"))
-    }),
-    // Cross-corpus segment (line) dedup, keep-first mode: every document
-    // wrapped in the SAME header/footer lines — corpus-wide line dedup
-    // must keep each shared line exactly once (at its minimal
-    // (doc_id, position) occurrence) and keep unique body lines where
-    // they stand. Oracle replays the full keep-first window arithmetic.
-    "q89_segment_dedup" -> ((s, dir) => {
-      val wrapped = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("Shared header boilerplate.\n"), col("text"),
-          lit("\nShared footer boilerplate.")).as("text"))
-      graft.ops.Dedup.dedupSegmentsAcrossCorpus(wrapped, "doc_id", "text")
-        .select(col("doc_id"), col("text_dedup"), col("n_segments_removed"))
-    }),
-    // unique_only mode: lines occurring more than once corpus-wide vanish
-    // EVERYWHERE (the aggressive CCNet hash-sharding behavior) — the
-    // shared header/footer disappear from every document, and a body line
-    // survives only if its text is corpus-unique.
-    "q89b_segment_dedup_unique" -> ((s, dir) => {
-      val wrapped = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("Shared header boilerplate.\n"), col("text"),
-          lit("\nShared footer boilerplate.")).as("text"))
-      graft.ops.Dedup.dedupSegmentsAcrossCorpus(wrapped, "doc_id", "text",
-          mode = "unique_only")
-        .select(col("doc_id"), col("text_dedup"), col("n_segments_removed"))
-    }),
-    // Connected-components SHUFFLE-regime stress pin: a synthetic 50k-node
-    // path-block graph (chains of 16 — pointer jumping needs ~5 rounds)
-    // forced past both fast paths (localSolveMaxEdges=0,
-    // broadcastMaxLabelRows=0), so the 100 TB code path stays under the
-    // oracle gate and the bench. Components are closed-form:
-    // component(id) = (id div 16) * 16.
-    "q48_cluster_shuffle" -> ((s, dir) => {
-      val n = 50000L
-      val k = 16L
-      val edges = s.range(n - 1).filter((col("id") + 1) % k =!= 0)
-        .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-      graft.ops.Cluster.connectedComponents(edges,
-        broadcastMaxLabelRows = 0L, localSolveMaxEdges = 0L)
-    }),
-    // PII redaction: emails/IPv4s/phones → typed tokens, map-side chained
-    // regexp_replace. The synthetic corpus has no PII, so deterministic PII
-    // is injected from doc_id on BOTH sides — every row redacts
-    // non-vacuously and the patterns are replayed verbatim by DuckDB
-    // (written in the Java∩RE2 regex subset).
-    "q49_redact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com via 10.0."), (col("doc_id") % 250).cast("string"),
-          lit(".17 or 555-123-4567")).as("text"))
-      graft.ops.Corpus.redactPii(docs, "text", "clean")
-        .select(col("doc_id"), col("clean"))
-    }),
-    // END-TO-END curation showcase: the whole training-data pipeline in one
-    // YAML config — quality signals → filter → exact dedup → PII redaction
-    // → seeded global shuffle → sequence packing of the shuffled epoch.
-    // Shuffle order is engine-specific (xxhash64) → rows-only driver check;
-    // every verb is individually oracle-checked elsewhere.
-    "q50_e2e_curation" -> ((s, dir) =>
-      graft.pipeline.Pipeline.runOnDir(s,
-        """source: documents
-          |steps:
-          |  - qualitySignals: text
-          |  - filter: $token_count >= 5
-          |  - dedupExact: {id: doc_id, keys: [text]}
-          |  - redact: {text: text, as: clean}
-          |  - shuffle: {id: doc_id, seed: 13}
-          |  - pack: {id: doc_id, text: clean, seqTokens: 128, orderBy: [pos]}
-          |""".stripMargin, dir)),
-    // E2E INTEGRATION PROPERTY oracle for q50: DuckDB independently pushes
-    // token counts through the whole pipeline (filter ∘ dedup are
-    // order-insensitive here: distinct texts with ≥5 tokens; redaction is
-    // token-count-neutral on this corpus — verified zero PII matches) and
-    // derives the exact expected sequence set 0..ceil(total/128)-1. The
-    // row-set compare then enforces: right NUMBER of sequences, contiguous
-    // ids, and every non-tail sequence slot-exact at 128 — across a shuffle
-    // order DuckDB cannot see.
-    "q50b_e2e_props" -> ((s, dir) => {
-      val frags = queries("q50_e2e_curation")(s, dir)
-      val perSeq = frags.groupBy(col("seq_id")).agg(sum(col("n_tokens")).as("filled"))
-      perSeq
-        .crossJoin(broadcast(perSeq.agg(max(col("seq_id")).as("__mx"))))
-        .select(col("seq_id"),
-          (col("filled") === 128 || col("seq_id") === col("__mx")).as("ok"))
-    }),
-    // Token-budget selection: the longest prefix of the corpus in
-    // (token_count DESC, doc_id) order whose running token total fits a
-    // 10k budget — whole docs, no back-fill. Exact BIGINT oracle via a
-    // DuckDB running-sum window.
-    "q51_token_budget" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.ops.TextStats.tokenCountWs(col("text")).cast("long").as("tc"))
-      graft.ops.Packing.takeTokenBudget(d, col("tc"), 10000L,
-        Seq(col("tc").desc, col("doc_id").asc))
-        .select(col("doc_id"), col("tc"))
-    }),
-    // SUBSTRING-level dedup: corpus-repeated 8-token windows masked out of
-    // every document. Fully oracle-checked: DuckDB reconstructs the window
-    // frequency table on the window STRINGS and re-derives the masked text;
-    // the Spark side groups on xxhash64(window) — equivalent up to 64-bit
-    // hash collisions (~(distinct windows)²/2^64, immaterial at any tested
-    // scale).
-    "q52_substring_mask" -> ((s, dir) =>
-      Dedup.maskRepeatedSpans(t(s, dir, "documents"), "doc_id", "text",
-        windowTokens = 8, minRepeats = 2)
-        .select(col("doc_id"), col("text_clean"),
-          col("n_repeated_windows"), col("n_tokens_removed"))),
-    // Compressed-JSONL ingestion, oracle-checked as a roundtrip: documents
-    // → gzip .jsonl shards (df.write.json with gzip codec) → readJsonl with
-    // an EXPLICIT schema (the 100 TB path: no inference pass, parse-time
-    // projection) → rows, which must equal the parquet originals. Exercises
-    // the full reader stack — codec detection, line splitting, schema'd
-    // parse — against real corpus text (embedded quotes/newlines/unicode).
-    // CSV roundtrip with a planted type-torn shard: documents (newlines
-    // flattened — CSV stays line-splittable, the readCsv scale contract)
-    // → csv shards → schema'd read with badRecords=drop must recover
-    // EXACTLY the clean rows. The oracle is the source table with the
-    // same newline flattening.
-    "q98_csv_roundtrip" -> ((s, dir) => {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft_csv_" +
-        java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-        "_" + ProcessHandle.current().pid()
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          regexp_replace(col("text"), "[\\n\\r]", " ").as("text"))
-        .write.mode("overwrite").csv(fixture)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(fixture, "zz-torn-shard.csv"),
-        "notanumber,torn row\n".getBytes("UTF-8"))
-      graft.sources.Readers.readCsv(s, fixture,
-        schema = "doc_id BIGINT, text STRING", badRecords = "drop")
-        .select(col("doc_id"), col("text"))
-    }),
-    "q53_jsonl" -> ((s, dir) => {
-      // keyed by data dir AND this JVM's pid: two concurrent Verify runs on
-      // different checkouts of the same sfDir must not clobber each other's
-      // fixture mid-overwrite
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft_jsonl_" +
-        java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-        "_" + ProcessHandle.current().pid()
-      t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .write.mode("overwrite").option("compression", "gzip").json(fixture)
-      // plant a corrupt shard: the drop policy must recover EXACTLY the
-      // clean rows — the oracle (the source table) checks both the parse
-      // fidelity and the bad-record policy in one go
-      val corrupt = new java.util.zip.GZIPOutputStream(
-        new java.io.FileOutputStream(
-          new java.io.File(fixture, "zz-corrupt-shard.jsonl.gz")))
-      corrupt.write("{\"doc_id\": not json}\ntotal garbage\n".getBytes("UTF-8"))
-      corrupt.close()
-      graft.sources.Readers.readJsonl(s, fixture,
-        schema = "doc_id BIGINT, text STRING", badRecords = "drop")
-        .select(col("doc_id"), col("text"))
-    }),
-    // Mixed-codec JSONL ingestion: the same roundtrip oracle as q53, over a
-    // directory mixing gzip shards, ZSTD shards (how modern corpus drops
-    // actually ship — e.g. `.jsonl.zst` web-crawl dumps), and a planted
-    // corrupt zst shard. Spark's JSON WRITER has no zstd codec, so the zst
-    // shards are built by stream-compressing Spark-written plain parts with
-    // zstd-jni (already on every Spark classpath — it backs shuffle
-    // compression); the READ side resolves `.zst` through Hadoop's codec
-    // factory with zero configuration, which is the property under test.
-    "q53b_jsonl_zst" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_jsonl_zst_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(fixture); fixture.mkdirs()
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val gzTmp = new java.io.File(fixture, "_gz_tmp")
-      val plainTmp = new java.io.File(fixture, "_plain_tmp")
-      docs.filter(col("doc_id") % 2 === 0).write.mode("overwrite")
-        .option("compression", "gzip").json(gzTmp.getPath)
-      docs.filter(col("doc_id") % 2 === 1).write.mode("overwrite")
-        .json(plainTmp.getPath)
-      // driver-side shard plumbing only — file moves/recompression, never
-      // row materialization; scales with shard count, not corpus size
-      var i = 0
-      for (f <- gzTmp.listFiles if f.getName.startsWith("part-")) {
-        java.nio.file.Files.move(f.toPath,
-          new java.io.File(fixture, f"shard-gz-$i%05d.jsonl.gz").toPath)
-        i += 1
-      }
-      i = 0
-      for (f <- plainTmp.listFiles if f.getName.startsWith("part-")) {
-        val zo = new com.github.luben.zstd.ZstdOutputStream(
-          new java.io.FileOutputStream(
-            new java.io.File(fixture, f"shard-zst-$i%05d.jsonl.zst")))
-        try java.nio.file.Files.copy(f.toPath, zo) finally zo.close()
-        i += 1
-      }
-      rm(gzTmp); rm(plainTmp)
-      val corrupt = new com.github.luben.zstd.ZstdOutputStream(
-        new java.io.FileOutputStream(
-          new java.io.File(fixture, "zz-corrupt-shard.jsonl.zst")))
-      try corrupt.write("{\"doc_id\": broken}\nnot json at all\n".getBytes("UTF-8"))
-      finally corrupt.close()
-      graft.sources.Readers.readJsonl(s, fixture.getPath,
-        schema = "doc_id BIGINT, text STRING", badRecords = "drop")
-        .select(col("doc_id"), col("text"))
-    }),
-    // Streaming end-to-end under the oracle gate: the full ingestion chain
-    // readJsonlStream → watermarked exact dedup → session windows, driven
-    // over a deterministic file-fed micro-batch sequence (one shard per
-    // trigger), with the final sessions compared to a DuckDB gaps-and-
-    // islands replay of the batch semantics.
-    //
-    // Determinism by construction, not by luck:
-    //   - shards are ts-range-partitioned and processed in ts order, so no
-    //     event is ever late and the watermark never drops data;
-    //   - every event is planted TWICE with identical payload in the SAME
-    //     shard (range partitioning keys equal ts together), so the dedup
-    //     operator must remove exactly one copy — session n_events doubles
-    //     if it doesn't, and the oracle counts each event once;
-    //   - timestamps travel as epoch-micros BIGINT (JSON timestamp
-    //     formats truncate to millis — the r8 lesson generalized);
-    //   - two sentinel flush shards (+1 h, +2 h past max ts, user −1) give
-    //     append-mode emission its two-batch runway: the first advances
-    //     the watermark past every real session end, the second triggers
-    //     the emission batch. The sentinels' own session never emits and
-    //     is filtered from the sink read regardless.
-    "q56_stream_e2e" -> ((s, dir) => {
-      val fixture = q56FixtureDir(dir)
-      // bench-prepared (the q80/q99 pattern): the JSONL shards already
-      // landed for this JVM — the timed region measures the streaming
-      // dedup + sessionization, not the fixture's doubled-corpus JSON
-      // write. Sink/checkpoint are fresh per invocation either way
-      // (input shards are reusable; streaming state is not).
-      if (!preparedDirs.contains(s"q56_stream_e2e:$dir"))
-        q56WriteShards(s, dir)
-      val in = new java.io.File(fixture, "in")
-      q56WipeRunDirs(fixture)
-      val runTag = java.lang.Long.toHexString(System.nanoTime())
-      val sink = new java.io.File(fixture, s"sink_$runTag").getPath
-      val ckpt = new java.io.File(fixture, s"ckpt_$runTag").getPath
-
-      val stream = graft.sources.Readers.readJsonlStream(s, in.getPath,
-          schema = "event_id BIGINT, ts_us BIGINT, user_id BIGINT",
-          maxFilesPerTrigger = 1)
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-      val deduped = graft.ops.StreamingOps.dedupExactWithinWatermark(
-        stream, Seq("event_id", "ts_us", "user_id"), "ts", "10 minutes")
-      val sessions = graft.ops.StreamingOps.sessionize(
-        deduped, Seq("user_id"), "ts", "30 minutes", delay = null)
-      // State-partition sizing is a real scale knob, sized to STATE VOLUME
-      // not CPU count: 32 partitions × 2 stateful ops × 6 micro-batches =
-      // 384 state-store commits for a few MB of state — commit latency
-      // dominates. 8 partitions is right for this horizon; a 100 TB
-      // deployment sizes it UP with state, via the same conf. Scoped to
-      // this query's planning and restored (batch queries want 32 here).
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = sessions.writeStream.format("parquet")
-          .option("path", sink).option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-
-      s.read.parquet(sink).filter(col("user_id") >= 0).select(
-        col("user_id"),
-        unix_micros(col("session_start")).as("session_start_us"),
-        unix_micros(col("session_end")).as("session_end_us"),
-        col("n_events"),
-        unix_micros(col("first_event")).as("first_us"),
-        unix_micros(col("last_event")).as("last_us"))
-    }),
-    // Streaming MULTIMODAL e2e under the oracle gate (q56's construction
-    // one media-stack up): documents → real PNGs → tar shards landing in
-    // a watched directory (one shard per micro-batch) → streaming tar
-    // parse → real JDK decode → pHash → the generic streaming Hamming
-    // engine. The id-shifted copy plants one pixel-identical duplicate
-    // per document, hash-partitioned into a DIFFERENT shard (and so a
-    // different micro-batch) than its original — the pair must be found
-    // ACROSS batches via join state. Event time derives from doc_id
-    // (planted pairs share it exactly ⇒ always inside the horizon);
-    // stream-stream inner joins emit on match, so no flush events are
-    // needed. Oracle = the q76/q20b identity floor.
-    "q80_stream_media_e2e" -> ((s, dir) => {
-      import s.implicits._
-      val fixture = q80FixtureDir(dir)
-      // bench-prepared: the rendered tar shards already landed for this
-      // JVM — the timed region measures the streaming dedup, not the
-      // PNG-render + shard write. Sink/checkpoint are fresh per
-      // invocation either way (input shards are reusable; streaming
-      // state is not).
-      if (!preparedDirs.contains(s"q80_stream_media_e2e:$dir"))
-        q80WriteShards(s, dir)
-      val in = new java.io.File(fixture, "in")
-      // sink/checkpoint dirs are nanoTime-tagged per invocation (streaming
-      // state is never reusable); PRIOR invocations' dirs are wiped here —
-      // their frames were consumed in their own run — so repeated
-      // Verify/Bench runs in one JVM hold at most one live set instead of
-      // accumulating unbounded tmp-dir state
-      q80WipeRunDirs(fixture)
-      val runTag = java.lang.Long.toHexString(System.nanoTime())
-      val sink = new java.io.File(fixture, s"sink_$runTag").getPath
-      val ckpt = new java.io.File(fixture, s"ckpt_$runTag").getPath
-      val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dd = d0.unionByName(
-        d0.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val dec = graft.ops.JdkMediaDecoder()
-      val baseUs = 1767225600000000L // 2026-01-01, fixed
-      val sigs = graft.sources.TarShards
-        .readTarShardsStream(s, in.getPath, maxFilesPerTrigger = 1)
-        .select(col("key"), element_at(col("data"), "png").as("p"))
-        .as[(String, Array[Byte])]
-        .map { case (k, p) =>
-          val (w, h, _, l) = dec.decodeImage(p)
-          (k.toLong, graft.ops.PHash.phash64(w, h, l))
-        }
-        .toDF("id", "sig")
-        .withColumn("ts", timestamp_micros(lit(baseUs) +
-          ((col("id") % 1000000L) +
-            when(col("id") >= 1000000L, 2L).otherwise(0L)) * 60000000L))
-      val pairs = graft.ops.StreamingOps.hammingPairsWithinWatermark(
-        sigs, "id", "sig", "ts", "10 minutes", maxHamming = 6)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = pairs.writeStream.format("parquet")
-          .option("path", sink).option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-
-      val found = s.read.parquet(sink)
-        .select(col("id_a"), col("id_b")).distinct()
-        .withColumn("__f", lit(1))
-      // guaranteed set = text-identical pairs WELL inside the horizon
-      // (|Δ event time| ≤ 8 min < the 10-min horizon — planted pairs sit
-      // at Δ = 2): the corpus contains organic cross-doc duplicate texts
-      // at far-apart ids, and the watermark horizon is the documented
-      // dedup boundary — pairs outside it are out of contract, exactly
-      // as in production
-      def evOf(c: org.apache.spark.sql.Column) =
-        c % 1000000L + when(c >= 1000000L, 2L).otherwise(0L)
-      dd.as("x").join(dd.as("y"),
-        col("x.text") === col("y.text") && col("x.doc_id") < col("y.doc_id") &&
-          abs(evOf(col("x.doc_id")) - evOf(col("y.doc_id"))) <= 8)
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // Mojibake repair, roundtrip-oracled over the real corpus: the corpus
-    // text (pure ASCII in the testdata) gets a unicode-rich suffix covering
-    // 2-byte (é), 3-byte punctuation/CJK (— № 中 ’), and 4-byte
-    // (😀) UTF-8; the corruption is the engine's own latin-1 misdecode
-    // (decode(encode(x,'UTF-8'),'ISO-8859-1') — byte-exact, total over all
-    // bytes), and fixEncoding must invert it EXACTLY on every row. The
-    // oracle never sees the corruption: it just emits the clean text.
-    "q55_fix_encoding" -> ((s, dir) => {
-      val clean = concat(col("text"), lit(SparkEntry.MojibakeSuffix))
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.TextStats.fixEncoding(
-          decode(encode(clean, "UTF-8"), "ISO-8859-1")).as("fixed"))
-    }),
-    // Double mojibake: the misdecode applied twice (the classic "fixed" a
-    // mojibake file by re-encoding it wrong again). Same oracle — the
-    // default 3-pass repair must peel both layers.
-    "q55b_fix_encoding_double" -> ((s, dir) => {
-      def garble(c: org.apache.spark.sql.Column) =
-        decode(encode(c, "UTF-8"), "ISO-8859-1")
-      val clean = concat(col("text"), lit(SparkEntry.MojibakeSuffix))
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.TextStats.fixEncoding(garble(garble(clean))).as("fixed"))
-    }),
-    // cp1252-flavored mojibake (the Windows-specials path latin-1
-    // corruption can't generate: â€™ Ã© â‚¬ …) plus the must-NOT-touch
-    // cases — clean unicode, pure ASCII, genuine latin-1 bytes — as planted
-    // fixtures with hand-derived expected outputs in a VALUES oracle
-    // (derivations pinned in FixEncodingSpec).
-    "q55c_fix_encoding_cp1252" -> ((s, dir) => {
-      import s.implicits._
-      SparkEntry.MojibakeCases.map { case (tid, garbled, _) => (tid, garbled) }
-        .toDF("tid", "garbled")
-        .select(col("tid"),
-          graft.ops.TextStats.fixEncoding(col("garbled")).as("fixed"))
-    }),
-    // HTML stripping under a ROUND-TRIP oracle: every document is wrapped
-    // in a fixed HTML shell (head/style/script/comment/entities/tags) and
-    // stripHtml must recover exactly `Header & more <text> Tail <quoted>
-    // end` — the oracle rebuilds that from the RAW text column, so the
-    // entire strip chain (block removal, tag removal, entity decode order,
-    // whitespace collapse) is verified without DuckDB replaying any regex.
-    // (Corpus text is <>&-free and single-spaced — checked — so the
-    // expected string is plain concatenation.)
-    "q61_strip_html" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.WebText.stripHtml(concat(
-          lit("<html><head><title>T</title><style>p { color: red; }" +
-            "</style></head><body><h1>Header &amp; more</h1><!-- note -->" +
-            "<p class=\"a\">"),
-          col("text"),
-          lit("</p><br/><script type=\"text/javascript\">if (1<2) { x=1; }" +
-            "</script><div>Tail &lt;quoted&gt;&nbsp;end It&#8217;s " +
-            "&#x2019;q&#x2019; &#169; &amp;#8217; &#xD800; &#999999999;" +
-            "</div></body></html>")
-        )).as("clean"))),
-    // URL extraction + host + registrable domain (eTLD+1) over planted
-    // URLs whose shape is a pure function of doc_id — the oracle rebuilds
-    // url/host/domain from doc_id directly, so extraction boundaries, the
-    // host regex, and the public-suffix logic (two- vs three-label) are
-    // all independently verified.
-    "q62_url_domains" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("See https://Blog.Example"),
-          (col("doc_id") % 7).cast("string"),
-          when(col("doc_id") % 3 === 0, lit(".co.uk/path?q=1 and more"))
-            .when(col("doc_id") % 3 === 1, lit(".com/index.html text"))
-            .otherwise(lit(".com.au:8080/x#frag tail"))).as("body"))
-      val url = element_at(graft.ops.WebText.extractUrls(col("body")), 1)
-      d.select(col("doc_id"), url.as("url"),
-          graft.ops.WebText.urlHost(url).as("host"))
-        .withColumn("domain", graft.ops.WebText.registrableDomain(col("host")))
-    }),
-    // Composition gate: registrable domain → per-domain quota (the
-    // standard crawl-corpus site cap). Planted URLs are a pure function of
-    // doc_id; the oracle replays the domain construction and the window
-    // directly. One hash shuffle on the domain key, rank streamed per
-    // partition — the same plan at any scale.
-    "q64_domain_quota" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://s"), (col("doc_id") % 5).cast("string"),
-          lit(".example"), (col("doc_id") % 17).cast("string"),
-          when(col("doc_id") % 2 === 0, lit(".co.uk/p"))
-            .otherwise(lit(".com/p"))).as("url"))
-      val withDom = d.withColumn("domain",
-        graft.ops.WebText.registrableDomain(
-          graft.ops.WebText.urlHost(col("url"))))
-      graft.ops.Corpus.perKeyQuota(withDom, Seq("domain"), Seq(col("doc_id")), 3)
-        .select(col("doc_id"), col("domain"))
-    }),
-    // Extended Gopher repetition/format rules (beyond q26's basics):
-    // duplicate line/paragraph member+char fractions, duplicate-5-gram
-    // token coverage (fused native kernel), bullet/ellipsis line shares,
-    // alpha-word share, distinct-stopword hits, and the full composite
-    // keep. Every fraction is an exact integer-over-integer division, so
-    // the DuckDB oracle replays values verbatim (unnest + count windows
-    // for the group stats, position coverage for the n-gram rule). All
-    // map-only — one scan, zero shuffle at any corpus size.
-    // The synthetic corpus has no natural repetition (flat prose, no
-    // newlines), so the gate plants it deterministically from doc_id —
-    // the same construction the oracle replays: %4==0 duplicated lines +
-    // paragraphs, %4==1 repeated leading n-grams, %4==2 bullet/ellipsis
-    // lines, %4==3 untouched.
-    "q65_gopher_rep" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val planted = d.withColumn("text2",
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"), lit("\n"), substring(col("text"), 1, 40),
-            lit("\n"), substring(col("text"), 1, 40), lit("\n\n"),
-            substring(col("text"), 1, 25), lit("\n\n"), substring(col("text"), 1, 25)))
-        .when(col("doc_id") % 4 === 1,
-          concat(col("text"), lit(" "), substring(col("text"), 1, 60)))
-        .when(col("doc_id") % 4 === 2,
-          concat(lit("- alpha\n- beta\nmore...\n"), col("text")))
-        .otherwise(col("text")))
-      graft.ops.Corpus.withRepetitionSignals(planted, "text2")
-        .select(col("doc_id"),
-          col("token_count").cast("long").as("token_count"),
-          round(col("dup_line_frac"), 6).as("dup_line_frac"),
-          round(col("dup_line_char_frac"), 6).as("dup_line_char_frac"),
-          round(col("dup_para_frac"), 6).as("dup_para_frac"),
-          round(col("dup_para_char_frac"), 6).as("dup_para_char_frac"),
-          round(col("dup_ngram_cov"), 6).as("dup_ngram_cov"),
-          round(col("bullet_line_frac"), 6).as("bullet_frac"),
-          round(col("ellipsis_line_frac"), 6).as("ellipsis_frac"),
-          round(col("alpha_word_frac"), 6).as("alpha_frac"),
-          col("stopword_hits").cast("long").as("stopword_hits"),
-          col("keep_full"))
-    }),
-    // Unicode normalization against hand-written expected forms (written
-    // from the Unicode composition/compatibility tables, independent of
-    // the JVM Normalizer under test): NFC composes combining sequences,
-    // NFKC additionally folds ligatures/fullwidth/fractions.
-    "q63_unicode" -> ((s, dir) => {
-      import s.implicits._
-      SparkEntry.UnicodeCases.map { case (tid, raw, _, _) => (tid, raw) }
-        .toDF("tid", "raw")
-        .select(col("tid"),
-          graft.ops.WebText.normalizeUnicode(col("raw"), "NFC").as("nfc"),
-          graft.ops.WebText.normalizeUnicode(col("raw"), "NFKC").as("nfkc"))
-    }),
-    // Global vocabulary top-k — the canonical corpus word count.
-    "q30_vocab" -> ((s, dir) =>
-      graft.ops.Corpus.topTokens(t(s, dir, "documents"), "text", 20)
-        .select(col("token"), col("n"))),
-    // Sketch-exact vocabulary: Misra–Gries candidate generation + exact
-    // recount of candidates only, strict certificate (k-th count > err
-    // bound) — so green means the sketch route PROVABLY returned the exact
-    // global top-20, byte-identical to q30's full-shuffle answer, while the
-    // scale plan exchanges numPartitions bounded sketches instead of every
-    // distinct token.
-    "q59_vocab_sketch" -> ((s, dir) =>
-      graft.ops.Corpus.topTokensSketch(
-        t(s, dir, "documents"), "text", 20, budget = 4096, strict = true)
-        .select(col("token"), col("n"))),
-    // Engine-portable approximate distinct count (KMV sketch): per-source
-    // distinct-token estimates whose VALUE the oracle replays exactly —
-    // the md5-prefix ranks are a pure function of the data, so DuckDB
-    // derives the same k-th smallest rank and the same (k−1)/v_k estimate
-    // (contrast approx_count_distinct, which could only be range-checked).
-    // Plans as ≤k-long partial aggregates per partition: no
-    // per-distinct-token exchange at any corpus size.
-    "q66_kmv_distinct" -> ((s, dir) => {
-      val tok = t(s, dir, "documents").select(col("source"),
-        explode(TextStats.tokens(col("text"))).as("tok"))
-      graft.ops.Corpus.approxDistinct(tok, Seq("source"), "tok", k = 256, seed = 7L)
-        .select(col("source"), round(col("estimate"), 4).as("est_distinct"),
-          col("exact"))
-    }),
-    // Compression-ratio quality signal on planted fixtures: repetitive
-    // text must flag low-entropy, hex/prose/empty must not (threshold
-    // 0.3, fixtures engineered far from it on both sides).
-    "q75_compress_ratio" -> ((s, dir) => {
-      import s.implicits._
-      SparkEntry.CompressionCases.map { case (tid, text, _) => (tid, text) }
-        .toDF("tid", "text")
-        .select(col("tid"),
-          (TextStats.compressionRatio(col("text")) < 0.3).as("low_entropy"))
-    }),
-    // URL canonicalization against hand-derived expectations: fragment,
-    // scheme/authority case, default ports, tracking params, root slash
-    // (WebText.canonicalizeUrl — the web-corpus dedup/quota key).
-    "q74_url_canon" -> ((s, dir) => {
-      import s.implicits._
-      SparkEntry.UrlCanonCases.map { case (tid, raw, _) => (tid, raw) }
-        .toDF("tid", "raw")
-        .select(col("tid"),
-          graft.ops.WebText.canonicalizeUrl(col("raw")).as("canon"))
-    }),
-    // One-pass corpus data card: doc/char/token totals, exact-dup rate
-    // (md5 digests on the exchange, never text), decimal-exact means,
-    // exact median. lang_top stays out of the gate (library-private
-    // classifier); everything else hash-compares against the SQL replay.
-    "q73_corpus_report" -> ((s, dir) =>
-      graft.ops.Corpus.report(t(s, dir, "documents"), "text")
-        .drop("lang_top")),
-    // Per-slice data card — the per-source table a mixture release
-    // publishes; same formulas, grouped.
-    "q73b_report_by_source" -> ((s, dir) =>
-      graft.ops.Corpus.reportBy(t(s, dir, "documents"), "text", Seq("source"))
-        .drop("lang_top")),
-    // Distributed logistic-regression training (learned quality filter):
-    // two full-batch iterations, each ONE aggregate reducing the corpus
-    // to numFeatures+2 decimal sums. The determinism contract (sigmoids
-    // rounded to 6, gradient terms to 9, exact decimal sums, left-to-
-    // right dot products) makes the learned WEIGHTS bit-stable across
-    // engines — the oracle replays the full unrolled training in SQL.
-    "q72_logreg_train" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents").select(
-        (col("n_chars") / 1000.0).as("x1"),
-        (size(TextStats.tokens(col("text"))) / 100.0).as("x2"),
-        ((col("doc_id") % 10) / 10.0).as("x3"),
-        when(col("n_chars") >= 300, 1.0).otherwise(0.0).as("y"))
-      val w = graft.ops.LogReg.train(d, Seq("x1", "x2", "x3"), "y",
-        iters = 2, lr = 0.5)
-      Seq(("x1", w(0)), ("x2", w(1)), ("x3", w(2)), ("bias", w(3)))
-        .toDF("feature", "weight")
-    }),
-    // Corpus snapshot diff: two derived snapshots of the documents table
-    // (old drops %7 ids; new drops %11 ids and rewrites %5 texts), then
-    // the content-hash full-outer diff — added/removed/changed/unchanged
-    // per id. (id, md5) is all the exchange carries; the oracle replays
-    // the identical join and CASE.
-    "q71_snapshot_diff" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val old = d.filter(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"), col("text"))
-      val neu = d.filter(col("doc_id") % 11 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).as("text"))
-      graft.ops.SnapshotDiff.diff(old, neu, "doc_id", Seq("text"))
-    }),
-    // Bloom-filter cross-corpus membership: build a filter of the
-    // reference slice's texts (distributed build, OR-merged partials),
-    // probe every document map-side. The gate checks the NO-FALSE-
-    // NEGATIVE direction exactly — every true member must probe seen, so
-    // the output over the reference slice is the slice itself (any build/
-    // serialize/probe defect loses members and diffs). The false-positive
-    // rate is probabilistic by design and is pinned in BloomSpec instead.
-    "q70_bloom_seen" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val reference = docs.filter(col("doc_id") % 5 === 0)
-      val bloom = graft.ops.Decontam.buildBloom(
-        reference, "text", expectedItems = 1000L)
-      graft.ops.Decontam.markSeenBloom(docs, "text", bloom)
-        .filter(col("doc_id") % 5 === 0 && col("seen"))
-        .select(col("doc_id"))
-    }),
-    // WebDataset-style tar-shard roundtrip: documents → multi-part tar
-    // shards (txt + src entries per sample, shards rolled per task) →
-    // sample rows → original columns. The oracle is the source table, so
-    // GREEN certifies writer framing, reader parsing, consecutive-key
-    // grouping, and byte fidelity in one gate (q53's pattern for jsonl).
-    "q68_tar_roundtrip" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_tar_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(fixture); fixture.mkdirs()
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-      graft.sources.TarShards.writeTarShards(
-        docs.repartition(4), fixture.getAbsolutePath,
-        keyCol = "doc_id",
-        parts = Seq("txt" -> col("text"), "src" -> col("source")),
-        maxEntriesPerShard = 100)
-      graft.sources.TarShards.readTarShards(s, fixture.getAbsolutePath)
-        .select(col("key").cast("long").as("doc_id"),
-          element_at(col("data"), "txt").cast("string").as("text"),
-          element_at(col("data"), "src").cast("string").as("source"))
-    }),
-    // BPE tokenizer TRAINING, corpus pass: the distributed pre-token
-    // frequency table (the trainer's only corpus-scale stage — partial
-    // hash aggregation, one row per distinct word per partition on the
-    // exchange). Whitespace is collapsed first so the pre-tokenizer's
-    // trailing-run branch (a lookahead RE2 can't express) is provably
-    // dead and DuckDB replays the remaining alternation verbatim.
-    "q67_bpe_wordcounts" -> ((s, dir) => {
-      val norm = t(s, dir, "documents").select(
-        trim(regexp_replace(col("text"), "\\s+", " ")).as("t"))
-      graft.ops.BpeTrain.wordCounts(norm, "t")
-        .orderBy(col("n").desc, col("word").asc).limit(30)
-    }),
-    // BPE training, selection gate: with numMerges = 1 every symbol is a
-    // raw byte, so the winning merge (max weighted pair count, ties to the
-    // smallest byte pair) and its merges.txt rendering (space → U+0120)
-    // replay exactly in SQL. Multi-merge training is spec-pinned on a
-    // hand-derived fixture (BpeTrainSpec); the full loop is driver-side
-    // over the bounded word table, like every production trainer.
-    "q67b_bpe_first_merge" -> ((s, dir) => {
-      import s.implicits._
-      val norm = t(s, dir, "documents").select(
-        trim(regexp_replace(col("text"), "\\s+", " ")).as("t"))
-      val (_, lines) =
-        graft.ops.BpeTrain.trainFromCorpus(norm, "t", numMerges = 1)
-      lines.toDF("merge")
-    }),
-    // Text normalization + normalized-exact dedup: case/punctuation/
-    // whitespace variants collapse to one hash key.
-    "q37_normalize" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .withColumn("norm", graft.ops.Corpus.normalizeText(col("text")))
-      Dedup.markExactDuplicates(d, "doc_id", Seq("norm"))
-        .select(col("doc_id"), col("norm"), col("is_dup"))
-    }),
-    // TF-IDF per (doc, token) — raw tf, un-smoothed idf; ln on both engines
-    // is IEEE double, rounded to 6 to absorb last-ulp libm differences.
-    "q36_tfidf" -> ((s, dir) =>
-      graft.ops.Corpus.tfIdf(t(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"), col("token"), col("tf"),
-          round(col("tf_idf"), 6).as("tf_idf"))),
-    // Batched retrieval: exact top-10 per query for a 3-query broadcast
-    // table — one windowed-rank shuffle of (qid, id, score) triples.
-    "q33_ann_batch" -> ((s, dir) => {
-      import s.implicits._
-      val queries = AnnQueryVecs.toDF("qid", "qvec")
-      Similarity.topKPerQuery(
-        t(s, dir, "embeddings"), "vec_id", "embedding", queries, "qid", "qvec", 10)
-        .select(col("qid"), col("vec_id"), round(col("score"), 6).as("score"))
-    }),
-    // IVF with every cell probed IS exact top-k (same oracle as q16) — this
-    // verifies the centroid training + assignment + probe machinery
-    // end-to-end; the nProbe<k scale path is covered in OpsSpec.
-    "q31_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val cents = Similarity.trainCentroids(e, "embedding", k = 8, iters = 3)
-      Similarity.ivfTopK(e, "vec_id", "embedding", cents, AnnQueryVec, 20, nProbe = 8)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-    }),
-    // SemDeDup semantic dedup: fixed literal centroids pin the k-means
-    // assignment (squared-L2 argmin, tie to smaller index), in-cell cosine
-    // pairs, dominance prune (drop i iff an earlier-id j in the same cell
-    // has cosine ≥ t). The oracle replays assignment + EXISTS end-to-end —
-    // a full value-level gate on the whole operator, which the dominance
-    // rule (unlike connected components) makes SQL-expressible.
-    "q69_semantic_dedup" -> ((s, dir) =>
-      graft.ops.Similarity.semanticDedup(
-        t(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.40, centroids = SemCentroids)
-        .select(col("vec_id"))),
-    // IVFADC (product quantization): codes-ranked candidates, exact
-    // re-score. At full probe + full refine nothing is pruned and the
-    // re-score is exact cosine with the same (score desc, id) tie-break as
-    // bruteForceTopK — so this provably equals q16's brute-force answer and
-    // shares its DuckDB oracle; the plumbing under gate is train → encode →
-    // ADC rank → refine join. Pruned-setting recall is measured in
-    // RECALL.json and floor-pinned in PqSpec.
-    "q60_pq_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val cents = Similarity.trainCentroids(e, "embedding", k = 8, iters = 3)
-      val cb = graft.ops.Pq.train(e, "embedding", m = 8, ksub = 64, iters = 5)
-      graft.ops.Pq.ivfTopKPqAdc(e, "vec_id", "embedding", cents, cb,
-          AnnQueryVec, 20, nProbe = 8, refine = Int.MaxValue / 20)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-    }),
-    // IVF-bucketed cosine PAIRS (the low-threshold near-dup scale path)
-    // under the q19c-style recall-floor construction: identical vectors get
-    // identical probe sets (deterministic kernel tie-break), so every
-    // identical-vector pair shares a cell at any (cells, nProbe) and scores
-    // cosine 1.0 ≥ threshold — guaranteed reported with the skew cap
-    // lifted. Zero-norm vectors excluded on both sides (cosine(0,0) = 0).
-    "q31b_ivf_pairs_props" -> ((s, dir) => {
-      val e0 = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .filter(aggregate(col("embedding"), lit(0.0),
-          (a, x) => a + x.cast("double") * x.cast("double")) > 0)
-      val ee = e0.unionByName(
-        e0.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-      val cents = Similarity.trainCentroids(ee, "embedding", k = 8, iters = 3)
-      val found = Similarity.cosineNearDuplicatePairsIvf(ee, "vec_id", "embedding",
-        threshold = 0.35, centroids = cents, nProbe = 2,
-        maxBucketSize = Int.MaxValue)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      ee.as("x").join(ee.as("y"),
-        col("x.embedding") === col("y.embedding") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // q31b's recall-floor property over the QUANTIZED IVF path: int8
-    // payloads ride the bucket exchange, candidates filter at
-    // threshold − margin on the scale-free quantized cosine, survivors
-    // re-score exactly from the float column. Identical vectors quantize
-    // identically (cos_q = 1), so every planted duplicate pair must
-    // survive both the approximate filter and the exact re-score.
-    "q31c_ivf_quant_props" -> ((s, dir) => {
-      val e0 = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .filter(aggregate(col("embedding"), lit(0.0),
-          (a, x) => a + x.cast("double") * x.cast("double")) > 0)
-      val ee = e0.unionByName(
-        e0.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-      val cents = Similarity.trainCentroids(ee, "embedding", k = 8, iters = 3)
-      val found = Similarity.cosineNearDuplicatePairsIvfQuantized(
-        ee, "vec_id", "embedding",
-        threshold = 0.35, centroids = cents, nProbe = 2,
-        maxBucketSize = Int.MaxValue)
-        .select(col("id_a"), col("id_b"), lit(1).as("__f"))
-      ee.as("x").join(ee.as("y"),
-        col("x.embedding") === col("y.embedding") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-        .join(found, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("__f").isNotNull.as("ok"))
-    }),
-    // Schema'd JSON property extraction — from_json (typed struct) and
-    // get_json_object (path) against DuckDB's json_extract.
-    "q32_json" -> ((s, dir) => {
-      graft.sources.Readers.readEvents(s, dir).select(
-        col("event_id"),
-        from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.IntegerType)))).getField("k").as("k_json"),
-        get_json_object(col("props"), "$.k").cast("int").as("k_path"))
-    }),
-    // Config-driven relational pipeline (graft.pipeline): join + groupBy +
-    // aggregation verbs around the dftly expression core. Aggregates chosen
-    // to be FP-exact (integral sums, count, max) so the oracle hash-matches.
-    // Pipeline window verb under the oracle gate: latest order per customer
-    // with the previous price alongside (rank + lag over one window spec).
-    "q34_pipeline_window" -> ((s, dir) =>
-      graft.pipeline.Pipeline.runOnDir(s,
-        """source: orders
-          |steps:
-          |  - window:
-          |      partitionBy: [o_custkey]
-          |      orderBy: [-o_orderdate, o_orderkey]
-          |      cols:
-          |        rk: row_number
-          |        prev_price: {lag: $o_totalprice}
-          |  - filter: $rk == 1
-          |  - select:
-          |      o_custkey: $o_custkey
-          |      o_orderkey: $o_orderkey
-          |      prev_price: $prev_price ?? -1.0
-          |""".stripMargin, dir)),
-    // Salted skew join under the oracle gate: the salt must not change the
-    // join result — the oracle is the PLAIN join.
-    "q35_salted_join" -> ((s, dir) => {
-      val lineitem = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"))
-      val orders = t(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"))
-      graft.ops.SkewJoin.saltedEquiJoin(lineitem, orders, "l_orderkey", "o_orderkey", factor = 8)
-        .select(col("l_orderkey"), col("l_linenumber"), col("o_orderstatus"))
-    }),
-    "q22_pipeline" -> ((s, dir) =>
-      graft.pipeline.Pipeline.runOnDir(s,
-        """source: lineitem
-          |steps:
-          |  - join: {table: orders, on: {l_orderkey: o_orderkey}, how: inner}
-          |  - filter: $o_orderstatus == 'F'
-          |  - groupBy: [l_returnflag]
-          |    agg:
-          |      total_qty: {sum: $l_quantity}
-          |      n: {count: "*"}
-          |      max_price: {max: $l_extendedprice}
-          |""".stripMargin, dir)),
-    // Bigram-LM perplexity quality scoring (ops/LangModel.scala), corpus
-    // self-scored: Laplace-smoothed bigram probabilities, per-bigram log
-    // probs rounded to 6 then summed EXACTLY as decimal(38,12) — the whole
-    // training + scoring computation replays in DuckDB, including V and
-    // the context/bigram count tables.
-    "q58_perplexity" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ops.LangModel.scorePerplexity(d, "doc_id", "text", d, "text")
-    }),
-    // Interpolated Kneser–Ney perplexity (the KenLM-class smoothing real
-    // CCNet-style filtering uses): trained on the EVEN documents, scored
-    // on all — odd documents hit unseen contexts/words, so the backoff
-    // AND the floored continuation distribution are both exercised and
-    // replayed. Full count + probability arithmetic in the oracle.
-    "q90_perplexity_kn" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ops.LangModel.scorePerplexityKneserNey(
-        d, "doc_id", "text", d.filter(col("doc_id") % 2 === 0), "text")
-    }),
-    // Deterministic content-keyed sampling (ops/Sampling.scala): unlike
-    // df.sample (partition-order RNG) the md5-rank decision is a pure row
-    // property, so the EXACT selected row set replays in DuckDB — the
-    // oracle compares rows, not statistics (contrast q28's tolerance gate).
-    // Map-only: zero shuffle at any scale.
-    "q57_sample_det" -> ((s, dir) =>
-      graft.ops.Sampling.deterministicSample(
-        t(s, dir, "documents"), "doc_id", fraction = 0.25, seed = 7L)
-        .select(col("doc_id"), col("source"), col("n_chars"))),
-    // Exact k-per-stratum sample via the salted two-phase window; the
-    // oracle replays the full ranking in one window (small data) and must
-    // produce the identical row set the salted plan does.
-    "q57b_stratified" -> ((s, dir) =>
-      graft.ops.Sampling.topKPerStratum(
-        t(s, dir, "documents"), Seq("source"), 10, "doc_id", seed = 7L)
-        .select(col("source"), col("doc_id"))),
-    // Exact-count data mixture: largest-remainder allocation of a 200-row
-    // budget at weights .5/.3/.2 over three disjoint pseudo-sources; the
-    // oracle re-derives each source's smallest-rank rows with the same
-    // embedded allocation constants.
-    "q57c_mix" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val srcs = Seq(
-        "web" -> d.filter(col("doc_id") % 3 === 0),
-        "book" -> d.filter(col("doc_id") % 3 === 1),
-        "code" -> d.filter(col("doc_id") % 3 === 2))
-      graft.ops.Sampling.mixCorpora(
-        srcs, Seq("web" -> 0.5, "book" -> 0.3, "code" -> 0.2),
-        totalRows = 200, keyCol = "doc_id", seed = 7L)
-        .select(col("mix_source"), col("doc_id"))
-    }),
-    // Fraction-mode mixture — the 100 TB path: map-only Bernoulli per
-    // source (no windows, no counts), source name folded into the rank key
-    // so overlapping id spaces stay decorrelated.
-    "q57d_mix_frac" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val srcs = Seq(
-        "even" -> d.filter(col("doc_id") % 2 === 0),
-        "odd" -> d.filter(col("doc_id") % 2 === 1))
-      graft.ops.Sampling.mixCorporaByFraction(
-        srcs, Seq("even" -> 0.3, "odd" -> 0.6), keyCol = "doc_id", seed = 11L)
-        .select(col("mix_source"), col("doc_id"))
-    }),
-    // Host-level link graph + PageRank (LinkGraph): 300 synthetic pages on
-    // hosts h0..h29 link by residue formulas to hosts h0..h39 (h30..h39
-    // receive links but host no pages — the dangling class), exercising
-    // double-quoted, single-quoted and protocol-relative hrefs; mailto /
-    // fragment / relative decoys must NOT produce cross-host edges (the
-    // relative link resolves to the page's own host and drops as a
-    // self-loop). Three exact power iterations with dangling-mass
-    // redistribution; the oracle re-derives the edge set from the residue
-    // arithmetic and unrolls the same three iterations as CTEs (damping
-    // factor written as 0.85::DOUBLE so both engines run the identical
-    // IEEE recurrence).
-    "q100_linkgraph_pagerank" -> ((s, dir) => {
-      val pages = s.range(0, 300).select(
-        concat(lit("https://h"), (col("id") % 30).cast("string"),
-          lit(".test/page/"), col("id").cast("string")).as("url"),
-        concat(
-          lit("<html><body><a href=\"http://h"),
-          ((col("id") * 3 + 1) % 40).cast("string"),
-          lit(".test/p\">x</a> <A HREF='https://h"),
-          ((col("id") * 7 + 2) % 40).cast("string"),
-          lit(".test/q?z'>y</A> <a href=\"//h"),
-          ((col("id") * 11 + 5) % 40).cast("string"),
-          lit(".test/r\">z</a> <a href=\"mailto:a@b.test\">m</a>" +
-            " <a href=\"/local\">l</a> <a href=\"#top\">t</a>" +
-            "</body></html>")).as("html"))
-      graft.ops.LinkGraph.rankHosts(pages, "url", "html", iterations = 3)
-        .select(col("host"), round(col("rank"), 6).as("rank"))
-    }),
-    // Domain-level rank (LinkGraph.pageRank + domainRank): hosts
-    // hK.d(K%4).co.uk — four registrable domains under a PSL two-level
-    // suffix — ranked 3 damped iterations, then the stationary mass
-    // aggregated per domain. The oracle unrolls the same recurrence (the
-    // q100 CTE pattern) and replays the domain rollup as a GROUP BY on
-    // the host-string suffix.
-    "q100d_domain_rank" -> ((s, dir) => {
-      val edges = s.range(0, 300).select(
-        concat(lit("h"), (col("id") % 30).cast("string"),
-          lit(".d"), ((col("id") % 30) % 4).cast("string"),
-          lit(".co.uk")).as("src"),
-        concat(lit("h"), ((col("id") * 3 + 1) % 40).cast("string"),
-          lit(".d"), (((col("id") * 3 + 1) % 40) % 4).cast("string"),
-          lit(".co.uk")).as("dst"))
-        .where(col("src") =!= col("dst"))
-      graft.ops.LinkGraph.domainRank(
-          graft.ops.LinkGraph.pageRank(edges, iterations = 3))
-        .select(col("domain"), round(col("rank"), 6).as("rank"))
-    }),
-    // <base href> edge attribution (LinkGraph.baseHost/hostEdges): pages
-    // in three classes — host-changing absolute base (relative AND rooted
-    // links must attribute to the base host), rooted base (host unchanged
-    // → relative links are self-loops and drop), and no base — plus a
-    // data-href decoy the extractor must NOT read as a link. The oracle
-    // re-derives the distinct edge set per class from the residue
-    // arithmetic.
-    "q100c_base_href" -> ((s, dir) => {
-      val pages = s.range(0, 240).select(
-        concat(lit("https://h"), (col("id") % 20).cast("string"),
-          lit(".test/p/"), col("id").cast("string")).as("url"),
-        concat(
-          when(col("id") % 3 === 0,
-            concat(lit("<base href=\"https://b"),
-              (col("id") % 7).cast("string"), lit(".test/dir/\">")))
-            .when(col("id") % 3 === 1, lit("<base href=\"/subroot/\">"))
-            .otherwise(lit("")),
-          lit("<a href=\"r/"), col("id").cast("string"), lit("\">rel</a>"),
-          lit("<a href=\"/x\">rooted</a>"),
-          lit("<a href=\"http://h"), ((col("id") * 3 + 1) % 25).cast("string"),
-          lit(".test/p\">abs</a>"),
-          lit("<a data-href=\"http://decoy"), (col("id") % 9).cast("string"),
-          lit(".test/d\">decoy</a>")).as("html"))
-      graft.ops.LinkGraph.hostEdges(pages, "url", "html")
-    }),
-    // Anchor-text corpus (LinkGraph.anchorTexts): per-occurrence
-    // (src, dst, anchor) triples for CROSS-host links only; inner markup
-    // stripped and whitespace collapsed in the anchor. The fixture plants
-    // a formulaic anchor (with a <b> tag the extractor must strip), a
-    // relative nav link and a same-host absolute link (both must drop);
-    // the oracle re-derives every surviving triple, duplicates included
-    // (i and i+100 produce identical rows — occurrence semantics).
-    "q100b_anchor_texts" -> ((s, dir) => {
-      val pages = s.range(0, 200).select(
-        concat(lit("https://h"), (col("id") % 20).cast("string"),
-          lit(".test/p/"), col("id").cast("string")).as("url"),
-        concat(
-          lit("<html><body><a href=\"http://h"),
-          ((col("id") * 3 + 1) % 25).cast("string"),
-          lit(".test/x\">to <b>h"),
-          ((col("id") * 3 + 1) % 25).cast("string"),
-          lit("</b> site</a><a href='/local'>Home</a>" +
-            "<a href=\"https://h"),
-          (col("id") % 20).cast("string"),
-          lit(".test/self\">self</a></body></html>")).as("html"))
-      graft.ops.LinkGraph.anchorTexts(pages, "url", "html")
-    }),
-    // CDXJ index → byte-range fetch plan (sources/Cdx.scala): 1000
-    // formulaic captures over 7 WARC files are rendered as REAL cdxj
-    // lines (plus torn lines every 97th — they must parse to null payload
-    // and drop), written to disk, re-read through the parser, filtered to
-    // status 200, and coalesced into ranged GETs with a 150-byte gap
-    // tolerance. The oracle re-derives the surviving captures from the
-    // residue arithmetic and replays the island windowing (running-max
-    // previous end, not lag — containment-safe) in DuckDB.
-    "q102_cdxj_plan" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_cdxj_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val idx = new java.io.File(fixture, "idx").getPath
-      val lines = s.range(0, 1000).select(
-        when(col("id") % 97 === 0, lit("torn line without json payload"))
-          .otherwise(concat(
-            lit("test)/p/"), col("id").cast("string"),
-            lit(" 20240101000000 {\"url\":\"https://t/p\",\"status\":\""),
-            when(col("id") % 5 === 0, lit("404")).otherwise(lit("200")),
-            lit("\",\"offset\":\""),
-            (floor(col("id") / 7) * 1000).cast("long").cast("string"),
-            lit("\",\"length\":\""),
-            (lit(800) + (col("id") % 3) * 100).cast("string"),
-            lit("\",\"filename\":\"warc-"), (col("id") % 7).cast("string"),
-            lit(".warc.gz\"}"))).as("value"))
-      lines.coalesce(1).write.mode("overwrite").text(idx)
-      val caps = graft.sources.Cdx.readCdxj(s, idx)
-        .filter(col("status") === 200)
-      graft.sources.Cdx.fetchPlan(caps, gapBytes = 150L)
-    }),
-    // The full CDX selective-access loop under one oracle (q103): write a
-    // REAL .warc.gz archive with its CDXJ sidecar index (member offsets
-    // measured by the writer), read the index back, keep only host-class
-    // s1's captures, coalesce them into byte ranges at gap 0 (so no
-    // interstitial record can ride along), decode ONLY those ranges, and
-    // emit the records' uri/body/status. The oracle re-derives the exact
-    // record set and payload text from the residue arithmetic — any wrong
-    // offset, length or dictionary handling breaks the gzip decode or the
-    // record set, and the gate goes red.
-    "q103_cdx_ranged_fetch" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_cdxwarc_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "arc").getPath
-      val src = s.range(0, 400).select(
-        concat(lit("https://s"), (col("id") % 5).cast("string"),
-          lit(".test/d/"), col("id").cast("string")).as("uri"),
-        concat(expr("repeat('x', 100 + CAST(id % 7 AS INT) * 10)"),
-          col("id").cast("string")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(3), out, "uri", "body",
-        overwrite = true, index = true, maxRecordsPerShard = 60)
-      val idx = graft.sources.Cdx.readCdxj(s, out, glob = Some("*.cdxj"))
-        .filter(col("surt_key").startsWith("test,s1)"))
-      val plan = graft.sources.Cdx.fetchPlan(idx, gapBytes = 0L)
-      graft.sources.Warc.readWarcRanges(s, out, plan)
-        .select(col("target_uri"),
-          col("payload").cast("string").as("body"),
-          col("http_status"))
-    }),
-    // WARC revisit records (Warc.writeWarcRevisits / resolveRevisits —
-    // the CommonCrawl multi-crawl dedup convention): crawl1 holds 50
-    // response records, crawl2 holds 150 revisit stubs whose
-    // WARC-Payload-Digest is the sha1-base32 of an ORIGINAL's body
-    // (content-keyed, under different urls), except every (i%10==7)th
-    // which digests content that exists in no crawl. Both archives are
-    // read as one frame and resolved: every linked stub must regain its
-    // original's payload (replayed from the residue arithmetic), every
-    // dangler must stay empty with a null resolved_from, and responses
-    // must pass through untouched.
-    "q105_warc_revisit" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_revisit_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val orig = new java.io.File(fixture, "crawl1").getPath
-      val rev = new java.io.File(fixture, "crawl2").getPath
-      val responses = s.range(0, 50).select(
-        concat(lit("https://o.test/d/"), col("id").cast("string")).as("uri"),
-        concat(lit("content "), col("id").cast("string")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        responses, orig, "uri", "body", overwrite = true)
-      val revisits = s.range(0, 150).select(
-        concat(lit("https://r.test/m/"), col("id").cast("string")).as("uri"),
-        concat(lit("sha1:"), graft.sources.Warc.payloadDigest(
-          when(col("id") % 10 === 7,
-            concat(lit("missing "), col("id").cast("string")))
-            .otherwise(concat(lit("content "), (col("id") % 50).cast("string")))
-            .cast("binary"))).as("digest"))
-      graft.sources.Warc.writeWarcRevisits(
-        revisits, rev, "uri", "digest", overwrite = true)
-      graft.sources.Warc.resolveRevisits(
-          graft.sources.Warc.readWarc(s, fixture.getPath + "/*"))
-        .select(col("target_uri"),
-          col("payload").cast("string").as("body"),
-          col("warc_type"),
-          col("resolved_from").isNotNull.as("resolved"))
-    }),
-    // Sitemap parsing (Sitemaps.parseSitemaps): 120 formulaic documents —
-    // urlsets with two entries each (entity-escaped query URLs, lastmod
-    // dates, changefreq, priority) and every 10th a sitemapindex with two
-    // children — exploded to one row per discovered URL. The oracle
-    // re-derives every loc / parsed lastmod / hint / kind from the
-    // residue arithmetic, including the &amp; decode.
-    "q104_sitemap_parse" -> ((s, dir) => {
-      val host = concat(lit("https://h"), (col("id") % 6).cast("string"),
-        lit(".test"))
-      // lastmod cycles the W3C-datetime forms the protocol allows: date,
-      // full datetime, fractional seconds, minute precision — all must
-      // parse; loc carries BOTH escape families (&amp; and the numeric
-      // &#38;) the XML escaping table permits
-      val lmSuffix = when(col("id") % 4 === 0, lit(""))
-        .when(col("id") % 4 === 1, lit("T10:20:30Z"))
-        .when(col("id") % 4 === 2, lit("T10:20:30.125+00:00"))
-        .otherwise(lit("T10:20Z"))
-      def urlBlock(k: Int) = concat(
-        lit("<url><loc>"), host, lit(s"/p/"), col("id").cast("string"),
-        lit(s"/$k?a=1&amp;b=$k&#38;c=2</loc><lastmod>2024-03-0"),
-        (col("id") % 9 + 1).cast("string"), lmSuffix,
-        lit("</lastmod><changefreq>"),
-        when(col("id") % 3 === 0, lit("daily"))
-          .when(col("id") % 3 === 1, lit("weekly")).otherwise(lit("monthly")),
-        lit("</changefreq><priority>0."), (col("id") % 10).cast("string"),
-        lit("</priority></url>"))
-      def childBlock(k: Int) = concat(
-        lit("<sitemap><loc>"), host, lit("/sm/"), col("id").cast("string"),
-        lit(s"/$k.xml</loc><lastmod>2024-01-0"),
-        (col("id") % 5 + 1).cast("string"),
-        lit("</lastmod></sitemap>"))
-      val xml = when(col("id") % 10 === 9,
-        concat(lit("<sitemapindex>"), childBlock(0), childBlock(1),
-          lit("</sitemapindex>")))
-        .otherwise(concat(lit("<urlset>"), urlBlock(0), urlBlock(1),
-          lit("</urlset>")))
-      graft.ops.Sitemaps.parseSitemaps(
-          s.range(0, 120).select(col("id").as("doc_id"), xml.as("xml")),
-          "xml")
-        .select(col("doc_id"), col("loc"),
-          col("lastmod").cast("string").as("lastmod"),
-          col("changefreq"), col("priority"), col("kind"))
-    }),
-    // The no-sidecar archive loop (Warc.indexWarc + Cdx.cdxjLines +
-    // zipnum): an archive written WITHOUT any index is walked at the gzip
-    // member level (real header parse + Inflater consumption counts →
-    // member offsets), the computed captures render to CDXJ lines,
-    // cluster into a ZipNum index, and one host's pages are then fetched
-    // by prefix query → byte-range plan → ranged decode. Every link in
-    // the chain is load-bearing: a wrong member offset or zipnum block
-    // boundary breaks the gzip decode or loses rows, and the oracle
-    // replays the final payload text arithmetically.
-    "q107_warc_index_zipnum" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warcidx_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arc = new java.io.File(fixture, "arc").getPath
-      val zp = new java.io.File(fixture, "zip").getPath
-      val src = s.range(0, 300).select(
-        concat(lit("https://s"), (col("id") % 5).cast("string"),
-          lit(".test/d/"), col("id").cast("string")).as("uri"),
-        concat(lit("body "), col("id").cast("string"),
-          expr("repeat('y', CAST(id % 11 AS INT))")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(3), arc, "uri", "body",
-        overwrite = true, maxRecordsPerShard = 40)
-      graft.sources.Cdx.writeZipnum(
-        graft.sources.Cdx.cdxjLines(graft.sources.Warc.indexWarc(s, arc)),
-        zp, linesPerBlock = 10, overwrite = true)
-      val caps = graft.sources.Cdx.queryZipnum(s, zp, "test,s2)")
-      val plan = graft.sources.Cdx.fetchPlan(caps, gapBytes = 0L)
-      graft.sources.Warc.readWarcRanges(s, arc, plan)
-        .select(col("target_uri"),
-          col("payload").cast("string").as("body"),
-          col("http_status"))
-    }),
-    // The sidecar-less loop over a ZSTD archive (q107's chain with the
-    // codec flipped to zstd-dict): member boundaries now come from a real
-    // zstd FRAME walk — skippable dictionary frame captured, data-frame
-    // extents measured from block headers — and the ranged fetch must
-    // re-read the head dictionary to decode mid-file members. Any wrong
-    // frame boundary breaks the zstd decode; the oracle replays the
-    // fetched payload text arithmetically.
-    "q107b_warc_index_zstd" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warcidxz_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arc = new java.io.File(fixture, "arc").getPath
-      val zp = new java.io.File(fixture, "zip").getPath
-      val src = s.range(0, 300).select(
-        concat(lit("https://s"), (col("id") % 5).cast("string"),
-          lit(".test/d/"), col("id").cast("string")).as("uri"),
-        concat(lit("zbody "), col("id").cast("string"),
-          expr("repeat('q', CAST(id % 13 AS INT))")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(3), arc, "uri", "body",
-        overwrite = true, maxRecordsPerShard = 40, codec = "zstd-dict")
-      graft.sources.Cdx.writeZipnum(
-        graft.sources.Cdx.cdxjLines(graft.sources.Warc.indexWarc(s, arc)),
-        zp, linesPerBlock = 10, overwrite = true)
-      val caps = graft.sources.Cdx.queryZipnum(s, zp, "test,s4)")
-      val plan = graft.sources.Cdx.fetchPlan(caps, gapBytes = 0L)
-      graft.sources.Warc.readWarcRanges(s, arc, plan)
-        .select(col("target_uri"),
-          col("payload").cast("string").as("body"),
-          col("http_status"))
-    }),
-    // The sidecar-less loop over a PLAIN uncompressed archive (q107's
-    // chain with codec = "none"): no member layer exists, so indexWarc's
-    // offsets are raw record byte offsets and the ranged fetch decodes
-    // with no decompression at all — the r15 VERDICT gap #4 (local/test
-    // dumps ship uncompressed; the indexer must not refuse them). Wrong
-    // record framing (a mis-bracketed trailing CRLF) would desync every
-    // subsequent offset; the oracle replays the fetched payloads.
-    "q107e_warc_index_plain" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warcidxp_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arc = new java.io.File(fixture, "arc").getPath
-      val zp = new java.io.File(fixture, "zip").getPath
-      val src = s.range(0, 300).select(
-        concat(lit("https://s"), (col("id") % 5).cast("string"),
-          lit(".test/d/"), col("id").cast("string")).as("uri"),
-        concat(lit("pbody "), col("id").cast("string"),
-          expr("repeat('w', CAST(id % 9 AS INT))")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(3), arc, "uri", "body",
-        overwrite = true, maxRecordsPerShard = 40, codec = "none")
-      graft.sources.Cdx.writeZipnum(
-        graft.sources.Cdx.cdxjLines(graft.sources.Warc.indexWarc(s, arc)),
-        zp, linesPerBlock = 10, overwrite = true)
-      val caps = graft.sources.Cdx.queryZipnum(s, zp, "test,s1)")
-      val plan = graft.sources.Cdx.fetchPlan(caps, gapBytes = 0L)
-      graft.sources.Warc.readWarcRanges(s, arc, plan)
-        .select(col("target_uri"),
-          col("payload").cast("string").as("body"),
-          col("http_status"))
-    }),
-    // indexWarc's languages/charset fields (the published cc-index
-    // populates both; consumers filter on them before fetching): three
-    // single-language classes plus one genuinely BILINGUAL class rendered
-    // as HTML bodies under two charset labels — the WHATWG sniff must
-    // report what the decode DOES (iso-8859-1 label → windows-1252), the
-    // langid must classify through the tag strip, singles must stay
-    // single codes (the shared-script/shared-token shadows stay out) and
-    // the mixed page must list BOTH codes primary-first ("fr,en" — the
-    // multi-code published shape). Expected values are hand-derived
-    // literals in the oracle, q102c-style.
-    "q107c_warc_index_langs" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warcidxl_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arc = new java.io.File(fixture, "arc").getPath
-      val body = concat(lit("<html><body><p>"),
-        when(col("id") % 4 === 0, lit(LangGateEn))
-          .when(col("id") % 4 === 1, lit(LangGateFr))
-          .when(col("id") % 4 === 2, lit(LangGateRu))
-          .otherwise(lit(LangGateEn + " " + LangGateFr)),
-        lit(" "), col("id").cast("string"), lit("</p></body></html>"))
-      val ct = when(col("id") % 4 === 1,
-        lit("text/html; charset=iso-8859-1"))
-        .otherwise(lit("text/html; charset=utf-8"))
-      val src = s.range(0, 120).select(
-        concat(lit("https://l.test/d/"), col("id").cast("string")).as("uri"),
-        body.as("body"), ct.as("ct"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(2), arc, "uri", "body",
-        overwrite = true, contentTypeCol = Some("ct"))
-      graft.sources.Warc.indexWarc(s, arc)
-        .select(col("url"), col("languages"), col("charset"),
-          col("mime"), col("status"))
-    }),
-    // Multi-code lang_id through the SQL registration (GraftExtensions
-    // `lang_id(text[, maxLangs])` → LangIdTopExpr): the same classifier
-    // classes as q107c driven PURELY through selectExpr over registered
-    // temp functions — config-only SQL curation must produce the exact
-    // cc-index languages shape indexWarc emits, at k = 1, 2 and 3
-    // (k=1 equals the single-code form by construction; the bilingual
-    // class lists both codes at k >= 2).
-    "q107d_langid_sql" -> ((s, dir) => {
-      graft.ops.expr.NativeSig.register(s)
-      val body = when(col("id") % 4 === 0, lit(LangGateEn))
-        .when(col("id") % 4 === 1, lit(LangGateFr))
-        .when(col("id") % 4 === 2, lit(LangGateRu))
-        .otherwise(lit(LangGateEn + " " + LangGateFr))
-      s.range(0, 200).select(col("id"), body.as("text"))
-        .selectExpr("id", "lang_id(text) AS lang1",
-          "lang_id(text, 2) AS lang2", "lang_id(text, 3) AS lang3")
-    }),
-    // ISO 639-3 edge mapping (TextStats.toIso639_3 / SQL iso639_3): the
-    // published cc-index spells `languages` in 639-3 (`eng`, `fra,eng`)
-    // where this library's classifier emits 639-1 — this is the
-    // documented bridge for joining against the published artifact.
-    // Driven through BOTH surfaces (the SQL registration composing
-    // iso639_3(lang_id(text)) and the Scala column API over the
-    // multi-code form); unknown codes and `und` pass through.
-    "q107f_langid_iso3" -> ((s, dir) => {
-      graft.ops.expr.NativeSig.register(s)
-      val body = when(col("id") % 4 === 0, lit(LangGateEn))
-        .when(col("id") % 4 === 1, lit(LangGateFr))
-        .when(col("id") % 4 === 2, lit(LangGateRu))
-        .otherwise(lit(LangGateEn + " " + LangGateFr))
-      s.range(0, 200).select(col("id"), body.as("text"))
-        .withColumn("lang1", expr("iso639_3(lang_id(text))"))
-        .withColumn("lang3", graft.ops.TextStats.toIso639_3(
-          graft.ops.TextStats.langId(col("text"), 3)))
-        .withColumn("passthrough", expr("iso639_3('und,xx')"))
-        .select(col("id"), col("lang1"), col("lang3"), col("passthrough"))
-    }),
-    // WAT metadata records (Wat.writeWat / parseWat — the metadata member
-    // of CommonCrawl's WARC/WAT/WET artifact trio): formulaic HTML pages
-    // with a title and two double-quoted links each render to metadata
-    // records whose JSON envelope carries Head.Title + Links; reading the
-    // archive back and parsing the envelope must reproduce every (page,
-    // link, title) triple — the oracle replays them from the residue
-    // arithmetic (a wrong envelope path or a dropped link goes red).
-    "q110_wat_roundtrip" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_wat_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val watDir = new java.io.File(fixture, "wat").getPath
-      val html = concat(
-        lit("<html><head><title>Page "), col("id").cast("string"),
-        lit("</title></head><body><a href=\"https://t"),
-        (col("id") % 7).cast("string"), lit(".test/a/"),
-        col("id").cast("string"),
-        lit("\">one</a><p>x</p><a href=\"/rel/"),
-        (col("id") % 3).cast("string"),
-        lit("\">two</a></body></html>"))
-      val src = s.range(0, 200).select(
-        concat(lit("https://w.test/p/"), col("id").cast("string")).as("uri"),
-        html.as("html"))
-      graft.sources.Wat.writeWat(src.repartition(2), watDir, "uri", "html",
-        overwrite = true)
-      graft.sources.Wat.parseWat(graft.sources.Warc.readWarc(s, watDir))
-        .select(col("target_uri"), col("title"),
-          explode(col("links")).as("__l"))
-        .select(col("target_uri"), col("title"),
-          col("__l.url").as("link"), col("__l.path").as("link_path"))
-    }),
-    // WAT envelope completion (r15 VERDICT item #2): the HTTP Headers
-    // map and the top-level Container both survive write → read →
-    // parse — and the Container is PROVEN REAL by fetching exactly its
-    // (filename, offset, length) from the response archive and getting
-    // the described page back. A wrong sidecar join or a stale offset
-    // returns the wrong body; the oracle replays every field.
-    "q110b_wat_container" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_watc_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val warcDir = new java.io.File(fixture, "warc").getPath
-      val watDir = new java.io.File(fixture, "wat").getPath
-      val html = concat(
-        lit("<html><head><title>Page "), col("id").cast("string"),
-        lit("</title></head><body><a href=\"/n/"),
-        (col("id") % 5).cast("string"), lit("\">n</a></body></html>"))
-      val src = s.range(0, 150).select(
-        concat(lit("https://wc.test/p/"), col("id").cast("string")).as("uri"),
-        html.as("html"),
-        map(lit("Content-Type"), lit("text/html"),
-          lit("X-Crawl"), concat(lit("c"), (col("id") % 4).cast("string")))
-          .as("hdrs"))
-      graft.sources.Wat.writeWarcWithWat(src.repartition(2), warcDir, watDir,
-        "uri", "html", overwrite = true, headersCol = Some("hdrs"),
-        container = true)
-      val parsed = graft.sources.Wat.parseWat(
-        graft.sources.Warc.readWarc(s, watDir))
-      val plan = parsed.select(
-        col("container_filename").as("filename"),
-        col("container_offset").as("range_start"),
-        (col("container_offset") + col("container_length")).as("range_end"))
-      val fetched = graft.sources.Warc.readWarcRanges(s, warcDir, plan)
-        .select(col("target_uri"), col("payload").cast("string").as("body"))
-      parsed.select(col("target_uri"), col("title"),
-          element_at(col("http_headers"), "X-Crawl").as("x_crawl"))
-        .join(fetched, "target_uri")
-        .select(col("target_uri"), col("title"), col("x_crawl"), col("body"))
-    }),
-    // REAL-ARTIFACT interop anchors (r15 VERDICT top item): every other
-    // format gate validates against this repo's own understanding of the
-    // conventions (self-roundtrips, hand-derived rules). These three read
-    // verbatim-LAYOUT published samples (graft.PublishedSamples — the
-    // pywb/cc-index CDXJ docs shape, the WARC spec annex record shapes,
-    // the iipc WAT envelope layout) through the REAL readers, and the
-    // oracle rows are hand-transcribed literals — the class of check that
-    // catches convention drift (the r13 FNV-digest miss) which
-    // self-roundtrips structurally cannot.
-    //
-    // Published CDXJ lines through readCdxj: spaces after JSON colons,
-    // quoted numerics, keys outside the subset schema (mime-detected,
-    // redirect), charset/languages (ISO 639-3 in the wild — surfaced
-    // verbatim), crawl-data/... filenames — plus SURT PARITY: this
-    // library's surt(url) must equal each line's published key.
-    "q111_cdxj_published" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_cdxjpub_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      fixture.mkdirs()
-      val f = new java.io.File(fixture, "published.cdxj")
-      java.nio.file.Files.write(f.toPath,
-        (PublishedSamples.CdxjLines.mkString("\n") + "\n").getBytes("UTF-8"))
-      graft.sources.Cdx.readCdxj(s, f.getAbsolutePath)
-        .select(col("surt_key"), col("ts").cast("string").as("ts"),
-          col("url"), col("mime"), col("status"), col("digest"),
-          col("filename"), col("offset"), col("length"),
-          col("languages"), col("charset"),
-          (graft.sources.Cdx.surt(col("url")) === col("surt_key"))
-            .as("surt_parity"))
-    }),
-    // WARC spec annex record shapes through readWarc + resolveRevisits:
-    // a Heritrix-style warcinfo (application/warc-fields — NOT an http
-    // block), the archive.org robots.txt response, and a WARC-1.1
-    // identical-payload-digest revisit whose WARC-Refers-To names the
-    // response — resolution must hand the revisit the response's payload.
-    "q111b_warc_spec" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warcpub_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      fixture.mkdirs()
-      java.nio.file.Files.write(
-        new java.io.File(fixture, "spec.warc").toPath,
-        PublishedSamples.WarcSpecFile)
-      graft.sources.Warc.resolveRevisits(
-          graft.sources.Warc.readWarc(s, fixture.getPath))
-        .select(col("warc_type"), col("target_uri"), col("record_id"),
-          col("warc_date"), col("http_status"), col("http_content_type"),
-          col("payload").cast("string").as("body"),
-          col("payload_digest"), col("refers_to"), col("warc_profile"),
-          col("resolved_from"))
-    }),
-    // Published WAT envelope layout through a real metadata record:
-    // top-level Container, bookkeeping keys the subset schema must
-    // IGNORE (Format, *-Length, Response-Message, Metas, alt), the
-    // Headers map, and Links entries carrying path/text/title beside
-    // url — all surfaced field-for-field.
-    "q111c_wat_published" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_watpub_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val out = new java.io.File(fixture, "wat").getPath
-      import s.implicits._
-      val df = Seq(("http://r.example/", PublishedSamples.WatEnvelope))
-        .toDF("uri", "env")
-      graft.sources.Warc.writeWarcMetadata(df, out, "uri", "env",
-        overwrite = true)
-      graft.sources.Wat.parseWat(graft.sources.Warc.readWarc(s, out))
-        .select(col("target_uri"), col("title"),
-          col("container_filename"), col("container_offset"),
-          col("container_length"),
-          element_at(col("http_headers"), "Server").as("server"),
-          explode(col("links")).as("__l"))
-        .select(col("target_uri"), col("title"),
-          col("container_filename"), col("container_offset"),
-          col("container_length"), col("server"),
-          col("__l.url").as("link_url"), col("__l.path").as("link_path"),
-          col("__l.text").as("link_text"),
-          col("__l.title").as("link_title"))
-    }),
-    // HTTP payload transfer/content decoding (r16 VERDICT top item):
-    // real WARC response records store the RAW captured message —
-    // `Transfer-Encoding: chunked` framing and `Content-Encoding: gzip`
-    // included — and readers must undo both before any text consumer
-    // sees the bytes. The PublishedSamples coded records fix every
-    // STORED byte (the gzip streams were generated once outside this
-    // library and pasted as hex, like the digests), so the decoded
-    // texts, the coding columns, the stored-block digests and the
-    // unsupported-br passthrough are all hand-written oracle literals.
-    "q112_http_decode" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_coded_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      fixture.mkdirs()
-      java.nio.file.Files.write(
-        new java.io.File(fixture, "coded.warc").toPath,
-        PublishedSamples.CodedWarcFile)
-      graft.sources.Warc.readWarc(s, fixture.getPath)
-        .select(col("target_uri"),
-          // decoded rows show their text; the br row keeps STORED bytes
-          // (not valid UTF-8 — surfaced as byte length, not a string)
-          when(col("payload_decoded"), col("payload").cast("string"))
-            .as("body"),
-          length(col("payload")).cast("long").as("payload_len"),
-          col("payload_decoded"),
-          col("http_transfer_encoding").as("te"),
-          col("http_content_encoding").as("ce"),
-          col("payload_digest"), col("truncated"))
-    }),
-    // indexWarc over the same coded captures: `digest` keys the STORED
-    // payload block (the crawl convention — the br record carries no
-    // digest header, so the indexer must RECOMPUTE over stored bytes
-    // and land on the outside-computed constant), while charset and
-    // languages sniff the DECODED sample (gzip bytes would classify as
-    // garbage; the unsupported br coding falls back to stored bytes
-    // and honestly reads 'und').
-    "q112b_warc_index_coded" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_codedidx_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      fixture.mkdirs()
-      java.nio.file.Files.write(
-        new java.io.File(fixture, "coded.warc").toPath,
-        PublishedSamples.CodedWarcFile)
-      graft.sources.Warc.indexWarc(s, fixture.getPath)
-        .select(col("surt_key"), col("ts").cast("string").as("ts"),
-          col("url"), col("mime"), col("status"), col("digest"),
-          col("charset"), col("languages"))
-    }),
-    // indexWarc(languageCodes = "iso639_3"): the published cc-index
-    // spells `languages` in ISO 639-3 — the indexer emits that spelling
-    // natively over the same fixture classes as q107c (three singles +
-    // the bilingual page), so an index produced here key-matches the
-    // published field with no caller-side rewrite.
-    "q112c_warc_index_iso3" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warcidx3_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arc = new java.io.File(fixture, "arc").getPath
-      val body = concat(lit("<html><body><p>"),
-        when(col("id") % 4 === 0, lit(LangGateEn))
-          .when(col("id") % 4 === 1, lit(LangGateFr))
-          .when(col("id") % 4 === 2, lit(LangGateRu))
-          .otherwise(lit(LangGateEn + " " + LangGateFr)),
-        lit(" "), col("id").cast("string"), lit("</p></body></html>"))
-      val ct = when(col("id") % 4 === 1,
-        lit("text/html; charset=iso-8859-1"))
-        .otherwise(lit("text/html; charset=utf-8"))
-      val src = s.range(0, 120).select(
-        concat(lit("https://l3.test/d/"), col("id").cast("string")).as("uri"),
-        body.as("body"), ct.as("ct"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(2), arc, "uri", "body",
-        overwrite = true, contentTypeCol = Some("ct"))
-      graft.sources.Warc.indexWarc(s, arc, languageCodes = "iso639_3")
-        .select(col("url"), col("languages"), col("charset"),
-          col("mime"), col("status"))
-    }),
-    // Coded-body WRITER (writeWarcResponses(contentEncoding = "gzip")):
-    // archives store each HTTP entity content-coded — the shape real
-    // crawls ship and a storage saving independent of the member codec.
-    // The write → read loop must hand back the ORIGINAL entity bytes
-    // (readers decode by default), with the coding surfaced on every
-    // row; digest-keys-the-coded-block is spec-pinned (WarcSpec) since
-    // gzip output bytes are not oracle-stable across environments.
-    "q112d_warc_coded_write" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_cew_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arc = new java.io.File(fixture, "arc").getPath
-      val src = s.range(0, 200).select(
-        concat(lit("https://ce.test/p/"), col("id").cast("string")).as("uri"),
-        concat(lit("<html><p>entity "), col("id").cast("string"),
-          lit("</p></html>"),
-          expr("repeat('pad', CAST(id % 5 AS INT))")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(2), arc, "uri", "body",
-        overwrite = true, contentEncoding = "gzip")
-      graft.sources.Warc.readWarc(s, arc)
-        .select(col("target_uri"),
-          col("payload").cast("string").as("body"),
-          col("http_content_encoding").as("ce"),
-          col("payload_decoded"), col("truncated"))
-    }),
-    // ZipNum published-layout anchor (r16 VERDICT item #2): the
-    // two-level index's cluster.idx in the published pywb layout
-    // (tab-separated `<surt> <ts>  <shard>  <offset>  <length>  <seq>`,
-    // seq 1-based, two shard files) through the REAL readClusterIdx —
-    // every parsed field a hand-transcribed literal. Closes the last
-    // self-roundtrip-only format family (q106/q109 validate against
-    // this library's own writer).
-    "q113_zipnum_published" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_zippub_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      fixture.mkdirs()
-      java.nio.file.Files.write(
-        new java.io.File(fixture, "cluster.idx").toPath,
-        (PublishedSamples.ClusterIdxLines.mkString("\n") + "\n")
-          .getBytes("UTF-8"))
-      graft.sources.Cdx.readClusterIdx(s, fixture.getPath)
-        .select(col("block_key"), col("filename"), col("offset"),
-          col("length"), col("seq"))
-    }),
-    // ...and the candidate-block PLAN over those published lines for a
-    // `com,example)/` prefix query: blocks 1-3 of cdx-00000.gz are the
-    // candidates (block 1 because keys <= the next block's key can live
-    // in it, block 4 and shard 2 excluded by key range / per-shard
-    // lead), and their contiguous offsets coalesce into ONE ranged GET
-    // — start/end/count all hand-computed from the sample's numbers.
-    "q113b_zipnum_plan_published" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_zipplan_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      fixture.mkdirs()
-      java.nio.file.Files.write(
-        new java.io.File(fixture, "cluster.idx").toPath,
-        (PublishedSamples.ClusterIdxLines.mkString("\n") + "\n")
-          .getBytes("UTF-8"))
-      graft.sources.Cdx.zipnumPlan(
-          graft.sources.Cdx.readClusterIdx(s, fixture.getPath),
-          "com,example)/")
-        .select(col("filename"), col("range_start"), col("range_end"),
-          col("n_captures"), col("bytes"))
-    }),
-    // Columnar cc-index loop (r16 VERDICT item #4): archives → indexWarc
-    // → parquet index in the PUBLISHED cc-index-table column shape →
-    // read back through the adapter → surt-prefix filter → fetchPlan →
-    // ranged decode. The published-columns table is the index format
-    // most Spark users reach for first; the adapter makes it a drop-in
-    // start for the same selective-access loop the CDXJ/ZipNum paths
-    // drive.
-    "q114_ccindex_parquet" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ccidx_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arc = new java.io.File(fixture, "arc").getPath
-      val tab = new java.io.File(fixture, "ccindex").getPath
-      val src = s.range(0, 300).select(
-        concat(lit("https://c"), (col("id") % 5).cast("string"),
-          lit(".test/d/"), col("id").cast("string")).as("uri"),
-        concat(lit("cbody "), col("id").cast("string"),
-          expr("repeat('z', CAST(id % 7 AS INT))")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.repartition(3), arc, "uri", "body",
-        overwrite = true, maxRecordsPerShard = 40)
-      graft.sources.Cdx.writeCcIndexTable(
-        graft.sources.Warc.indexWarc(s, arc), tab, overwrite = true)
-      val caps = graft.sources.Cdx.readCcIndexTable(s, tab)
-        .where(col("surt_key").startsWith("test,c2)"))
-      val plan = graft.sources.Cdx.fetchPlan(caps, gapBytes = 0L)
-      graft.sources.Warc.readWarcRanges(s, arc, plan)
-        .where(col("target_uri").startsWith("https://c2."))
-        .select(col("target_uri"),
-          col("payload").cast("string").as("body"), col("http_status"))
-    }),
-    // warcinfo shard-head records (writeWarcResponses(warcinfo = true)):
-    // one partition, 100 records at 40/shard → exactly 3 shards, each
-    // opening with a warcinfo record (application/warc-fields content,
-    // readers surface warc_type = 'warcinfo'); responses unaffected. The
-    // oracle states the per-type counts and the info records' shape.
-    "q88f_warcinfo" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warcinfo_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arc = new java.io.File(fixture, "arc").getPath
-      val src = s.range(0, 100).select(
-        concat(lit("https://wi.test/p/"), col("id").cast("string")).as("uri"),
-        concat(lit("body "), col("id").cast("string")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        src.coalesce(1), arc, "uri", "body",
-        overwrite = true, maxRecordsPerShard = 40, warcinfo = true)
-      graft.sources.Warc.readWarc(s, arc)
-        .groupBy(col("warc_type"), col("content_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("record_index") === 0, 1).otherwise(0))
-            .as("shard_heads"))
-    }),
-    // WAT from a REAL crawl's headers (readWarc → writeWat): the archive
-    // is read back, and the envelope's HTTP Headers come from the
-    // reader's full http_headers map — the original server headers ride
-    // into the WAT without any payload re-parse. The oracle replays the
-    // per-row Content-Type the response writer stamped.
-    "q110c_wat_headers_from_warc" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_wathdr_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val warcDir = new java.io.File(fixture, "warc").getPath
-      val watDir = new java.io.File(fixture, "wat").getPath
-      val src = s.range(0, 150).select(
-        concat(lit("https://wh.test/p/"), col("id").cast("string")).as("uri"),
-        concat(lit("<html><head><title>H"), col("id").cast("string"),
-          lit("</title></head><body><a href=\"/x/"),
-          (col("id") % 3).cast("string"),
-          lit("\">x</a></body></html>")).as("html"),
-        concat(lit("text/html; charset=cs"), (col("id") % 4).cast("string"))
-          .as("ct"))
-      graft.sources.Warc.writeWarcResponses(src.repartition(2), warcDir,
-        "uri", "html", overwrite = true, contentTypeCol = Some("ct"))
-      val back = graft.sources.Warc.readWarc(s, warcDir)
-        .select(col("target_uri").as("uri"),
-          col("payload").cast("string").as("html"),
-          col("http_headers"))
-      graft.sources.Wat.writeWat(back, watDir, "uri", "html",
-        overwrite = true, headersCol = Some("http_headers"))
-      graft.sources.Wat.parseWat(graft.sources.Warc.readWarc(s, watDir))
-        .select(col("target_uri"), col("title"),
-          element_at(col("http_headers"), "Content-Type").as("ct"))
-    }),
-    // Cross-crawl deduplicating WRITE (Warc.writeWarcDeduped /
-    // markRevisits — the producer half of the revisit convention): crawl
-    // A archives 40 pages; batch B re-captures every A payload under new
-    // urls (each up to three times) plus 10 genuinely-new payloads, each
-    // appearing twice within B. The writer must emit responses ONLY for
-    // first-seen payloads (batch-first by uri for the new ones, nothing
-    // for payloads already in A's index) and revisit stubs for the rest —
-    // and reading BOTH crawls back through resolveRevisits must regain
-    // every payload. The oracle replays the response/revisit split and
-    // the resolved bodies from the residue arithmetic.
-    "q108_warc_dedup_write" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_warcdedup_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val arcA = new java.io.File(fixture, "a").getPath
-      val arcB = new java.io.File(fixture, "b").getPath
-      val a = s.range(0, 40).select(
-        concat(lit("https://a.test/d/"), col("id").cast("string")).as("uri"),
-        concat(lit("pay "), col("id").cast("string")).as("body"))
-      graft.sources.Warc.writeWarcResponses(
-        a, arcA, "uri", "body", overwrite = true)
-      // zero-padded uris: the within-batch "first" is min(uri), and the
-      // padding makes string order equal numeric order
-      val b = s.range(0, 120).select(
-        concat(lit("https://b.test/m/"),
-          lpad(col("id").cast("string"), 3, "0")).as("uri"),
-        concat(lit("pay "), (col("id") % 50).cast("string")).as("body"))
-      graft.sources.Warc.writeWarcDeduped(
-        b.repartition(2), arcB, "uri", "body",
-        priorDigests = graft.sources.Warc.indexWarc(s, arcA),
-        overwrite = true, index = true)
-      graft.sources.Warc.resolveRevisits(
-          graft.sources.Warc.readWarc(s, fixture.getPath + "/*"))
-        .select(col("target_uri"),
-          col("payload").cast("string").as("body"),
-          col("warc_type"),
-          col("resolved_from").isNotNull.as("resolved"))
-    }),
-    // ZipNum index MERGE (Cdx.mergeZipnum / readZipnumLines): two
-    // monthly-crawl-style indexes with FULLY overlapping key ranges
-    // (every host in both) union-then-rewrite into one globally-sorted
-    // index, and a host query over the merged artifact must return both
-    // crawls' captures — wrong block boundaries or dropped lines in the
-    // lazy shard scan lose rows here.
-    "q109_zipnum_merge" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_zipmerge_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val d1 = new java.io.File(fixture, "m1").getPath
-      val d2 = new java.io.File(fixture, "m2").getPath
-      val out = new java.io.File(fixture, "merged").getPath
-      def lines(lo: Int, hi: Int) = s.range(lo, hi).select(concat(
-        lit("test,h"), (col("id") % 5).cast("string"), lit(")/p/"),
-        col("id").cast("string"),
-        lit(" 20240101000000 {\"url\":\"https://h"),
-        (col("id") % 5).cast("string"),
-        lit(".test/p/"), col("id").cast("string"),
-        lit("\",\"status\":\"200\",\"offset\":\""),
-        (col("id") * 100).cast("string"),
-        lit("\",\"length\":\"90\",\"filename\":\"w-"),
-        (col("id") % 3).cast("string"),
-        lit(".warc.gz\"}")).as("value"))
-      graft.sources.Cdx.writeZipnum(lines(0, 1000), d1,
-        linesPerBlock = 25, numShards = 2, overwrite = true)
-      graft.sources.Cdx.writeZipnum(lines(1000, 2000), d2,
-        linesPerBlock = 25, numShards = 2, overwrite = true)
-      graft.sources.Cdx.mergeZipnum(s, Seq(d1, d2), out,
-        linesPerBlock = 40, numShards = 3, overwrite = true)
-      graft.sources.Cdx.queryZipnum(s, out, "test,h2)")
-        .select(col("surt_key"), col("url"), col("offset"),
-          col("length"), col("filename"))
-    }),
-    // ZipNum clustered index (Cdx.writeZipnum/queryZipnum): the published
-    // cc-index's two-level layout — sorted CDXJ lines packed into
-    // independently-gzipped blocks with a cluster.idx of block keys, so a
-    // prefix query touches only candidate blocks. 2000 formulaic capture
-    // lines over 7 hosts are written at 50 lines/block across 3 shards,
-    // then host h3's captures are answered ENTIRELY through the
-    // cluster-index plan (any wrong block offset breaks the gunzip; any
-    // wrong plan boundary loses rows at block edges). The oracle
-    // re-derives the full h3 capture set from residue arithmetic.
-    "q106_zipnum_query" -> ((s, dir) => {
-      val fixture = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_zipnum_" +
-          java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL) +
-          "_" + ProcessHandle.current().pid())
-      val idx = new java.io.File(fixture, "idx").getPath
-      val lines = s.range(0, 2000).select(concat(
-        lit("test,h"), (col("id") % 7).cast("string"), lit(")/p/"),
-        col("id").cast("string"),
-        lit(" 20240101000000 {\"url\":\"https://h"),
-        (col("id") % 7).cast("string"),
-        lit(".test/p/"), col("id").cast("string"),
-        lit("\",\"status\":\"200\",\"offset\":\""),
-        (col("id") * 100).cast("string"),
-        lit("\",\"length\":\"90\",\"filename\":\"w-"),
-        (col("id") % 4).cast("string"),
-        lit(".warc.gz\"}")).as("value"))
-      graft.sources.Cdx.writeZipnum(lines, idx,
-        linesPerBlock = 50, numShards = 3, overwrite = true)
-      graft.sources.Cdx.queryZipnum(s, idx, "test,h3)")
-        .select(col("surt_key"), col("url"), col("offset"),
-          col("length"), col("filename"))
-    }),
-    // Published-index SURT parity (Cdx.surt vs the IA canonicalization the
-    // real CommonCrawl cc-index keys go through): verbatim (url, key)
-    // pairs covering www/www<d> hosts, multi-param + bare + repeated query
-    // args, default and explicit ports, userinfo, session-id params (query
-    // and ASP.NET path forms), trailing slashes and fragments. The oracle
-    // carries the expected keys as literals — hand-derived from the surt
-    // library's DefaultIAURLCanonicalizer rules — so any canonicalization
-    // drift (e.g. keeping `www,` as a host label, or source-order query
-    // args, both of which silently empty a join against the published
-    // index) goes red here.
-    "q102c_surt_published" -> ((s, dir) => {
-      import s.implicits._
-      SurtPublishedPairs.zipWithIndex
-        .map { case ((u, _), i) => (i.toLong, u) }.toDF("id", "url")
-        .select(col("id"), col("url"),
-          graft.sources.Cdx.surt(col("url")).as("surt_key"))
-    }),
-    // SURT key (Cdx.surt): formulaic mixed-case URLs with queries and
-    // fragments; every output key re-derived character-for-character from
-    // the residue arithmetic in DuckDB.
-    "q102b_surt" -> ((s, dir) =>
-      s.range(0, 300).select(
-        col("id").as("id"),
-        graft.sources.Cdx.surt(concat(
-          lit("https://W"), (col("id") % 5).cast("string"),
-          lit(".Ex"), (col("id") % 3).cast("string"),
-          lit(".COM/P/"), col("id").cast("string"),
-          lit("?q="), (col("id") % 4).cast("string"),
-          lit("#frag"))).as("surt_key"))),
-    // DSIR importance weights (Dsir.dsirLogWeights): raw = documents,
-    // target = the doc_id % 7 slice; hashed unigram+bigram bag models at
-    // 256 buckets (md5-prefix bucket keys — the engine-portable hash
-    // convention). The oracle replays the ENTIRE computation: token
-    // lists, bigram adjacency, bucket hashing, Laplace-smoothed log
-    // ratios and the per-document occurrence sum.
-    "q101_dsir_weights" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      graft.ops.Dsir.dsirLogWeights(
-          d, d.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-          nibbles = 2, maxN = 2)
-        .select(col("doc_id"), round(col("log_weight"), 6).as("log_weight"))
-    }),
-    // DSIR Gumbel top-k selection (Dsir.dsirSample): the 100 largest
-    // log_weight + Gumbel(seed:id) keys — an exact softmax sample without
-    // replacement, md5-derived noise so the oracle re-ranks the identical
-    // keys (nibble-decoded uniform, double-log Gumbel transform) and must
-    // select the same 100 documents.
-    "q101b_dsir_sample" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      graft.ops.Dsir.dsirSample(
-          d, d.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-          k = 100, nibbles = 2, maxN = 2, seed = 9L)
-        .select(col("doc_id"), round(col("log_weight"), 6).as("log_weight"))
-    })
-  )
 
   /** q107c's language fixtures — one sentence per class, long enough for
     * an unambiguous classify, no apostrophes (they inline into DuckDB
@@ -3848,9 +226,6 @@ object SparkEntry {
     "https://[2001:0DB8:0:0:0:0:2:1]:8443/x" -> "[2001:db8::2:1]:8443)/x",
     "http://[::FFFF:1.2.3.4]/y?b&a" -> "[::ffff:102:304])/y?a&b")
 
-  /** Fixed deterministic query vector for the ANN queries (inlined into the
-    * DuckDB oracle below).
-    */
   /** q84/q84b's hand-built Unigram vocabulary: 9 listed pieces (ids 0-8)
     * plus byte fallback at −20 (ids 9+ in byte order, skipping 'o' which
     * is listed). Every oracle row's Viterbi derivation is written out in
@@ -3949,6 +324,9 @@ object SparkEntry {
     */
   val CapstoneSpam: String = Array.fill(15)("buy now cheap deals").mkString(" ")
 
+  /** Fixed deterministic query vector for the ANN queries (inlined into
+    * their DuckDB oracles).
+    */
   val AnnQueryVec: Seq[Float] = (0 until 64).map(i => ((i % 7) - 3) / 10.0f)
 
   /** Three deterministic query vectors for the batched-retrieval query. */
@@ -4012,9 +390,6 @@ object SparkEntry {
     // A + COMBINING RING ABOVE composes to ANGSTROM-equivalent Å
     (8L, "Å", "Å", "Å"))
 
-  private def annVecSql: String =
-    AnnQueryVec.map(f => f.toString).mkString("[", ", ", "]")
-
   /** (id, text, expectedLowEntropy) fixtures for the compression-ratio
     * quality signal (q75). The signal itself cannot replay in SQL (no
     * engine exposes zlib), so the gate pins its DIRECTION on fixtures
@@ -4057,2314 +432,4 @@ object SparkEntry {
     */
   val SemCentroids: Array[Array[Double]] =
     Array.tabulate(4, 64)((k, i) => (((i + 3 * k) % 7) - 3) / 10.0)
-
-  private def semCentroidSql(k: Int): String =
-    SemCentroids(k).map(_.toString).mkString("[", ", ", "]")
-
-  private def annBatchSql: String =
-    AnnQueryVecs.map { case (qid, vec) =>
-      val v = vec.map(_.toString).mkString("[", ", ", "]")
-      s"""SELECT qid, vec_id, score FROM (
-         |  SELECT CAST($qid AS BIGINT) AS qid, vec_id,
-         |    round(list_cosine_similarity(embedding::DOUBLE[], $v::DOUBLE[]), 6) AS score,
-         |    row_number() OVER (
-         |      ORDER BY list_cosine_similarity(embedding::DOUBLE[], $v::DOUBLE[]) DESC, vec_id) AS rn
-         |  FROM embeddings
-         |) WHERE rn <= 10""".stripMargin
-    }.mkString("\n", "\nUNION ALL\n", "")
-
-  private val stopListSql: String =
-    TextStats.EnglishStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-
-  /** The [[graft.ops.expr.LangModel]] token features as a DuckDB VALUES
-    * list — the oracle replays the exact linear model from the same Scala
-    * tables the native expression compiles (one source of truth; no
-    * apostrophes in the word lists, so plain quoting is safe).
-    */
-  private val langTokenValuesSql: String =
-    graft.ops.expr.LangModel.TokenFeatures
-      .map { case (tok, lang, w) => s"('$tok', '$lang', $w)" }
-      .mkString(", ")
-
-  /** Character-range score for one language as RE2 class counts. */
-  private def langCharScoreSql(lang: String): String = {
-    val entries = graft.ops.expr.LangModel.CharRangeFeatures.filter(_._3 == lang)
-    if (entries.isEmpty) "0"
-    else entries.map { case (lo, hi, _, w) =>
-      val cls =
-        if (lo == hi) "[\\x{%04X}]".format(lo)
-        else "[\\x{%04X}-\\x{%04X}]".format(lo, hi)
-      s"len(regexp_extract_all(text, '$cls')) * $w"
-    }.mkString(" + ")
-  }
-
-  /** The explicit whitespace class (Java `\s`) — plain triple-quote so the
-    * backslashes stay literal for DuckDB's regex engine.
-    */
-  private val wsClassSql: String = """[ \t\n\x0B\f\r]+"""
-
-  /** CTE: distinct word-n-gram shingles per document — the oracle
-    * counterpart of [[Dedup.shingles]] (used by q29, q38, q47).
-    */
-  private def shingleCteSqlN(n: Int, name: String): String =
-    s"""$name AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) = 0 THEN []
-       |         WHEN len(toks) <= $n THEN [array_to_string(toks, ' ')]
-       |         ELSE list_distinct([array_to_string(toks[i:i+${n - 1}], ' ')
-       |                             for i in generate_series(1, len(toks)-${n - 1})])
-       |    END AS grams
-       |  FROM (SELECT doc_id,
-       |          list_filter(string_split_regex(text, '$wsClassSql'), t -> t <> '') AS toks
-       |        FROM documents)
-       |)""".stripMargin
-
-  private val shingleCteSql: String = shingleCteSqlN(3, "sh")
-
-  /** DuckDB oracle per query (same parquet tables, same column names). */
-  /** The shipped English stopword list as a DuckDB list literal. */
-  private val EnStopListSql: String =
-    "['the','a','an','and','or','of','to','in','is','it'," +
-      "'that','for','on','with','as','at','by','be','this','are']"
-
-  /** Full Gopher-signal + keep replay (q65's machinery) over an arbitrary
-    * `(doc_id, text)` base, parameterized by stopword list and the
-    * min-hits floor (0 = the disabled gate for stoplist-less langs).
-    * Emitted as a self-contained `(WITH … SELECT doc_id, hits, keep)`
-    * subquery so several instantiations join in one oracle without CTE
-    * name collisions. `baseSql` must be a self-contained SELECT producing
-    * `doc_id, text` (no references to the outer query's CTEs).
-    */
-  private def gopherKeepReplaySql(
-      baseSql: String, stopListSql: String, minHits: Int): String =
-    s"""(WITH base AS (
-       |$baseSql),
-       |toks AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS tk,
-       |                list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS tkl
-       |         FROM base),
-       |lines AS (SELECT doc_id, list_filter(string_split(text, chr(10)), x -> x <> '') AS seg FROM base),
-       |paras AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\n{2,}'), x -> x <> '') AS seg FROM base),
-       |lstat AS (
-       |  SELECT doc_id, count(*) AS cnt, sum(length(l)) AS chars,
-       |    count(*) FILTER (WHERE c >= 2) AS dupcnt,
-       |    coalesce(sum(length(l)) FILTER (WHERE c >= 2), 0) AS dupchars
-       |  FROM (SELECT doc_id, l, count(*) OVER (PARTITION BY doc_id, l) AS c
-       |        FROM (SELECT doc_id, unnest(seg) AS l FROM lines))
-       |  GROUP BY doc_id),
-       |pstat AS (
-       |  SELECT doc_id, count(*) AS cnt, sum(length(l)) AS chars,
-       |    count(*) FILTER (WHERE c >= 2) AS dupcnt,
-       |    coalesce(sum(length(l)) FILTER (WHERE c >= 2), 0) AS dupchars
-       |  FROM (SELECT doc_id, l, count(*) OVER (PARTITION BY doc_id, l) AS c
-       |        FROM (SELECT doc_id, unnest(seg) AS l FROM paras))
-       |  GROUP BY doc_id),
-       |gramrows AS (
-       |  SELECT doc_id,
-       |    unnest(generate_series(1, greatest(len(tk) - 4, 0))) AS gi,
-       |    unnest(list_transform(generate_series(1, greatest(len(tk) - 4, 0)),
-       |                          i -> array_to_string(tk[i : i + 4], ' '))) AS g
-       |  FROM toks),
-       |cov AS (
-       |  SELECT DISTINCT doc_id, unnest(generate_series(gi, gi + 4)) AS pos
-       |  FROM (SELECT doc_id, gi, count(*) OVER (PARTITION BY doc_id, g) AS c FROM gramrows)
-       |  WHERE c >= 2),
-       |covstat AS (SELECT doc_id, count(*) AS covered FROM cov GROUP BY doc_id),
-       |sig AS (
-       |  SELECT b.doc_id,
-       |    len(t.tk) AS token_count,
-       |    CASE WHEN len(t.tk) = 0 THEN 0.0
-       |         ELSE list_sum(list_transform(t.tk, x -> length(x)))::DOUBLE / len(t.tk) END AS mean_word_len,
-       |    CASE WHEN coalesce(ls.cnt, 0) = 0 THEN 0.0 ELSE ls.dupcnt::DOUBLE / ls.cnt END AS dup_line_frac,
-       |    CASE WHEN coalesce(ls.chars, 0) = 0 THEN 0.0 ELSE ls.dupchars::DOUBLE / ls.chars END AS dup_line_char_frac,
-       |    CASE WHEN coalesce(ps2.cnt, 0) = 0 THEN 0.0 ELSE ps2.dupcnt::DOUBLE / ps2.cnt END AS dup_para_frac,
-       |    CASE WHEN coalesce(ps2.chars, 0) = 0 THEN 0.0 ELSE ps2.dupchars::DOUBLE / ps2.chars END AS dup_para_char_frac,
-       |    CASE WHEN len(t.tk) < 5 THEN 0.0 ELSE coalesce(cs.covered, 0)::DOUBLE / len(t.tk) END AS dup_ngram_cov,
-       |    CASE WHEN coalesce(ls.cnt, 0) = 0 THEN 0.0
-       |         ELSE len(list_filter(ln.seg, x -> regexp_matches(x, '^\\s*[-*•‣▪]')))::DOUBLE / ls.cnt END AS bullet_frac,
-       |    CASE WHEN coalesce(ls.cnt, 0) = 0 THEN 0.0
-       |         ELSE len(list_filter(ln.seg, x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$$')))::DOUBLE / ls.cnt END AS ellipsis_frac,
-       |    CASE WHEN len(t.tk) = 0 THEN 0.0
-       |         ELSE len(list_filter(t.tk, x -> regexp_matches(x, '\\p{L}')))::DOUBLE / len(t.tk) END AS alpha_frac,
-       |    len(list_intersect(t.tkl, $stopListSql)) AS stopword_hits
-       |  FROM base b
-       |  JOIN toks t USING (doc_id)
-       |  JOIN lines ln USING (doc_id)
-       |  LEFT JOIN lstat ls USING (doc_id)
-       |  LEFT JOIN pstat ps2 USING (doc_id)
-       |  LEFT JOIN covstat cs USING (doc_id))
-       |SELECT doc_id, stopword_hits::BIGINT AS hits,
-       |  (token_count BETWEEN 20 AND 1000000 AND mean_word_len BETWEEN 3.0 AND 10.0
-       |   AND dup_line_frac <= 0.30 AND dup_line_char_frac <= 0.20
-       |   AND dup_para_frac <= 0.30 AND dup_para_char_frac <= 0.20
-       |   AND dup_ngram_cov <= 0.15 AND bullet_frac <= 0.90
-       |   AND ellipsis_frac <= 0.30 AND alpha_frac >= 0.80
-       |   AND stopword_hits >= $minHits) AS keep
-       |FROM sig)""".stripMargin
-
-  /** q101/q101b's shared DuckDB replay of the DSIR weight computation:
-    * tokens → unigram+bigram gram occurrences → 2-nibble md5 buckets →
-    * Laplace-smoothed log-ratio per bucket (target = the doc_id % 7
-    * slice of the same corpus) → per-document occurrence sum. Term order
-    * inside the ratio matches Dsir.withLogWeights exactly so both engines
-    * run the identical IEEE expression.
-    */
-  private def dsirWeightCtes: String =
-    """tok AS (SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'),
-      |      x -> x <> '') AS l
-      |  FROM documents),
-      |uni AS (SELECT doc_id, unnest(l) AS g FROM tok),
-      |bi AS (SELECT doc_id, l[i] || ' ' || l[i + 1] AS g
-      |  FROM (SELECT doc_id, l,
-      |          unnest(generate_series(1, len(l) - 1)) AS i FROM tok)),
-      |gb AS (SELECT doc_id, substr(md5(g), 1, 2) AS bucket
-      |  FROM (SELECT doc_id, g FROM uni UNION ALL SELECT doc_id, g FROM bi)),
-      |rawc AS (SELECT bucket, CAST(COUNT(*) AS DOUBLE) AS rc
-      |  FROM gb GROUP BY bucket),
-      |tgtc AS (SELECT bucket, CAST(COUNT(*) AS DOUBLE) AS tc
-      |  FROM gb WHERE doc_id % 7 = 0 GROUP BY bucket),
-      |tot AS (SELECT (SELECT SUM(rc) FROM rawc) AS cr,
-      |               (SELECT COALESCE(SUM(tc), 0) FROM tgtc) AS ct),
-      |ratios AS (SELECT r.bucket,
-      |    ln(COALESCE(t.tc, 0) + 1) - ln((SELECT ct FROM tot) + 256.0)
-      |    - ln(r.rc + 1) + ln((SELECT cr FROM tot) + 256.0) AS lr
-      |  FROM rawc r LEFT JOIN tgtc t ON r.bucket = t.bucket),
-      |perdoc AS (SELECT gb.doc_id, SUM(rt.lr) AS w
-      |  FROM gb JOIN ratios rt USING (bucket) GROUP BY gb.doc_id),
-      |weights AS (SELECT d.doc_id, COALESCE(p.w, 0.0) AS w
-      |  FROM documents d LEFT JOIN perdoc p ON d.doc_id = p.doc_id)""".stripMargin
-
-  /** DuckDB replay of [[graft.ops.Dsir.gumbelNoise]] for q101b: the first
-    * 8 md5 nibbles of `seed:id` decoded digit-by-digit (no hex→int cast in
-    * either engine's contract), then the double-log Gumbel transform.
-    */
-  private def dsirGumbelSql(seed: Long): String = {
-    val h = s"substr(md5('$seed:' || CAST(doc_id AS VARCHAR)), 1, 8)"
-    val v = (1 to 8).map { j =>
-      val scale = java.lang.Math.pow(16.0, (8 - j).toDouble).toLong
-      s"(strpos('0123456789abcdef', substr($h, $j, 1)) - 1) * $scale.0"
-    }.mkString("(", " + ", ")")
-    s"-ln(-ln(($v + 0.5) / 4294967296.0))"
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_arith" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_extendedprice * (1 - l_discount) AS revenue,
-        |  l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charge,
-        |  l_quantity - 10 AS qdiff,
-        |  l_quantity / 2 AS half_q,
-        |  -l_discount AS neg_disc,
-        |  power(2, l_linenumber) AS pow2
-        |FROM lineitem""".stripMargin,
-    "q02_logic" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  (l_quantity >= 30 AND l_discount < 0.05) AS is_big,
-        |  (l_returnflag = 'R') AS is_r,
-        |  (l_returnflag = 'R' OR l_linestatus = 'F') AS flag_or,
-        |  NOT (l_quantity >= 30) AS not_big,
-        |  (l_returnflag <> l_linestatus) AS neq,
-        |  least(l_quantity, l_extendedprice) AS minv,
-        |  greatest(l_quantity, l_extendedprice) AS maxv,
-        |  (l_quantity + l_extendedprice + l_discount) / 3 AS meanv
-        |FROM lineitem""".stripMargin,
-    "q03_conditional" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderstatus = 'O' THEN 'open'
-        |       WHEN o_orderstatus = 'F' THEN 'final'
-        |       ELSE 'partial' END AS status_desc,
-        |  CASE WHEN o_totalprice > 150000 THEN o_totalprice END AS maybe_high,
-        |  coalesce(CASE WHEN o_totalprice > 150000 THEN o_totalprice END, 0) AS high_or_zero
-        |FROM orders""".stripMargin,
-    "q04_strings" ->
-      """SELECT p_partkey,
-        |  CAST(length(p_name) AS BIGINT) AS name_len,
-        |  substr(p_name, 1, 8) AS name_start,
-        |  right(p_name, 4) AS name_end,
-        |  p_brand || '#' || CAST(p_size AS VARCHAR) AS brand_sz,
-        |  array_to_string(string_split(p_type, ' '), ',') AS type_words,
-        |  substr(p_name, 1, 3) AS first3
-        |FROM part""".stripMargin,
-    "q05_regex" ->
-      """SELECT o_orderkey,
-        |  TRY_CAST(regexp_extract(o_orderpriority, '^(\d+)-', 1) AS INTEGER) AS prio_num,
-        |  regexp_matches(o_orderpriority, 'URGENT') AS is_urgent,
-        |  CASE WHEN regexp_matches(o_orderpriority, '[A-Z]+$')
-        |       THEN regexp_extract(o_orderpriority, '[A-Z]+$') END AS prio_word
-        |FROM orders""".stripMargin,
-    "q06_cast" ->
-      """SELECT c_custkey,
-        |  CAST(c_custkey AS VARCHAR) AS key_str,
-        |  CAST(CAST(c_custkey AS VARCHAR) AS BIGINT) AS key_back,
-        |  TRY_CAST(c_mktsegment AS INTEGER) AS seg_int_null,
-        |  CAST(c_nationkey AS BIGINT) AS nation_long,
-        |  CAST(c_nationkey AS SMALLINT) AS nation_short
-        |FROM customer""".stripMargin,
-    "q07_datetime" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |  CAST(month(o_orderdate) AS BIGINT) AS mo,
-        |  CAST(day(o_orderdate) AS BIGINT) AS dom,
-        |  CAST(isodow(o_orderdate) AS BIGINT) AS dow,
-        |  CAST(dayofyear(o_orderdate) AS BIGINT) AS doy,
-        |  CAST(week(o_orderdate) AS BIGINT) AS wk,
-        |  CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-        |  CAST(hour(o_orderdate) AS BIGINT) AS hr
-        |FROM orders""".stripMargin,
-    "q08_duration" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  date_diff('second', TIMESTAMP '1990-01-01', l_shipdate) AS age_secs,
-        |  CAST(floor(date_diff('second', TIMESTAMP '1990-01-01', l_shipdate) / 3600.0) AS BIGINT) AS age_hours,
-        |  CAST(floor(date_diff('second', TIMESTAMP '1990-01-01', l_shipdate) / 86400.0) AS BIGINT) AS age_days,
-        |  date_diff('microsecond', TIMESTAMP '1990-01-01', l_shipdate) * 1000 AS age_ns,
-        |  l_shipdate + INTERVAL 7 DAY AS plus_week
-        |FROM lineitem""".stripMargin,
-    "q09_strptime" ->
-      """SELECT o_orderkey,
-        |  CAST(o_orderdate AS VARCHAR) AS date_str,
-        |  strptime(CAST(o_orderdate AS VARCHAR), '%Y-%m-%d %H:%M:%S') AS reparsed,
-        |  CAST(strptime(substr(CAST(o_orderdate AS VARCHAR), 1, 10), '%Y-%m-%d') AS DATE) AS date_only
-        |FROM orders""".stripMargin,
-    "q10_settime" ->
-      """SELECT o_orderkey,
-        |  CAST(o_orderdate AS DATE) + TIME '11:30:00' AS at_1130
-        |FROM orders""".stripMargin,
-    "q11_units" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(CAST(l_quantity AS INTEGER) * 60 AS BIGINT) AS qty_min_secs,
-        |  CAST(CAST(l_quantity AS INTEGER) * 60 AS BIGINT) AS qty_hr_mins,
-        |  CAST(CAST(l_quantity AS INTEGER) AS BIGINT) * 2629800 AS qty_mo_secs,
-        |  CAST(CAST(l_quantity AS INTEGER) AS BIGINT) * 31557600 AS qty_yr_secs,
-        |  CAST(CAST(l_quantity AS INTEGER) AS BIGINT) * 1000 AS qty_ms_us,
-        |  make_date(l_linenumber + 1990, 1, 1) AS ln_year
-        |FROM lineitem""".stripMargin,
-    // The oracle states each structural hash property from the *input* side
-    // (hash(x) IS NULL ⟺ x IS NULL; determinism; sensitivity), so it holds
-    // for any engine's hash bits. The `?? -1` sentinel on the Spark side can
-    // only misfire if a real hash equals -1 (p ≈ n/2^64 — negligible and
-    // deterministic).
-    "q12b_hash_props" ->
-      """SELECT c_custkey,
-        |  (TRY_CAST(c_mktsegment AS INTEGER) IS NULL) AS null_in_null_out,
-        |  (c_acctbal <= 0) AS null_guard,
-        |  TRUE AS det,
-        |  TRUE AS sdet,
-        |  TRUE AS differs
-        |FROM customer""".stripMargin,
-    "q13_dedup_exact" ->
-      """SELECT doc_id,
-        |  doc_id <> min(doc_id) OVER (PARTITION BY text) AS is_dup
-        |FROM documents""".stripMargin,
-    // lang_id replays the FULL LangModel linear classifier: token scores
-    // via a VALUES join over the shared feature table, char-range scores
-    // as RE2 class counts, argmax with the canonical tie-break order.
-    "q14_textstats" -> {
-      val langs = graft.ops.expr.LangModel.Langs
-      val pivotCols = langs.map(l =>
-        s"coalesce(sum(CASE WHEN lang = '$l' THEN s END), 0) AS t_$l")
-        .mkString(",\n         |    ")
-      val scoreCols = langs.map(l =>
-        s"coalesce(tp.t_$l, 0) + ${langCharScoreSql(l)} AS s_$l")
-        .mkString(",\n         |    ")
-      val bestExpr = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
-      val caseChain = langs.map(l => s"WHEN s_$l = best AND best > 0 THEN '$l'")
-        .mkString("\n         |    ")
-      s"""WITH lt AS (
-         |  SELECT doc_id,
-         |    unnest(list_filter(string_split_regex(lower(text), '$wsClassSql'), t -> t <> '')) AS tok
-         |  FROM documents
-         |), fw AS (
-         |  SELECT * FROM (VALUES $langTokenValuesSql) v(tok, lang, w)
-         |), tsc AS (
-         |  SELECT doc_id, lang, sum(w) AS s FROM lt JOIN fw USING (tok) GROUP BY doc_id, lang
-         |), tp AS (
-         |  SELECT doc_id,
-         |    $pivotCols
-         |  FROM tsc GROUP BY doc_id
-         |), sc AS (
-         |  SELECT d.doc_id, d.text, d.n_chars,
-         |    $scoreCols
-         |  FROM documents d LEFT JOIN tp ON d.doc_id = tp.doc_id
-         |), b AS (
-         |  SELECT *, $bestExpr AS best FROM sc
-         |)
-         |SELECT doc_id,
-         |  CAST(length(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')) AS BIGINT) AS tok_ws,
-         |  CAST(length(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]')) AS BIGINT) AS tok_bpe,
-         |  round(CASE WHEN length(text) = 0 THEN 0.0
-         |        ELSE CAST(length(regexp_extract_all(text, '[^\\w \\t\\n\\x0B\\f\\r]')) AS DOUBLE) / length(text) END, 6) AS punct_ratio,
-         |  round(CASE WHEN length(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')) = 0 THEN 0.0
-         |        ELSE CAST(length(list_intersect(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> ''), $stopListSql)) AS DOUBLE)
-         |             / length(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')) END, 6) AS stop_ratio,
-         |  CASE
-         |    $caseChain
-         |    ELSE 'und' END AS lang_id,
-         |  round(least(1.0, n_chars / 500.0) * 0.4
-         |      + least(1.0, (CASE WHEN length(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')) = 0 THEN 0.0
-         |          ELSE CAST(length(list_intersect(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> ''), $stopListSql)) AS DOUBLE)
-         |               / length(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')) END) * 4.0) * 0.4
-         |      + greatest(0.0, 1.0 - (CASE WHEN length(text) = 0 THEN 0.0
-         |          ELSE CAST(length(regexp_extract_all(text, '[^\\w \\t\\n\\x0B\\f\\r]')) AS DOUBLE) / length(text) END) * 5.0) * 0.2, 6) AS quality
-         |FROM b""".stripMargin
-    },
-    "q15_ann_scores" ->
-      s"""SELECT vec_id,
-         |  round(CASE WHEN list_sum(list_apply(embedding, x -> CAST(x AS DOUBLE) * x)) = 0
-         |             THEN 0.0
-         |             ELSE list_cosine_similarity(embedding::DOUBLE[], $annVecSql::DOUBLE[]) END, 6) AS score
-         |FROM embeddings""".stripMargin,
-    "q16_ann_topk" ->
-      s"""SELECT vec_id,
-         |  round(list_cosine_similarity(embedding::DOUBLE[], $annVecSql::DOUBLE[]), 6) AS score
-         |FROM embeddings
-         |ORDER BY list_cosine_similarity(embedding::DOUBLE[], $annVecSql::DOUBLE[]) DESC, vec_id
-         |LIMIT 20""".stripMargin,
-    // q60 provably equals the brute-force top-20 (full probe + full refine,
-    // exact re-score) — same oracle as q16.
-    "q60_pq_topk" ->
-      s"""SELECT vec_id,
-         |  round(list_cosine_similarity(embedding::DOUBLE[], $annVecSql::DOUBLE[]), 6) AS score
-         |FROM embeddings
-         |ORDER BY list_cosine_similarity(embedding::DOUBLE[], $annVecSql::DOUBLE[]) DESC, vec_id
-         |LIMIT 20""".stripMargin,
-    "q19_cosine_neardup" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.40""".stripMargin,
-    "q21_events" ->
-      """SELECT event_id,
-        |  TRY_CAST(regexp_extract(props, '"k": (\d+)', 1) AS INTEGER) AS k_val,
-        |  (event_type = 'error') AS is_err,
-        |  CAST(hour(ts) AS BIGINT) AS ev_hour,
-        |  CAST(minute(ts) AS BIGINT) AS ev_min,
-        |  CAST(second(ts) AS BIGINT) AS ev_sec,
-        |  date_diff('microsecond', TIMESTAMP '2024-01-01', ts) AS ev_us,
-        |  CAST(floor(date_diff('microsecond', TIMESTAMP '2024-01-01', ts) / 1000.0) AS BIGINT) AS ev_ms
-        |FROM events""".stripMargin,
-    "q25_range" ->
-      """WITH purchases AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-        |), wins AS (
-        |  SELECT event_id AS signup_id, user_id, ts AS w_start,
-        |         ts + INTERVAL 2 DAY AS w_end
-        |  FROM events WHERE event_type = 'signup'
-        |)
-        |SELECT p.event_id, w.signup_id
-        |FROM purchases p JOIN wins w
-        |  ON p.user_id = w.user_id AND p.ts >= w.w_start AND p.ts <= w.w_end""".stripMargin,
-    "q24_asof" ->
-      """WITH purchases AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-        |), signups AS (
-        |  SELECT event_id AS signup_id, user_id, ts FROM events WHERE event_type = 'signup'
-        |)
-        |SELECT p.event_id, s.signup_id
-        |FROM purchases p ASOF LEFT JOIN signups s
-        |  ON p.user_id = s.user_id AND p.ts >= s.ts""".stripMargin,
-    "q26_quality" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), t -> t <> '') AS toks
-        |  FROM documents
-        |), ng AS (
-        |  SELECT doc_id, toks,
-        |    CASE WHEN len(toks) < 2 THEN []
-        |         ELSE [array_to_string(toks[i:i+1], ' ') for i in generate_series(1, len(toks)-1)]
-        |    END AS grams
-        |  FROM tk
-        |), sig AS (
-        |  SELECT doc_id, len(toks) AS ntok,
-        |    CASE WHEN len(grams) = 0 THEN 0.0
-        |         ELSE list_max([len(list_filter(grams, g -> g = x)) for x in list_distinct(grams)])::DOUBLE
-        |              / len(grams) END AS rep2,
-        |    CASE WHEN len(toks) = 0 THEN 0.0
-        |         ELSE list_sum([length(t) for t in toks])::DOUBLE / len(toks) END AS mwl
-        |  FROM ng
-        |)
-        |SELECT doc_id, CAST(ntok AS BIGINT) AS token_count,
-        |  round(rep2, 6) AS rep2, round(mwl, 6) AS mean_wlen,
-        |  (ntok BETWEEN 20 AND 1000000 AND rep2 < 0.05 AND mwl BETWEEN 3.0 AND 10.0) AS keep
-        |FROM sig""".stripMargin,
-    "q27_quota" ->
-      s"""WITH scored AS (
-         |  SELECT source, doc_id,
-         |    round(least(1.0, n_chars / 500.0) * 0.4
-         |      + least(1.0, (CASE WHEN length(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')) = 0 THEN 0.0
-         |          ELSE CAST(length(list_intersect(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> ''), $stopListSql)) AS DOUBLE)
-         |               / length(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')) END) * 4.0) * 0.4
-         |      + greatest(0.0, 1.0 - (CASE WHEN length(text) = 0 THEN 0.0
-         |          ELSE CAST(length(regexp_extract_all(text, '[^\\w \\t\\n\\x0B\\f\\r]')) AS DOUBLE) / length(text) END) * 5.0) * 0.2, 6) AS q
-         |  FROM documents
-         |)
-         |SELECT source, doc_id FROM (
-         |  SELECT source, doc_id,
-         |    row_number() OVER (PARTITION BY source ORDER BY q DESC, doc_id) AS rn
-         |  FROM scored
-         |) WHERE rn <= 3""".stripMargin,
-    "q28_split" ->
-      """SELECT * FROM (VALUES ('test', TRUE), ('train', TRUE), ('val', TRUE))
-        |  AS v(split, frac_ok)""".stripMargin,
-    "q29_jaccard_pairs" ->
-      s"""WITH $shingleCteSql
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  round(len(list_intersect(a.grams, b.grams))::DOUBLE
-         |        / len(list_distinct(list_concat(a.grams, b.grams))), 6) AS jaccard
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE len(list_distinct(list_concat(a.grams, b.grams))) > 0
-         |  AND len(list_intersect(a.grams, b.grams))::DOUBLE
-         |      / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.5""".stripMargin,
-    // The oracle asserts TRUE for exactly the q29 pair set: the estimate
-    // bound is the Spark-side claim, the pair membership is DuckDB's.
-    "q17b_minhash_est" ->
-      s"""WITH $shingleCteSql
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, TRUE AS est_ok
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE len(list_distinct(list_concat(a.grams, b.grams))) > 0
-         |  AND len(list_intersect(a.grams, b.grams))::DOUBLE
-         |      / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.5""".stripMargin,
-    "q39_chunks" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> '') AS toks
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0
-        |)
-        |SELECT doc_id, unnest([{
-        |    'chunk_idx': i,
-        |    'chunk': array_to_string(toks[(i*48+1):(i*48+64)], ' '),
-        |    'n_tokens': least(64, n - i*48)::BIGINT
-        |  } for i in generate_series(0, greatest(0, ceil((n - 64)/48.0))::BIGINT)],
-        |  recursive := true)
-        |FROM c""".stripMargin,
-    "q40_bm25" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> '')) AS token
-        |  FROM documents
-        |), lens AS (
-        |  SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id
-        |), tf AS (
-        |  SELECT doc_id, token, count(*) AS tf FROM toks
-        |  WHERE token IN ('the', 'data', 'model') GROUP BY doc_id, token
-        |), dfreq AS (
-        |  SELECT token, count(*) AS df FROM tf GROUP BY token
-        |), stats AS (
-        |  SELECT count(*) AS n,
-        |    avg(len(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> ''))) AS avgdl
-        |  FROM documents
-        |)
-        |SELECT tf.doc_id,
-        |  round(sum(ln(1 + (stats.n - dfreq.df + 0.5)/(dfreq.df + 0.5))
-        |      * tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + 0.75 * lens.dl / stats.avgdl))), 6) AS bm25
-        |FROM tf JOIN dfreq USING (token) JOIN lens USING (doc_id) CROSS JOIN stats
-        |GROUP BY tf.doc_id""".stripMargin,
-    // mean on BOTH sides: exact decimal sum → one double division — the
-    // pre-round double is bit-identical (IEEE division of identical
-    // operands), so round(...,6) can never split on a half boundary the
-    // way partition-ordered double avg() sums can (l_discount's true mean
-    // is exactly 0.0499185 — a round-half landmine)
-    "q41_profile" -> Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      .map(c =>
-        s"""SELECT '$c' AS "column", count($c) AS n,
-           |  sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END)::BIGINT AS nulls,
-           |  round(sum($c::DECIMAL(38,12))::DOUBLE / count($c), 6) AS mean,
-           |  min($c)::DOUBLE AS min, max($c)::DOUBLE AS max,
-           |  round(quantile_cont($c, 0.25), 6) AS p25,
-           |  round(quantile_cont($c, 0.5), 6) AS p50,
-           |  round(quantile_cont($c, 0.75), 6) AS p75
-           |FROM lineitem""".stripMargin)
-      .mkString("\nUNION ALL\n"),
-    "q42_semantic_dedup" ->
-      """WITH RECURSIVE pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.40
-        |), edges AS (
-        |  SELECT id_a AS u, id_b AS v FROM pairs
-        |  UNION
-        |  SELECT id_b AS u, id_a AS v FROM pairs
-        |), reach AS (
-        |  SELECT u AS v, u AS r FROM edges
-        |  UNION
-        |  SELECT u AS v, v AS r FROM edges
-        |  UNION
-        |  SELECT reach.v AS v, e.v AS r FROM reach JOIN edges e ON e.u = reach.r
-        |), comp AS (
-        |  SELECT v, min(r) AS comp FROM reach GROUP BY v
-        |)
-        |SELECT e.vec_id, coalesce(c.comp, e.vec_id) AS cluster,
-        |  e.vec_id = coalesce(c.comp, e.vec_id) AS keep
-        |FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.v""".stripMargin,
-    "q45_global_index" ->
-      """SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS pos
-        |FROM documents""".stripMargin,
-    "q48_cluster_shuffle" ->
-      """SELECT g AS id, (g // 16) * 16 AS component
-        |FROM generate_series(0, 49999) t(g)""".stripMargin,
-    "q18b_fingerprint_props" ->
-      "SELECT doc_id, TRUE AS ok FROM documents",
-    "q19c_cosine_lsh_props" ->
-      """WITH nz AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  WHERE list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
-        |), ee AS (
-        |  SELECT vec_id, embedding FROM nz
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding FROM nz
-        |)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b, TRUE AS ok
-        |FROM ee a JOIN ee b ON a.embedding = b.embedding AND a.vec_id < b.vec_id""".stripMargin,
-    "q19d_cosine_lsh_auto_props" ->
-      """WITH nz AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  WHERE list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
-        |), ee AS (
-        |  SELECT vec_id, embedding FROM nz
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding FROM nz
-        |)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b, TRUE AS ok
-        |FROM ee a JOIN ee b ON a.embedding = b.embedding AND a.vec_id < b.vec_id""".stripMargin,
-    "q31b_ivf_pairs_props" ->
-      """WITH nz AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  WHERE list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
-        |), ee AS (
-        |  SELECT vec_id, embedding FROM nz
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding FROM nz
-        |)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b, TRUE AS ok
-        |FROM ee a JOIN ee b ON a.embedding = b.embedding AND a.vec_id < b.vec_id""".stripMargin,
-    "q31c_ivf_quant_props" ->
-      """WITH nz AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  WHERE list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
-        |), ee AS (
-        |  SELECT vec_id, embedding FROM nz
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding FROM nz
-        |)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b, TRUE AS ok
-        |FROM ee a JOIN ee b ON a.embedding = b.embedding AND a.vec_id < b.vec_id""".stripMargin,
-    "q23c_multimodal_props" ->
-      "SELECT doc_id AS media_id, TRUE AS ok FROM documents",
-    "q23d_av_props" ->
-      "SELECT doc_id AS media_id, TRUE AS ok FROM documents",
-    "q51_token_budget" ->
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    len(list_filter(string_split_regex(text, '$wsClassSql'), x -> x <> ''))::BIGINT AS tc
-         |  FROM documents
-         |), c AS (
-         |  SELECT doc_id, tc,
-         |    sum(tc) OVER (ORDER BY tc DESC, doc_id
-         |                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS runsum
-         |  FROM t
-         |)
-         |SELECT doc_id, tc FROM c WHERE runsum <= 10000""".stripMargin,
-    "q50b_e2e_props" ->
-      s"""WITH kept AS (
-         |  SELECT DISTINCT text,
-         |    len(list_filter(string_split_regex(text, '$wsClassSql'), x -> x <> ''))::BIGINT AS n
-         |  FROM documents
-         |)
-         |SELECT unnest(range(0,
-         |  (SELECT ((sum(n) + 127) // 128)::BIGINT FROM kept WHERE n >= 5))) AS seq_id,
-         |  TRUE AS ok""".stripMargin,
-    "q20b_simhash_props" ->
-      """WITH dd AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, TRUE AS ok
-        |FROM dd a JOIN dd b ON a.text = b.text AND a.doc_id < b.doc_id""".stripMargin,
-    // hand-derived per the published PSL algorithm:
-    //   co.uk/co.il/com.pl/github.io normal rules → suffix + 1 label;
-    //   *.ck makes bar.ck a suffix → foo.bar.ck; !www.ck beats it → www.ck;
-    //   unlisted com/org fall to the implicit * (last label);
-    //   a host that IS a suffix and a single label pass through
-    "q77_psl_domain" ->
-      """SELECT hid::BIGINT AS hid, rdomain FROM (VALUES
-        |  (1, 'example.co.uk'),
-        |  (2, 'example.co.il'),
-        |  (3, 'blog.github.io'),
-        |  (4, 'foo.bar.ck'),
-        |  (5, 'www.ck'),
-        |  (6, 'www.ck'),
-        |  (7, 'example.com'),
-        |  (8, 'keta.jp'),
-        |  (9, 'co.uk'),
-        |  (10, 'localhost'),
-        |  (11, 'y.com.pl'),
-        |  (12, 'example.org')) t(hid, rdomain)""".stripMargin,
-    // identical-image floor WITHIN the streaming horizon: event time is
-    // doc_id%1e6 minutes, horizon 10 — planted pairs share it exactly;
-    // organic far-apart duplicate texts are outside the dedup contract
-    "q80_stream_media_e2e" ->
-      """WITH dd AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents
-        |), ev AS (
-        |  SELECT doc_id, text,
-        |    (doc_id % 1000000) + CASE WHEN doc_id >= 1000000 THEN 2 ELSE 0 END AS m
-        |  FROM dd
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, TRUE AS ok
-        |FROM ev a JOIN ev b
-        |  ON a.text = b.text AND a.doc_id < b.doc_id AND abs(a.m - b.m) <= 8""".stripMargin,
-    // identical-contour floor: same construction as q76; the shifted copy
-    // is the same signal at exactly half gain (contour bit-identical by
-    // the power-of-two-scaling argument in renderTestWav)
-    "q78_audio_neardup" ->
-      """WITH dd AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, TRUE AS ok
-        |FROM dd a JOIN dd b ON a.text = b.text AND a.doc_id < b.doc_id""".stripMargin,
-    // identical-frames floor: byte-identical MJPEG ⇒ identical majority
-    // signature ⇒ hamming 0
-    "q79_video_neardup" ->
-      """WITH dd AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, TRUE AS ok
-        |FROM dd a JOIN dd b ON a.text = b.text AND a.doc_id < b.doc_id""".stripMargin,
-    // identical-image floor: every text-identical pair must be reported
-    // (same construction and guarantee as q20b — the planted duplicate
-    // has byte-identical pixels, hamming 0)
-    "q76_phash_neardup" ->
-      """WITH dd AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, TRUE AS ok
-        |FROM dd a JOIN dd b ON a.text = b.text AND a.doc_id < b.doc_id""".stripMargin,
-    "q49_redact" -> {
-      val injected = "text || ' contact user' || doc_id || '@example.com via 10.0.' " +
-        "|| (doc_id % 250) || '.17 or 555-123-4567'"
-      val redacted = graft.ops.Corpus.PiiPatterns.foldLeft(s"($injected)") {
-        case (e, (pattern, token)) => s"regexp_replace($e, '$pattern', '$token', 'g')"
-      }
-      s"SELECT doc_id, $redacted AS clean FROM documents"
-    },
-    // The packing definition computed relationally: token counts in doc_id
-    // order, exclusive running sum = each doc's first global token slot,
-    // one fragment per overlapped 128-token sequence.
-    // DuckDB strlen() is UTF-8 BYTE length (length() is chars) — exactly
-    // the empty-merge-table BPE count.
-    "q54_bpe_bytes" ->
-      "SELECT doc_id, strlen(text)::BIGINT AS n_bytes FROM documents",
-    // Reference counts hand-derived from the fixture merge table (see
-    // BpeSpec for the per-string derivations):
-    //   1 "hello world" → [hello][ world] = 2
-    //   2 "hello" → 1;  3 "hell or ld" → [hell]+[Ġ,or]+[Ġ,ld] = 5
-    //   4 "Hello" → [H,e,ll,o] = 4 (byte-level: H ≠ h)
-    //   5 "it's" → [i,t]+[',s] = 4;  6 "é" → 2 UTF-8 bytes
-    //   7 "a  b" → [a]+[ ]+[ b] = 4 (\s+(?!\S) leaves last space attached)
-    //   8 "hellohello world world" → [hello,hello]+[ world]+[ world] = 4
-    "q54b_bpe_merges" ->
-      """SELECT tid::BIGINT AS tid, n_tokens::BIGINT AS n_tokens
-        |FROM (VALUES (1, 2), (2, 1), (3, 5), (4, 4), (5, 4), (6, 2),
-        |             (7, 4), (8, 4)) t(tid, n_tokens)""".stripMargin,
-    // id derivations: "hello"→259 (he,ll,hell,hello chain), " world"→264;
-    // "hell"=258, " or"=[Ġ=220, or=261], " ld"=[220, ld=263]; "Hello" has
-    // no h-e merge (case) → [H=39, e=68, ll=257, o=78]; "it's" pre-token
-    // split [i=72,t=83] + ['=6, s=82]; "é" = UTF-8 C3 A9 → printable-order
-    // ids [127, 102]; "a  b" → [a=64, Ġ=220, Ġ=220, b=65]
-    "q54d_bpe_encode" ->
-      """SELECT tid::BIGINT AS tid,
-        |  array_to_string(ids, ',') AS ids_csv,
-        |  len(ids)::BIGINT AS n_ids
-        |FROM (VALUES
-        |  (1, [259, 264]),
-        |  (2, [259]),
-        |  (3, [258, 220, 261, 220, 263]),
-        |  (4, [39, 68, 257, 78]),
-        |  (5, [72, 83, 6, 82]),
-        |  (6, [127, 102]),
-        |  (7, [64, 220, 220, 65]),
-        |  (8, [259, 259, 264, 264])) t(tid, ids)""".stripMargin,
-    // q54d's id sequences under the +1000-offset fixture vocab
-    "q54e_bpe_vocab_ids" ->
-      """SELECT tid::BIGINT AS tid,
-        |  array_to_string(ids, ',') AS ids_csv,
-        |  len(ids)::BIGINT AS n_ids
-        |FROM (VALUES
-        |  (1, [1259, 1264]),
-        |  (2, [1259]),
-        |  (3, [1258, 1220, 1261, 1220, 1263]),
-        |  (4, [1039, 1068, 1257, 1078]),
-        |  (5, [1072, 1083, 1006, 1082]),
-        |  (6, [1127, 1102]),
-        |  (7, [1064, 1220, 1220, 1065]),
-        |  (8, [1259, 1259, 1264, 1264])) t(tid, ids)""".stripMargin,
-    // q46's replay with the slot unit swapped to strlen bytes, cut at 256.
-    "q54c_bpe_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, strlen(text)::BIGINT AS n FROM documents
-        |), nz AS (
-        |  SELECT doc_id, n,
-        |    (sum(n) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n)::BIGINT AS cum
-        |  FROM t WHERE n > 0
-        |), f AS (
-        |  SELECT doc_id, n, cum,
-        |    unnest(generate_series(cum // 256, (cum + n - 1) // 256)) AS seq_id
-        |  FROM nz
-        |)
-        |SELECT doc_id, seq_id,
-        |  (greatest(cum, seq_id * 256) - seq_id * 256)::BIGINT AS seq_offset,
-        |  (greatest(cum, seq_id * 256) - cum)::BIGINT AS doc_offset,
-        |  (least(cum + n, (seq_id + 1) * 256) - greatest(cum, seq_id * 256))::BIGINT AS n_tokens
-        |FROM f""".stripMargin,
-    "q46_packing" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> ''))::BIGINT AS n
-        |  FROM documents
-        |), nz AS (
-        |  SELECT doc_id, n,
-        |    (sum(n) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n)::BIGINT AS cum
-        |  FROM t WHERE n > 0
-        |), f AS (
-        |  SELECT doc_id, n, cum,
-        |    unnest(generate_series(cum // 128, (cum + n - 1) // 128)) AS seq_id
-        |  FROM nz
-        |)
-        |SELECT doc_id, seq_id,
-        |  (greatest(cum, seq_id * 128) - seq_id * 128)::BIGINT AS seq_offset,
-        |  (greatest(cum, seq_id * 128) - cum)::BIGINT AS doc_offset,
-        |  (least(cum + n, (seq_id + 1) * 128) - greatest(cum, seq_id * 128))::BIGINT AS n_tokens
-        |FROM f""".stripMargin,
-    // Window positions are 1-based here (generate_series/list slicing) vs
-    // 0-based in Spark — positions never cross engines, only the masked
-    // text does, and the coverage predicate `p <= j < p + 8` is consistent
-    // within each side.
-    "q52_substring_mask" ->
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(text, '$wsClassSql'), x -> x <> '') AS toks
-         |  FROM documents
-         |), w AS (
-         |  SELECT doc_id, unnest([{'pos': i, 'win': array_to_string(toks[i:i+7], ' ')}
-         |                         for i in generate_series(1, len(toks) - 7)],
-         |                        recursive := true)
-         |  FROM t WHERE len(toks) >= 8
-         |), rep AS (
-         |  SELECT win FROM w GROUP BY win HAVING count(*) >= 2
-         |), occ AS (
-         |  SELECT w.doc_id, w.pos FROM w JOIN rep USING (win)
-         |), perdoc AS (
-         |  SELECT doc_id, list(pos) AS rpos, count(*) AS nrep FROM occ GROUP BY doc_id
-         |), m AS (
-         |  SELECT t.doc_id, len(toks) AS ntok, coalesce(nrep, 0) AS nrep,
-         |    [toks[j] for j in generate_series(1, len(toks))
-         |     if len(list_filter(coalesce(rpos, []), p -> p <= j AND j < p + 8)) = 0] AS kept
-         |  FROM t LEFT JOIN perdoc USING (doc_id)
-         |)
-         |SELECT doc_id,
-         |  -- array_to_string is a string_agg: NULL on an empty kept list,
-         |  -- where the Spark kernel builds '' — coalesce aligns them
-         |  coalesce(array_to_string(kept, ' '), '') AS text_clean,
-         |  nrep::BIGINT AS n_repeated_windows,
-         |  (ntok - len(kept))::BIGINT AS n_tokens_removed
-         |FROM m""".stripMargin,
-    // Roundtrip identity: if the gzip-JSONL write+read preserved every row
-    // and byte, the result is exactly the source table's projection.
-    "q53_jsonl" ->
-      "SELECT doc_id, text FROM documents",
-    "q98_csv_roundtrip" ->
-      """SELECT doc_id,
-        |  regexp_replace(text, '[\n\r]', ' ', 'g') AS text
-        |FROM documents""".stripMargin,
-    // Same roundtrip identity over the mixed gz+zst+corrupt directory: the
-    // drop policy must recover exactly the clean rows regardless of codec.
-    "q53b_jsonl_zst" ->
-      "SELECT doc_id, text FROM documents",
-    // The streaming e2e replayed relationally: dedup = DISTINCT (the
-    // planted duplicates are byte-identical), sessionize = gaps-and-islands
-    // with Spark's tie rule (a gap of EXACTLY 30 min starts a new session:
-    // merge only when next_ts < last_ts + gap), session_end = last + gap.
-    "q56_stream_e2e" ->
-      """WITH d AS (
-        |  SELECT DISTINCT event_id, ts, user_id FROM events
-        |), x AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |), g AS (
-        |  SELECT user_id, ts,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS sid
-        |  FROM x
-        |)
-        |SELECT user_id,
-        |  epoch_us(min(ts)) AS session_start_us,
-        |  epoch_us(max(ts) + INTERVAL 30 MINUTE) AS session_end_us,
-        |  count(*)::BIGINT AS n_events,
-        |  epoch_us(min(ts)) AS first_us,
-        |  epoch_us(max(ts)) AS last_us
-        |FROM g GROUP BY user_id, sid""".stripMargin,
-    // The mojibake roundtrips: the oracle never sees the corruption — the
-    // engine-side misdecode must be inverted exactly, so expected output is
-    // just clean text + the (quote-free) suffix constant, spliced verbatim.
-    "q55_fix_encoding" ->
-      s"SELECT doc_id, text || '$MojibakeSuffix' AS fixed FROM documents",
-    "q55b_fix_encoding_double" ->
-      s"SELECT doc_id, text || '$MojibakeSuffix' AS fixed FROM documents",
-    "q55c_fix_encoding_cp1252" -> {
-      val rows = MojibakeCases
-        .map { case (tid, _, exp) => s"($tid, '$exp')" }.mkString(", ")
-      s"SELECT tid::BIGINT AS tid, fixed FROM (VALUES $rows) t(tid, fixed)"
-    },
-    "q47_decontam" ->
-      s"""WITH ${shingleCteSqlN(8, "sh8")},
-         |tg AS (SELECT doc_id, unnest(grams) AS g FROM sh8),
-         |eg AS (SELECT DISTINCT unnest(grams) AS g FROM sh8 WHERE doc_id % 7 = 0),
-         |hits AS (SELECT DISTINCT tg.doc_id FROM tg JOIN eg USING (g))
-         |SELECT d.doc_id, (h.doc_id IS NOT NULL) AS contaminated
-         |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id""".stripMargin,
-    "q81_contamination_frac" ->
-      s"""WITH ${shingleCteSqlN(8, "sh8")},
-         |eg AS (SELECT doc_id, unnest(grams) AS g FROM sh8 WHERE doc_id % 7 = 0),
-         |tg AS (SELECT DISTINCT unnest(grams) AS g FROM sh8 WHERE doc_id % 7 <> 0),
-         |per AS (
-         |  SELECT eg.doc_id, count(*) AS n_grams, count(tg.g) AS n_seen
-         |  FROM eg LEFT JOIN tg ON eg.g = tg.g
-         |  GROUP BY eg.doc_id
-         |)
-         |SELECT d.doc_id AS eval_id,
-         |  coalesce(per.n_grams, 0)::BIGINT AS n_grams,
-         |  coalesce(per.n_seen, 0)::BIGINT AS n_seen,
-         |  CASE WHEN coalesce(per.n_grams, 0) = 0 THEN 0.0
-         |       ELSE per.n_seen::DOUBLE / per.n_grams END AS contamination
-         |FROM (SELECT doc_id FROM documents WHERE doc_id % 7 = 0) d
-         |LEFT JOIN per ON d.doc_id = per.doc_id""".stripMargin,
-    // Hamming-0 pairs are exactly the planted (id, id + 10⁹) copies: the
-    // oracle derives the pair set arithmetically — it cannot compute
-    // Spark's xxhash64, but it doesn't need to: equal keys ⇒ equal sigs
-    // (hamming 0, the floor the engine MUST find), and distinct keys
-    // colliding in xxhash64 across ~2×10⁵ rows has P ≈ 1e-9.
-    "q82_mih_collapse_gate" ->
-      """SELECT id AS id_a, id + 1000000000 AS id_b
-        |FROM (SELECT DISTINCT (l_orderkey * 10 + l_linenumber) AS id
-        |      FROM lineitem WHERE l_orderkey % 3 = 0)
-        |WHERE id % 97 = 0""".stripMargin,
-    // same identical-image floor as q76, driven through the YAML verb
-    "q83_pipeline_media_dedup" ->
-      """WITH dd AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, TRUE AS ok
-        |FROM dd a JOIN dd b ON a.text = b.text AND a.doc_id < b.doc_id""".stripMargin,
-    // Hand-derived Viterbi segmentations (derivations in UnigramSpec; id
-    // numbering documented at the query): the full expected id sequences
-    // as literal VALUES — the q54d convention for tokenizer kernels.
-    "q84_unigram_encode" ->
-      """SELECT tid::BIGINT AS tid, ids_csv, n_ids::BIGINT AS n_ids
-        |FROM (VALUES
-        |  (1, '0', 1), (2, '0,5,6', 3), (3, '1', 1), (4, '0,2', 2),
-        |  (5, '203,177', 2), (6, '114,124,48,123', 4),
-        |  (7, '0,0,5,6', 4), (8, '7,8', 2)) t(tid, ids_csv, n_ids)""".stripMargin,
-    "q84b_unigram_vocab_roundtrip" ->
-      """SELECT tid::BIGINT AS tid, ids_csv, n_ids::BIGINT AS n_ids
-        |FROM (VALUES
-        |  (1, '0', 1), (2, '0,5,6', 3), (3, '1', 1), (4, '0,2', 2),
-        |  (5, '203,177', 2), (6, '114,124,48,123', 4),
-        |  (7, '0,0,5,6', 4), (8, '7,8', 2)) t(tid, ids_csv, n_ids)""".stripMargin,
-    // byte-fallback-only vocabulary ⇒ one piece per UTF-8 byte: DuckDB's
-    // strlen is byte length (the q54 foundation check, Viterbi path)
-    "q85_unigram_bytes" ->
-      "SELECT doc_id, strlen(text)::BIGINT AS n_bytes FROM documents",
-    // Every feature of every block pinned (derivations in HtmlBlocksSpec;
-    // the shared paragraph constant is spliced into the VALUES so fixture
-    // and oracle can never drift apart)
-    "q86_html_blocks" -> {
-      val p = HtmlFixturePara
-      s"""SELECT tid::BIGINT AS tid, idx::INT AS idx, tag, in_chrome, text,
-         |  n_chars::BIGINT AS n_chars, n_words::BIGINT AS n_words,
-         |  link_density::DOUBLE AS link_density,
-         |  stop_ratio::DOUBLE AS stop_ratio, label, content
-         |FROM (VALUES
-         |  (1, 0, 'nav', TRUE, 'Home About', 10, 2, 1.0, 0.0, 'bad', FALSE),
-         |  (1, 1, 'p', FALSE, '$p', 220, 46, 0.0, 20.0/46.0, 'good', TRUE),
-         |  (1, 2, 'div', FALSE, 'Terms', 5, 1, 1.0, 0.0, 'bad', FALSE),
-         |  (2, 0, 'p', FALSE, '$p', 220, 46, 0.0, 20.0/46.0, 'good', TRUE),
-         |  (2, 1, 'p', FALSE, 'Nice short note.', 16, 3, 0.0, 0.0, 'short', TRUE),
-         |  (2, 2, 'p', FALSE, '$p', 220, 46, 0.0, 20.0/46.0, 'good', TRUE),
-         |  (3, 0, 'div', FALSE, 'A & B ’x’ costs $$5', 18, 6, 0.0, 1.0/6.0, 'short', FALSE),
-         |  (3, 1, 'div', FALSE, 'second part', 11, 2, 0.0, 0.0, 'short', FALSE)
-         |) t(tid, idx, tag, in_chrome, text, n_chars, n_words,
-         |    link_density, stop_ratio, label, content)""".stripMargin
-    },
-    "q86b_main_content" -> {
-      val p = HtmlFixturePara
-      s"""SELECT tid::BIGINT AS tid, main_text FROM (VALUES
-         |  (1, '$p'),
-         |  (2, '$p' || chr(10) || 'Nice short note.' || chr(10) || '$p'),
-         |  (3, '')) t(tid, main_text)""".stripMargin
-    },
-    // full classifier arithmetic replayed: the corpus text is single-
-    // spaced punctuation-free ASCII, so block text == text, n_chars ==
-    // length, words == the split, and the stopword ratio is a plain
-    // list_filter count. Ladder order matches HtmlContent.contextFree;
-    // kept == text iff the block classifies good (chrome neighbors are
-    // bad, so the context pass keeps exactly the goods).
-    "q87_content_classify_corpus" ->
-      """WITH f AS (
-        |  SELECT doc_id, text AS t, length(text) AS n,
-        |    string_split(text, ' ') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, t, n, len(ws) AS nw,
-        |    len(list_filter(ws, w -> list_contains(
-        |      ['the','a','an','and','or','of','to','in','is','it','that',
-        |       'for','on','with','as','at','by','be','this','are'], w)))
-        |      AS stops
-        |  FROM f)
-        |SELECT doc_id,
-        |  CASE WHEN n < 70 THEN 'short'
-        |       WHEN stops::DOUBLE / nw >= 0.12 AND n > 200 THEN 'good'
-        |       WHEN stops::DOUBLE / nw >= 0.05 THEN 'near-good'
-        |       ELSE 'bad' END AS label,
-        |  CASE WHEN n >= 70 AND stops::DOUBLE / nw >= 0.12 AND n > 200
-        |       THEN t ELSE '' END AS kept
-        |FROM g""".stripMargin,
-    // WARC round trip: every field the reader surfaces is derivable from
-    // `documents` — the writer stamps constant status/content-type, the
-    // record Content-Length is 77 fixed HTTP-chrome bytes + the digits of
-    // the body byte count + the body bytes.
-    "q88_warc_roundtrip" ->
-      """SELECT doc_id,
-        |  'https://site' || (doc_id % 50) || '.com/doc/' || doc_id AS uri,
-        |  'response' AS warc_type,
-        |  200 AS status,
-        |  'text/html; charset=UTF-8' AS ctype,
-        |  text AS body,
-        |  (77 + length(CAST(octet_length(encode(text)) AS VARCHAR))
-        |     + octet_length(encode(text)))::BIGINT AS clen,
-        |  false AS truncated
-        |FROM documents""".stripMargin,
-    // Multilingual jusText: feature + label rows hand-derived from the
-    // algorithm (same derivation style as q86). de: 45 words, 18 of them
-    // in the German function-word table (der×?/und/das/…) → ratio 0.4 ≥
-    // 0.20 and 238 chars > 200 → good; fr likewise (16/40); the English
-    // paragraph under GERMAN rules: 0 hits → bad.
-    "q86c_justext_lang" ->
-      s"""SELECT tid::BIGINT AS tid, idx::INT AS idx, tag, in_chrome, text,
-         |  n_chars::BIGINT AS n_chars, n_words::BIGINT AS n_words,
-         |  link_density::DOUBLE AS link_density,
-         |  stop_ratio::DOUBLE AS stop_ratio, label, content
-         |FROM (VALUES
-         |  (1, 0, 'nav', TRUE, 'Start Über uns', 14, 3, 1.0, 0.0, 'bad', FALSE),
-         |  (1, 1, 'p', FALSE, '$DeFixturePara', 238, 45, 0.0, 18.0/45.0, 'good', TRUE),
-         |  (1, 2, 'footer', TRUE, 'Impressum', 9, 1, 1.0, 0.0, 'bad', FALSE),
-         |  (2, 0, 'p', FALSE, '$EnUnderDePara', 189, 21, 0.0, 0.0, 'bad', FALSE),
-         |  (3, 0, 'p', FALSE, '$FrFixturePara', 229, 40, 0.0, 16.0/40.0, 'good', TRUE)
-         |) t(tid, idx, tag, in_chrome, text, n_chars, n_words,
-         |    link_density, stop_ratio, label, content)""".stripMargin,
-    // lang-keyed Gopher: three full signal+keep replays (de list / empty
-    // zh list with the floor disabled / the shipped en list) joined
-    "q87b_gopher_lang" -> {
-      val deList = "['der','die','und','das','ist','von','mit','den'," +
-        "'ein','nicht','im','dem','des','auf','für','eine','als','auch'," +
-        "'sich','werden']"
-      val enList = EnStopListSql
-      val plantedBase =
-        """  SELECT doc_id,
-          |    CASE WHEN doc_id % 3 = 0
-          |         THEN text || ' der die und das ist von mit den'
-          |         ELSE text END AS text
-          |  FROM documents""".stripMargin
-      s"""SELECT de.doc_id,
-         |  de.hits AS hits_de, de.keep AS keep_de,
-         |  zh.hits AS hits_zh, zh.keep AS keep_zh,
-         |  en.hits AS hits_en, en.keep AS keep_en
-         |FROM ${gopherKeepReplaySql(plantedBase, deList, 2)} de
-         |JOIN ${gopherKeepReplaySql(plantedBase, "[]::VARCHAR[]", 0)} zh USING (doc_id)
-         |JOIN ${gopherKeepReplaySql(plantedBase, enList, 2)} en USING (doc_id)""".stripMargin
-    },
-    // THE CAPSTONE ORACLE: DuckDB re-derives the whole keep-set — the
-    // jusText main (promo always good; the doc paragraph kept iff ≥ 70
-    // chars, near-good rescued by the good promo neighbor, short dropped
-    // against the bad footer), the langId exclusion (doc_id % 11), the
-    // full Gopher keep over the derived main, exact dedup (min doc_id
-    // per main), keep-first segment dedup (row_number over (doc_id,
-    // pos)), 8-gram decontamination against the % 7 eval slice, the
-    // Luhn-valid grouped-card redaction (and NOT the invalid twin) — and
-    // then replays the exact packed-sequence arithmetic (exclusive
-    // running sum, span explosion, per-sequence token splits).
-    "q99_crawl_capstone" -> {
-      val mainDerivation =
-        s"""  SELECT doc_id,
-           |    CASE WHEN length(docline) >= 70
-           |         THEN '$CapstonePromo' || chr(10) || docline
-           |         ELSE '$CapstonePromo' END AS text
-           |  FROM (
-           |    SELECT doc_id,
-           |      CASE WHEN doc_id % 13 = 2 THEN '$CapstoneSpam'
-           |           ELSE text ||
-           |             CASE WHEN doc_id % 5 = 0 THEN ' pay 4111 1111 1111 1111 now'
-           |                  WHEN doc_id % 5 = 1 THEN ' ref 4111 1111 1111 1112 end'
-           |                  ELSE '' END
-           |      END || '$CapstoneMarker' AS docline
-           |    FROM (SELECT doc_id, text FROM documents
-           |          UNION ALL SELECT doc_id + 1001000, text FROM documents)
-           |    WHERE doc_id % 11 <> 0)""".stripMargin
-      def grams8(fromSql: String, textCol: String): String =
-        s"""SELECT doc_id,
-           |  CASE WHEN len(toks) = 0 THEN []
-           |       WHEN len(toks) <= 8 THEN [array_to_string(toks, ' ')]
-           |       ELSE list_distinct([array_to_string(toks[i:i+7], ' ')
-           |                           for i in generate_series(1, len(toks)-7)])
-           |  END AS grams
-           |FROM (SELECT doc_id,
-           |        list_filter(string_split_regex($textCol, '$wsClassSql'), t -> t <> '') AS toks
-           |      FROM $fromSql)""".stripMargin
-      s"""WITH m1 AS (
-         |$mainDerivation),
-         |keep1 AS (
-         |  SELECT m1.doc_id, m1.text AS main
-         |  FROM m1 JOIN ${gopherKeepReplaySql(mainDerivation, EnStopListSql, 2)} g
-         |    USING (doc_id)
-         |  WHERE g.keep),
-         |d1 AS (SELECT min(doc_id) AS doc_id, main FROM keep1 GROUP BY main),
-         |segs AS (
-         |  SELECT doc_id, unnest(generate_series(1, len(lines))) AS pos,
-         |         unnest(lines) AS seg
-         |  FROM (SELECT doc_id, string_split(main, chr(10)) AS lines FROM d1)),
-         |marked AS (
-         |  SELECT doc_id, pos, seg,
-         |    row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-         |  FROM segs),
-         |d2 AS (
-         |  SELECT doc_id,
-         |    coalesce(string_agg(seg, chr(10) ORDER BY pos) FILTER (WHERE rn = 1), '') AS text_dedup
-         |  FROM marked GROUP BY doc_id),
-         |eg AS (SELECT DISTINCT unnest(grams) AS g
-         |       FROM (${grams8("(SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0)", "text")})),
-         |tg AS (SELECT doc_id, unnest(grams) AS g
-         |       FROM (${grams8("(SELECT doc_id, text_dedup FROM d2)", "text_dedup")})),
-         |hits AS (SELECT DISTINCT tg.doc_id FROM tg JOIN eg USING (g)),
-         |p0 AS (
-         |  SELECT d2.doc_id,
-         |    len(list_filter(string_split_regex(
-         |      replace(d2.text_dedup, '4111 1111 1111 1111', '<CARD>'),
-         |      '$wsClassSql'), t -> t <> ''))::BIGINT AS n
-         |  FROM d2 LEFT JOIN hits ON d2.doc_id = hits.doc_id
-         |  WHERE hits.doc_id IS NULL),
-         |p1 AS (
-         |  SELECT doc_id, n,
-         |    coalesce(sum(n) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cum
-         |  FROM p0 WHERE n > 0)
-         |SELECT doc_id, s AS seq_id,
-         |  (greatest(cum, s * 256) - s * 256)::BIGINT AS seq_offset,
-         |  (greatest(cum, s * 256) - cum)::BIGINT AS doc_offset,
-         |  (least(cum + n, (s + 1) * 256) - greatest(cum, s * 256))::BIGINT AS n_tokens
-         |FROM (SELECT doc_id, n, cum,
-         |        unnest(generate_series(cum // 256, (cum + n - 1) // 256)) AS s
-         |      FROM p1)""".stripMargin
-    },
-    // WET conversion records: no HTTP envelope, so content_length is the
-    // text's UTF-8 octet length exactly; HTTP fields are null
-    "q88e_wet_conversion" ->
-      """SELECT doc_id,
-        |  'https://site' || (doc_id % 50) || '.com/doc/' || doc_id AS uri,
-        |  'conversion' AS warc_type,
-        |  'text/plain' AS ctype,
-        |  true AS no_http,
-        |  text AS text,
-        |  octet_length(encode(text))::BIGINT AS clen,
-        |  false AS truncated
-        |FROM documents""".stripMargin,
-    "q88b_warc_curation" ->
-      """SELECT 'site' || (doc_id % 50) || '.com' AS domain,
-        |  count(*) AS n_docs,
-        |  sum(length(text))::BIGINT AS total_chars
-        |FROM documents
-        |GROUP BY 1""".stripMargin,
-    // same Content-Length arithmetic as q88, zstd member framing
-    "q88d_warc_zst_dict_roundtrip" ->
-      """SELECT doc_id,
-        |  'https://site' || (doc_id % 50) || '.com/doc/' || doc_id AS uri,
-        |  'response' AS warc_type,
-        |  200 AS status,
-        |  text AS body,
-        |  (77 + length(CAST(octet_length(encode(text)) AS VARCHAR))
-        |     + octet_length(encode(text)))::BIGINT AS clen,
-        |  false AS truncated
-        |FROM documents""".stripMargin,
-    "q88c_warc_zst_roundtrip" ->
-      """SELECT doc_id,
-        |  'https://site' || (doc_id % 50) || '.com/doc/' || doc_id AS uri,
-        |  'response' AS warc_type,
-        |  200 AS status,
-        |  text AS body,
-        |  (77 + length(CAST(octet_length(encode(text)) AS VARCHAR))
-        |     + octet_length(encode(text)))::BIGINT AS clen,
-        |  false AS truncated
-        |FROM documents""".stripMargin,
-    // greedy derivations (WordPieceSpec): hello→[1]; hello world→[1,2];
-    // hellol→hello+##l; hello hell→[1,3]; hellolo→hello+##lo (longest
-    // continuation); unaffable→un+##affable; helloz→[UNK] (all-or-
-    // nothing); it's→it,',s (punctuation isolation); ab→a+##b; ''→[].
-    "q91_wordpiece_encode" ->
-      """SELECT tid::BIGINT AS tid, ids_csv, n_ids::BIGINT AS n_ids
-        |FROM (VALUES
-        |  (1, '1', 1), (2, '1,2', 2), (3, '1,6', 2), (4, '1,3', 2),
-        |  (5, '1,5', 2), (6, '7,10', 2), (7, '0', 1), (8, '13,11,12', 3),
-        |  (9, '14,15', 2), (10, '', 0)) t(tid, ids_csv, n_ids)""".stripMargin,
-    "q91b_wordpiece_corpus" ->
-      """SELECT doc_id, length(replace(text, ' ', ''))::BIGINT AS n_tokens
-        |FROM documents""".stripMargin,
-    // robots decision table, hand-derived per (domain, path): site0 blocks
-    // /private/no (Disallow /private/ len 9) but allows /private/ok (Allow
-    // len 11 wins); site1's graftbot group blocks only /x*z$ (so /xz);
-    // site2's empty Disallow and site3's missing robots allow everything.
-    "q92_robots_filter" ->
-      """SELECT doc_id,
-        |  'https://site' || (doc_id % 4) || '.com' ||
-        |    (CASE doc_id % 5 WHEN 0 THEN '/private/ok' WHEN 1 THEN '/private/no'
-        |      WHEN 2 THEN '/xz' WHEN 3 THEN '/xz/deep' ELSE '/open' END) AS url,
-        |  NOT ((doc_id % 4 = 0 AND doc_id % 5 = 1)
-        |    OR (doc_id % 4 = 1 AND doc_id % 5 = 2)) AS robots_ok
-        |FROM documents""".stripMargin,
-    // WordPiece word boundaries: single ASCII-punctuation chars isolated,
-    // word runs between whitespace/punctuation (corpus is ASCII by
-    // construction, so the ASCII class IS the full classifier here).
-    "q95_wordpiece_wordcounts" ->
-      """WITH norm AS (
-        |  SELECT text || ' it''s #' || (doc_id % 10) || '!' AS t FROM documents),
-        |words AS (SELECT unnest(regexp_extract_all(t,
-        |  '[!-/:-@\[-`{-~]|[^\s!-/:-@\[-`{-~]+')) AS word FROM norm)
-        |SELECT word, count(*) AS n FROM words
-        |GROUP BY word ORDER BY n DESC, word ASC LIMIT 30""".stripMargin,
-    // First-merge replay: [c0, ##c1, …] splits, per-occurrence piece
-    // freqs, adjacent-pair freqs, score = c/(f_l · f_r), max score with
-    // ties to the smallest (l, r), merged token = l || r-without-##.
-    "q95b_wordpiece_first_merge" ->
-      """WITH norm AS (
-        |  SELECT text || ' it''s #' || (doc_id % 10) || '!' AS t FROM documents),
-        |words AS (SELECT unnest(regexp_extract_all(t,
-        |  '[!-/:-@\[-`{-~]|[^\s!-/:-@\[-`{-~]+')) AS w FROM norm),
-        |wc AS (SELECT w, count(*) AS n FROM words GROUP BY w),
-        |syms AS (
-        |  SELECT w, n, i,
-        |    CASE WHEN i = 1 THEN substring(w, 1, 1)
-        |         ELSE '##' || substring(w, i, 1) END AS sym
-        |  FROM (SELECT w, n, unnest(generate_series(1, length(w))) AS i FROM wc)),
-        |pf AS (SELECT sym, sum(n) AS f FROM syms GROUP BY sym),
-        |pairs AS (
-        |  SELECT a.sym AS l, b.sym AS r, sum(a.n) AS c
-        |  FROM syms a JOIN syms b ON a.w = b.w AND b.i = a.i + 1
-        |  GROUP BY a.sym, b.sym)
-        |SELECT l || replace(r, '##', '') AS merged
-        |FROM pairs
-        |JOIN pf fl ON fl.sym = pairs.l
-        |JOIN pf fr ON fr.sym = pairs.r
-        |ORDER BY c::DOUBLE / (fl.f::DOUBLE * fr.f::DOUBLE) DESC, l ASC, r ASC
-        |LIMIT 1""".stripMargin,
-    // The expected DECODED strings, literal: each page's bytes were
-    // produced driver-side by encoding exactly these strings in the
-    // charset the sniffing chain must pick (header param, meta prescan,
-    // BOM-over-lying-header, UTF-16LE, unknown-label fallthrough).
-    "q94_warc_charset" ->
-      """SELECT page::BIGINT AS page, text FROM (VALUES
-        |  (1, 'café – déjà vu €'),
-        |  (2, 'こんにちは世界'),
-        |  (3, '<html><head><meta charset="shift_jis"></head><body>日本語テキスト</body></html>'),
-        |  (4, 'bom wins: é'),
-        |  (5, 'plain utf-8: ünïcödé ✓'),
-        |  (6, 'utf16 page é'),
-        |  (7, '<html><head><meta http-equiv="Content-Type" content="text/html; charset=windows-1252"></head><body>smart “quotes”</body></html>'),
-        |  (8, 'fallback äßç')) t(page, text)""".stripMargin,
-    // WHATWG label table + prescan confinement: every byte sequence was
-    // authored driver-side by encoding EXACTLY these strings in the
-    // charset the spec's label table / prescan rules must pick. p1–p3:
-    // latin-1/ascii labels → cp1252 (the € / curly quotes / dashes only
-    // decode right under the remap); p4: decoys in a comment, a script
-    // body, and an <a> attribute lose to the real <meta>; p5: content=
-    // charset without the content-type pragma never wins (utf-8 wins);
-    // p6: replacement encoding → one U+FFFD; p7: meta utf-16 label reads
-    // as utf-8; p8: meta x-user-defined reads as cp1252; p9: iso-8859-9
-    // label → windows-1254.
-    "q94b_whatwg_labels" ->
-      ("""SELECT page::BIGINT AS page, text FROM (VALUES
-        |  (1, 'euro € smart “quotes” – dash'),
-        |  (2, 'naïve café – €'),
-        |  (3, 'price € — em'),
-        |  (4, '<!-- charset=shift_jis --><script>var s=''charset=big5'';""" +
-        """</script><a href="/x?charset=utf-16be">x</a>""" +
-        """<meta charset=windows-1252>quotes “–€”'),
-        |  (5, '<meta name="description" content="charset=big5 tutorial">é ok'),
-        |  (6, chr(65533)),
-        |  (7, '<meta charset=utf-16le>tricky é'),
-        |  (8, '<meta charset=x-user-defined>€–'),
-        |  (9, 'türkçe € “tr” şğ'),
-        |  (10, 'ab' || chr(63360) || chr(63487))) t(page, text)""").stripMargin,
-    // Both q93 families are pure arithmetic: planted pairs are (id,
-    // id + 1e9) for id % 97 = 0 (equal keys ⇒ sigs differing by exactly
-    // the 6 planted bit flips; accidental pairs would also need ids
-    // differing by exactly 1e9 — impossible across the id ranges), and
-    // the hot group's keeper-star pairs are (5e9, 5e9 + x) for x in
-    // 1..49999 (keeper = min id of the 50k-copy group).
-    "q93_mih_dupheavy_gate" ->
-      """SELECT id AS id_a, id + 1000000000 AS id_b, 'near' AS kind
-        |FROM (SELECT DISTINCT (l_orderkey * 10 + l_linenumber) AS id
-        |      FROM lineitem WHERE l_orderkey % 3 = 0)
-        |WHERE id % 97 = 0
-        |UNION ALL
-        |SELECT 5000000000 AS id_a, 5000000000 + x AS id_b, 'star' AS kind
-        |FROM unnest(generate_series(1, 49999)) t(x)""".stripMargin,
-    // auto-tuned MinHash recall floor: identical-text pairs (original ×
-    // id-shifted copy) must all be found — ok is constructively TRUE.
-    // Docs with no shingles (blank text) are excluded on both sides.
-    "q96_minhash_auto_props" ->
-      s"""WITH $shingleCteSql, nz AS (
-         |  SELECT d.doc_id, d.text FROM documents d
-         |  JOIN sh ON sh.doc_id = d.doc_id WHERE len(sh.grams) > 0
-         |), dd AS (
-         |  SELECT doc_id, text FROM nz
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text FROM nz
-         |)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, TRUE AS ok
-         |FROM dd a JOIN dd b ON a.text = b.text AND a.doc_id < b.doc_id""".stripMargin,
-    // full Luhn replay: double every second digit from the right, subtract
-    // 9 when >9, sum mod 10 — redact exactly when it passes
-    "q97_redact_card" ->
-      """WITH c AS (
-        |  SELECT l_orderkey,
-        |    '4' || lpad(CAST((l_orderkey % 100000000) * 7919 + 11 AS VARCHAR),
-        |                15, '0') AS num
-        |  FROM lineitem WHERE l_linenumber = 1
-        |), v AS (
-        |  SELECT l_orderkey, num,
-        |    list_sum([CASE WHEN (16 - p) % 2 = 1 THEN
-        |        CASE WHEN 2 * CAST(num[p] AS INT) > 9
-        |             THEN 2 * CAST(num[p] AS INT) - 9
-        |             ELSE 2 * CAST(num[p] AS INT) END
-        |      ELSE CAST(num[p] AS INT) END
-        |      for p in generate_series(1, 16)]) % 10 = 0 AS ok
-        |  FROM c
-        |)
-        |SELECT l_orderkey,
-        |  CASE WHEN ok THEN 'pay card <CARD> today'
-        |       ELSE 'pay card ' || num || ' today' END AS text_redacted
-        |FROM v""".stripMargin,
-    "q97b_redact_fixtures" ->
-      """SELECT * FROM (VALUES
-        |  (1::BIGINT, 'iban <IBAN> ok'),
-        |  (2::BIGINT, 'iban GB82WEST12345698765433 ok'),
-        |  (3::BIGINT, 'key <SECRET> end'),
-        |  (4::BIGINT, 'low aaaaaaaaaaaaaaaaaaaaaaaaaaaaaa end'),
-        |  (5::BIGINT, 'sha <SECRET> x'),
-        |  (6::BIGINT, 'mix <CARD> <IBAN> <EMAIL> <IP>'),
-        |  (7::BIGINT, 'card <CARD> and bad 4111111111111112')
-        |) AS t(id, text_redacted)""".stripMargin,
-    // keep-first segment dedup: the full window arithmetic — a segment
-    // survives only at its minimal (doc_id, pos) corpus occurrence.
-    "q89_segment_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    'Shared header boilerplate.' || chr(10) || text || chr(10) ||
-        |      'Shared footer boilerplate.' AS t
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(t, chr(10))) AS seg,
-        |    unnest(generate_series(1, len(string_split(t, chr(10))))) AS pos
-        |  FROM d),
-        |r AS (
-        |  SELECT doc_id, pos, seg,
-        |    row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-        |  FROM s)
-        |SELECT doc_id,
-        |  coalesce(string_agg(seg, chr(10) ORDER BY pos)
-        |    FILTER (WHERE rn = 1), '') AS text_dedup,
-        |  sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_segments_removed
-        |FROM r GROUP BY doc_id""".stripMargin,
-    "q89b_segment_dedup_unique" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    'Shared header boilerplate.' || chr(10) || text || chr(10) ||
-        |      'Shared footer boilerplate.' AS t
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(t, chr(10))) AS seg,
-        |    unnest(generate_series(1, len(string_split(t, chr(10))))) AS pos
-        |  FROM d),
-        |r AS (
-        |  SELECT doc_id, pos, seg,
-        |    count(*) OVER (PARTITION BY seg) AS c
-        |  FROM s)
-        |SELECT doc_id,
-        |  coalesce(string_agg(seg, chr(10) ORDER BY pos)
-        |    FILTER (WHERE c = 1), '') AS text_dedup,
-        |  sum(CASE WHEN c > 1 THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_segments_removed
-        |FROM r GROUP BY doc_id""".stripMargin,
-    "q43_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS total_qty, count(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q44_setops" ->
-      """SELECT o_orderkey FROM orders
-        |EXCEPT ALL
-        |SELECT l_orderkey FROM lineitem""".stripMargin,
-    // Transitive closure by recursive CTE (UNION dedup = fixpoint): exactly
-    // the semantics the distributed pointer-jumping loop must reproduce.
-    "q38_cluster" ->
-      s"""WITH RECURSIVE $shingleCteSql, pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE len(list_distinct(list_concat(a.grams, b.grams))) > 0
-         |    AND len(list_intersect(a.grams, b.grams))::DOUBLE
-         |        / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.5
-         |), edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM pairs
-         |  UNION
-         |  SELECT id_b AS u, id_a AS v FROM pairs
-         |), reach AS (
-         |  SELECT u AS v, u AS r FROM edges
-         |  UNION
-         |  SELECT u AS v, v AS r FROM edges
-         |  UNION
-         |  SELECT reach.v AS v, e.v AS r FROM reach JOIN edges e ON e.u = reach.r
-         |), comp AS (
-         |  SELECT v, min(r) AS comp FROM reach GROUP BY v
-         |)
-         |SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS cluster,
-         |  d.doc_id = coalesce(c.comp, d.doc_id) AS keep
-         |FROM documents d LEFT JOIN comp c ON d.doc_id = c.v""".stripMargin,
-    "q33_ann_batch" -> annBatchSql,
-    "q31_ivf" ->
-      s"""SELECT vec_id,
-         |  round(list_cosine_similarity(embedding::DOUBLE[], $annVecSql::DOUBLE[]), 6) AS score
-         |FROM embeddings
-         |ORDER BY list_cosine_similarity(embedding::DOUBLE[], $annVecSql::DOUBLE[]) DESC, vec_id
-         |LIMIT 20""".stripMargin,
-    "q32_json" ->
-      """SELECT event_id,
-        |  json_extract(props, '$.k')::INTEGER AS k_json,
-        |  json_extract(props, '$.k')::INTEGER AS k_path
-        |FROM events""".stripMargin,
-    // explicit whitespace class on both sides: Java \s includes \x0B, RE2's
-    // does not — the spelled-out class removes the dialect divergence
-    "q37_normalize" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text), '[^\w \t\n\x0B\f\r]', '', 'g'), '[ \t\n\x0B\f\r]+', ' ', 'g')) AS norm
-        |  FROM documents
-        |)
-        |SELECT doc_id, norm,
-        |  doc_id <> min(doc_id) OVER (PARTITION BY norm) AS is_dup
-        |FROM n""".stripMargin,
-    "q36_tfidf" ->
-      """WITH pairs AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), t -> t <> '')) AS token
-        |  FROM documents
-        |), tf AS (
-        |  SELECT doc_id, token, count(*) AS tf FROM pairs GROUP BY doc_id, token
-        |), dfreq AS (
-        |  SELECT token, count(*) AS df FROM tf GROUP BY token
-        |), n AS (
-        |  SELECT count(DISTINCT doc_id) AS n FROM documents
-        |)
-        |SELECT tf.doc_id, tf.token, tf.tf,
-        |  round(tf.tf * ln(n.n::DOUBLE / dfreq.df), 6) AS tf_idf
-        |FROM tf JOIN dfreq USING (token) CROSS JOIN n""".stripMargin,
-    "q30_vocab" ->
-      """SELECT token, count(*) AS n
-        |FROM (SELECT unnest(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), t -> t <> '')) AS token
-        |      FROM documents)
-        |GROUP BY token
-        |ORDER BY n DESC, token
-        |LIMIT 20""".stripMargin,
-    // Round-trip: the expected clean text is rebuilt from the raw column
-    // (corpus text is <>&-free and single-spaced, so no replay of the
-    // strip chain is needed — see the query comment).
-    // numeric-ref tail hand-derived: &#8217;/&#x2019; → ’, &#169; → ©,
-    // &amp;#8217; decodes ONCE to the literal &#8217;, the surrogate ref
-    // and the out-of-range ref stay literal text
-    "q61_strip_html" ->
-      """SELECT doc_id,
-        |  'Header & more ' || text ||
-        |  ' Tail <quoted> end It’s ’q’ © &#8217; &#xD800; &#999999999;' AS clean
-        |FROM documents""".stripMargin,
-    // url/host/domain rebuilt from doc_id — same construction as the query.
-    "q62_url_domains" ->
-      """SELECT doc_id,
-        |  'https://Blog.Example' || (doc_id % 7) ||
-        |    CASE (doc_id % 3) WHEN 0 THEN '.co.uk/path?q=1'
-        |      WHEN 1 THEN '.com/index.html'
-        |      ELSE '.com.au:8080/x#frag' END AS url,
-        |  'blog.example' || (doc_id % 7) ||
-        |    CASE (doc_id % 3) WHEN 0 THEN '.co.uk'
-        |      WHEN 1 THEN '.com' ELSE '.com.au' END AS host,
-        |  'example' || (doc_id % 7) ||
-        |    CASE (doc_id % 3) WHEN 0 THEN '.co.uk'
-        |      WHEN 1 THEN '.com' ELSE '.com.au' END AS domain
-        |FROM documents""".stripMargin,
-    "q64_domain_quota" ->
-      """SELECT doc_id, domain FROM (
-        |  SELECT doc_id,
-        |    'example' || (doc_id % 17) ||
-        |      CASE WHEN doc_id % 2 = 0 THEN '.co.uk' ELSE '.com' END AS domain,
-        |    row_number() OVER (
-        |      PARTITION BY (doc_id % 17), (doc_id % 2) ORDER BY doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 3""".stripMargin,
-    // The same per-row signals (java \w and RE2 \w agree on ASCII), the
-    // same rounded-decimal means, exact median via quantile_cont (the
-    // q41 exact-percentile equivalence).
-    "q73_corpus_report" ->
-      """WITH base AS (
-        |  SELECT length(text) AS chars,
-        |    len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS ntok,
-        |    CASE WHEN length(text) = 0 THEN 0.0
-        |         ELSE len(regexp_extract_all(text, '[^\w\s]'))::DOUBLE / length(text) END AS punct,
-        |    CASE WHEN len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) = 0 THEN 0.0
-        |         ELSE len(list_intersect(
-        |                list_filter(regexp_split_to_array(text, '\s+'), t -> t <> ''),
-        |                ['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','be','this','are']))::DOUBLE
-        |              / len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) END AS stop,
-        |    md5(text) AS h
-        |  FROM documents)
-        |SELECT count(*) AS n_docs,
-        |  sum(chars)::BIGINT AS total_chars,
-        |  sum(ntok)::BIGINT AS total_tokens,
-        |  round(1.0 - count(DISTINCT h)::DOUBLE / count(*), 6) AS exact_dup_rate,
-        |  round(sum(CAST(ntok AS DECIMAL(38,12)))::DOUBLE / count(*), 6) AS mean_tokens,
-        |  round(quantile_cont(ntok, 0.5), 6) AS p50_tokens,
-        |  round(sum(CAST(round(punct, 9) AS DECIMAL(38,12)))::DOUBLE / count(*), 6) AS mean_punct_ratio,
-        |  round(sum(CAST(round(stop, 9) AS DECIMAL(38,12)))::DOUBLE / count(*), 6) AS mean_stopword_ratio
-        |FROM base""".stripMargin,
-    "q75_compress_ratio" -> {
-      val rows = CompressionCases
-        .map { case (tid, _, low) => s"($tid, $low)" }
-        .mkString(", ")
-      s"SELECT tid::BIGINT AS tid, low_entropy FROM (VALUES $rows) t(tid, low_entropy)"
-    },
-    "q74_url_canon" -> {
-      val rows = UrlCanonCases
-        .map { case (tid, _, expected) => s"($tid, '$expected')" }
-        .mkString(", ")
-      s"SELECT tid::BIGINT AS tid, canon FROM (VALUES $rows) t(tid, canon)"
-    },
-    "q73b_report_by_source" ->
-      """WITH base AS (
-        |  SELECT source, length(text) AS chars,
-        |    len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS ntok,
-        |    CASE WHEN length(text) = 0 THEN 0.0
-        |         ELSE len(regexp_extract_all(text, '[^\w\s]'))::DOUBLE / length(text) END AS punct,
-        |    CASE WHEN len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) = 0 THEN 0.0
-        |         ELSE len(list_intersect(
-        |                list_filter(regexp_split_to_array(text, '\s+'), t -> t <> ''),
-        |                ['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','be','this','are']))::DOUBLE
-        |              / len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) END AS stop,
-        |    md5(text) AS h
-        |  FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        |  sum(chars)::BIGINT AS total_chars,
-        |  sum(ntok)::BIGINT AS total_tokens,
-        |  round(1.0 - count(DISTINCT h)::DOUBLE / count(*), 6) AS exact_dup_rate,
-        |  round(sum(CAST(ntok AS DECIMAL(38,12)))::DOUBLE / count(*), 6) AS mean_tokens,
-        |  round(quantile_cont(ntok, 0.5), 6) AS p50_tokens,
-        |  round(sum(CAST(round(punct, 9) AS DECIMAL(38,12)))::DOUBLE / count(*), 6) AS mean_punct_ratio,
-        |  round(sum(CAST(round(stop, 9) AS DECIMAL(38,12)))::DOUBLE / count(*), 6) AS mean_stopword_ratio
-        |FROM base GROUP BY source""".stripMargin,
-    // Full unrolled replay of the two training iterations: iteration i's
-    // gradient CTE aggregates the same rounded per-row terms into exact
-    // decimal sums, its weight CTE applies the same HALF_UP-rounded
-    // update, and iteration 2 reads iteration 1's weights via a 1-row
-    // cross join. Dot products associate left-to-right in feature order,
-    // exactly as LogReg.sigmoid builds them.
-    "q72_logreg_train" ->
-      """WITH data AS (
-        |  SELECT CAST(n_chars AS DOUBLE) / CAST(1000.0 AS DOUBLE) AS x1,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS DOUBLE)
-        |      / CAST(100.0 AS DOUBLE) AS x2,
-        |    CAST(doc_id % 10 AS DOUBLE) / CAST(10.0 AS DOUBLE) AS x3,
-        |    CASE WHEN n_chars >= 300 THEN CAST(1.0 AS DOUBLE)
-        |         ELSE CAST(0.0 AS DOUBLE) END AS y
-        |  FROM documents),
-        |g1 AS (
-        |  SELECT
-        |    sum(CAST(round((y - 0.5) * x1, 9) AS DECIMAL(38,12))) AS s_x1,
-        |    sum(CAST(round((y - 0.5) * x2, 9) AS DECIMAL(38,12))) AS s_x2,
-        |    sum(CAST(round((y - 0.5) * x3, 9) AS DECIMAL(38,12))) AS s_x3,
-        |    sum(CAST(round(y - 0.5, 9) AS DECIMAL(38,12))) AS s_b,
-        |    count(*) AS n
-        |  FROM data),
-        |w1 AS (
-        |  SELECT
-        |    round((0.5 * CAST(s_x1 AS DOUBLE)) / n, 9) AS w1x1,
-        |    round((0.5 * CAST(s_x2 AS DOUBLE)) / n, 9) AS w1x2,
-        |    round((0.5 * CAST(s_x3 AS DOUBLE)) / n, 9) AS w1x3,
-        |    round((0.5 * CAST(s_b AS DOUBLE)) / n, 9) AS w1b
-        |  FROM g1),
-        |g2 AS (
-        |  SELECT
-        |    sum(CAST(round((y - round(1.0 / (1.0 + exp(-(x1 * w1x1 + x2 * w1x2 + x3 * w1x3 + w1b))), 6)) * x1, 9) AS DECIMAL(38,12))) AS s_x1,
-        |    sum(CAST(round((y - round(1.0 / (1.0 + exp(-(x1 * w1x1 + x2 * w1x2 + x3 * w1x3 + w1b))), 6)) * x2, 9) AS DECIMAL(38,12))) AS s_x2,
-        |    sum(CAST(round((y - round(1.0 / (1.0 + exp(-(x1 * w1x1 + x2 * w1x2 + x3 * w1x3 + w1b))), 6)) * x3, 9) AS DECIMAL(38,12))) AS s_x3,
-        |    sum(CAST(round(y - round(1.0 / (1.0 + exp(-(x1 * w1x1 + x2 * w1x2 + x3 * w1x3 + w1b))), 6), 9) AS DECIMAL(38,12))) AS s_b,
-        |    count(*) AS n,
-        |    any_value(w1x1) AS w1x1, any_value(w1x2) AS w1x2,
-        |    any_value(w1x3) AS w1x3, any_value(w1b) AS w1b
-        |  FROM data CROSS JOIN w1),
-        |w2 AS (
-        |  SELECT
-        |    round(w1x1 + (0.5 * CAST(s_x1 AS DOUBLE)) / n, 9) AS w2x1,
-        |    round(w1x2 + (0.5 * CAST(s_x2 AS DOUBLE)) / n, 9) AS w2x2,
-        |    round(w1x3 + (0.5 * CAST(s_x3 AS DOUBLE)) / n, 9) AS w2x3,
-        |    round(w1b + (0.5 * CAST(s_b AS DOUBLE)) / n, 9) AS w2b
-        |  FROM g2)
-        |SELECT 'x1' AS feature, w2x1 AS weight FROM w2
-        |UNION ALL SELECT 'x2', w2x2 FROM w2
-        |UNION ALL SELECT 'x3', w2x3 FROM w2
-        |UNION ALL SELECT 'bias', w2b FROM w2""".stripMargin,
-    // The same derived snapshots, hashes, full-outer join, and CASE.
-    "q71_snapshot_diff" ->
-      """WITH o AS (SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % 7 <> 0),
-        |n AS (SELECT doc_id,
-        |        md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END) AS h
-        |      FROM documents WHERE doc_id % 11 <> 0)
-        |SELECT coalesce(n.doc_id, o.doc_id) AS doc_id,
-        |  CASE WHEN o.doc_id IS NULL THEN 'added'
-        |       WHEN n.doc_id IS NULL THEN 'removed'
-        |       WHEN o.h = n.h THEN 'unchanged' ELSE 'changed' END AS status
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id""".stripMargin,
-    // No-false-negative oracle: the reference slice must re-emerge whole.
-    "q70_bloom_seen" ->
-      "SELECT doc_id FROM documents WHERE doc_id % 5 = 0",
-    // Roundtrip oracle: the source table itself — any framing, parsing,
-    // grouping, or byte-fidelity defect shows as a row diff.
-    "q68_tar_roundtrip" ->
-      "SELECT doc_id, text, source FROM documents",
-    // The pre-tokenizer alternation minus the dead lookahead branch (the
-    // Spark side collapses whitespace first, so `\s+(?!\S)` can never
-    // fire); RE2 and java.util.regex agree on leftmost-first alternation.
-    "q67_bpe_wordcounts" ->
-      """WITH norm AS (SELECT trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents),
-        |words AS (SELECT unnest(regexp_extract_all(t,
-        |  '''s|''t|''re|''ve|''m|''ll|''d| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')) AS word FROM norm)
-        |SELECT word, count(*) AS n FROM words
-        |GROUP BY word ORDER BY n DESC, word ASC LIMIT 30""".stripMargin,
-    // First-merge replay: weighted adjacent byte-pair counts over the
-    // word table, max count with ties to the smallest byte pair, rendered
-    // in the published alphabet (space → U+0120). ASCII corpus ⇒ chars
-    // are bytes, so substring/ascii arithmetic is exact.
-    "q67b_bpe_first_merge" ->
-      """WITH norm AS (SELECT trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents),
-        |words AS (SELECT unnest(regexp_extract_all(t,
-        |  '''s|''t|''re|''ve|''m|''ll|''d| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')) AS w FROM norm),
-        |wc AS (SELECT w, count(*) AS n FROM words GROUP BY w),
-        |pairs AS (
-        |  SELECT substring(w, i, 1) AS l, substring(w, i + 1, 1) AS r, n
-        |  FROM (SELECT w, n, unnest(generate_series(1, length(w) - 1)) AS i FROM wc)),
-        |pc AS (SELECT l, r, sum(n) AS c FROM pairs GROUP BY l, r)
-        |SELECT replace(l, ' ', chr(288)) || ' ' || replace(r, ' ', chr(288)) AS merge
-        |FROM pc ORDER BY c DESC, ascii(l) ASC, ascii(r) ASC LIMIT 1""".stripMargin,
-    // SemDeDup replay: literal-centroid squared-L2 argmin (CASE chain
-    // encodes the tie-to-smaller-index contract), then the dominance
-    // EXISTS — drop a vector iff an earlier-id same-cell vector clears
-    // the cosine threshold.
-    "q69_semantic_dedup" -> {
-      def d(k: Int) = s"list_distance(embedding::DOUBLE[], ${semCentroidSql(k)}::DOUBLE[])"
-      s"""WITH assigned AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS v,
-         |    CASE
-         |      WHEN ${d(0)} <= ${d(1)} AND ${d(0)} <= ${d(2)} AND ${d(0)} <= ${d(3)} THEN 0
-         |      WHEN ${d(1)} < ${d(0)} AND ${d(1)} <= ${d(2)} AND ${d(1)} <= ${d(3)} THEN 1
-         |      WHEN ${d(2)} < ${d(0)} AND ${d(2)} < ${d(1)} AND ${d(2)} <= ${d(3)} THEN 2
-         |      ELSE 3 END AS cell
-         |  FROM embeddings)
-         |SELECT a.vec_id FROM assigned a
-         |WHERE NOT EXISTS (
-         |  SELECT 1 FROM assigned b
-         |  WHERE b.cell = a.cell AND b.vec_id < a.vec_id
-         |    AND list_cosine_similarity(a.v, b.v) >= 0.40)""".stripMargin
-    },
-    // Exact replay of the KMV estimate: same md5-prefix ranks, same k-th
-    // smallest distinct rank, same (k−1)/normalized-v_k arithmetic.
-    "q66_kmv_distinct" ->
-      """WITH toks AS (
-        |  SELECT source,
-        |    unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS tok
-        |  FROM documents),
-        |ranks AS (
-        |  SELECT DISTINCT source,
-        |    CAST('0x' || substring(md5('7:' || tok), 1, 13) AS UBIGINT) AS r
-        |  FROM toks),
-        |ord AS (
-        |  SELECT source, r,
-        |    row_number() OVER (PARTITION BY source ORDER BY r) AS rn,
-        |    count(*) OVER (PARTITION BY source) AS nd
-        |  FROM ranks)
-        |SELECT source,
-        |  round(CASE WHEN nd < 256 THEN nd::DOUBLE
-        |             ELSE 255.0 / (r / 4503599627370496.0) END, 4) AS est_distinct,
-        |  (nd < 256) AS exact
-        |FROM ord
-        |WHERE rn = CASE WHEN nd >= 256 THEN 256 ELSE nd END""".stripMargin,
-    // Full replay of the extended Gopher signal pass over the same planted
-    // text: unnest + count windows for line/paragraph duplicate groups,
-    // zipped-unnest position coverage for the duplicate-5-gram rule, list
-    // lambdas for the format fractions. Every fraction is an exact
-    // integer-over-integer division; keep_full re-derives from the
-    // UNROUNDED values exactly as the Scala side does.
-    "q65_gopher_rep" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 0 THEN text || chr(10) || substring(text, 1, 40)
-        |           || chr(10) || substring(text, 1, 40) || chr(10) || chr(10)
-        |           || substring(text, 1, 25) || chr(10) || chr(10) || substring(text, 1, 25)
-        |         WHEN doc_id % 4 = 1 THEN text || ' ' || substring(text, 1, 60)
-        |         WHEN doc_id % 4 = 2 THEN '- alpha' || chr(10) || '- beta' || chr(10) || 'more...' || chr(10) || text
-        |         ELSE text END AS text
-        |  FROM documents),
-        |toks AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS tk,
-        |                list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS tkl
-        |         FROM base),
-        |lines AS (SELECT doc_id, list_filter(string_split(text, chr(10)), x -> x <> '') AS seg FROM base),
-        |paras AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\n{2,}'), x -> x <> '') AS seg FROM base),
-        |lstat AS (
-        |  SELECT doc_id, count(*) AS cnt, sum(length(l)) AS chars,
-        |    count(*) FILTER (WHERE c >= 2) AS dupcnt,
-        |    coalesce(sum(length(l)) FILTER (WHERE c >= 2), 0) AS dupchars
-        |  FROM (SELECT doc_id, l, count(*) OVER (PARTITION BY doc_id, l) AS c
-        |        FROM (SELECT doc_id, unnest(seg) AS l FROM lines))
-        |  GROUP BY doc_id),
-        |pstat AS (
-        |  SELECT doc_id, count(*) AS cnt, sum(length(l)) AS chars,
-        |    count(*) FILTER (WHERE c >= 2) AS dupcnt,
-        |    coalesce(sum(length(l)) FILTER (WHERE c >= 2), 0) AS dupchars
-        |  FROM (SELECT doc_id, l, count(*) OVER (PARTITION BY doc_id, l) AS c
-        |        FROM (SELECT doc_id, unnest(seg) AS l FROM paras))
-        |  GROUP BY doc_id),
-        |gramrows AS (
-        |  SELECT doc_id,
-        |    unnest(generate_series(1, greatest(len(tk) - 4, 0))) AS gi,
-        |    unnest(list_transform(generate_series(1, greatest(len(tk) - 4, 0)),
-        |                          i -> array_to_string(tk[i : i + 4], ' '))) AS g
-        |  FROM toks),
-        |cov AS (
-        |  SELECT DISTINCT doc_id, unnest(generate_series(gi, gi + 4)) AS pos
-        |  FROM (SELECT doc_id, gi, count(*) OVER (PARTITION BY doc_id, g) AS c FROM gramrows)
-        |  WHERE c >= 2),
-        |covstat AS (SELECT doc_id, count(*) AS covered FROM cov GROUP BY doc_id),
-        |sig AS (
-        |  SELECT b.doc_id,
-        |    len(t.tk) AS token_count,
-        |    CASE WHEN len(t.tk) = 0 THEN 0.0
-        |         ELSE list_sum(list_transform(t.tk, x -> length(x)))::DOUBLE / len(t.tk) END AS mean_word_len,
-        |    CASE WHEN coalesce(ls.cnt, 0) = 0 THEN 0.0 ELSE ls.dupcnt::DOUBLE / ls.cnt END AS dup_line_frac,
-        |    CASE WHEN coalesce(ls.chars, 0) = 0 THEN 0.0 ELSE ls.dupchars::DOUBLE / ls.chars END AS dup_line_char_frac,
-        |    CASE WHEN coalesce(ps2.cnt, 0) = 0 THEN 0.0 ELSE ps2.dupcnt::DOUBLE / ps2.cnt END AS dup_para_frac,
-        |    CASE WHEN coalesce(ps2.chars, 0) = 0 THEN 0.0 ELSE ps2.dupchars::DOUBLE / ps2.chars END AS dup_para_char_frac,
-        |    CASE WHEN len(t.tk) < 5 THEN 0.0 ELSE coalesce(cs.covered, 0)::DOUBLE / len(t.tk) END AS dup_ngram_cov,
-        |    CASE WHEN coalesce(ls.cnt, 0) = 0 THEN 0.0
-        |         ELSE len(list_filter(ln.seg, x -> regexp_matches(x, '^\s*[-*•‣▪]')))::DOUBLE / ls.cnt END AS bullet_frac,
-        |    CASE WHEN coalesce(ls.cnt, 0) = 0 THEN 0.0
-        |         ELSE len(list_filter(ln.seg, x -> regexp_matches(x, '(\.\.\.|…)\s*$')))::DOUBLE / ls.cnt END AS ellipsis_frac,
-        |    CASE WHEN len(t.tk) = 0 THEN 0.0
-        |         ELSE len(list_filter(t.tk, x -> regexp_matches(x, '\p{L}')))::DOUBLE / len(t.tk) END AS alpha_frac,
-        |    len(list_intersect(t.tkl,
-        |      ['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','be','this','are'])) AS stopword_hits
-        |  FROM base b
-        |  JOIN toks t USING (doc_id)
-        |  JOIN lines ln USING (doc_id)
-        |  LEFT JOIN lstat ls USING (doc_id)
-        |  LEFT JOIN pstat ps2 USING (doc_id)
-        |  LEFT JOIN covstat cs USING (doc_id))
-        |SELECT doc_id, token_count::BIGINT AS token_count,
-        |  round(dup_line_frac, 6) AS dup_line_frac,
-        |  round(dup_line_char_frac, 6) AS dup_line_char_frac,
-        |  round(dup_para_frac, 6) AS dup_para_frac,
-        |  round(dup_para_char_frac, 6) AS dup_para_char_frac,
-        |  round(dup_ngram_cov, 6) AS dup_ngram_cov,
-        |  round(bullet_frac, 6) AS bullet_frac,
-        |  round(ellipsis_frac, 6) AS ellipsis_frac,
-        |  round(alpha_frac, 6) AS alpha_frac,
-        |  stopword_hits::BIGINT AS stopword_hits,
-        |  (token_count BETWEEN 20 AND 1000000 AND mean_word_len BETWEEN 3.0 AND 10.0
-        |   AND dup_line_frac <= 0.30 AND dup_line_char_frac <= 0.20
-        |   AND dup_para_frac <= 0.30 AND dup_para_char_frac <= 0.20
-        |   AND dup_ngram_cov <= 0.15 AND bullet_frac <= 0.90
-        |   AND ellipsis_frac <= 0.30 AND alpha_frac >= 0.80
-        |   AND stopword_hits >= 2) AS keep_full
-        |FROM sig""".stripMargin,
-    "q63_unicode" -> {
-      val rows = UnicodeCases
-        .map { case (tid, _, nfc, nfkc) => s"($tid, '$nfc', '$nfkc')" }
-        .mkString(", ")
-      s"SELECT tid::BIGINT AS tid, nfc, nfkc FROM (VALUES $rows) t(tid, nfc, nfkc)"
-    },
-    // Same exact answer as q30 — the sketch path certifies exactness, so the
-    // oracle is the plain exact top-20.
-    "q59_vocab_sketch" ->
-      """SELECT token, count(*) AS n
-        |FROM (SELECT unnest(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), t -> t <> '')) AS token
-        |      FROM documents)
-        |GROUP BY token
-        |ORDER BY n DESC, token
-        |LIMIT 20""".stripMargin,
-    "q34_pipeline_window" ->
-      """SELECT o_custkey, o_orderkey, coalesce(prev_price, -1.0) AS prev_price
-        |FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    row_number() OVER w AS rk,
-        |    lag(o_totalprice) OVER w AS prev_price
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey)
-        |) WHERE rk = 1""".stripMargin,
-    "q35_salted_join" ->
-      """SELECT l_orderkey, l_linenumber, o_orderstatus
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey""".stripMargin,
-    "q22_pipeline" ->
-      """SELECT l_returnflag,
-        |  sum(l_quantity) AS total_qty,
-        |  count(*) AS n,
-        |  max(l_extendedprice) AS max_price
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderstatus = 'F'
-        |GROUP BY l_returnflag""".stripMargin,
-    "q58_perplexity" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(text, '$wsClassSql'), t -> t <> '') AS ts
-         |  FROM documents
-         |), bigr AS (
-         |  SELECT doc_id, unnest(ts[1:len(ts)-1]) AS prev, unnest(ts[2:len(ts)]) AS w
-         |  FROM toks WHERE len(ts) >= 2
-         |), voc AS (
-         |  SELECT count(DISTINCT t) AS V FROM (SELECT unnest(ts) AS t FROM toks)
-         |), ctx AS (
-         |  SELECT prev, count(*) AS c_prev FROM bigr GROUP BY prev
-         |), big AS (
-         |  SELECT prev, w, count(*) AS c_bg FROM bigr GROUP BY prev, w
-         |), lp AS (
-         |  SELECT b.doc_id,
-         |    round(ln((bg.c_bg + 1)::DOUBLE / (c.c_prev + v.V)::DOUBLE), 6) AS logp
-         |  FROM bigr b
-         |  JOIN big bg USING (prev, w)
-         |  JOIN ctx c USING (prev)
-         |  CROSS JOIN voc v
-         |)
-         |SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-         |  round(sum(CAST(logp AS DECIMAL(38,12)))::DOUBLE / count(*), 6) AS avg_logp,
-         |  round(exp(-(sum(CAST(logp AS DECIMAL(38,12)))::DOUBLE / count(*))), 4) AS ppl
-         |FROM lp GROUP BY doc_id""".stripMargin,
-    "q90_perplexity_kn" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(text, '$wsClassSql'), t -> t <> '') AS ts
-         |  FROM documents
-         |), bigr AS (
-         |  SELECT doc_id, unnest(ts[1:len(ts)-1]) AS prev, unnest(ts[2:len(ts)]) AS w
-         |  FROM toks WHERE len(ts) >= 2
-         |), tbigr AS (
-         |  SELECT prev, w FROM bigr WHERE doc_id % 2 = 0
-         |), voc AS (
-         |  SELECT count(DISTINCT t) AS V
-         |  FROM (SELECT unnest(ts) AS t FROM toks WHERE doc_id % 2 = 0)
-         |), big AS (
-         |  SELECT prev, w, count(*) AS c_bg FROM tbigr GROUP BY prev, w
-         |), ctx AS (
-         |  SELECT prev, sum(c_bg) AS c_prev, count(*) AS n1_prev
-         |  FROM big GROUP BY prev
-         |), n1w AS (
-         |  SELECT w, count(*) AS n1_w FROM big GROUP BY w
-         |), nbig AS (
-         |  SELECT count(*) AS N FROM big
-         |), lp AS (
-         |  SELECT b.doc_id,
-         |    round(ln(
-         |      CASE WHEN c.c_prev IS NOT NULL THEN
-         |        (GREATEST(COALESCE(bg.c_bg, 0)::DOUBLE - 0.75, 0.0)
-         |          + 0.75 * c.n1_prev::DOUBLE *
-         |            ((COALESCE(nw.n1_w, 0) + 1)::DOUBLE / (nb.N + v.V)::DOUBLE))
-         |        / c.c_prev::DOUBLE
-         |      ELSE (COALESCE(nw.n1_w, 0) + 1)::DOUBLE / (nb.N + v.V)::DOUBLE
-         |      END), 6) AS logp
-         |  FROM bigr b
-         |  LEFT JOIN big bg USING (prev, w)
-         |  LEFT JOIN ctx c USING (prev)
-         |  LEFT JOIN n1w nw USING (w)
-         |  CROSS JOIN nbig nb CROSS JOIN voc v
-         |)
-         |SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-         |  round(sum(CAST(logp AS DECIMAL(38,12)))::DOUBLE / count(*), 6) AS avg_logp,
-         |  round(exp(-(sum(CAST(logp AS DECIMAL(38,12)))::DOUBLE / count(*))), 4) AS ppl
-         |FROM lp GROUP BY doc_id""".stripMargin,
-    "q57_sample_det" ->
-      s"""SELECT doc_id, source, n_chars FROM documents
-         |WHERE substr(md5('7:' || CAST(doc_id AS VARCHAR)), 1, 13)
-         |      < '${graft.ops.Sampling.thresholdHex(0.25)}'""".stripMargin,
-    "q57b_stratified" ->
-      """SELECT source, doc_id FROM (
-        |  SELECT source, doc_id,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY substr(md5('7:' || CAST(doc_id AS VARCHAR)), 1, 13),
-        |               doc_id) AS rn
-        |  FROM documents) WHERE rn <= 10""".stripMargin,
-    "q57c_mix" -> {
-      // same allocation code path the Spark query uses — the constants
-      // cannot drift between the two sides
-      val ks = graft.ops.Sampling
-        .allocate(Seq("web" -> 0.5, "book" -> 0.3, "code" -> 0.2), 200).toMap
-      Seq("web" -> 0, "book" -> 1, "code" -> 2).map { case (n, m) =>
-        s"""SELECT mix_source, doc_id FROM (
-           |  SELECT '$n' AS mix_source, doc_id,
-           |    row_number() OVER (
-           |      ORDER BY substr(md5('7:$n:' || CAST(doc_id AS VARCHAR)), 1, 13),
-           |               '$n:' || CAST(doc_id AS VARCHAR)) AS rn
-           |  FROM documents WHERE doc_id % 3 = $m) WHERE rn <= ${ks(n)}""".stripMargin
-      }.mkString("\nUNION ALL\n")
-    },
-    "q57d_mix_frac" ->
-      s"""SELECT 'even' AS mix_source, doc_id FROM documents
-         |WHERE doc_id % 2 = 0
-         |  AND substr(md5('11:even:' || CAST(doc_id AS VARCHAR)), 1, 13)
-         |      < '${graft.ops.Sampling.thresholdHex(0.3)}'
-         |UNION ALL
-         |SELECT 'odd' AS mix_source, doc_id FROM documents
-         |WHERE doc_id % 2 = 1
-         |  AND substr(md5('11:odd:' || CAST(doc_id AS VARCHAR)), 1, 13)
-         |      < '${graft.ops.Sampling.thresholdHex(0.6)}'""".stripMargin,
-    "q100_linkgraph_pagerank" -> {
-      // the exact recurrence LinkGraph.pageRank documents, unrolled: per
-      // iteration the dangling mass (rank on hosts with no out-edges), the
-      // per-dst contribution sum, and the damped update — every constant
-      // cast ::DOUBLE so DuckDB's decimal literals don't diverge from
-      // Spark's IEEE arithmetic
-      val iters = (0 until 3).map { k =>
-        s"""dm$k AS (SELECT COALESCE(SUM(r), 0) AS dm FROM r$k
-           |  WHERE host NOT IN (SELECT src FROM e)),
-           |c$k AS (SELECT e.dst AS host, SUM(r$k.r / dg.d) AS c
-           |  FROM e JOIN r$k ON e.src = r$k.host JOIN dg ON dg.src = e.src
-           |  GROUP BY e.dst),
-           |r${k + 1} AS (SELECT v.host,
-           |    (1.0::DOUBLE - 0.85::DOUBLE) / (SELECT n FROM nn)
-           |      + 0.85::DOUBLE * (COALESCE(c$k.c, 0) +
-           |        (SELECT dm FROM dm$k) / (SELECT n FROM nn)) AS r
-           |  FROM v LEFT JOIN c$k ON v.host = c$k.host)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH p AS (SELECT range AS i FROM range(0, 300)),
-         |e0 AS (
-         |  SELECT 'h' || CAST((i % 30) AS VARCHAR) || '.test' AS src,
-         |         'h' || CAST(((3 * i + 1) % 40) AS VARCHAR) || '.test' AS dst
-         |  FROM p WHERE (3 * i + 1) % 40 <> (i % 30)
-         |  UNION ALL
-         |  SELECT 'h' || CAST((i % 30) AS VARCHAR) || '.test',
-         |         'h' || CAST(((7 * i + 2) % 40) AS VARCHAR) || '.test'
-         |  FROM p WHERE (7 * i + 2) % 40 <> (i % 30)
-         |  UNION ALL
-         |  SELECT 'h' || CAST((i % 30) AS VARCHAR) || '.test',
-         |         'h' || CAST(((11 * i + 5) % 40) AS VARCHAR) || '.test'
-         |  FROM p WHERE (11 * i + 5) % 40 <> (i % 30)),
-         |e AS (SELECT DISTINCT src, dst FROM e0),
-         |v AS (SELECT src AS host FROM e UNION SELECT dst AS host FROM e),
-         |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM v),
-         |dg AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS d FROM e GROUP BY src),
-         |r0 AS (SELECT host, 1.0::DOUBLE / (SELECT n FROM nn) AS r FROM v),
-         |$iters
-         |SELECT host, round(r3.r, 6) AS rank FROM r3""".stripMargin
-    },
-    "q100d_domain_rank" -> {
-      val iters = (0 until 3).map { k =>
-        s"""dm$k AS (SELECT COALESCE(SUM(r), 0) AS dm FROM r$k
-           |  WHERE host NOT IN (SELECT src FROM e)),
-           |c$k AS (SELECT e.dst AS host, SUM(r$k.r / dg.d) AS c
-           |  FROM e JOIN r$k ON e.src = r$k.host JOIN dg ON dg.src = e.src
-           |  GROUP BY e.dst),
-           |r${k + 1} AS (SELECT v.host,
-           |    (1.0::DOUBLE - 0.85::DOUBLE) / (SELECT n FROM nn)
-           |      + 0.85::DOUBLE * (COALESCE(c$k.c, 0) +
-           |        (SELECT dm FROM dm$k) / (SELECT n FROM nn)) AS r
-           |  FROM v LEFT JOIN c$k ON v.host = c$k.host)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH p AS (SELECT range AS i FROM range(0, 300)),
-         |e0 AS (
-         |  SELECT 'h' || CAST((i % 30) AS VARCHAR) || '.d' || CAST(((i % 30) % 4) AS VARCHAR) || '.co.uk' AS src,
-         |         'h' || CAST(((3 * i + 1) % 40) AS VARCHAR) || '.d' || CAST((((3 * i + 1) % 40) % 4) AS VARCHAR) || '.co.uk' AS dst
-         |  FROM p WHERE (3 * i + 1) % 40 <> (i % 30)),
-         |e AS (SELECT DISTINCT src, dst FROM e0),
-         |v AS (SELECT src AS host FROM e UNION SELECT dst AS host FROM e),
-         |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM v),
-         |dg AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS d FROM e GROUP BY src),
-         |r0 AS (SELECT host, 1.0::DOUBLE / (SELECT n FROM nn) AS r FROM v),
-         |$iters
-         |SELECT substr(host, strpos(host, '.') + 1) AS domain,
-         |       round(SUM(r), 6) AS rank
-         |FROM r3 GROUP BY 1""".stripMargin
-    },
-    "q100c_base_href" ->
-      """WITH p AS (SELECT range AS i FROM range(0, 240)),
-        |e0 AS (
-        |  SELECT 'h' || CAST((i % 20) AS VARCHAR) || '.test' AS src,
-        |         'h' || CAST(((3 * i + 1) % 25) AS VARCHAR) || '.test' AS dst
-        |  FROM p WHERE (3 * i + 1) % 25 <> (i % 20)
-        |  UNION ALL
-        |  SELECT 'h' || CAST((i % 20) AS VARCHAR) || '.test',
-        |         'b' || CAST((i % 7) AS VARCHAR) || '.test'
-        |  FROM p WHERE i % 3 = 0)
-        |SELECT DISTINCT src, dst FROM e0""".stripMargin,
-    "q100b_anchor_texts" ->
-      """WITH p AS (SELECT range AS i FROM range(0, 200))
-        |SELECT 'h' || CAST((i % 20) AS VARCHAR) || '.test' AS src,
-        |       'h' || CAST(((3 * i + 1) % 25) AS VARCHAR) || '.test' AS dst,
-        |       'to h' || CAST(((3 * i + 1) % 25) AS VARCHAR) || ' site' AS anchor
-        |FROM p WHERE (3 * i + 1) % 25 <> (i % 20)""".stripMargin,
-    "q102_cdxj_plan" ->
-      """WITH i AS (SELECT range AS i FROM range(0, 1000)),
-        |cap AS (SELECT 'warc-' || CAST((i % 7) AS VARCHAR) || '.warc.gz' AS filename,
-        |               (i // 7) * 1000 AS o,
-        |               800 + (i % 3) * 100 AS len
-        |        FROM i WHERE i % 97 <> 0 AND i % 5 <> 0),
-        |f AS (SELECT filename, o, o + len AS e FROM cap),
-        |m AS (SELECT filename, o, e,
-        |        MAX(e) OVER (PARTITION BY filename ORDER BY o, e
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-        |      FROM f),
-        |isl AS (SELECT filename, o, e,
-        |          SUM(CASE WHEN pme IS NULL OR o > pme + 150 THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY filename ORDER BY o, e
-        |              ROWS UNBOUNDED PRECEDING) AS island
-        |        FROM m)
-        |SELECT filename, MIN(o) AS range_start, MAX(e) AS range_end,
-        |       COUNT(*) AS n_captures, MAX(e) - MIN(o) AS bytes
-        |FROM isl GROUP BY filename, island""".stripMargin,
-    "q103_cdx_ranged_fetch" ->
-      """SELECT 'https://s1.test/d/' || CAST(i AS VARCHAR) AS target_uri,
-        |       repeat('x', 100 + (i % 7) * 10) || CAST(i AS VARCHAR) AS body,
-        |       200 AS http_status
-        |FROM (SELECT range AS i FROM range(0, 400)) WHERE i % 5 = 1""".stripMargin,
-    "q105_warc_revisit" ->
-      """WITH i AS (SELECT range AS i FROM range(0, 150))
-        |SELECT 'https://o.test/d/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'content ' || CAST(i AS VARCHAR) AS body,
-        |       'response' AS warc_type, FALSE AS resolved
-        |FROM i WHERE i < 50
-        |UNION ALL
-        |SELECT 'https://r.test/m/' || CAST(i AS VARCHAR) AS target_uri,
-        |       CASE WHEN i % 10 = 7 THEN ''
-        |            ELSE 'content ' || CAST((i % 50) AS VARCHAR) END AS body,
-        |       'revisit' AS warc_type, i % 10 <> 7 AS resolved
-        |FROM i""".stripMargin,
-    "q104_sitemap_parse" ->
-      """WITH i AS (SELECT range AS i FROM range(0, 120)),
-        |k AS (SELECT unnest([0, 1]) AS k),
-        |urls AS (
-        |  SELECT i.i AS doc_id,
-        |    'https://h' || CAST((i % 6) AS VARCHAR) || '.test/p/'
-        |      || CAST(i AS VARCHAR) || '/' || CAST(k AS VARCHAR)
-        |      || '?a=1&b=' || CAST(k AS VARCHAR) || '&c=2' AS loc,
-        |    CASE i % 4
-        |      WHEN 0 THEN CAST(CAST(('2024-03-0' || CAST((i % 9 + 1) AS VARCHAR)) AS TIMESTAMP) AS VARCHAR)
-        |      WHEN 1 THEN '2024-03-0' || CAST((i % 9 + 1) AS VARCHAR) || ' 10:20:30'
-        |      WHEN 2 THEN '2024-03-0' || CAST((i % 9 + 1) AS VARCHAR) || ' 10:20:30.125'
-        |      ELSE '2024-03-0' || CAST((i % 9 + 1) AS VARCHAR) || ' 10:20:00'
-        |    END AS lastmod,
-        |    CASE i % 3 WHEN 0 THEN 'daily' WHEN 1 THEN 'weekly'
-        |      ELSE 'monthly' END AS changefreq,
-        |    CAST(('0.' || CAST((i % 10) AS VARCHAR)) AS DOUBLE) AS priority,
-        |    'url' AS kind
-        |  FROM i CROSS JOIN k WHERE i % 10 <> 9),
-        |kids AS (
-        |  SELECT i.i AS doc_id,
-        |    'https://h' || CAST((i % 6) AS VARCHAR) || '.test/sm/'
-        |      || CAST(i AS VARCHAR) || '/' || CAST(k AS VARCHAR) || '.xml' AS loc,
-        |    CAST(CAST(('2024-01-0' || CAST((i % 5 + 1) AS VARCHAR)) AS TIMESTAMP) AS VARCHAR) AS lastmod,
-        |    CAST(NULL AS VARCHAR) AS changefreq,
-        |    CAST(NULL AS DOUBLE) AS priority,
-        |    'sitemap' AS kind
-        |  FROM i CROSS JOIN k WHERE i % 10 = 9)
-        |SELECT * FROM urls UNION ALL SELECT * FROM kids""".stripMargin,
-    "q107_warc_index_zipnum" ->
-      """SELECT 'https://s2.test/d/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'body ' || CAST(i AS VARCHAR) || repeat('y', CAST(i % 11 AS INT)) AS body,
-        |       200 AS http_status
-        |FROM (SELECT range AS i FROM range(0, 300)) WHERE i % 5 = 2""".stripMargin,
-    "q107d_langid_sql" ->
-      """SELECT i AS id,
-        |  CASE i % 4 WHEN 0 THEN 'en' WHEN 1 THEN 'fr' WHEN 2 THEN 'ru'
-        |       ELSE 'fr' END AS lang1,
-        |  CASE i % 4 WHEN 0 THEN 'en' WHEN 1 THEN 'fr' WHEN 2 THEN 'ru'
-        |       ELSE 'fr,en' END AS lang2,
-        |  CASE i % 4 WHEN 0 THEN 'en' WHEN 1 THEN 'fr' WHEN 2 THEN 'ru'
-        |       ELSE 'fr,en' END AS lang3
-        |FROM (SELECT range AS i FROM range(0, 200))""".stripMargin,
-    "q107f_langid_iso3" ->
-      """SELECT i AS id,
-        |  CASE i % 4 WHEN 0 THEN 'eng' WHEN 1 THEN 'fra' WHEN 2 THEN 'rus'
-        |       ELSE 'fra' END AS lang1,
-        |  CASE i % 4 WHEN 0 THEN 'eng' WHEN 1 THEN 'fra' WHEN 2 THEN 'rus'
-        |       ELSE 'fra,eng' END AS lang3,
-        |  'und,xx' AS passthrough
-        |FROM (SELECT range AS i FROM range(0, 200))""".stripMargin,
-    "q110_wat_roundtrip" ->
-      """WITH i AS (SELECT range AS i FROM range(0, 200)),
-        |k AS (SELECT unnest([0, 1]) AS k)
-        |SELECT 'https://w.test/p/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'Page ' || CAST(i AS VARCHAR) AS title,
-        |       CASE k WHEN 0 THEN 'https://t' || CAST((i % 7) AS VARCHAR)
-        |                        || '.test/a/' || CAST(i AS VARCHAR)
-        |              ELSE '/rel/' || CAST((i % 3) AS VARCHAR) END AS link,
-        |       'A@/href' AS link_path
-        |FROM i CROSS JOIN k""".stripMargin,
-    "q110b_wat_container" ->
-      """SELECT 'https://wc.test/p/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'Page ' || CAST(i AS VARCHAR) AS title,
-        |       'c' || CAST((i % 4) AS VARCHAR) AS x_crawl,
-        |       '<html><head><title>Page ' || CAST(i AS VARCHAR)
-        |         || '</title></head><body><a href="/n/'
-        |         || CAST((i % 5) AS VARCHAR) || '">n</a></body></html>' AS body
-        |FROM (SELECT range AS i FROM range(0, 150))""".stripMargin,
-    "q88f_warcinfo" ->
-      """SELECT * FROM (VALUES
-        |  ('warcinfo', 'application/warc-fields',
-        |   CAST(3 AS BIGINT), CAST(3 AS BIGINT)),
-        |  ('response', 'application/http; msgtype=response',
-        |   CAST(100 AS BIGINT), CAST(0 AS BIGINT))
-        |) AS t(warc_type, content_type, n, shard_heads)""".stripMargin,
-    "q110c_wat_headers_from_warc" ->
-      """SELECT 'https://wh.test/p/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'H' || CAST(i AS VARCHAR) AS title,
-        |       'text/html; charset=cs' || CAST((i % 4) AS VARCHAR) AS ct
-        |FROM (SELECT range AS i FROM range(0, 150))""".stripMargin,
-    // q111 family: every expected value is a hand-transcribed literal
-    // from the published sample — never computed by the code under test
-    "q111_cdxj_published" ->
-      """SELECT surt_key, ts, url, mime, CAST(status AS INT) AS status,
-        |       digest, filename, CAST("offset" AS BIGINT) AS offset,
-        |       CAST(length AS BIGINT) AS length, languages, charset,
-        |       surt_parity
-        |FROM (VALUES
-        |  ('com,example)/', '2017-07-30 22:38:50', 'http://example.com',
-        |   'text/html', 200, 'G7HRM7BGOKSKMSXZAHMUQTTV53QOFSMK',
-        |   'example.warc.gz', 771, 1219, NULL, NULL, TRUE),
-        |  ('org,commoncrawl)/faq', '2024-07-14 03:11:34',
-        |   'https://commoncrawl.org/faq', 'text/html', 200,
-        |   'UYXVCD72DAPCRXBBKFE6KIZWCY5F3OAY',
-        |   'crawl-data/CC-MAIN-2024-30/segments/1720763514759.39/warc/CC-MAIN-20240714031134-20240714061134-00000.warc.gz',
-        |   754067, 9754, 'eng', 'UTF-8', TRUE),
-        |  ('org,commoncrawl)/', '2024-07-22 12:07:56',
-        |   'https://commoncrawl.org/', 'warc/revisit', 200,
-        |   '3I42H3S6NNFQ2MSVX7XZKYAYSCX5QBYJ',
-        |   'crawl-data/CC-MAIN-2024-30/segments/1720763514759.39/crawldiagnostics/CC-MAIN-20240722115029-20240722145029-00434.warc.gz',
-        |   130171, 545, NULL, NULL, TRUE),
-        |  ('com,example)/path?a=1&b=2', '2023-06-01 00:00:00',
-        |   'https://www.example.com/path?b=2&a=1', 'text/html', 301,
-        |   'AAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAA', 'redirect.warc.gz',
-        |   0, 412, NULL, NULL, TRUE)
-        |) AS t(surt_key, ts, url, mime, status, digest, filename,
-        |       "offset", length, languages, charset, surt_parity)""".stripMargin,
-    "q111b_warc_spec" ->
-      """SELECT warc_type, target_uri, record_id, warc_date,
-        |       CAST(http_status AS INT) AS http_status, http_content_type,
-        |       body, payload_digest, refers_to, warc_profile, resolved_from
-        |FROM (VALUES
-        |  ('warcinfo', NULL, '<urn:uuid:d7ae5c10-e6b3-4d27-967d-34780c58ba39>',
-        |   '2006-09-19T17:20:14Z', NULL, NULL,
-        |   e'software: Heritrix 1.12.0 http://crawler.archive.org\r\nhostname: crawling017.archive.org\r\nip: 207.241.227.234\r\nisPartOf: testcrawl-20050708\r\ndescription: testcrawl with WARC output\r\noperator: IA_Admin\r\nformat: WARC file version 1.0\r\n',
-        |   NULL, NULL, NULL, NULL),
-        |  ('response', 'http://www.archive.org/robots.txt',
-        |   '<urn:uuid:92283950-ef2f-4d72-b224-f54c6ec90bb0>',
-        |   '2006-09-19T17:20:24Z', 200, 'text/plain; charset=UTF-8',
-        |   e'User-agent: *\nDisallow: /cgi-bin/\n',
-        |   'sha1:COG3DOA5RTNLK7TES7YYMA3RQV6RVV45', NULL, NULL, NULL),
-        |  ('revisit', 'http://www.archive.org/robots.txt',
-        |   '<urn:uuid:16da6da0-bcdc-49c3-927e-57494593b943>',
-        |   '2007-03-06T00:43:35Z', 200, 'text/plain; charset=UTF-8',
-        |   e'User-agent: *\nDisallow: /cgi-bin/\n',
-        |   'sha1:COG3DOA5RTNLK7TES7YYMA3RQV6RVV45',
-        |   '<urn:uuid:92283950-ef2f-4d72-b224-f54c6ec90bb0>',
-        |   'http://netpreserve.org/warc/1.1/revisit/identical-payload-digest',
-        |   '<urn:uuid:92283950-ef2f-4d72-b224-f54c6ec90bb0>')
-        |) AS t(warc_type, target_uri, record_id, warc_date, http_status,
-        |       http_content_type, body, payload_digest, refers_to,
-        |       warc_profile, resolved_from)""".stripMargin,
-    "q111c_wat_published" ->
-      """SELECT * FROM (VALUES
-        |  ('http://r.example/', 'Real Page',
-        |   'CC-MAIN-20240722115029-20240722145029-00434.warc.gz',
-        |   CAST(593 AS BIGINT), CAST(2012 AS BIGINT), 'Apache',
-        |   'http://t.example/a', 'A@/href', 'anchor text', NULL),
-        |  ('http://r.example/', 'Real Page',
-        |   'CC-MAIN-20240722115029-20240722145029-00434.warc.gz',
-        |   CAST(593 AS BIGINT), CAST(2012 AS BIGINT), 'Apache',
-        |   '/img/logo.png', 'IMG@/src', NULL, NULL),
-        |  ('http://r.example/', 'Real Page',
-        |   'CC-MAIN-20240722115029-20240722145029-00434.warc.gz',
-        |   CAST(593 AS BIGINT), CAST(2012 AS BIGINT), 'Apache',
-        |   '/style.css', 'LINK@/href', NULL, 'css title')
-        |) AS t(target_uri, title, container_filename, container_offset,
-        |       container_length, server, link_url, link_path, link_text,
-        |       link_title)""".stripMargin,
-    // q112 family: the coded-capture fixture's stored bytes are fixed
-    // constants, so decoded texts, coding columns, digests and the br
-    // passthrough are hand-written literals (br's stored body is not
-    // valid UTF-8 — surfaced as its 21-byte length, body NULL)
-    "q112_http_decode" ->
-      """SELECT target_uri, body,
-        |  CAST(CASE WHEN body IS NULL THEN 21 ELSE length(body) END
-        |       AS BIGINT) AS payload_len,
-        |  payload_decoded, te, ce, payload_digest, truncated
-        |FROM (VALUES
-        |  ('http://coded.example/chunked', e'Wikipedia in \r\n\r\nchunks.',
-        |   TRUE, 'chunked', NULL,
-        |   'sha1:YXT4BYEXT6EGMF5Q3QLCBN52E64SFXS4', FALSE),
-        |  ('http://coded.example/gzipped',
-        |   e'The quick brown fox jumps over the lazy dog. Plain English prose, stored gzip-coded in the archive, exactly as real captures arrive from the server.\n',
-        |   TRUE, NULL, 'gzip',
-        |   'sha1:2WLFLN4DXAGJKV4HDP2QXUKGZP2YSDY6', FALSE),
-        |  ('http://coded.example/both',
-        |   e'Chunked and gzipped together: the transfer coding frames the wire bytes while the content coding compresses the entity, and a reader must undo both in order.\n',
-        |   TRUE, 'chunked', 'gzip',
-        |   'sha1:UPBERXOYSZH3SZMKW5YOABA7LVBDSXNZ', FALSE),
-        |  ('http://coded.example/brotli', NULL, FALSE, NULL, 'br',
-        |   NULL, FALSE)
-        |) AS t(target_uri, body, payload_decoded, te, ce, payload_digest,
-        |       truncated)""".stripMargin,
-    "q112b_warc_index_coded" ->
-      """SELECT surt_key, ts, url, mime, CAST(status AS INT) AS status,
-        |       digest, charset, languages
-        |FROM (VALUES
-        |  ('example,coded)/chunked', '2024-01-02 03:04:05',
-        |   'http://coded.example/chunked', 'text/plain', 200,
-        |   'YXT4BYEXT6EGMF5Q3QLCBN52E64SFXS4', 'UTF-8', 'en'),
-        |  ('example,coded)/gzipped', '2024-01-02 03:04:05',
-        |   'http://coded.example/gzipped', 'text/html', 200,
-        |   '2WLFLN4DXAGJKV4HDP2QXUKGZP2YSDY6', 'UTF-8', 'en'),
-        |  ('example,coded)/both', '2024-01-02 03:04:05',
-        |   'http://coded.example/both', 'text/html', 200,
-        |   'UPBERXOYSZH3SZMKW5YOABA7LVBDSXNZ', 'UTF-8', 'en'),
-        |  ('example,coded)/brotli', '2024-01-02 03:04:05',
-        |   'http://coded.example/brotli', 'text/plain', 200,
-        |   'XYNO4TIWTAPFNQLBSEEG3AKGT7ZFMVKY', 'UTF-8', 'und')
-        |) AS t(surt_key, ts, url, mime, status, digest, charset,
-        |       languages)""".stripMargin,
-    "q112c_warc_index_iso3" ->
-      """SELECT 'https://l3.test/d/' || CAST(i AS VARCHAR) AS url,
-        |       CASE i % 4 WHEN 0 THEN 'eng' WHEN 1 THEN 'fra'
-        |            WHEN 2 THEN 'rus' ELSE 'fra,eng' END AS languages,
-        |       CASE i % 4 WHEN 1 THEN 'windows-1252' ELSE 'UTF-8' END AS charset,
-        |       'text/html' AS mime, 200 AS status
-        |FROM (SELECT range AS i FROM range(0, 120))""".stripMargin,
-    "q112d_warc_coded_write" ->
-      """SELECT 'https://ce.test/p/' || CAST(i AS VARCHAR) AS target_uri,
-        |       '<html><p>entity ' || CAST(i AS VARCHAR) || '</p></html>'
-        |         || repeat('pad', CAST(i % 5 AS INT)) AS body,
-        |       'gzip' AS ce, TRUE AS payload_decoded, FALSE AS truncated
-        |FROM (SELECT range AS i FROM range(0, 200))""".stripMargin,
-    // q113 family: published ZipNum cluster.idx layout — parsed fields
-    // and the hand-computed candidate plan are literal tables
-    "q113_zipnum_published" ->
-      """SELECT block_key, filename, CAST("offset" AS BIGINT) AS offset,
-        |       CAST(length AS BIGINT) AS length, CAST(seq AS BIGINT) AS seq
-        |FROM (VALUES
-        |  ('0,100,22,165)/ 20170417004624', 'cdx-00000.gz', 0, 195191, 1),
-        |  ('com,example)/ 20200101000000', 'cdx-00000.gz', 195191, 180000, 2),
-        |  ('com,example)/path 20200601120000', 'cdx-00000.gz', 375191, 170500, 3),
-        |  ('net,example)/ 20210101000000', 'cdx-00000.gz', 545691, 160000, 4),
-        |  ('org,commoncrawl)/ 20240101000000', 'cdx-00001.gz', 0, 150000, 1),
-        |  ('org,wikipedia)/ 20240201000000', 'cdx-00001.gz', 150000, 140000, 2)
-        |) AS t(block_key, filename, "offset", length, seq)""".stripMargin,
-    "q113b_zipnum_plan_published" ->
-      """SELECT 'cdx-00000.gz' AS filename, CAST(0 AS BIGINT) AS range_start,
-        |       CAST(545691 AS BIGINT) AS range_end,
-        |       CAST(3 AS BIGINT) AS n_captures,
-        |       CAST(545691 AS BIGINT) AS bytes""".stripMargin,
-    "q114_ccindex_parquet" ->
-      """SELECT 'https://c2.test/d/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'cbody ' || CAST(i AS VARCHAR) || repeat('z', CAST(i % 7 AS INT)) AS body,
-        |       200 AS http_status
-        |FROM (SELECT range AS i FROM range(0, 300)) WHERE i % 5 = 2""".stripMargin,
-    "q108_warc_dedup_write" ->
-      """SELECT 'https://a.test/d/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'pay ' || CAST(i AS VARCHAR) AS body,
-        |       'response' AS warc_type, FALSE AS resolved
-        |FROM (SELECT range AS i FROM range(0, 40))
-        |UNION ALL
-        |SELECT 'https://b.test/m/' || lpad(CAST(i AS VARCHAR), 3, '0') AS target_uri,
-        |       'pay ' || CAST((i % 50) AS VARCHAR) AS body,
-        |       CASE WHEN i >= 40 AND i < 50 THEN 'response'
-        |            ELSE 'revisit' END AS warc_type,
-        |       NOT (i >= 40 AND i < 50) AS resolved
-        |FROM (SELECT range AS i FROM range(0, 120))""".stripMargin,
-    "q109_zipnum_merge" ->
-      """WITH i AS (SELECT range AS i FROM range(0, 2000))
-        |SELECT 'test,h2)/p/' || CAST(i AS VARCHAR) AS surt_key,
-        |       'https://h2.test/p/' || CAST(i AS VARCHAR) AS url,
-        |       i * 100 AS offset, CAST(90 AS BIGINT) AS length,
-        |       'w-' || CAST((i % 3) AS VARCHAR) || '.warc.gz' AS filename
-        |FROM i WHERE i % 5 = 2""".stripMargin,
-    "q107b_warc_index_zstd" ->
-      """SELECT 'https://s4.test/d/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'zbody ' || CAST(i AS VARCHAR) || repeat('q', CAST(i % 13 AS INT)) AS body,
-        |       200 AS http_status
-        |FROM (SELECT range AS i FROM range(0, 300)) WHERE i % 5 = 4""".stripMargin,
-    "q107e_warc_index_plain" ->
-      """SELECT 'https://s1.test/d/' || CAST(i AS VARCHAR) AS target_uri,
-        |       'pbody ' || CAST(i AS VARCHAR) || repeat('w', CAST(i % 9 AS INT)) AS body,
-        |       200 AS http_status
-        |FROM (SELECT range AS i FROM range(0, 300)) WHERE i % 5 = 1""".stripMargin,
-    "q107c_warc_index_langs" ->
-      """SELECT 'https://l.test/d/' || CAST(i AS VARCHAR) AS url,
-        |       CASE i % 4 WHEN 0 THEN 'en' WHEN 1 THEN 'fr' WHEN 2 THEN 'ru'
-        |            ELSE 'fr,en' END AS languages,
-        |       CASE i % 4 WHEN 1 THEN 'windows-1252' ELSE 'UTF-8' END AS charset,
-        |       'text/html' AS mime, 200 AS status
-        |FROM (SELECT range AS i FROM range(0, 120))""".stripMargin,
-    "q106_zipnum_query" ->
-      """WITH i AS (SELECT range AS i FROM range(0, 2000))
-        |SELECT 'test,h3)/p/' || CAST(i AS VARCHAR) AS surt_key,
-        |       'https://h3.test/p/' || CAST(i AS VARCHAR) AS url,
-        |       i * 100 AS offset,
-        |       CAST(90 AS BIGINT) AS length,
-        |       'w-' || CAST((i % 4) AS VARCHAR) || '.warc.gz' AS filename
-        |FROM i WHERE i % 7 = 3""".stripMargin,
-    "q102c_surt_published" -> {
-      // literal expected keys — the gate IS the pair table; Spark's surt
-      // must reproduce every key character-for-character
-      val rows = SurtPublishedPairs.zipWithIndex.map { case ((u, k), i) =>
-        s"  ($i, '$u', '$k')"
-      }.mkString(",\n")
-      s"""SELECT CAST(id AS BIGINT) AS id, url, surt_key FROM (VALUES
-         |$rows) AS t(id, url, surt_key)""".stripMargin
-    },
-    "q102b_surt" ->
-      """SELECT i AS id,
-        |  'com,ex' || CAST((i % 3) AS VARCHAR) || ',w' || CAST((i % 5) AS VARCHAR)
-        |    || ')/p/' || CAST(i AS VARCHAR) || '?q=' || CAST((i % 4) AS VARCHAR)
-        |    AS surt_key
-        |FROM (SELECT range AS i FROM range(0, 300))""".stripMargin,
-    "q101_dsir_weights" ->
-      s"""WITH $dsirWeightCtes
-         |SELECT doc_id, round(w, 6) AS log_weight FROM weights""".stripMargin,
-    "q101b_dsir_sample" ->
-      s"""WITH $dsirWeightCtes
-         |SELECT doc_id, round(w, 6) AS log_weight FROM (
-         |  SELECT doc_id, w, w + ${dsirGumbelSql(9L)} AS gkey
-         |  FROM weights
-         |  ORDER BY gkey DESC, doc_id LIMIT 100)""".stripMargin
-  )
 }

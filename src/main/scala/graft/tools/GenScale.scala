@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for the rehearsal data: reads an sf directory and
@@ -41,13 +41,8 @@ object GenScale {
     // table after a rewrite-rule fix without paying for the others.
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, shufflePartitions = 32)
 
     // Output parallelism is explicit: the crossJoin inherits the SOURCE's
     // read partitioning, and a driver-written sf dir can be one row group

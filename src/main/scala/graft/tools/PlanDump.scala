@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import scala.util.chaining._
-
 /** Dumps `.explain("formatted")` for named SparkEntry queries to files —
   * the optimization rounds' plan-evidence artifact
   * (`plans/rNN/<query>_<label>.txt`).
@@ -25,22 +22,12 @@ object PlanDump {
     }
     val Array(outDir, label, qlist) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .pipe(graft.SessionTuning.apply)
-      .getOrCreate()
+    val names = graft.SparkEntry.select(Some(qlist).filter(_ != "all"))
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val names =
-      if (qlist == "all") graft.SparkEntry.queries.keys.toSeq.sorted
-      else qlist.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
-      val fn = graft.SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown query $n"))
+      val fn = graft.SparkEntry.queries(n)
       graft.SparkEntry.prepare.get(n).foreach { f =>
         try f(spark, sfDir)
         catch { case e: Throwable =>

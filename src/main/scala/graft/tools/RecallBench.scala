@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
-import scala.util.chaining._
 
 /** ANN recall measurement: turns the IVF `nProbe` and hyperplane-LSH
   * `(planesPerTable, numTables)` tuning knobs from folklore into numbers.
@@ -27,14 +25,8 @@ object RecallBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outFile = if (args.length > 1) args(1) else "RECALL.json"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .pipe(graft.SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, shufflePartitions = 32)
     import spark.implicits._
 
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")

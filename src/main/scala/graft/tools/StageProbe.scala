@@ -2,8 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-import scala.util.chaining._
 
 /** Where does the wall time of a query go at a given core count?
   *
@@ -19,17 +17,9 @@ import scala.util.chaining._
 object StageProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StageProbe <query>[,<query>...]")
-    val names = args.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val names = graft.SparkEntry.select(Some(args.mkString(",")))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .pipe(graft.SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import scala.util.chaining._
 
 /** Per-micro-batch duration breakdown for the streaming gates (q56/q80):
   * runs the named query once (its own writeStream lifecycle included) with
@@ -15,17 +13,9 @@ import scala.util.chaining._
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StreamProbe <query>[,<query>...]")
-    val names = args.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val names = graft.SparkEntry.select(Some(args.mkString(",")))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .pipe(graft.SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
