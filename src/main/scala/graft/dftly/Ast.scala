@@ -28,6 +28,18 @@ sealed trait Node extends Product with Serializable {
     * (reference: src/dftly/nodes/base.py:421-445).
     */
   def referencedColumns: Set[String] = children.flatMap(_.referencedColumns).toSet
+
+  /** This node with each child replaced by `f(child)`; leaves come back as
+    * they are.
+    */
+  def mapChildren(f: Node => Node): Node = this match {
+    case e: Extension          => e.copy(args = e.args.map(f))
+    case _ if children.isEmpty => this
+    case _                     => Builtins.rebuild(this, children.map(f))
+  }
+
+  /** Nodes in this subtree, itself included. */
+  def size: Int = 1 + children.iterator.map(_.size).sum
 }
 
 // ---------------------------------------------------------------------------

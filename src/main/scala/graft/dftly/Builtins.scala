@@ -10,7 +10,8 @@ import scala.reflect.{ClassTag, classTag}
   * else reads it: the default registry order, [[DictParser]]'s positional arm,
   * the string form's `::` accessors and both [[Render]] serializers. The ten
   * keyword-argument nodes keep hand-written arms in [[DictParser]] and
-  * [[Render]]; their lines here only fix their place in the order.
+  * [[Render]]; their lines here fix their place in the order and, but for
+  * the leaves `literal` and `column`, how `Node.mapChildren` rebuilds them.
   */
 private[dftly] object Builtins {
 
@@ -20,7 +21,12 @@ private[dftly] object Builtins {
   case object AtLeastOne extends Arity
 
   sealed trait Entry { def key: String }
-  final case class Keyword(key: String) extends Entry
+  /** `literal` and `column`: leaves, with arms of their own everywhere. */
+  final case class Leaf(key: String) extends Entry
+  /** A keyword-argument node, rebuilt by `make` from its children: its
+    * fields in order, an absent optional one left out.
+    */
+  final case class Keyword(key: String)(val make: Seq[Node] => Node, val cls: Class[_]) extends Entry
   final case class Positional(
       key: String,
       arity: Arity,
@@ -35,10 +41,16 @@ private[dftly] object Builtins {
     Positional(key, Two, None, cs => mk(cs.head, cs(1)), classTag[T].runtimeClass)
   private def many[T <: Node: ClassTag](key: String, mk: Seq[Node] => T) =
     Positional(key, AtLeastOne, None, mk, classTag[T].runtimeClass)
+  private def kw[T <: Node: ClassTag](key: String, mk: Seq[Node] => T) =
+    Keyword(key)(mk, classTag[T].runtimeClass)
+  private def kw2[T <: Node: ClassTag](key: String, mk: (Node, Node) => T) =
+    kw(key, cs => mk(cs.head, cs(1)))
+  private def kw3[T <: Node: ClassTag](key: String, mk: (Node, Node, Option[Node]) => T) =
+    kw(key, cs => mk(cs.head, cs(1), cs.lift(2)))
 
   val table: Seq[Entry] = Seq(
-    Keyword("literal"),
-    Keyword("column"),
+    Leaf("literal"),
+    Leaf("column"),
     one("hash", Hash),
     one("signed_hash", SignedHash),
     one("not", Not),
@@ -62,14 +74,14 @@ private[dftly] object Builtins {
     two("not_equal", Neq),
     two("greater_than_or_equal", Gte),
     two("less_than_or_equal", Lte),
-    Keyword("conditional"),
-    Keyword("string_interpolate"),
-    Keyword("regex_extract"),
-    Keyword("regex_match"),
-    Keyword("strptime"),
-    Keyword("substring"),
-    Keyword("split"),
-    Keyword("cast"),
+    kw3("conditional", Conditional),
+    kw("string_interpolate", cs => StringInterpolate(cs.head, cs.tail)),
+    kw3("regex_extract", RegexExtract),
+    kw2("regex_match", RegexMatch),
+    kw3("strptime", Strptime),
+    kw3("substring", Substring),
+    kw2("split", Split),
+    kw3("cast", Cast),
     one("dt_year", DtYear, "year_of_date"),
     one("dt_month_of_year", DtMonthOfYear, "month_of_year"),
     one("dt_day_of_month", DtDayOfMonth, "day_of_month"),
@@ -99,4 +111,14 @@ private[dftly] object Builtins {
 
   /** The table line of a positional node. */
   def of(n: Node): Positional = byClass(n.getClass)
+
+  private val makers: Map[Class[_], Seq[Node] => Node] = table.collect {
+    case p: Positional => p.cls -> p.make
+    case k: Keyword    => k.cls -> k.make
+  }.toMap
+
+  /** Built-in node `n` with `children` in place of its own. */
+  def rebuild(n: Node, children: Seq[Node]): Node =
+    makers.getOrElse(n.getClass, throw new IllegalStateException(
+      s"${n.getClass.getSimpleName} has no line in Builtins.table to rebuild it from"))(children)
 }

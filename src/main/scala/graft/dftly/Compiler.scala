@@ -3,7 +3,9 @@ package graft.dftly
 import java.time.{Instant, LocalDate, LocalDateTime, LocalTime}
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{GetTimestamp, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Lowers a [[Node]] tree to a single `org.apache.spark.sql.Column`.
@@ -15,9 +17,17 @@ import org.apache.spark.sql.types._
   * reference encodes in its lowering (hash null-guard, regex-extract no-match
   * guard) reproduced exactly.
   *
+  * Each node lowers to the fewest Catalyst calls that keep its semantics:
+  *   - a slice whose bounds are non-negative integer literals (`$code[1:2]`,
+  *     `$code[4:]`) is one `substring(s, a + 1, max(b - a, 0))`; negative or
+  *     computed bounds keep the clamped Python-slice form;
+  *   - a non-strict datetime `strptime` is one `GetTimestamp` with
+  *     `failOnError` off, so each string is parsed once.
+  *
   * `schema` (when available) drives the one type-directed decision the
   * reference delegates to Polars' runtime dtypes: `+` over strings
-  * concatenates (reference: src/dftly/nodes/arithmetic.py:261-305).
+  * concatenates (reference: src/dftly/nodes/arithmetic.py:261-305). A column
+  * is found by its exact name, else by its one case-insensitive match.
   */
 object Compiler {
 
@@ -31,7 +41,11 @@ object Compiler {
   /** Best-effort bottom-up type inference; None = unknown. Only strength
     * needed is deciding string-ness for Add and interval-ness for totals.
     */
-  def inferType(node: Node, schema: Option[StructType]): Option[DataType] = node match {
+  def inferType(node: Node, schema: Option[StructType]): Option[DataType] =
+    typeOf(node, n => schema.flatMap(fieldNamed(_, n)).map(_.dataType))
+
+  /** `inferType` with the columns typed by `colType`. */
+  private def typeOf(node: Node, colType: String => Option[DataType]): Option[DataType] = node match {
     case Lit(v) =>
       v match {
         case null             => None
@@ -48,7 +62,7 @@ object Compiler {
         case _: Instant       => Some(TimestampType)
         case _                => None
       }
-    case Col(n) => schema.flatMap(_.fields.find(_.name == n)).map(_.dataType)
+    case Col(n) => colType(n)
     case Cast(_, t, _) =>
       ConstEval.evalString(t).flatMap { name =>
         Types.DTYPES
@@ -69,11 +83,11 @@ object Compiler {
         }
       }
     case Add(args) =>
-      val ts = args.map(inferType(_, schema))
+      val ts = args.map(typeOf(_, colType))
       if (ts.nonEmpty && ts.forall(_.contains(StringType))) Some(StringType)
       else ts.flatten.headOption // numeric-ish; good enough for dispatch
     case Subtract(l, r) =>
-      (inferType(l, schema), inferType(r, schema)) match {
+      (typeOf(l, colType), typeOf(r, colType)) match {
         case (Some(a), Some(b))
             if (a == TimestampNTZType || a == TimestampType || a == DateType) &&
               (b == TimestampNTZType || b == TimestampType || b == DateType) =>
@@ -81,8 +95,8 @@ object Compiler {
         case (a, _) => a
       }
     case Conditional(_, t, o) =>
-      inferType(t, schema).orElse(o.flatMap(inferType(_, schema)))
-    case Coalesce(args) => args.flatMap(inferType(_, schema)).headOption
+      typeOf(t, colType).orElse(o.flatMap(typeOf(_, colType)))
+    case Coalesce(args) => args.flatMap(typeOf(_, colType)).headOption
     case StringInterpolate(_, _) | RegexExtract(_, _, _) | Substring(_, _, _) => Some(StringType)
     case Split(_, _)      => Some(ArrayType(StringType))
     case LenChars(_)      => Some(IntegerType)
@@ -95,13 +109,79 @@ object Compiler {
     case Mean(_)       => Some(DoubleType)
     case Divide(_, _)  => Some(DoubleType)
     case Power(_, _)   => Some(DoubleType)
-    case Negate(a)     => inferType(a, schema)
-    case Min(args)     => args.flatMap(inferType(_, schema)).headOption
-    case Max(args)     => args.flatMap(inferType(_, schema)).headOption
-    case Multiply(args) => args.flatMap(inferType(_, schema)).headOption
+    case Negate(a)     => typeOf(a, colType)
+    case Min(args)     => args.flatMap(typeOf(_, colType)).headOption
+    case Max(args)     => args.flatMap(typeOf(_, colType)).headOption
+    case Multiply(args) => args.flatMap(typeOf(_, colType)).headOption
     case SetTime(_, _) => Some(TimestampNTZType)
     case Hash(_) | SignedHash(_) => Some(LongType)
     case _ => None
+  }
+
+  /** The field `n` names: an exact match, else the one field it matches
+    * case-insensitively, as the analyzer resolves it by default. Under
+    * `spark.sql.caseSensitive=true` the analyzer rejects the second kind
+    * anyway, so the type found for it never decides a query that runs.
+    */
+  private def fieldNamed(schema: StructType, n: String): Option[StructField] =
+    schema.fields.find(_.name == n).orElse {
+      schema.fields.filter(_.name.equalsIgnoreCase(n)) match {
+        case Array(f) => Some(f)
+        case _        => None
+      }
+    }
+
+  /** The type `inferType` gives `node`, where it is sure to be of the kind
+    * Spark gives the lowered column (string, date, timestamp, day-time
+    * interval, numeric; any other type exactly); None where it may not be.
+    * Every type-directed lowering asks only for that kind, so a column
+    * holding `node`'s value and a copy of `node` itself, in the same place
+    * of an expression, then lower alike. `colType` types the columns read.
+    */
+  private[graft] def settledType(node: Node, colType: String => Option[DataType]): Option[DataType] = {
+    val (str, date, ts, iv, num) = (Some("string"), Some("date"), Some("timestamp"), Some("interval"), Some("numeric"))
+    def kind(n: Node): Option[Any] = typeOf(n, colType).map {
+      case StringType                       => "string"
+      case DateType                         => "date"
+      case TimestampType | TimestampNTZType => "timestamp"
+      case _: DayTimeIntervalType           => "interval"
+      case _: NumericType                   => "numeric"
+      case other                            => other
+    }
+    // one kind for all `ns`, nulls aside: Spark's common type is of that kind
+    def common(ns: Seq[Node]): Boolean = {
+      val vs = ns.filter(_ != Lit(null))
+      vs.nonEmpty && vs.forall(settled) && vs.map(kind).distinct.size == 1
+    }
+    def settled(n: Node): Boolean = kind(n).isDefined && (n match {
+      // the lowering fixes the type, whatever the arguments
+      case Lit(_) | Col(_) | Cast(_, _, _) | Strptime(_, _, _) | StringInterpolate(_, _) |
+          RegexExtract(_, _, _) | Split(_, _) | LenChars(_) | RegexMatch(_, _) | Not(_) | And(_) |
+          Or(_) | Gt(_, _) | Lt(_, _) | Eq(_, _) | Neq(_, _) | Gte(_, _) | Lte(_, _) | _: DtAccessor |
+          _: DtTotal | Mean(_) | Power(_, _) | SetTime(_, _) | Hash(_) | SignedHash(_) => true
+      // a binary slice is binary
+      case Substring(s, _, _) => settled(s) && kind(s) == str
+      case Add(Seq(a)) => settled(a)
+      case Add(args) =>
+        val ks = args.map(kind)
+        args.forall(settled) && (ks.forall(_ == str) || ks.forall(_ == num) ||
+          // date + intervals is cast back to a date
+          ks.count(_ == date) == 1 && ks.forall(k => k == date || k == iv) && kind(n) == date)
+      case Subtract(l, r) =>
+        settled(l) && settled(r) && ((kind(l), kind(r)) match {
+          case (`num`, `num`) | (`date` | `ts`, `date` | `ts`) | (`date` | `ts`, `iv`) => true
+          case _ => false
+        })
+      case Multiply(args) => args.forall(a => settled(a) && kind(a) == num)
+      case Divide(l, r)   => Seq(l, r).forall(a => settled(a) && kind(a) == num)
+      case Negate(a)      => settled(a) && (kind(a) == num || kind(a) == iv)
+      case Conditional(_, t, o) => common(t +: o.toSeq)
+      case Coalesce(args) => common(args)
+      case Min(args)      => common(args)
+      case Max(args)      => common(args)
+      case _              => false
+    })
+    if (settled(node)) typeOf(node, colType) else None
   }
 
   private final class Ctx(schema: Option[StructType]) {
@@ -230,9 +310,7 @@ object Compiler {
         // null on no-match AND on a non-participating group — Spark's
         // builtin returns "" for both, and the old regexp_like guard only
         // caught the first. Also one regex evaluation per row, not two.
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          RegexExtractNull(
-            org.apache.spark.sql.graft.ColumnBridge.expression(src), pat, idx))
+        ColumnBridge.column(RegexExtractNull(ColumnBridge.expression(src), pat, idx))
 
       case RegexMatch(pattern, source) =>
         regexp_like(lower(source), lower(pattern))
@@ -240,6 +318,13 @@ object Compiler {
       case sp: Strptime => lowerStrptime(sp)
 
       case LenChars(a) => length(lower(a))
+
+      case Substring(source, NonNegInt(a), stop @ (None | Some(NonNegInt(_)))) =>
+        // Non-negative literal bounds need no normalization: Spark's
+        // 1-based substring already clips a start past the end to "" and a
+        // length past the end to the rest, as a Python slice does.
+        val len = stop.collect { case NonNegInt(b) => (b - a) max 0 }.getOrElse(Int.MaxValue)
+        substring(lower(source), a + 1, len)
 
       case Substring(source, start, stop) =>
         // Python slice semantics, ported from reference str.py:947-971:
@@ -389,10 +474,13 @@ object Compiler {
           if (strict) to_time(src, lit(jfmt)) else try_to_time(src, lit(jfmt))
         case "datetime" =>
           if (strict) to_timestamp_ntz(src, lit(jfmt))
-          else
-            // No try_to_timestamp_ntz builtin; guard with the LTZ try-parse
-            // (same format-success condition) and emit the NTZ parse lazily.
-            when(try_to_timestamp(src, lit(jfmt)).isNotNull, to_timestamp_ntz(src, lit(jfmt)))
+          else {
+            // No try_to_timestamp_ntz builtin: to_timestamp_ntz's own
+            // expression with failOnError off parses each string once and
+            // yields null where the strict form raises.
+            ColumnBridge.column(GetTimestamp(
+              ColumnBridge.expression(src), Literal(jfmt), TimestampNTZType, failOnError = false))
+          }
       }
       // chrono/POSIX two-digit-year pivot: 00-68 → 20xx, 69-99 → 19xx.
       // Java's `yy` puts everything in 2000-2099, so a %y-parsed year ≥ 2069
@@ -442,6 +530,17 @@ object Compiler {
         throw new IllegalArgumentException(
           s"Unsupported literal value: $other (${other.getClass.getName})"
         )
+    }
+  }
+
+  /** A slice bound that is a non-negative integer literal, small enough
+    * that its 1-based position still fits an Int.
+    */
+  private object NonNegInt {
+    def unapply(n: Node): Option[Int] = n match {
+      case Lit(v: Int) if v >= 0 && v < Int.MaxValue => Some(v)
+      case Lit(v: Long) if v >= 0 && v < Int.MaxValue => Some(v.toInt)
+      case _ => None
     }
   }
 }

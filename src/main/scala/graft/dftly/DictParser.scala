@@ -173,13 +173,13 @@ object DictParser {
           case _ => p.make(cs)
         }
 
-      case Builtins.Keyword("literal") =>
+      case Builtins.Leaf("literal") =>
         // the WHOLE payload is the one argument (reference
         // Literal.args_from_value, base.py:836-845): {"literal": [1,2,3]}
         // is the LIST literal [1,2,3], {"literal": null} is Literal(None) —
         // generic positional splitting would splat the list into three args
         Lit(if (isPod(raw)) normalizePod(raw) else asList(raw).getOrElse(raw))
-      case Builtins.Keyword("column") =>
+      case Builtins.Leaf("column") =>
         if (kwargs.nonEmpty || args.size != 1)
           throw new IllegalArgumentException(s"column takes exactly one name; got $raw")
         args.head match {
@@ -254,8 +254,8 @@ object DictParser {
           }
         checked(node)(ConstEval.castArgs)
 
-      case Builtins.Keyword(other) =>
-        throw new IllegalStateException(s"no dict-form arm for built-in '$other'")
+      case other =>
+        throw new IllegalStateException(s"no dict-form arm for built-in '${other.key}'")
     }
   }
 }

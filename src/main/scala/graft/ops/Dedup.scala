@@ -624,21 +624,22 @@ object Dedup {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-    // blank docs shingle to an empty array → no signature, no banding;
-    // exact dedup owns identical-empty documents (same contract as before)
     val base = ensureParallelism(df)
       .select(col(idCol).as("id"),
         graft.ops.expr.NativeSig.hashSortedDistinct(
           shingles(col(textCol), shingleN)).as("ss"))
-      .filter(size(col("ss")) > 0)
     // staged: lshBandHashes references its sig argument once PER BAND —
     // inlining the signature kernel there would evaluate it `bands` times
-    // per row (the same no-CSE trap lshCandidatePairs documents)
+    // per row (the same no-CSE trap lshCandidatePairs documents).
+    // Blank docs shingle to an empty array → no band rows; exact dedup owns
+    // identical-empty documents. The guard sits on the banding, not in a
+    // filter on `ss`: Catalyst pushes such a filter below the projection
+    // that computes `ss`, and shingles and hashes every document twice.
     val banded = base
       .select(col("id"), size(col("ss")).as("len"), col("ss"),
         graft.ops.expr.NativeSig.minhashSignature(col("ss"), numHashes).as("sig"))
       .select(col("id"), col("len"), col("ss"),
-        explode(lshBandHashes(col("sig"), bands, rowsPerBand)).as("bb"))
+        explode(when(col("len") > 0, lshBandHashes(col("sig"), bands, rowsPerBand))).as("bb"))
       .select(col("bb.band"), col("bb.band_hash"), col("id"), col("len"), col("ss"))
     // bounded collect: over-cap buckets never materialize more than
     // maxBucketSize (gram-array-carrying) members — see bucketCandidatePairs
@@ -1262,9 +1263,13 @@ object Dedup {
     val shCol =
       if (hashGrams) graft.ops.expr.NativeSig.hashSortedDistinct(rawSh)
       else rawSh
+    // No filter on empty arrays: a blank doc explodes to no instances, so it
+    // has no prefix row and the id join drops its array. Catalyst pushes a
+    // `size(sh) > 0` filter below the projection that computes `sh` and
+    // shingles twice — the same holds for the filter it infers from
+    // `explode(sh)`, which the guarded generator input below avoids.
     val shBase = ensureParallelism(df)
       .select(col(idCol).as("id"), shCol.as("sh"))
-      .filter(size(col("sh")) > 0)
     // The ranking path and the verification path are separate plan branches
     // over the shingled frame, and branches recompute everything below them.
     // Opt-in persistence pays the shingling map cost once instead of twice —
@@ -1275,7 +1280,8 @@ object Dedup {
       if (cacheShingles)
         shBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else shBase
-    val inst = sh.select(col("id"), size(col("sh")).as("len"), explode(col("sh")).as("g"))
+    val inst = sh.select(col("id"), size(col("sh")).as("len"),
+      explode(when(size(col("sh")) > 0, col("sh"))).as("g"))
     // Document frequency via groupBy + sort-merge join-back, NOT a window
     // over the instances: `count() over (partition by g)` buffers each
     // gram's ENTIRE instance group per task (windows have no partial

@@ -244,17 +244,18 @@ object StreamingOps {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-    // blank docs shingle to an empty array → no signature, no banding
-    // (exact dedup owns identical-empty documents, as in batch)
+    // blank docs shingle to an empty array → no band rows (exact dedup owns
+    // identical-empty documents, as in batch); guarded on the banding, as
+    // in batch, so the shingling is not pushed into a filter and run twice
     val banded = df
       .select(col(idCol).as("id"), col(tsCol).as("ts"),
         graft.ops.expr.NativeSig.hashSortedDistinct(
           Dedup.shingles(col(textCol), shingleN)).as("ss"))
-      .filter(size(col("ss")) > 0)
       .select(col("id"), col("ts"), col("ss"),
         graft.ops.expr.NativeSig.minhashSignature(col("ss"), numHashes).as("sig"))
       .select(col("id"), col("ts"), col("ss"),
-        explode(Dedup.lshBandHashes(col("sig"), bands, rowsPerBand)).as("bb"))
+        explode(when(size(col("ss")) > 0,
+          Dedup.lshBandHashes(col("sig"), bands, rowsPerBand))).as("bb"))
       .select(col("id"), col("ts"), col("ss"),
         col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
       .withWatermark("ts", delay)

@@ -1,11 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.analysis.{Resolver, UnresolvedAttribute}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.dftly.{Compiler, DictParser, Yaml}
+import graft.dftly.{And, Coalesce, Col, Compiler, Conditional, DictParser, Divide, Extension, Lit, Node, Or, Yaml}
 import graft.ops.Dedup
 
 /** Config-driven relational pipelines: the YAML verbs around the dftly
@@ -31,9 +32,11 @@ import graft.ops.Dedup
   *
   * `withColumns` (and `window.cols`) mean a chain of `withColumn`: each
   * entry sees the outputs of the entries before it, and an existing name is
-  * replaced in place. They are built as one projection per dependency layer
-  * rather than one per entry, so plan size and analysis cost follow the
-  * dependency depth, not the column count.
+  * replaced in place. A `withColumns` read of an earlier entry becomes a
+  * copy of that entry's expression where the copy keeps the fold's meaning
+  * and costs no second evaluation per row, so the step is one projection;
+  * where it cannot, the reader moves to a later projection, one per
+  * dependency layer, as every `window.cols` reader does.
   *
   * Scale contract: `select`/`withColumns`/`filter` are shuffle-free;
   * `groupBy` aggregates map-side before its single shuffle; `join` takes an
@@ -89,11 +92,95 @@ object Pipeline {
     */
   private final case class Derived(name: String, reads: Set[String], build: DataFrame => Column)
 
+  /** Nodes a reader's expression may grow to by inlining. In a chain
+    * `k_i: $k_{i-1} + 1` ~30 links share a projection, and no tree gets deep
+    * enough to exhaust the analyzer's 100 resolution iterations.
+    */
+  private val InlineCap = 64
+
+  /** `entries` in order, with each read of an earlier entry
+    * replaced by that entry's expression (itself already inlined), so the
+    * reader needs no later projection. A read keeps its column, and
+    * `withDerived` layers its reader, unless
+    *   - (a) the definition is deterministic: it holds no `Extension`;
+    *   - (b) no entry from the definition up to the reader redefines a
+    *     column the definition reads, so the copy reads what the fold
+    *     shows the definition;
+    *   - (c) the reader stays within `InlineCap` nodes;
+    *   - (d) the definition is a column or a literal, or every read of it
+    *     is one Catalyst evaluates on every row (`columnReads`), so
+    *     subexpression elimination computes the copies in one projection
+    *     once per row;
+    *   - (e) the definition is a column, or its type is settled
+    *     (`Compiler.settledType`): `+`, `-` and `/` then lower over the copy
+    *     as they would over the column its layer shows them.
+    * Names match with `same`, the session resolver; `schema` is the step's
+    * input.
+    */
+  private def inlineEarlier(
+      entries: Seq[(String, Node)],
+      schema: StructType,
+      same: Resolver
+  ): Seq[(String, Node)] = {
+    val names = entries.map(_._1).toVector
+    // the entry a read of `c` at entry i sees: the last one before i named `c`
+    def definer(c: String, i: Int): Option[Int] = (i - 1 to 0 by -1).find(k => same(names(k), c))
+    val readInBranch = entries.zipWithIndex.flatMap { case ((_, node), i) =>
+      columnReads(node).collect { case (c, false) => definer(c, i) }.flatten
+    }.toSet
+    def hasExtension(n: Node): Boolean = n.isInstanceOf[Extension] || n.children.exists(hasExtension)
+    val done = scala.collection.mutable.ArrayBuffer.empty[Node]
+    // settled type of each entry's output, by the types its reads see
+    val types = scala.collection.mutable.ArrayBuffer.empty[Option[DataType]]
+    for (((_, node), i) <- entries.zipWithIndex) {
+      var size = node.size
+      def inline(n: Node): Node = n match {
+        case Col(c) =>
+          definer(c, i).filter { j =>
+            val d = done(j)
+            val free = d.referencedColumns
+            !hasExtension(d) &&
+            (j until i).forall(k => !free.exists(same(names(k), _))) &&
+            size + d.size - 1 <= InlineCap &&
+            (d.isInstanceOf[Col] || d.isInstanceOf[Lit] || !readInBranch(j)) &&
+            (d.isInstanceOf[Col] || types(j).isDefined)
+          }.fold(n) { j => size += done(j).size - 1; done(j) }
+        case _ => n.mapChildren(inline)
+      }
+      done += inline(node)
+      types += Compiler.settledType(done(i), c =>
+        definer(c, i).fold(schema.find(f => same(f.name, c)).map(_.dataType))(types(_)))
+    }
+    names.zip(done)
+  }
+
+  /** Each column read in `n`, and whether Catalyst evaluates it on every
+    * row: not in a branch of `if`, not after the first argument of `??`,
+    * `and` or `or`, not in a numerator (the zero-divisor guard moves it into
+    * a branch), not in an `Extension` argument (its lowering is unknown).
+    */
+  private def columnReads(n: Node, always: Boolean = true): Seq[(String, Boolean)] = {
+    def firstOnly(args: Seq[Node]) =
+      args.zipWithIndex.flatMap { case (a, k) => columnReads(a, always && k == 0) }
+    n match {
+      case Col(c)               => Seq(c -> always)
+      case Conditional(w, t, o) => columnReads(w, always) ++ (t +: o.toSeq).flatMap(columnReads(_, false))
+      case Coalesce(args)       => firstOnly(args)
+      case And(args)            => firstOnly(args)
+      case Or(args)             => firstOnly(args)
+      case Divide(l, r)         => columnReads(l, false) ++ columnReads(r, always)
+      case e: Extension         => e.args.flatMap(columnReads(_, false))
+      case _                    => n.children.flatMap(columnReads(_, always))
+    }
+  }
+
   /** Adds or replaces `entries` with the meaning of a left fold of
     * `withColumn` — each entry sees every earlier entry's output, a name
     * that already exists is replaced in place, a new one is appended — but
-    * builds one projection per dependency layer instead of one per entry,
-    * so analysis cost follows the dependency depth, not the entry count.
+    * builds one projection per dependency layer instead of one per entry.
+    * `withColumns` first copies definitions into their readers
+    * (`inlineEarlier`), so its step is one projection unless a read could
+    * not be inlined; `window` steps are layered as written.
     *
     * Every layer constraint points from an earlier entry to a later one,
     * so one forward pass gives each entry its lowest legal layer:
@@ -410,10 +497,10 @@ object Pipeline {
         }: _*)
 
       case "withColumns" =>
-        withDerived(df, Opts.mapping(step(verb), verb).map {
-          case (name, raw) =>
-            val node = DictParser.parse(raw)
-            Derived(name, node.referencedColumns, d => Compiler.compile(node, Some(d.schema)))
+        val entries = Opts.mapping(step(verb), verb).map { case (n, raw) => n -> DictParser.parse(raw) }
+        val same = df.sparkSession.sessionState.analyzer.resolver
+        withDerived(df, inlineEarlier(entries, df.schema, same).map { case (name, node) =>
+          Derived(name, node.referencedColumns, d => Compiler.compile(node, Some(d.schema)))
         })
 
       case "filter" =>

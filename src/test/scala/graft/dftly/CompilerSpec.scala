@@ -195,6 +195,74 @@ class CompilerSpec extends SparkTestBase {
     assert(eval1("$s[5:2]", df) == "") // start > stop clips to empty
   }
 
+  test("literal slice bounds equal Python slicing, nulls and multibyte included") {
+    val strs = Seq("hello world", "", "a", "héllo wörld", "日本語テキスト", "x\uD83D\uDE00y\uD83D\uDE00", null)
+    val df = strs.toDF("s")
+    def py(s: String, a: Int, b: Option[Int]): String = if (s == null) null else {
+      val cp = s.codePoints.toArray
+      val (from, to) = (a min cp.length, b.getOrElse(cp.length) min cp.length)
+      if (to <= from) "" else new String(cp, from, to - from)
+    }
+    val top = strs.filter(_ != null).map(s => s.codePointCount(0, s.length)).max
+    val bounds = for (a <- 0 to top + 2; b <- (0 to top + 2).map(Some(_)) :+ None) yield (a, b)
+    val cols = bounds.map { case (a, b) =>
+      val e = b.fold(s"substring($$s, $a)")(x => s"substring($$s, $a, $x)")
+      Compiler.compile(Dftly.parse(e), Some(df.schema))
+    }
+    val got = df.select(cols: _*).collect()
+    for ((row, s) <- got.zip(strs); ((a, b), k) <- bounds.zipWithIndex)
+      assert(row.get(k) == py(s, a, b), s"'$s'[$a:${b.getOrElse("")}]")
+    // the slice syntax takes the same lowering
+    assert(eval1("$s[1:3]", Seq("héllo").toDF("s")) == "él")
+    assert(eval1("$s[3:]", Seq("héllo").toDF("s")) == "lo")
+  }
+
+  test("a literal slice lowers to one substring call") {
+    import org.apache.spark.sql.catalyst.expressions.{Greatest, Least, Length, Substring => SubstringExpr}
+    val df = Seq("E11.9").toDF("code")
+    val out = df.select(Compiler.compile(Dftly.parse("$code[1:2]"), Some(df.schema)).as("r"))
+    val es = out.queryExecution.analyzed.expressions.flatMap(_.collect { case e => e })
+    assert(es.count(_.isInstanceOf[SubstringExpr]) == 1)
+    assert(!es.exists(e => e.isInstanceOf[Length] || e.isInstanceOf[Greatest] || e.isInstanceOf[Least]),
+      out.queryExecution.analyzed.toString)
+    assert(out.head.getString(0) == "1")
+    // a negative bound keeps the clamped Python-slice form
+    val neg = df.select(Compiler.compile(Dftly.parse("$code[-3:]"), Some(df.schema)).as("r"))
+    assert(neg.queryExecution.analyzed.expressions.exists(_.exists(_.isInstanceOf[Length])))
+    assert(neg.head.getString(0) == "1.9")
+  }
+
+  test("non-strict datetime strptime parses once and keeps its values") {
+    import org.apache.spark.sql.catalyst.expressions.GetTimestamp
+    def lax(fmt: String, xs: Seq[String]) = {
+      val df = xs.toDF("s")
+      val out = df.select(Compiler.compile(Dftly.parse("$s ::? \"" + fmt + "\""), Some(df.schema)).as("r"))
+      val parses = out.queryExecution.analyzed.expressions
+        .map(_.collect { case g: GetTimestamp => g }.size).sum
+      assert(parses == 1, out.queryExecution.analyzed.toString)
+      out.collect().map(_.get(0)).toSeq
+    }
+    def ts(s: String) = LocalDateTime.parse(s)
+    assert(lax("%Y-%m-%d %H:%M:%S",
+      Seq("2021-03-04 05:06:07", "notadate", "2021-02-30 00:00:00", "2021-13-01 00:00:00", "", null)) ==
+      Seq(ts("2021-03-04T05:06:07"), null, null, null, null, null))
+    // an offset is parsed and dropped: the local time stays as written
+    assert(lax("%Y-%m-%d %H:%M:%S%z", Seq("2021-03-04 05:06:07+0200", "2021-03-04 05:06:07-0530",
+      "2021-03-04 05:06:07")) == Seq(ts("2021-03-04T05:06:07"), ts("2021-03-04T05:06:07"), null))
+    // a local time in a DST gap of the session zone still parses as written
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try assert(lax("%Y-%m-%d %H:%M:%S", Seq("2021-03-14 02:30:00", "2021-11-07 01:30:00")) ==
+      Seq(ts("2021-03-14T02:30:00"), ts("2021-11-07T01:30:00")))
+    finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
+  test("a column named in another case types + as the analyzer resolves it") {
+    val df = Seq(("x", "y")).toDF("a", "b")
+    assert(Dftly.select(df, Seq("r" -> "$A + $B")).head.getString(0) == "xy")
+    assert(Dftly.select(df, Seq("r" -> "$a + $b")).head.getString(0) == "xy")
+  }
+
   test("split: literal separator, not regex; empties kept; null → null") {
     val df = Seq(("a.b.c", "x,,y")).toDF("dotted", "commas")
     assert(eval1("split($dotted, '.')", df) == Seq("a", "b", "c"))

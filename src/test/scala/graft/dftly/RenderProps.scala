@@ -112,6 +112,13 @@ object RenderProps extends Properties("Render") {
         refuses(Lit(5L)) && refuses(Lit(-3)) && refuses(Lit(Seq(1, 2)))
     }
 
+  property("mapChildren keeps the node and replaces exactly its children") =
+    Prop.forAll(withRefusals) { n =>
+      val marked = n.mapChildren(_ => Col("m"))
+      n.mapChildren(identity) == n && marked.getClass == n.getClass &&
+        marked.children == n.children.map(_ => Col("m")) && marked.size == n.children.size + 1
+    }
+
   property("toDict handles array literals and interpolation (no string form)") =
     Prop.forAll(Gen.listOf(Gen.choose(0, 9))) { xs =>
       val n = Add(Seq(Lit(xs), Lit(1)))

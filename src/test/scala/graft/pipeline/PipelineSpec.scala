@@ -1100,7 +1100,7 @@ class PipelineSpec extends SparkTestBase {
     val got = assertAsFold(df,
       "x" -> "$a + 1", "y" -> "$x * 2", "z" -> "$a - 1", "w" -> "$y + $z", "v" -> "5")
     assert(got.columns.toSeq == Seq("a", "s", "x", "y", "z", "w", "v"))
-    assert(addedProjects(got, df) == 3)
+    assert(addedProjects(got, df) == 1)
   }
 
   test("withColumns: an overwritten source column, read before and after the overwrite") {
@@ -1118,7 +1118,7 @@ class PipelineSpec extends SparkTestBase {
     val df = Seq(1, 2).toDF("a")
     val got = assertAsFold(df, "c1" -> "$a + 1", "c2" -> "$c1 * 2", "c3" -> "$c2 - 3")
     assert(cells(got.select("c3")) == Seq(Seq("1"), Seq("3")))
-    assert(addedProjects(got, df) == 3)
+    assert(addedProjects(got, df) == 1)
   }
 
   test("withColumns: string + across layers concatenates") {
@@ -1160,6 +1160,117 @@ class PipelineSpec extends SparkTestBase {
     val got = withColumnsStep(df, entries)
     assert(addedProjects(got, df) <= 3, got.queryExecution.analyzed.treeString.take(2000))
     assert(got.columns.toSeq == Seq("v", "s") ++ entries.map(_._1))
+  }
+
+  // inlining: a read of an earlier entry becomes a copy of its expression,
+  // unless that would change the fold's meaning or compute it twice per row
+
+  /** 200 entries in 8 families of 25, as `meds_wide` generates them; 49
+    * read an earlier entry that reads none, each where `meds_wide` reads it.
+    */
+  private def medsLike: Seq[(String, String)] = {
+    val outs = scala.collection.mutable.ArrayBuffer.empty[(String, String, Char, Boolean)]
+    def earlier(kinds: String) = outs.filter(o => !o._4 && kinds.contains(o._3)).last._1
+    for (k <- 0 until 200) {
+      val (fam, m) = (k % 8, k / 8)
+      val ref = fam != 4 && Set(5, 8, 11, 14, 17, 20, 23)(m)
+      val (e, kind) = fam match {
+        case 0 if ref => (s"$$${earlier("D")} * 2.5 - $m", 'D')
+        case 0        => (s"$$numeric_value * 1.5 + $m", 'D')
+        case 1 if ref => (s"$$${earlier("SC")}[1:3]", 'S')
+        case 1        => (s"$$code[${m % 3}:${m % 3 + 2}]", 'S')
+        case 2 if ref => (s"extract group 1 of /([0-9]+)(.?)/ from $$${earlier("C")}", 'S')
+        case 2        => ("extract group 2 of /^([A-Z])(\\d+)/ from $code", 'S')
+        case 3 if ref => (s"($$${earlier("SC")}::?float64) ?? 1.5", 'D')
+        case 3        => (s"($$text_value::?float64) ?? $m", 'D')
+        case 4        => ("$time_str ::? \"%Y-%m-%d %H:%M:%S\"", 'T')
+        case 5 if ref => (s"\"H$m\" if $$${earlier("D")} > 3 else \"L$m\"", 'C')
+        case 5        => (s"\"H$m\" if $$numeric_value > $m else \"L$m\"", 'C')
+        case 6 if ref => (s"$$${earlier("SC")} ?? \"U$m\"", 'S')
+        case 6        => (s"$$unit ?? \"U$m\"", 'S')
+        case 7 if ref => (s"hash($$${earlier("DSCL")})", 'L')
+        case _        => (s"hash($$code + \"k$m\")", 'L')
+      }
+      outs += ((f"c$k%03d", e, kind, ref))
+    }
+    assert(outs.count(_._4) == 49)
+    outs.map(o => o._1 -> o._2).toSeq
+  }
+
+  test("withColumns: 200 entries with 49 cross-entry reads analyze to one Project") {
+    val df = Seq(
+      ("E11.9", "2021-03-04 05:06:07", "120/80", Some(4.5), Some("mg")),
+      ("A1", "bad", null, None, None)).toDF("code", "time_str", "text_value", "numeric_value", "unit")
+    val got = assertAsFold(df, medsLike: _*)
+    assert(addedProjects(got, df) == 1, got.queryExecution.analyzed.treeString.take(2000))
+  }
+
+  test("withColumns: a column redefined between definition and reader keeps a layer") {
+    val df = Seq((1, 10), (2, 20)).toDF("a", "b")
+    // y must read x = old a + 1, not new a + 1
+    val got = assertAsFold(df, "x" -> "$a + 1", "a" -> "$b * 10", "y" -> "$x * 2", "z" -> "$a + $x")
+    assert(cells(got.select("y", "z")) == Seq(Seq("4", "102"), Seq("6", "203")))
+    assert(addedProjects(got, df) == 2)
+    // a self-redefinition is no copy either: its column names the old value
+    val self = assertAsFold(df, "a" -> "$a * 10", "after" -> "$a + 1")
+    assert(cells(self.select("after")) == Seq(Seq("11"), Seq("21")))
+    assert(addedProjects(self, df) == 2)
+  }
+
+  test("withColumns: a read under if or after the first ?? argument keeps a layer") {
+    val df = Seq((1, Some(5)), (2, None)).toDF("a", "b")
+    assert(addedProjects(assertAsFold(df, "x" -> "$a * 3", "y" -> "$x if $a > 1 else 0"), df) == 2)
+    assert(addedProjects(assertAsFold(df, "x" -> "$a * 3", "y" -> "$b ?? $x"), df) == 2)
+    // the condition and the first ?? argument are evaluated on every row
+    assert(addedProjects(assertAsFold(df, "x" -> "$a * 3", "y" -> "1 if $x > 3 else 0", "z" -> "$x ?? $b"), df) == 1)
+    // a column or a literal is copied anywhere
+    assert(addedProjects(assertAsFold(df, "x" -> "$a", "k" -> "7", "y" -> "$x if $b > 1 else $k"), df) == 1)
+  }
+
+  test("withColumns: an Extension output is not inlined") {
+    val jitter = graft.dftly.NodeSpec.expression("jitter", 1, 1) { case Seq(x) => x + rand(7) }
+    val parser = graft.dftly.DftlyParser.withDefaults("jitter" -> jitter)
+    val df = spark.range(50).toDF("a")
+    val got = Pipeline.run(spark,
+      "source: t\nsteps:\n  - withColumns:\n      r: 'jitter($a)'\n      y: '$r * 2'\n",
+      Map("t" -> df), parser)
+    assert(addedProjects(got, df) == 2)
+    assert(got.collect().forall(row => row.getDouble(2) == row.getDouble(1) * 2))
+  }
+
+  test("withColumns: a copy lowers as its column would, or is not made") {
+    import java.time.{Duration, LocalDate}
+    val df = Seq((LocalDate.of(2021, 3, 4), 2, Duration.ofHours(36), Duration.ofDays(1)))
+      .toDF("d", "n", "dur", "dur2")
+    // n * dur is an interval that `+` would take for an int, dur + d a date
+    // that `-` would take for an interval: neither is copied, y and z stay dates
+    val kept = assertAsFold(df,
+      "x" -> "$n * $dur", "y" -> "$d + $x", "w" -> "$dur + $d", "z" -> "$w - $dur2")
+    assert(addedProjects(kept, df) == 2)
+    assert(cells(kept.select("y", "z")) == Seq(Seq("2021-03-07", "2021-03-04")))
+    // d + dur is typed a date, as Spark types it, so it is copied
+    val got = assertAsFold(df, "x" -> "$d + $dur", "y" -> "$x - $dur2")
+    assert(addedProjects(got, df) == 1)
+    assert(cells(got.select("y")) == Seq(Seq("2021-03-04")))
+  }
+
+  test("withColumns: string + over a column of a layer below concatenates") {
+    val df = Seq("p", "q").toDF("s")
+    // a is read in a branch, so d lowers against the schema of a's layer
+    val got = assertAsFold(df,
+      "a" -> "$s + \"x\"", "b" -> "$a if $s == \"p\" else \"-\"", "d" -> "$a + $s")
+    assert(addedProjects(got, df) == 2)
+    assert(cells(got.select("b", "d")) == Seq(Seq("px", "pxp"), Seq("-", "qxq")))
+  }
+
+  test("withColumns: a chain of depth 100 equals the fold; one of depth 1000 builds") {
+    val df = Seq(1, 2).toDF("k0")
+    def chain(n: Int) = (1 to n).map(i => s"k$i" -> s"$$k${i - 1} + 1")
+    // 31 links fit the node cap per projection
+    assert(addedProjects(assertAsFold(df, chain(100): _*), df) == 4)
+    val deep = withColumnsStep(df, chain(1000))
+    assert(deep.queryExecution.executedPlan != null)
+    assert(cells(deep.select("k1000")) == Seq(Seq("1001"), Seq("1002")))
   }
 
   test("window: one Window per dependency layer, output as the withColumn fold") {
