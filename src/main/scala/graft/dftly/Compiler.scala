@@ -3,7 +3,8 @@ package graft.dftly
 import java.time.{Instant, LocalDate, LocalDateTime, LocalTime}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{GetTimestamp, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Add => CAdd, Cast => CCast, Concat => CConcat, Divide => CDivide,
+  Expression, GetTimestamp, Literal, Subtract => CSubtract}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -24,167 +25,18 @@ import org.apache.spark.sql.types._
   *   - a non-strict datetime `strptime` is one `GetTimestamp` with
   *     `failOnError` off, so each string is parsed once.
   *
-  * `schema` (when available) drives the one type-directed decision the
-  * reference delegates to Polars' runtime dtypes: `+` over strings
-  * concatenates (reference: src/dftly/nodes/arithmetic.py:261-305). A column
-  * is found by its exact name, else by its one case-insensitive match.
+  * The type-directed decisions the reference leaves to Polars' runtime
+  * dtypes — `+` over strings concatenates, a date ± duration stays a date,
+  * a duration divides without the IEEE zero guard (reference:
+  * src/dftly/nodes/arithmetic.py:261-305) — are made on the types Spark's
+  * analyzer resolves for the arguments ([[TypeDirected]]), so they hold in
+  * every entry point, SQL included, with or without a known input schema.
   */
 object Compiler {
 
-  def compile(node: Node): Column = compile(node, None)
+  def compile(node: Node): Column = Ctx.lower(node)
 
-  def compile(node: Node, schema: Option[StructType]): Column = {
-    val c = new Ctx(schema)
-    c.lower(node)
-  }
-
-  /** Best-effort bottom-up type inference; None = unknown. Only strength
-    * needed is deciding string-ness for Add and interval-ness for totals.
-    */
-  def inferType(node: Node, schema: Option[StructType]): Option[DataType] =
-    typeOf(node, n => schema.flatMap(fieldNamed(_, n)).map(_.dataType))
-
-  /** `inferType` with the columns typed by `colType`. */
-  private def typeOf(node: Node, colType: String => Option[DataType]): Option[DataType] = node match {
-    case Lit(v) =>
-      v match {
-        case null             => None
-        case _: String        => Some(StringType)
-        case _: Boolean       => Some(BooleanType)
-        case _: Int           => Some(IntegerType)
-        case _: Long          => Some(LongType)
-        case _: Double        => Some(DoubleType)
-        case _: Float         => Some(FloatType)
-        case _: BigDecimal    => Some(DecimalType.SYSTEM_DEFAULT)
-        case _: LocalDate     => Some(DateType)
-        case _: LocalDateTime => Some(TimestampNTZType)
-        case _: LocalTime     => Some(TimeType(6))
-        case _: Instant       => Some(TimestampType)
-        case _                => None
-      }
-    case Col(n) => colType(n)
-    case Cast(_, t, _) =>
-      ConstEval.evalString(t).flatMap { name =>
-        Types.DTYPES
-          .get(name)
-          .orElse(
-            if (Types.DURATION_UNIT_SECONDS.contains(name))
-              Some(DayTimeIntervalType(DayTimeIntervalType.DAY, DayTimeIntervalType.SECOND))
-            else if (Types.DATE_UNITS.contains(name)) Some(DateType)
-            else None
-          )
-      }
-    case Strptime(f, _, _) =>
-      ConstEval.evalString(f).map { fmt =>
-        Strftime.classify(fmt) match {
-          case "date"     => DateType
-          case "time"     => TimeType(6)
-          case "datetime" => TimestampNTZType
-        }
-      }
-    case Add(args) =>
-      val ts = args.map(typeOf(_, colType))
-      if (ts.nonEmpty && ts.forall(_.contains(StringType))) Some(StringType)
-      else ts.flatten.headOption // numeric-ish; good enough for dispatch
-    case Subtract(l, r) =>
-      (typeOf(l, colType), typeOf(r, colType)) match {
-        case (Some(a), Some(b))
-            if (a == TimestampNTZType || a == TimestampType || a == DateType) &&
-              (b == TimestampNTZType || b == TimestampType || b == DateType) =>
-          Some(DayTimeIntervalType(DayTimeIntervalType.DAY, DayTimeIntervalType.SECOND))
-        case (a, _) => a
-      }
-    case Conditional(_, t, o) =>
-      typeOf(t, colType).orElse(o.flatMap(typeOf(_, colType)))
-    case Coalesce(args) => args.flatMap(typeOf(_, colType)).headOption
-    case StringInterpolate(_, _) | RegexExtract(_, _, _) | Substring(_, _, _) => Some(StringType)
-    case Split(_, _)      => Some(ArrayType(StringType))
-    case LenChars(_)      => Some(IntegerType)
-    case RegexMatch(_, _) => Some(BooleanType)
-    case Not(_) | And(_) | Or(_) => Some(BooleanType)
-    case Gt(_, _) | Lt(_, _) | Eq(_, _) | Neq(_, _) | Gte(_, _) | Lte(_, _) =>
-      Some(BooleanType)
-    case _: DtAccessor => Some(IntegerType)
-    case _: DtTotal    => Some(LongType)
-    case Mean(_)       => Some(DoubleType)
-    case Divide(_, _)  => Some(DoubleType)
-    case Power(_, _)   => Some(DoubleType)
-    case Negate(a)     => typeOf(a, colType)
-    case Min(args)     => args.flatMap(typeOf(_, colType)).headOption
-    case Max(args)     => args.flatMap(typeOf(_, colType)).headOption
-    case Multiply(args) => args.flatMap(typeOf(_, colType)).headOption
-    case SetTime(_, _) => Some(TimestampNTZType)
-    case Hash(_) | SignedHash(_) => Some(LongType)
-    case _ => None
-  }
-
-  /** The field `n` names: an exact match, else the one field it matches
-    * case-insensitively, as the analyzer resolves it by default. Under
-    * `spark.sql.caseSensitive=true` the analyzer rejects the second kind
-    * anyway, so the type found for it never decides a query that runs.
-    */
-  private def fieldNamed(schema: StructType, n: String): Option[StructField] =
-    schema.fields.find(_.name == n).orElse {
-      schema.fields.filter(_.name.equalsIgnoreCase(n)) match {
-        case Array(f) => Some(f)
-        case _        => None
-      }
-    }
-
-  /** The type `inferType` gives `node`, where it is sure to be of the kind
-    * Spark gives the lowered column (string, date, timestamp, day-time
-    * interval, numeric; any other type exactly); None where it may not be.
-    * Every type-directed lowering asks only for that kind, so a column
-    * holding `node`'s value and a copy of `node` itself, in the same place
-    * of an expression, then lower alike. `colType` types the columns read.
-    */
-  private[graft] def settledType(node: Node, colType: String => Option[DataType]): Option[DataType] = {
-    val (str, date, ts, iv, num) = (Some("string"), Some("date"), Some("timestamp"), Some("interval"), Some("numeric"))
-    def kind(n: Node): Option[Any] = typeOf(n, colType).map {
-      case StringType                       => "string"
-      case DateType                         => "date"
-      case TimestampType | TimestampNTZType => "timestamp"
-      case _: DayTimeIntervalType           => "interval"
-      case _: NumericType                   => "numeric"
-      case other                            => other
-    }
-    // one kind for all `ns`, nulls aside: Spark's common type is of that kind
-    def common(ns: Seq[Node]): Boolean = {
-      val vs = ns.filter(_ != Lit(null))
-      vs.nonEmpty && vs.forall(settled) && vs.map(kind).distinct.size == 1
-    }
-    def settled(n: Node): Boolean = kind(n).isDefined && (n match {
-      // the lowering fixes the type, whatever the arguments
-      case Lit(_) | Col(_) | Cast(_, _, _) | Strptime(_, _, _) | StringInterpolate(_, _) |
-          RegexExtract(_, _, _) | Split(_, _) | LenChars(_) | RegexMatch(_, _) | Not(_) | And(_) |
-          Or(_) | Gt(_, _) | Lt(_, _) | Eq(_, _) | Neq(_, _) | Gte(_, _) | Lte(_, _) | _: DtAccessor |
-          _: DtTotal | Mean(_) | Power(_, _) | SetTime(_, _) | Hash(_) | SignedHash(_) => true
-      // a binary slice is binary
-      case Substring(s, _, _) => settled(s) && kind(s) == str
-      case Add(Seq(a)) => settled(a)
-      case Add(args) =>
-        val ks = args.map(kind)
-        args.forall(settled) && (ks.forall(_ == str) || ks.forall(_ == num) ||
-          // date + intervals is cast back to a date
-          ks.count(_ == date) == 1 && ks.forall(k => k == date || k == iv) && kind(n) == date)
-      case Subtract(l, r) =>
-        settled(l) && settled(r) && ((kind(l), kind(r)) match {
-          case (`num`, `num`) | (`date` | `ts`, `date` | `ts`) | (`date` | `ts`, `iv`) => true
-          case _ => false
-        })
-      case Multiply(args) => args.forall(a => settled(a) && kind(a) == num)
-      case Divide(l, r)   => Seq(l, r).forall(a => settled(a) && kind(a) == num)
-      case Negate(a)      => settled(a) && (kind(a) == num || kind(a) == iv)
-      case Conditional(_, t, o) => common(t +: o.toSeq)
-      case Coalesce(args) => common(args)
-      case Min(args)      => common(args)
-      case Max(args)      => common(args)
-      case _              => false
-    })
-    if (settled(node)) typeOf(node, colType) else None
-  }
-
-  private final class Ctx(schema: Option[StructType]) {
+  private object Ctx {
 
     def lower(node: Node): Column = node match {
       case Lit(v) => litOf(v)
@@ -201,49 +53,49 @@ object Compiler {
       case Negate(a) => negate(lower(a))
       case And(args) => args.map(lower).reduce(_ && _)
       case Or(args)  => args.map(lower).reduce(_ || _)
-      case add @ Add(args) =>
-        val cs = args.map(lower)
-        if (inferType(add, schema).contains(StringType) && args.size > 1) concat(cs: _*)
-        else {
-          val ts = args.map(inferType(_, schema))
-          val hasDate = ts.exists(_.contains(DateType))
-          val hasInterval = ts.exists(_.exists(_.isInstanceOf[DayTimeIntervalType]))
-          val sum = cs.reduce(_ + _)
+      case Add(Seq(a)) => lower(a)
+      case Add(args) =>
+        typeDirected("add", args.map(lower)) { es =>
+          if (es.forall(_.dataType.isInstanceOf[StringType])) CConcat(es)
           // Polars Date + Duration stays a Date (reference README.md:118-131
-          // `days_later` is dtype date); Spark widens to timestamp — cast back.
-          if (hasDate && hasInterval) sum.cast(DateType) else sum
+          // `days_later` is dtype date). Spark widens to a timestamp, so add
+          // in TIMESTAMP_NTZ, which no session time zone shifts, and cast back.
+          else if (es.exists(_.dataType == DateType) && es.exists(isDuration))
+            CCast(es.map(e => if (e.dataType == DateType) CCast(e, TimestampNTZType) else e)
+              .reduce(CAdd(_, _)), DateType)
+          else es.reduce(CAdd(_, _))
         }
       case Subtract(l, r) =>
-        val res = lower(l) - lower(r)
-        // Polars Date − Duration stays a Date (symmetric with the Add case);
-        // Spark widens to timestamp — cast back.
-        val lDate = inferType(l, schema).contains(DateType)
-        val rInterval = inferType(r, schema).exists(_.isInstanceOf[DayTimeIntervalType])
-        if (lDate && rInterval) res.cast(DateType) else res
+        typeDirected("subtract", Seq(lower(l), lower(r))) { case Seq(a, b) =>
+          // Polars Date − Duration stays a Date (symmetric with the Add case).
+          if (a.dataType == DateType && isDuration(b))
+            CCast(CSubtract(CCast(a, TimestampNTZType), b), DateType)
+          else CSubtract(a, b)
+        }
       case Multiply(args) => args.map(lower).reduce(_ * _)
       case Divide(l, r) =>
-        val ld = lower(l)
-        val rd = lower(r)
-        if (inferType(l, schema).exists(_.isInstanceOf[DayTimeIntervalType]))
+        typeDirected("divide", Seq(lower(l), lower(r))) { case Seq(a, b) =>
           // Duration / number is native in both engines; the IEEE guard
           // below would not even analyze (`interval > 0` is ill-typed).
-          ld / rd
-        else {
-          // Polars truediv follows IEEE-754: x/0 → ±Infinity, ±0/0 and
-          // NaN/0 → NaN, sign follows BOTH operands incl. −0.0 divisors
-          // (reference: arithmetic.py:353, pl.Expr.truediv). Spark 4's ANSI
-          // mode raises DIVIDE_BY_ZERO instead, so guard the zero-divisor
-          // case explicitly — CaseWhen branches evaluate lazily, the
-          // division never sees a zero divisor. −0.0 detection goes through
-          // the string form ("-0.0"): Spark's `===` follows SQL equality,
-          // under which −0.0 equals 0.0.
-          val negDivisor = rd.cast(StringType).startsWith("-")
-          when(rd === 0,
-            when(ld.isNull, lit(null).cast(DoubleType)) // null numerator propagates
-              .when(isnan(ld.cast(DoubleType)) || ld === 0, lit(Double.NaN))
-              .when((ld > 0) =!= negDivisor, lit(Double.PositiveInfinity))
-              .otherwise(lit(Double.NegativeInfinity)))
-            .otherwise(ld / rd)
+          if (isDuration(a)) CDivide(a, b)
+          else {
+            val (ld, rd) = (ColumnBridge.column(a), ColumnBridge.column(b))
+            // Polars truediv follows IEEE-754: x/0 → ±Infinity, ±0/0 and
+            // NaN/0 → NaN, sign follows BOTH operands incl. −0.0 divisors
+            // (reference: arithmetic.py:353, pl.Expr.truediv). Spark 4's ANSI
+            // mode raises DIVIDE_BY_ZERO instead, so guard the zero-divisor
+            // case explicitly — CaseWhen branches evaluate lazily, the
+            // division never sees a zero divisor. −0.0 detection goes through
+            // the string form ("-0.0"): Spark's `===` follows SQL equality,
+            // under which −0.0 equals 0.0.
+            val negDivisor = rd.cast(StringType).startsWith("-")
+            ColumnBridge.convertedExpression(when(rd === 0,
+              when(ld.isNull, lit(null).cast(DoubleType)) // null numerator propagates
+                .when(isnan(ld.cast(DoubleType)) || ld === 0, lit(Double.NaN))
+                .when((ld > 0) =!= negDivisor, lit(Double.PositiveInfinity))
+                .otherwise(lit(Double.NegativeInfinity)))
+              .otherwise(ld / rd))
+          }
         }
       case Power(b, e)    => pow(lower(b), lower(e))
       case Mean(args) =>
@@ -427,6 +279,12 @@ object Compiler {
           s"Internal error: bare word '$w' escaped parsing; it should have become a literal."
         )
     }
+
+    /** A lowering chosen by the analyzed types of `cs` ([[TypeDirected]]). */
+    private def typeDirected(op: String, cs: Seq[Column])(choose: Seq[Expression] => Expression): Column =
+      ColumnBridge.column(TypeDirected.of(op, cs.map(ColumnBridge.convertedExpression))(choose))
+
+    private def isDuration(e: Expression): Boolean = e.dataType.isInstanceOf[DayTimeIntervalType]
 
     private def totalViaEndField(iv: Column, endField: Byte): Column =
       iv.cast(DayTimeIntervalType(DayTimeIntervalType.DAY, endField)).cast(LongType)

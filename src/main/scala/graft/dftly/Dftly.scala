@@ -18,16 +18,14 @@ import org.apache.spark.sql.types.StructType
 object Dftly {
 
   /** YAML text / pre-loaded map → ordered (outputName, Column) pairs. */
-  def toColumns(yaml: String): Seq[(String, Column)] = toColumns(yaml, None)
-
-  def toColumns(yaml: String, schema: Option[StructType]): Seq[(String, Column)] =
+  def toColumns(yaml: String): Seq[(String, Column)] =
     // the ACTIVE parser, not `default`: inside `parser.withActive { ... }`
     // this overload must keep resolving custom nodes
-    toColumns(yaml, schema, DftlyParser.active.value)
+    toColumns(yaml, DftlyParser.active.value)
 
   /** Programmatic form: an already-loaded ordered map (or any Scala Map). */
-  def toColumns(exprs: Seq[(String, Any)], schema: Option[StructType]): Seq[(String, Column)] =
-    exprs.map { case (name, v) => name -> Compiler.compile(parse(v), schema).as(name) }
+  def toColumns(exprs: Seq[(String, Any)]): Seq[(String, Column)] =
+    exprs.map { case (name, v) => name -> Compiler.compile(parse(v)).as(name) }
 
   /** Parse any supported form into the AST (reference: parser.py:178-222). */
   def parse(value: Any): Node = DictParser.parse(value)
@@ -41,8 +39,8 @@ object Dftly {
     * `Parser.to_polars` (parser.py:329-334), a string that names an existing
     * file is read and parsed as that file's YAML.
     */
-  def toColumns(yaml: String, schema: Option[StructType], parser: DftlyParser): Seq[(String, Column)] =
-    parser.withActive(toColumns(loadOpMap(yaml), schema))
+  def toColumns(yaml: String, parser: DftlyParser): Seq[(String, Column)] =
+    parser.withActive(toColumns(loadOpMap(yaml)))
 
   /** [[select]] under a custom node registry — custom nodes work in both the
     * YAML dict form and string-form function calls.
@@ -61,21 +59,25 @@ object Dftly {
   }
 
   /** Single string-form expression → Column (reference: parser.py:357-384). */
-  def expr(s: String): Column = Compiler.compile(parse(s), None)
+  def expr(s: String): Column = Compiler.compile(parse(s))
 
-  /** Compile one parsed node against an optional input schema. */
+  /** Compile one parsed node. `schema` is unused: every type-directed
+    * choice is made on the types the analyzer resolves ([[Compiler]]); the
+    * parameter stays for source compatibility.
+    */
   def compile(node: Node, schema: Option[StructType] = None): Column =
-    Compiler.compile(node, schema)
+    Compiler.compile(node)
 
   /** Apply a YAML op-map to a dataframe in a single `select` — the flagship
-    * usage (reference: README.md:80-93). The dataframe's schema drives the
-    * type-directed `+` (string concat vs numeric add) dispatch.
+    * usage (reference: README.md:80-93). `+`, `-` and `/` choose their
+    * lowering by the types the analyzer resolves against `df`, as in every
+    * other entry point.
     */
   def select(df: DataFrame, yaml: String): DataFrame =
     select(df, yaml, DftlyParser.active.value)
 
   def select(df: DataFrame, exprs: Seq[(String, Any)]): DataFrame =
-    df.select(toColumns(exprs, Some(df.schema)).map(_._2): _*)
+    df.select(toColumns(exprs).map(_._2): _*)
 
   /** Serialize an AST back to the dict/YAML form (total; round-trips through
     * [[parse]]). Beyond-reference: enables programmatic pipeline builders.
@@ -115,7 +117,7 @@ object Dftly {
             s"dftly() needs a literal string; got $other")
         }
         org.apache.spark.sql.graft.ColumnBridge.convertedExpression(
-          Compiler.compile(parser.parse(s), None))
+          Compiler.compile(parser.parse(s)))
       },
       "built-in")
 

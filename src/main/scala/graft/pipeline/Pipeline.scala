@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{Resolver, UnresolvedAttribute}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.dftly.{And, Coalesce, Col, Compiler, Conditional, DictParser, Divide, Extension, Lit, Node, Or, Yaml}
 import graft.ops.Dedup
@@ -60,11 +59,11 @@ import graft.ops.Dedup
 object Pipeline {
 
   /** Aggregate spec → Column. Arg is a dftly expression (or "*" for count). */
-  private def aggColumn(name: String, spec: Any, df: DataFrame): Column = {
+  private def aggColumn(name: String, spec: Any): Column = {
     val m = Opts.mapping(spec, s"agg '$name'")
     require(m.size == 1, s"agg '$name' needs exactly one {fn: expr} entry, got $m")
     val (fn, rawExpr) = m.head
-    def e: Column = compileExpr(rawExpr, df)
+    def e: Column = compileExpr(rawExpr)
     val c = fn match {
       case "sum"            => sum(e)
       case "avg" | "mean"   => avg(e)
@@ -84,13 +83,12 @@ object Pipeline {
     c.as(name)
   }
 
-  private def compileExpr(raw: Any, df: DataFrame): Column =
-    Compiler.compile(DictParser.parse(raw), Some(df.schema))
+  private def compileExpr(raw: Any): Column = Compiler.compile(DictParser.parse(raw))
 
   /** One output of a `withColumns`-like step: its name, the column names
-    * its expression reads, and its lowering against the frame it reads.
+    * its expression reads, and its lowering.
     */
-  private final case class Derived(name: String, reads: Set[String], build: DataFrame => Column)
+  private final case class Derived(name: String, reads: Set[String], lowered: Column)
 
   /** Nodes a reader's expression may grow to by inlining. In a chain
     * `k_i: $k_{i-1} + 1` ~30 links share a projection, and no tree gets deep
@@ -110,18 +108,12 @@ object Pipeline {
     *   - (d) the definition is a column or a literal, or every read of it
     *     is one Catalyst evaluates on every row (`columnReads`), so
     *     subexpression elimination computes the copies in one projection
-    *     once per row;
-    *   - (e) the definition is a column, or its type is settled
-    *     (`Compiler.settledType`): `+`, `-` and `/` then lower over the copy
-    *     as they would over the column its layer shows them.
-    * Names match with `same`, the session resolver; `schema` is the step's
-    * input.
+    *     once per row.
+    * A copy lowers as the column it replaces would: `+`, `-` and `/` choose
+    * by the types the analyzer resolves, which are the same for both.
+    * Names match with `same`, the session resolver.
     */
-  private def inlineEarlier(
-      entries: Seq[(String, Node)],
-      schema: StructType,
-      same: Resolver
-  ): Seq[(String, Node)] = {
+  private def inlineEarlier(entries: Seq[(String, Node)], same: Resolver): Seq[(String, Node)] = {
     val names = entries.map(_._1).toVector
     // the entry a read of `c` at entry i sees: the last one before i named `c`
     def definer(c: String, i: Int): Option[Int] = (i - 1 to 0 by -1).find(k => same(names(k), c))
@@ -130,8 +122,6 @@ object Pipeline {
     }.toSet
     def hasExtension(n: Node): Boolean = n.isInstanceOf[Extension] || n.children.exists(hasExtension)
     val done = scala.collection.mutable.ArrayBuffer.empty[Node]
-    // settled type of each entry's output, by the types its reads see
-    val types = scala.collection.mutable.ArrayBuffer.empty[Option[DataType]]
     for (((_, node), i) <- entries.zipWithIndex) {
       var size = node.size
       def inline(n: Node): Node = n match {
@@ -142,14 +132,11 @@ object Pipeline {
             !hasExtension(d) &&
             (j until i).forall(k => !free.exists(same(names(k), _))) &&
             size + d.size - 1 <= InlineCap &&
-            (d.isInstanceOf[Col] || d.isInstanceOf[Lit] || !readInBranch(j)) &&
-            (d.isInstanceOf[Col] || types(j).isDefined)
+            (d.isInstanceOf[Col] || d.isInstanceOf[Lit] || !readInBranch(j))
           }.fold(n) { j => size += done(j).size - 1; done(j) }
         case _ => n.mapChildren(inline)
       }
       done += inline(node)
-      types += Compiler.settledType(done(i), c =>
-        definer(c, i).fold(schema.find(f => same(f.name, c)).map(_.dataType))(types(_)))
     }
     names.zip(done)
   }
@@ -189,9 +176,9 @@ object Pipeline {
     *   - an entry that redefines a name an earlier entry reads goes no
     *     earlier than that reader, which must not see the new value.
     * Names match with the session resolver, as `withColumn` matches them.
-    * Each layer lowers against the previous layer's schema, so
-    * schema-directed lowering (string `+`, `??` typing) sees what the fold
-    * would show it, and the last layer emits the fold's column order.
+    * Each layer's columns are analyzed against the previous layer's
+    * output, so they resolve (and `+`, `-` and `/` choose) as in the fold,
+    * and the last layer emits the fold's column order.
     */
   private def withDerived(df: DataFrame, derived: Seq[Derived]): DataFrame = {
     val entries = derived.toVector
@@ -215,7 +202,7 @@ object Pipeline {
     val target = entries.indices.foldLeft(source)(put)
     val layers = entries.indices.groupBy(layer(_)).toSeq.sortBy(_._1).map(_._2)
     layers.zipWithIndex.foldLeft((df, source)) { case ((cur, cols), (members, k)) =>
-      val built = members.map(i => i -> entries(i).build(cur)).toMap
+      val built = members.map(i => i -> entries(i).lowered).toMap
       val attrs = cur.queryExecution.analyzed.output
       // `put` keeps every untouched column at its position in `cur`
       val placed = members.foldLeft(cols)(put)
@@ -493,18 +480,18 @@ object Pipeline {
     verb match {
       case "select" =>
         df.select(Opts.mapping(step(verb), verb).map {
-          case (name, raw) => compileExpr(raw, df).as(name)
+          case (name, raw) => compileExpr(raw).as(name)
         }: _*)
 
       case "withColumns" =>
         val entries = Opts.mapping(step(verb), verb).map { case (n, raw) => n -> DictParser.parse(raw) }
         val same = df.sparkSession.sessionState.analyzer.resolver
-        withDerived(df, inlineEarlier(entries, df.schema, same).map { case (name, node) =>
-          Derived(name, node.referencedColumns, d => Compiler.compile(node, Some(d.schema)))
+        withDerived(df, inlineEarlier(entries, same).map { case (name, node) =>
+          Derived(name, node.referencedColumns, Compiler.compile(node))
         })
 
       case "filter" =>
-        df.filter(compileExpr(step(verb), df))
+        df.filter(compileExpr(step(verb)))
 
       case "drop" =>
         df.drop(Opts.scalar[Seq[String]](verb, step(verb)): _*)
@@ -540,7 +527,7 @@ object Pipeline {
         }
         val aggs = Opts.mapping(step.getOrElse("agg",
           throw new IllegalArgumentException("groupBy needs 'agg'")), "groupBy 'agg'")
-          .map { case (name, spec) => aggColumn(name, spec, df) }
+          .map { case (name, spec) => aggColumn(name, spec) }
         require(aggs.nonEmpty, "groupBy needs at least one aggregate in 'agg'")
         val grouped = mode match {
           case "group"  => df.groupBy(keys.map(col): _*)
@@ -677,7 +664,7 @@ object Pipeline {
         val specReads = (partitionBy ++ orderBy.map(_.stripPrefix("-")))
           .flatMap(UnresolvedAttribute.parseAttributeName).toSet
         withDerived(df, o.entries("cols").map { case (name, spec) =>
-          def ranking(f: Column) = Derived(name, specReads, _ => f.over(w))
+          def ranking(f: Column) = Derived(name, specReads, f.over(w))
           spec match {
             case "row_number" => ranking(row_number())
             case "rank"       => ranking(rank())
@@ -698,8 +685,7 @@ object Pipeline {
                   throw new IllegalArgumentException(s"Unknown window fn: $other")
               }
               val node = DictParser.parse(rawExpr)
-              Derived(name, specReads ++ node.referencedColumns,
-                d => agg(Compiler.compile(node, Some(d.schema))).over(w))
+              Derived(name, specReads ++ node.referencedColumns, agg(Compiler.compile(node)).over(w))
             case other =>
               throw new IllegalArgumentException(s"bad window col '$name': $other")
           }
@@ -970,7 +956,7 @@ object Pipeline {
         // concat-and-cut fragments; default order is by id (shuffle first
         // and order by its pos column to pack a shuffled epoch)
         val id = o.str("id")
-        graft.ops.Packing.packSequences(df, id, tokenCount(o, df), o.need[Int]("seqTokens"),
+        graft.ops.Packing.packSequences(df, id, tokenCount(o), o.need[Int]("seqTokens"),
           o.opt[Seq[String]]("orderBy").fold(Seq(col(id).asc))(sortCols))
 
       case "maskSpans" | "stripBoilerplate" =>
@@ -1153,7 +1139,7 @@ object Pipeline {
 
       case "tokenBudget" =>
         // longest in-budget prefix of the ordered stream, whole docs
-        graft.ops.Packing.takeTokenBudget(df, tokenCount(o, df),
+        graft.ops.Packing.takeTokenBudget(df, tokenCount(o),
           o.need[Long]("budget"), sortCols(o.list("orderBy")))
 
       case "decontaminate" =>
@@ -1224,9 +1210,9 @@ object Pipeline {
   /** Token counts of pack/tokenBudget: exactly one of `text` (a column,
     * whitespace tokens) or `tokens` (a dftly expression).
     */
-  private def tokenCount(o: Opts, df: DataFrame): Column =
+  private def tokenCount(o: Opts): Column =
     (o.opt[Any]("tokens"), o.opt[String]("text")) match {
-      case (Some(e), None) => compileExpr(e, df)
+      case (Some(e), None) => compileExpr(e)
       case (None, Some(t)) => graft.ops.TextStats.tokenCountWs(col(t))
       case _ => throw new IllegalArgumentException(
         s"${o.what} needs exactly one of 'text' (column) or 'tokens' (expression)")

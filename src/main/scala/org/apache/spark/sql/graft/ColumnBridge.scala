@@ -81,7 +81,7 @@ object ColumnBridge {
     * different values once the exchange is removed — and a caller that
     * joins this branch back against an unstripped sibling on such an id
     * would silently mismatch. Any non-deterministic expression in a
-    * traversed Project therefore disables both detection and removal.
+    * traversed Project therefore disables the removal.
     */
   def stripTopRoundRobin(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -99,30 +99,23 @@ object ColumnBridge {
       })
     // Descends through row-local wrappers only (Project/SubqueryAlias —
     // running those at scan width costs nothing; the hash exchange above
-    // re-widens anyway). `Repartition` preserves its child's output
-    // attributes, so removal never breaks resolution.
-    def hasRR(p: LogicalPlan): Boolean = p match {
-      case pr: Project if partitionSensitive(pr) => false
-      case pr: Project                 => hasRR(pr.child)
-      case sa: SubqueryAlias           => hasRR(sa.child)
-      case Repartition(_, true, _)     => true
-      case _                           => false
-    }
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case pr: Project if partitionSensitive(pr) => pr
-      case pr: Project                 => pr.copy(child = strip(pr.child))
-      case sa: SubqueryAlias           => sa.copy(child = strip(sa.child))
-      case Repartition(_, true, child) => child
-      case other                       => other
+    // re-widens anyway) and returns the plan without the round-robin, or
+    // None where there is none to remove. `Repartition` preserves its
+    // child's output attributes, so removal never breaks resolution.
+    def strip(p: LogicalPlan): Option[LogicalPlan] = p match {
+      case pr: Project if partitionSensitive(pr) => None
+      case pr: Project                 => strip(pr.child).map(c => pr.copy(child = c))
+      case sa: SubqueryAlias           => strip(sa.child).map(c => sa.copy(child = c))
+      case Repartition(_, true, child) => Some(child)
+      case _                           => None
     }
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     // ANALYZED plan: DataFrame-API expressions reach the raw logical plan
     // as UnresolvedFunction nodes, whose default `deterministic` is true —
     // the partition-sensitivity bail above can only see the real
     // expression classes after resolution.
-    val before = ds.queryExecution.analyzed
-    if (!hasRR(before)) df
-    else org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, strip(before))
+    strip(ds.queryExecution.analyzed)
+      .fold(df)(org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, _))
   }
 
   /** All `CollectMetrics` observations in `df`'s EXECUTED plan, including

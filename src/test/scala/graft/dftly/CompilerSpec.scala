@@ -16,7 +16,7 @@ class CompilerSpec extends SparkTestBase {
   import spark.implicits._
 
   private def eval1(expr: String, df: org.apache.spark.sql.DataFrame): Any = {
-    val c = Compiler.compile(Dftly.parse(expr), Some(df.schema))
+    val c = Compiler.compile(Dftly.parse(expr))
     df.select(c.as("r")).head.get(0)
   }
 
@@ -64,7 +64,7 @@ class CompilerSpec extends SparkTestBase {
 
   test("conditional without otherwise yields null") {
     val df = Seq(50, 150).toDF("price")
-    val c = Compiler.compile(Dftly.parse("HIGH if $price > 100"), Some(df.schema))
+    val c = Compiler.compile(Dftly.parse("HIGH if $price > 100"))
     assert(df.select(c).collect().map(_.get(0)).toSeq == Seq(null, "HIGH"))
   }
 
@@ -94,15 +94,15 @@ class CompilerSpec extends SparkTestBase {
 
   test("cast: strict raises, non-strict nulls") {
     val df = Seq("12", "abc").toDF("s")
-    val strictC = Compiler.compile(Dftly.parse("$s::int"), Some(df.schema))
+    val strictC = Compiler.compile(Dftly.parse("$s::int"))
     intercept[Exception](df.select(strictC).collect())
-    val lax = Compiler.compile(Dftly.parse("$s::?int"), Some(df.schema))
+    val lax = Compiler.compile(Dftly.parse("$s::?int"))
     assert(df.select(lax).collect().map(_.get(0)).toSeq == Seq(12, null))
   }
 
   test("cast: float is Float32 (alias table is the spec)") {
     val df = Seq(1).toDF("x")
-    val c = Compiler.compile(Dftly.parse("$x::float"), Some(df.schema))
+    val c = Compiler.compile(Dftly.parse("$x::float"))
     assert(df.select(c).schema.head.dataType == FloatType)
   }
 
@@ -164,7 +164,7 @@ class CompilerSpec extends SparkTestBase {
       LocalDateTime.of(2021, 3, 4, 5, 6, 0))
     val bad = Seq("notadate").toDF("s")
     assert(eval1("""$s::?"%Y-%m-%d"""", bad) == null)
-    val strictC = Compiler.compile(Dftly.parse("""$s::"%Y-%m-%d""""), Some(bad.schema))
+    val strictC = Compiler.compile(Dftly.parse("""$s::"%Y-%m-%d""""))
     intercept[Exception](bad.select(strictC).collect())
   }
 
@@ -207,7 +207,7 @@ class CompilerSpec extends SparkTestBase {
     val bounds = for (a <- 0 to top + 2; b <- (0 to top + 2).map(Some(_)) :+ None) yield (a, b)
     val cols = bounds.map { case (a, b) =>
       val e = b.fold(s"substring($$s, $a)")(x => s"substring($$s, $a, $x)")
-      Compiler.compile(Dftly.parse(e), Some(df.schema))
+      Compiler.compile(Dftly.parse(e))
     }
     val got = df.select(cols: _*).collect()
     for ((row, s) <- got.zip(strs); ((a, b), k) <- bounds.zipWithIndex)
@@ -220,14 +220,14 @@ class CompilerSpec extends SparkTestBase {
   test("a literal slice lowers to one substring call") {
     import org.apache.spark.sql.catalyst.expressions.{Greatest, Least, Length, Substring => SubstringExpr}
     val df = Seq("E11.9").toDF("code")
-    val out = df.select(Compiler.compile(Dftly.parse("$code[1:2]"), Some(df.schema)).as("r"))
+    val out = df.select(Compiler.compile(Dftly.parse("$code[1:2]")).as("r"))
     val es = out.queryExecution.analyzed.expressions.flatMap(_.collect { case e => e })
     assert(es.count(_.isInstanceOf[SubstringExpr]) == 1)
     assert(!es.exists(e => e.isInstanceOf[Length] || e.isInstanceOf[Greatest] || e.isInstanceOf[Least]),
       out.queryExecution.analyzed.toString)
     assert(out.head.getString(0) == "1")
     // a negative bound keeps the clamped Python-slice form
-    val neg = df.select(Compiler.compile(Dftly.parse("$code[-3:]"), Some(df.schema)).as("r"))
+    val neg = df.select(Compiler.compile(Dftly.parse("$code[-3:]")).as("r"))
     assert(neg.queryExecution.analyzed.expressions.exists(_.exists(_.isInstanceOf[Length])))
     assert(neg.head.getString(0) == "1.9")
   }
@@ -236,7 +236,7 @@ class CompilerSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.GetTimestamp
     def lax(fmt: String, xs: Seq[String]) = {
       val df = xs.toDF("s")
-      val out = df.select(Compiler.compile(Dftly.parse("$s ::? \"" + fmt + "\""), Some(df.schema)).as("r"))
+      val out = df.select(Compiler.compile(Dftly.parse("$s ::? \"" + fmt + "\"")).as("r"))
       val parses = out.queryExecution.analyzed.expressions
         .map(_.collect { case g: GetTimestamp => g }.size).sum
       assert(parses == 1, out.queryExecution.analyzed.toString)
@@ -294,14 +294,14 @@ class CompilerSpec extends SparkTestBase {
 
   test("string_interpolate: null-propagating, casts fields to string") {
     val df = Seq((Some("Ann"), Some(32)), (None, Some(7))).toDF("name", "age")
-    val c = Compiler.compile(Dftly.parse("""f"{$name} is {$age}""""), Some(df.schema))
+    val c = Compiler.compile(Dftly.parse("""f"{$name} is {$age}""""))
     assert(df.select(c).collect().map(_.get(0)).toSeq == Seq("Ann is 32", null))
   }
 
   test("literal arrays and dates from dict form") {
     assert(Dftly.parse(Map("literal" -> 3)) == Lit(3))
     val d = Dftly.parse("2021-01-02")
-    assert(Compiler.compile(d, None) != null)
+    assert(Compiler.compile(d) != null)
   }
 
   test("select applies an ordered yaml op-map") {
@@ -322,9 +322,9 @@ class CompilerSpec extends SparkTestBase {
 
   test("uint64 widens to decimal(20,0); int128 to decimal(38,0)") {
     val df = Seq(1L).toDF("x")
-    assert(df.select(Compiler.compile(Dftly.parse("$x::uint64"), Some(df.schema)))
+    assert(df.select(Compiler.compile(Dftly.parse("$x::uint64")))
       .schema.head.dataType == DecimalType(20, 0))
-    assert(df.select(Compiler.compile(Dftly.parse("$x::int128"), Some(df.schema)))
+    assert(df.select(Compiler.compile(Dftly.parse("$x::int128")))
       .schema.head.dataType == DecimalType(38, 0))
   }
 
@@ -442,6 +442,57 @@ class CompilerSpec extends SparkTestBase {
       df.select(Dftly.compile(Dftly.parse("$s :: \"ts:%s\""), Some(df.schema)))
     }
     assert(e.getMessage.contains("ENTIRE format"), e.getMessage)
+  }
+
+
+  // --- type-directed +, - and / choose by the analyzed types ---------------
+
+  test("string + concatenates where no schema is given: expr and SQL") {
+    val df = Seq(("x", "y")).toDF("a", "b")
+    assert(df.select(Dftly.expr("$a + $b")).head.getString(0) == "xy")
+    Dftly.registerSql(spark)
+    df.createOrReplaceTempView("dftly_strs")
+    assert(spark.sql("SELECT dftly('$a + $b') AS r FROM dftly_strs").head.getString(0) == "xy")
+  }
+
+  test("date plus a computed duration stays a date, in one expression") {
+    import java.time.{Duration, LocalDate}
+    val df = Seq((LocalDate.of(2021, 3, 4), 2, Duration.ofHours(36), Duration.ofDays(1)))
+      .toDF("d", "n", "dur", "dur2")
+    val out = Dftly.select(df, Seq("y" -> "$d + $n * $dur", "z" -> "$dur + $d - $dur2"))
+    assert(out.schema.map(_.dataType) == Seq(DateType, DateType))
+    assert(out.head.toSeq.map(String.valueOf) == Seq("2021-03-07", "2021-03-04"))
+  }
+
+  test("an Extension returning a string concatenates under +") {
+    import org.apache.spark.sql.functions.upper
+    val up = NodeSpec.expression("up", 1, 1) { case Seq(x) => upper(x) }
+    val df = Seq("ab").toDF("s")
+    val parser = DftlyParser.withDefaults("up" -> up)
+    val out = Dftly.select(df, "r: 'up($s) + \"x\"'\nq: 'up($s) + up($s)'", parser)
+    assert(out.head.toSeq == Seq("ABx", "ABAB"))
+  }
+
+  test("a missing column under + fails as an unresolved column, naming it") {
+    val df = Seq(1).toDF("a")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(Dftly.expr("$a + $nope")).collect()
+    }
+    assert(e.getCondition.startsWith("UNRESOLVED_COLUMN"), e.getMessage)
+    assert(e.getMessage.contains("`nope`"), e.getMessage)
+  }
+
+  test("date ± duration does not depend on the session time zone") {
+    import java.time.{Duration, LocalDate}
+    val df = Seq((LocalDate.of(2020, 3, 8), Duration.ofHours(-23))).toDF("d", "back")
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    // 2020-03-08 is 23 hours long there: in local time 23 hours from its
+    // midnight is the next midnight
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      val out = Dftly.select(df, Seq("a" -> "$d + 23::hours", "b" -> "$d - $back"))
+      assert(out.head.toSeq.map(String.valueOf) == Seq("2020-03-08", "2020-03-08"))
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
 
 }

@@ -100,7 +100,7 @@ class GoldenReadmeSpec extends SparkTestBase {
 
   test("strptime with time-only format yields a TIME value") {
     val times = Seq("11:35:02").toDF("t")
-    val c = Compiler.compile(Dftly.parse("""$t::"%H:%M:%S""""), Some(times.schema))
+    val c = Compiler.compile(Dftly.parse("""$t::"%H:%M:%S""""))
     val out = times.select(c).head.get(0)
     assert(out == java.time.LocalTime.of(11, 35, 2))
   }

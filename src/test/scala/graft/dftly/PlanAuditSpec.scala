@@ -42,10 +42,17 @@ class PlanAuditSpec extends SparkTestBase {
         |flag: "BIG if $l_quantity >= 30 else SMALL"
         |day: $l_shipdate::day_of_week
         |age_h: ($l_shipdate - 1990-01-01 00:00:00)::total_hours
+        |flags: $l_returnflag + $l_linestatus
+        |early: $l_shipdate::date - 36::hours
+        |half_age: ($l_shipdate - 1990-01-01 00:00:00) / 2
         |""".stripMargin)
     val plan = planOf(q)
     assert(plan.contains("*(1)"), s"expected a codegen span:\n$plan")
     assert(!plan.toLowerCase.contains("batchevalpython"), "no python UDFs")
+    // the type-directed +, - and / leave built-ins only
+    val optimized = q.queryExecution.optimizedPlan
+    assert(!optimized.exists(_.expressions.exists(_.exists(_.isInstanceOf[TypeDirected]))),
+      optimized.toString)
   }
 
   test("dftly equality predicates participate in join planning (broadcast)") {

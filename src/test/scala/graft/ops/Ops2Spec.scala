@@ -120,7 +120,7 @@ class Ops2Spec extends SparkTestBase {
       System.setErr(new java.io.PrintStream(err))
       try {
         Dftly.parse("$x + MEDS_BIRTH") // nested bare word
-        graft.dftly.Compiler.compile(Dftly.parse("extract /([0-9]+)/ from $s"), None)
+        graft.dftly.Compiler.compile(Dftly.parse("extract /([0-9]+)/ from $s"))
       } finally System.setErr(old)
     }
     val msgs = err.toString
@@ -135,7 +135,7 @@ class Ops2Spec extends SparkTestBase {
     try {
       Dftly.parse("MEDS_BIRTH")
       graft.dftly.Compiler.compile(
-        Dftly.parse("extract group 0 of /([0-9]+)/ from $s"), None)
+        Dftly.parse("extract group 0 of /([0-9]+)/ from $s"))
     } finally System.setErr(old)
     assert(err.toString.isEmpty, err.toString)
   }

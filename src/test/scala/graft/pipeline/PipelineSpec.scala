@@ -1069,7 +1069,7 @@ class PipelineSpec extends SparkTestBase {
 
   private def withColumnFold(df: DataFrame, entries: Seq[(String, String)]): DataFrame =
     entries.foldLeft(df) { case (acc, (n, e)) =>
-      acc.withColumn(n, Compiler.compile(DictParser.parse(e), Some(acc.schema)))
+      acc.withColumn(n, Compiler.compile(DictParser.parse(e)))
     }
 
   private def withColumnsStep(df: DataFrame, entries: Seq[(String, String)]): DataFrame = {
@@ -1238,17 +1238,16 @@ class PipelineSpec extends SparkTestBase {
     assert(got.collect().forall(row => row.getDouble(2) == row.getDouble(1) * 2))
   }
 
-  test("withColumns: a copy lowers as its column would, or is not made") {
+  test("withColumns: copied duration and date definitions keep the fold's dates") {
     import java.time.{Duration, LocalDate}
     val df = Seq((LocalDate.of(2021, 3, 4), 2, Duration.ofHours(36), Duration.ofDays(1)))
       .toDF("d", "n", "dur", "dur2")
-    // n * dur is an interval that `+` would take for an int, dur + d a date
-    // that `-` would take for an interval: neither is copied, y and z stay dates
+    // n * dur is an interval and dur + d a date: `+` and `-` choose over the
+    // copies by the same analyzed types as over the columns, y and z stay dates
     val kept = assertAsFold(df,
       "x" -> "$n * $dur", "y" -> "$d + $x", "w" -> "$dur + $d", "z" -> "$w - $dur2")
-    assert(addedProjects(kept, df) == 2)
+    assert(addedProjects(kept, df) == 1)
     assert(cells(kept.select("y", "z")) == Seq(Seq("2021-03-07", "2021-03-04")))
-    // d + dur is typed a date, as Spark types it, so it is copied
     val got = assertAsFold(df, "x" -> "$d + $dur", "y" -> "$x - $dur2")
     assert(addedProjects(got, df) == 1)
     assert(cells(got.select("y")) == Seq(Seq("2021-03-04")))
