@@ -307,8 +307,7 @@ object Compiler {
     }
 
     private def lowerStrptime(sp: Strptime): Column = {
-      val (fmt, kind) = ConstEval.strptimeFormat(sp)
-      val strict = ConstEval.strictArg(sp.strict)
+      val (fmt, kind, strict) = ConstEval.strptimeArgs(sp)
       val src = lower(sp.source)
 
       if (fmt.trim == "%s") {

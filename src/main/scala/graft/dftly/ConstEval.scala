@@ -1,81 +1,47 @@
 package graft.dftly
 
-/** Parse-time constant evaluation of config-like arguments.
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.analysis.SimpleAnalyzer
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+import org.apache.spark.sql.graft.ColumnBridge
+
+/** Parse-time constant evaluation of config-like arguments: a cast's type
+  * name and `strict` flag, a regex pattern and group index, a strptime
+  * format and `strict` flag, an interpolation pattern.
   *
   * The reference evaluates such arguments by executing a one-row Polars query
   * (reference: src/dftly/nodes/base.py:541-556, types.py:283-289,
-  * str.py:137-143, 412-418, 670-676), so *any* engine-evaluatable expression is
-  * accepted in a const position (e.g. `Add(Lit("a"), Lit("b"))` as a regex
-  * pattern). We replicate that with a small AST-level interpreter covering the
-  * node types that are meaningful over literals — no SparkSession is needed at
-  * parse time. Column references (or anything else data-dependent) are not
-  * const-evaluatable and return None, which callers turn into the same errors
-  * the reference raises.
+  * str.py:137-143, 412-418, 670-676), so any expression the engine can
+  * evaluate over no input is accepted in a const position (e.g. a
+  * `string_interpolate` as a regex pattern). We do the same with Catalyst: a
+  * non-literal argument is compiled like any other node, analyzed over a
+  * one-row relation and folded. The analyzer is Catalyst's session-free
+  * `SimpleAnalyzer`, so parsing needs no SparkSession. An argument that reads
+  * a column, or whose analysis or evaluation fails, is not constant; callers
+  * turn that into the same errors the reference raises.
   */
 object ConstEval {
 
   /** Evaluate `node` to a plain constant if possible. Returns Some(null) for an
     * expression that evaluates to null, None for non-constant expressions.
+    * A literal is its value, with no Catalyst work.
     */
   def eval(node: Node): Option[Any] = node match {
-    case Lit(v)  => Some(v)
-    case Col(_)  => None
-    case Not(a)  => evalBool(a).map(b => !b)
-    case Negate(a) =>
-      eval(a).flatMap {
-        case i: Int     => Some(-i)
-        case l: Long    => Some(-l)
-        case d: Double  => Some(-d)
-        case f: Float   => Some(-f)
-        case _          => None
-      }
-    case Add(args) =>
-      val vs = args.map(eval)
-      if (vs.exists(_.isEmpty)) None
-      else {
-        val values = vs.map(_.get)
-        if (values.forall(_.isInstanceOf[String])) Some(values.mkString)
-        else numFold(values)(_ + _, _ + _)
-      }
-    case Multiply(args) =>
-      eval2(args)(numFold(_)(_ * _, _ * _))
-    case Subtract(l, r) => eval2(Seq(l, r))(numFold(_)(_ - _, _ - _))
-    case Divide(l, r) =>
-      // true division: always double, like the engine (int/int → float)
-      eval2(Seq(l, r)) { vs =>
-        if (vs.forall(isNumeric)) Some(toD(vs.head) / toD(vs(1))) else None
-      }
-    case Power(b, e) =>
-      eval2(Seq(b, e)) { vs =>
-        if (vs.forall(isNumeric)) Some(math.pow(toD(vs.head), toD(vs(1)))) else None
-      }
-    case Min(args)  => eval2(args)(numFold(_)(_ min _, _ min _))
-    case Max(args)  => eval2(args)(numFold(_)(_ max _, _ max _))
-    case Mean(args) =>
-      eval2(args) { vs =>
-        if (vs.nonEmpty && vs.forall(isNumeric)) Some(vs.map(toD).sum / vs.size)
-        else None
-      }
-    case Coalesce(args) =>
-      // Short-circuit like the engine, but a NON-constant argument reached
-      // before a non-null constant makes the WHOLE expression non-constant —
-      // skipping it (the old behavior) silently compiled the wrong constant
-      // where the reference raises.
-      def go(rest: Seq[Node]): Option[Any] = rest match {
-        case Seq() => Some(null)
-        case head +: tail =>
-          eval(head) match {
-            case None       => None
-            case Some(null) => go(tail)
-            case some       => some
-          }
-      }
-      go(args)
-    case Conditional(w, t, o) =>
-      evalBool(w).flatMap { b =>
-        if (b) eval(t) else o.map(eval).getOrElse(Some(null))
-      }
-    case _ => None
+    case Lit(v) => Some(v)
+    case _ =>
+      try {
+        val e = ColumnBridge.convertedExpression(Compiler.compile(node))
+        val analyzed = SimpleAnalyzer.execute(Project(Seq(Alias(e, "v")()), OneRowRelation()))
+        ReplaceExpressions(analyzed) match {
+          case p @ Project(Seq(Alias(v, _)), _) if p.resolved && v.foldable =>
+            Some(CatalystTypeConverters.convertToScala(v.eval(), v.dataType))
+          case _ => None
+        }
+      } catch { case NonFatal(_) => None }
   }
 
   /** Evaluate to a string, as required for cast type names / regex patterns /
@@ -136,14 +102,14 @@ object ConstEval {
     (pat, idx)
   }
 
-  /** Strptime → (format, output kind from [[Strftime.classify]])
+  /** Strptime → (format, output kind from [[Strftime.classify]], strict)
     * (reference: str.py:651-662).
     */
-  private[dftly] def strptimeFormat(s: Strptime): (String, String) = {
+  private[dftly] def strptimeArgs(s: Strptime): (String, String, Boolean) = {
     val fmt = evalString(s.format).getOrElse(
       throw new IllegalArgumentException(
         "The format argument must be a NodeBase instance that evaluates to a string."))
-    (fmt, Strftime.classify(fmt))
+    (fmt, Strftime.classify(fmt), strictArg(s.strict))
   }
 
   /** StringInterpolate → its pattern (reference: str.py:135-149). */
@@ -153,44 +119,9 @@ object ConstEval {
         "The pattern argument must be a string, Literal, or Literal-evaluatable instance."))
 
   /** The `strict` argument of a cast or strptime; absent means strict. */
-  private[dftly] def strictArg(strict: Option[Node]): Boolean = strict.forall { s =>
+  private def strictArg(strict: Option[Node]): Boolean = strict.forall { s =>
     evalBool(s).getOrElse(
       throw new IllegalArgumentException(
         s"The strict argument must be a boolean, got ${eval(s).getOrElse(s)}"))
-  }
-
-  private def eval2(args: Seq[Node])(f: Seq[Any] => Option[Any]): Option[Any] = {
-    val vs = args.map(eval)
-    if (vs.exists(_.isEmpty)) None else f(vs.map(_.get))
-  }
-
-  /** Integer-preserving numeric fold: all-integral input stays Long (so
-    * `{add: [1, 1]}` is a valid group index, like the engine's int+int),
-    * anything fractional goes through Double.
-    */
-  private def numFold(values: Seq[Any])(fl: (Long, Long) => Long, fd: (Double, Double) => Double): Option[Any] = {
-    if (values.isEmpty || !values.forall(isNumeric)) None
-    else if (values.forall(v => v.isInstanceOf[Int] || v.isInstanceOf[Long]))
-      Some(values.map(toL).reduce(fl))
-    else Some(values.map(toD).reduce(fd))
-  }
-
-  private def toL(v: Any): Long = v match {
-    case i: Int  => i.toLong
-    case l: Long => l
-    case _       => throw new IllegalArgumentException(s"not integral: $v")
-  }
-
-  private def isNumeric(v: Any): Boolean = v match {
-    case _: Int | _: Long | _: Double | _: Float => true
-    case _                                       => false
-  }
-
-  private def toD(v: Any): Double = v match {
-    case i: Int    => i.toDouble
-    case l: Long   => l.toDouble
-    case d: Double => d
-    case f: Float  => f.toDouble
-    case _         => throw new IllegalArgumentException(s"not numeric: $v")
   }
 }

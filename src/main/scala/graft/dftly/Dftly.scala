@@ -1,6 +1,7 @@
 package graft.dftly
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Public API — the Spark-native equivalent of the reference's `Parser`
@@ -125,12 +126,14 @@ object Dftly {
     * columns missing from the schema, per output name. Empty result = the
     * op-map will resolve. (The reference validates nothing before execution;
     * this is deliberate beyond-reference UX — at 100 TB you want the name
-    * typo before the cluster spins up, not an hour in.)
+    * typo before the cluster spins up, not an hour in.) Names match with
+    * the resolver of the active conf (`spark.sql.caseSensitive`), as the
+    * analyzer matches them.
     */
   def missingColumns(schema: StructType, yaml: String): Map[String, Set[String]] = {
-    val have = schema.fields.map(_.name).toSet
+    val same = SQLConf.get.resolver
     Yaml.loadExprMap(yaml).flatMap { case (name, v) =>
-      val missing = parse(v).referencedColumns -- have
+      val missing = parse(v).referencedColumns.filterNot(c => schema.fieldNames.exists(same(_, c)))
       if (missing.isEmpty) None else Some(name -> missing)
     }.toMap
   }

@@ -220,7 +220,7 @@ object DictParser {
         if (args.nonEmpty)
           throw new IllegalArgumentException("strptime only accepts keyword arguments")
         val kw = kwargsNode(key, kwargs, Set("format", "source"), Set("strict"), nested)
-        checked(Strptime(kw("format"), kw("source"), kw.get("strict")))(ConstEval.strptimeFormat)
+        checked(Strptime(kw("format"), kw("source"), kw.get("strict")))(ConstEval.strptimeArgs)
 
       case Builtins.Keyword("substring") =>
         if (args.nonEmpty)

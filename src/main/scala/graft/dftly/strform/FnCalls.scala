@@ -50,7 +50,7 @@ object FnCalls {
       }
     case "strptime" =>
       args match {
-        case Seq(src, fmt) => checked(Strptime(fmt, src, None))(ConstEval.strptimeFormat)
+        case Seq(src, fmt) => checked(Strptime(fmt, src, None))(ConstEval.strptimeArgs)
         case _ =>
           throw new ParseError(s"strptime(source, format) takes 2 arguments; got ${args.size}")
       }

@@ -349,8 +349,8 @@ object StrParser {
           }
         case TStr(fmt, _, _) =>
           advance(operandPos = false)
-          Strftime.classify(fmt) // validate eagerly, like Strptime.__post_init__
-          Strptime(Lit(fmt), src, if (nonstrict) Some(Lit(false)) else None)
+          checked(Strptime(Lit(fmt), src, if (nonstrict) Some(Lit(false)) else None))(
+            ConstEval.strptimeArgs)
         case other =>
           throw new ParseError(s"expected a type name or format string after cast; found $other")
       }

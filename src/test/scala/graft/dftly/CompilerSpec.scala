@@ -341,7 +341,9 @@ class CompilerSpec extends SparkTestBase {
     val yaml = "ok: $a + $b\nbad: $a + $nope * $alsono\n"
     val missing = Dftly.missingColumns(df.schema, yaml)
     assert(missing == Map("bad" -> Set("nope", "alsono")))
-    assert(Dftly.missingColumns(df.schema, "x: $a\n").isEmpty)
+    // `$A` resolves against `a` under the default case-insensitive resolver
+    for (ok <- Seq("x: $a\n", "x: $A\n"))
+      assert(Dftly.missingColumns(df.schema, ok).isEmpty, ok)
   }
 
   test("no UDFs: plans stay in whole-stage codegen") {

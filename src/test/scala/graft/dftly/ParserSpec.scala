@@ -2,6 +2,9 @@ package graft.dftly
 
 import java.time.{LocalDate, LocalTime}
 
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** String-form grammar → AST golden tests, ported from the reference's
@@ -341,6 +344,51 @@ class ParserSpec extends AnyFunSuite {
     // subtract/min/max also const-evaluate now
     assert(ConstEval.evalInt(Dftly.parse(Map("subtract" -> Seq(3, 1)))).contains(2))
     assert(ConstEval.evalInt(Dftly.parse(Map("min" -> Seq(5, 2)))).contains(2))
+  }
+
+  test("const-eval: a folded `and` is a cast's strict flag") {
+    val n = Dftly.parse(Map("cast" -> Map("source" -> "$y", "type" -> "int",
+      "strict" -> Map("and" -> Seq(true, true)))))
+    assert(ConstEval.castArgs(n.asInstanceOf[Cast]) == ("int", true))
+  }
+
+  test("const-eval: a string_interpolate is a regex_extract pattern") {
+    val n = Dftly.parse(Map("regex_extract" -> Map(
+      "pattern" -> Map("string_interpolate" -> Seq(
+        Map("literal" -> "{}(\\d+)"), Map("literal" -> "a"))),
+      "source" -> "$s", "group_index" -> 1)))
+    assert(ConstEval.regexExtractArgs(n.asInstanceOf[RegexExtract]) == ("a(\\d+)", 1))
+  }
+
+  test("const-eval: a substring of a literal is a cast type") {
+    val n = Dftly.parse(Map("cast" -> Map("source" -> "$y",
+      "type" -> Map("substring" -> Map(
+        "source" -> Map("literal" -> "int64"), "start" -> 0, "stop" -> 3)))))
+    assert(ColumnBridge.convertedExpression(Dftly.compile(n)).dataType == IntegerType)
+  }
+
+  test("const-eval: a coalesce that reads a column is not a cast type") {
+    val e = intercept[IllegalArgumentException](Dftly.parse(Map("cast" -> Map("source" -> "$y",
+      "type" -> Map("coalesce" -> Seq(Map("literal" -> "int"), "$x"))))))
+    assert(e.getMessage.contains("string literal"), e.getMessage)
+  }
+
+  test("strptime's strict flag is checked at parse time") {
+    val e = intercept[IllegalArgumentException](Dftly.parse(Map("strptime" -> Map(
+      "format" -> Map("literal" -> "%Y-%m-%d"), "source" -> "$s", "strict" -> "$x"))))
+    assert(e.getMessage.contains("strict argument must be a boolean"), e.getMessage)
+  }
+
+  test("const-eval: literal arguments parse and compile without Catalyst rules") {
+    def ruleRuns = RuleExecutor.getCurrentMetrics().numRuns
+    // The counter is JVM-wide, so a query another suite left running can
+    // move it; a Catalyst fold moves it on every attempt.
+    assert((1 to 3).exists { _ =>
+      val before = ruleRuns
+      for (s <- Seq("$s ::? float64", "$t ::? \"%Y-%m-%d\"", "extract group 2 of /(a)(b)/ from $s"))
+        Dftly.compile(p(s))
+      ruleRuns == before
+    })
   }
 
   test("parse-time validation: bad interpolate/extract args fail at parse") {
