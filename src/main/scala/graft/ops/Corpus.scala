@@ -726,21 +726,25 @@ object Corpus {
         minStopwordHits = if (stopwords.isEmpty) 0 else 2))
   }
 
-  /** All repetition/quality signals in one staged pass (n-grams materialized
-    * once — higher-order functions get no common-subexpression elimination).
+  /** The Gopher quality measures `token_count`, `top_ngram_frac`,
+    * `mean_word_len`, `dup_line_frac` and `symbol_ratio`, plus the `keep`
+    * decision ([[gopherKeep]]). One native kernel
+    * ([[graft.ops.expr.SigKernels.qualitySignals]]) computes all five from
+    * the UTF-8 bytes in a single struct, computed once and read field by
+    * field; the values are those of the HOF formulations
+    * (`size(`[[TextStats.tokens]]`)`, [[topNgramFraction]] over [[ngrams]],
+    * [[TextStats.meanTokenLength]], [[duplicateLineFraction]],
+    * [[symbolToWordRatio]]), with the same column types and nullability, a
+    * null text included. Those formulations split, regex-match and fold
+    * every document once per measure, interpreted per token.
     */
   def withQualitySignals(df: DataFrame, textCol: String, ngramN: Int = 2): DataFrame = {
-    val toks = TextStats.tokens(col(textCol))
-    df
-      .withColumn("token_count", size(toks))
-      // fused native kernel — the HOF formulation ([[topNgramFraction]] over
-      // [[ngrams]]) sorts and folds interpreted per row and dominated the
-      // whole signal pass; values are identical (exact integer ratios)
-      .withColumn("top_ngram_frac",
-        graft.ops.expr.NativeSig.topNgramFraction(col(textCol), ngramN))
-      .withColumn("mean_word_len", TextStats.meanTokenLength(col(textCol)))
-      .withColumn("dup_line_frac", duplicateLineFraction(col(textCol)))
-      .withColumn("symbol_ratio", symbolToWordRatio(col(textCol)))
+    val q = "__quality"
+    df.withColumn(q, graft.ops.expr.NativeSig.qualitySignals(col(textCol), ngramN))
+      .withColumns(scala.collection.immutable.ListMap(
+        Seq("token_count", "top_ngram_frac", "mean_word_len", "dup_line_frac", "symbol_ratio")
+          .map(f => f -> col(s"$q.$f")): _*))
+      .drop(q)
       .withColumn("keep",
         gopherKeep(col("token_count"), col("top_ngram_frac"), col("mean_word_len")))
   }

@@ -376,8 +376,6 @@ object Dedup {
   def shingleHashes(sh: Column): Column =
     transform(sh, s => xxhash64(s).bitwiseAND(lit(0xFFFFFFFFL)))
 
-  private val MersennePrime = 4294967311L // prime > 2^32
-
   /** Deterministic affine coefficients (a, b) for the k permutations. Bounded
     * by 2^20 so `a * h32 + b < 2^52` — no Long overflow under ANSI mode.
     */
@@ -398,7 +396,7 @@ object Dedup {
   def minhashSignature(hashes: Column, numHashes: Int): Column =
     when(size(hashes) > 0,
       array(affineCoeffs(numHashes).map { case (a, b) =>
-        array_min(transform(hashes, h => (h * a + b) % MersennePrime))
+        array_min(transform(hashes, h => (h * a + b) % graft.ops.expr.SigKernels.MinHashPrime))
       }.toIndexedSeq: _*)
     )
 
@@ -593,11 +591,13 @@ object Dedup {
     * with exact n-gram Jaccard ≥ `threshold` INSIDE the band buckets.
     * Returns (id_a, id_b, jaccard).
     *
-    * ONE gram-hashing pass feeds everything: shingles lower to sorted
-    * distinct xxhash64 longs ([[graft.ops.expr.SigKernels.hashSortedDistinct]]),
-    * the minhash kernel consumes those longs directly (the values ARE
-    * XXH64(token) — signatures bit-identical to hashing the strings, pinned
-    * in NativeSigSpec), and the same array is the verify payload. The
+    * ONE gram-hashing pass feeds everything: the text's shingles are hashed
+    * straight from its UTF-8 bytes into sorted distinct xxhash64 longs
+    * ([[graft.ops.expr.SigKernels.hashedShingles]], equal to
+    * `hash_sorted_distinct(word_shingles(...))` with no string per
+    * shingle), the minhash kernel consumes those longs directly (the values
+    * ARE XXH64(token) — signatures bit-identical to hashing the strings,
+    * pinned in NativeSigSpec), and the same array is the verify payload. The
     * hashed arrays ride the single groupBy(band, band_hash) exchange inside
     * the bucket structs; pairs are expanded and merge-verified map-side, so
     * pairs-with-arrays never enter an exchange (the q29 sf1 lesson). The
@@ -626,8 +626,7 @@ object Dedup {
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     val base = ensureParallelism(df)
       .select(col(idCol).as("id"),
-        graft.ops.expr.NativeSig.hashSortedDistinct(
-          shingles(col(textCol), shingleN)).as("ss"))
+        graft.ops.expr.NativeSig.hashedShingles(col(textCol), shingleN).as("ss"))
     // staged: lshBandHashes references its sig argument once PER BAND —
     // inlining the signature kernel there would evaluate it `bands` times
     // per row (the same no-CSE trap lshCandidatePairs documents).
@@ -1216,10 +1215,10 @@ object Dedup {
     *   lower it only when survival beats completeness. Also bounds the
     *   per-task sort-merge buffer in the verify join: a full bucket holds
     *   `members × (gram array)` bytes on each side of the same-key group.
-    * @param hashGrams when true (default), shingles are mapped to sorted
+    * @param hashGrams when true (default), shingles are hashed to sorted
     *   distinct xxhash64 longs by a fused codegen'd kernel
-    *   ([[graft.ops.expr.SigKernels.hashSortedDistinct]]) in the same
-    *   scan-side projection that shingled them, so the window sorts, the
+    *   ([[graft.ops.expr.SigKernels.hashedShingles]]) in the scan-side
+    *   projection, straight from the text's bytes, so the window sorts, the
     *   bucket exchange, and the in-bucket merge verification all work on
     *   8-byte longs instead of word n-gram strings — measured at sf1:
     *   verify phase 8.1 → 5.7 s warm, peak execution memory halved. Jaccard
@@ -1255,14 +1254,14 @@ object Dedup {
       maxGramDf: Long = 0
   ): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    val rawSh = shingles(col(textCol), shingleN)
-    // Fused native kernel (hash + sort + dedup in one codegen'd pass): the
-    // HOF spelling `array_distinct(transform(rawSh, xxhash64))` is
-    // interpreted per element and measured 3.5× the cost of the shingling
-    // it followed. Output is SORTED, so the verify branch skips sort_array.
+    // Fused native kernel (shingle + hash + sort + dedup in one codegen'd
+    // pass over the UTF-8 bytes): the HOF spelling
+    // `array_distinct(transform(shingles, xxhash64))` is interpreted per
+    // element and measured 3.5× the cost of the shingling it followed.
+    // Output is SORTED, so the verify branch skips sort_array.
     val shCol =
-      if (hashGrams) graft.ops.expr.NativeSig.hashSortedDistinct(rawSh)
-      else rawSh
+      if (hashGrams) graft.ops.expr.NativeSig.hashedShingles(col(textCol), shingleN)
+      else shingles(col(textCol), shingleN)
     // No filter on empty arrays: a blank doc explodes to no instances, so it
     // has no prefix row and the id join drops its array. Catalyst pushes a
     // `size(sh) > 0` filter below the projection that computes `sh` and

@@ -249,8 +249,7 @@ object StreamingOps {
     // in batch, so the shingling is not pushed into a filter and run twice
     val banded = df
       .select(col(idCol).as("id"), col(tsCol).as("ts"),
-        graft.ops.expr.NativeSig.hashSortedDistinct(
-          Dedup.shingles(col(textCol), shingleN)).as("ss"))
+        graft.ops.expr.NativeSig.hashedShingles(col(textCol), shingleN).as("ss"))
       .select(col("id"), col("ts"), col("ss"),
         graft.ops.expr.NativeSig.minhashSignature(col("ss"), numHashes).as("sig"))
       .select(col("id"), col("ts"), col("ss"),

@@ -3,10 +3,14 @@ package graft.ops.expr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernels for the native signature expressions. Public so generated
@@ -18,11 +22,29 @@ object SigKernels {
 
   val Seed = 42L // same default seed as Spark's xxhash64 builtin
 
+  /** The MinHash modulus p = 2³² + 15, the least prime above 2³² (not a
+    * Mersenne prime). Shared by the HOF reference
+    * ([[graft.ops.Dedup.minhashSignature]]) and the native kernels;
+    * [[modMinHashPrime]] is exact for this value only.
+    */
+  val MinHashPrime = 4294967311L
+
+  /** `x mod MinHashPrime` for 0 ≤ x < 2⁵², without a division. Since
+    * 2³² ≡ −15 (mod p), x = q·2³² + r reduces to y = r − 15q; q < 2²⁰ puts
+    * y in (−2²⁴, 2³²), and adding p to a negative y lands it in [0, p).
+    * Correct ONLY for p = 2³² + 15 and x < 2⁵², which the MinHash affine
+    * step `a·h + b` (a, b < 2²⁰, h < 2³²) guarantees.
+    */
+  def modMinHashPrime(x: Long): Long = {
+    val y = (x & 0xFFFFFFFFL) - 15L * (x >>> 32)
+    y + ((y >> 63) & MinHashPrime)
+  }
+
   /** One-pass MinHash: k minima of affine permutations of the token hashes.
     * ~k·n multiply-adds per row in a JIT-friendly loop; the HOF equivalent
     * (k array_min∘transform passes) allocates k intermediate arrays.
     */
-  def minhash(tokens: ArrayData, a: Array[Long], b: Array[Long], prime: Long): ArrayData = {
+  def minhash(tokens: ArrayData, a: Array[Long], b: Array[Long]): ArrayData = {
     val k = a.length
     val mins = Array.fill(k)(Long.MaxValue)
     val n = tokens.numElements()
@@ -33,7 +55,7 @@ object SigKernels {
         val h = XXH64.hashUTF8String(s, Seed) & 0xFFFFFFFFL
         var j = 0
         while (j < k) {
-          val v = (a(j) * h + b(j)) % prime
+          val v = modMinHashPrime(a(j) * h + b(j))
           if (v < mins(j)) mins(j) = v
           j += 1
         }
@@ -44,13 +66,14 @@ object SigKernels {
   }
 
   /** [[minhash]] over PRE-HASHED grams (`array<bigint>` from
-    * [[hashSortedDistinct]]): the gram values ARE `XXH64(token, Seed)`, the
-    * exact quantity [[minhash]] computes per token before masking — so the
-    * signatures are bit-identical to the string path, with the string
-    * hashing paid once upstream instead of once per signature. (Dedup and
-    * ordering don't matter: min is order-independent and duplicate-blind.)
+    * [[hashSortedDistinct]] or [[hashedShingles]]): the gram values ARE
+    * `XXH64(token, Seed)`, the exact quantity [[minhash]] computes per token
+    * before masking — so the signatures are bit-identical to the string
+    * path, with the string hashing paid once upstream instead of once per
+    * signature. (Dedup and ordering don't matter: min is order-independent
+    * and duplicate-blind.)
     */
-  def minhashLongs(grams: ArrayData, a: Array[Long], b: Array[Long], prime: Long): ArrayData = {
+  def minhashLongs(grams: ArrayData, a: Array[Long], b: Array[Long]): ArrayData = {
     val k = a.length
     val mins = Array.fill(k)(Long.MaxValue)
     val n = grams.numElements()
@@ -64,7 +87,7 @@ object SigKernels {
         val h = grams.getLong(i) & 0xFFFFFFFFL
         var j = 0
         while (j < k) {
-          val v = (a(j) * h + b(j)) % prime
+          val v = modMinHashPrime(a(j) * h + b(j))
           if (v < mins(j)) mins(j) = v
           j += 1
         }
@@ -323,6 +346,154 @@ object SigKernels {
     new GenericArrayData(if (w == n) hs else java.util.Arrays.copyOf(hs, w))
   }
 
+  /** `hashSortedDistinct(wordShingles(text, n))` without a `String`: the
+    * sorted distinct `XXH64(shingle, Seed)` of every n-token window (the
+    * whole token sequence when there are at most `n` tokens; empty for
+    * blank text), hashed from the UTF-8 bytes in place. A window whose
+    * tokens are separated by single spaces IS its shingle's bytes, so it is
+    * hashed as a slice of the text; any other window is joined with single
+    * spaces into one reused buffer first. Text that is not valid UTF-8 goes
+    * through the two string kernels, whose decoding replaces each invalid
+    * sequence with U+FFFD and so changes the bytes that get hashed.
+    */
+  def hashedShingles(text: UTF8String, n: Int): ArrayData = {
+    if (!text.isValid) return hashSortedDistinct(wordShingles(text, n))
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val tk = new ByteTokens(base, off, text.numBytes)
+    val k = tk.count
+    if (k == 0) return new GenericArrayData(new Array[Long](0))
+    val w = math.min(n, k)
+    // badGaps(j): separators among the first j gaps that are not one ' '
+    val badGaps = new Array[Int](k)
+    var j = 1
+    while (j < k) {
+      val e = tk.ends(j - 1)
+      val single = tk.starts(j) == e + 1 && Platform.getByte(base, off + e) == ' '
+      badGaps(j) = badGaps(j - 1) + (if (single) 0 else 1)
+      j += 1
+    }
+    val hs = new Array[Long](k - w + 1)
+    var buf: Array[Byte] = null
+    var st = 0
+    while (st < hs.length) {
+      val last = st + w - 1
+      val from = tk.starts(st)
+      if (badGaps(last) == badGaps(st)) {
+        hs(st) = XXH64.hashUnsafeBytes(base, off + from, tk.ends(last) - from, Seed)
+      } else {
+        if (buf == null) buf = new Array[Byte](text.numBytes)
+        var len = 0
+        j = st
+        while (j <= last) {
+          if (j > st) { buf(len) = ' '; len += 1 }
+          val tl = tk.ends(j) - tk.starts(j)
+          Platform.copyMemory(base, off + tk.starts(j), buf, Platform.BYTE_ARRAY_OFFSET + len, tl)
+          len += tl
+          j += 1
+        }
+        hs(st) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, Seed)
+      }
+      st += 1
+    }
+    java.util.Arrays.sort(hs)
+    var d = 0
+    st = 0
+    while (st < hs.length) {
+      if (d == 0 || hs(st) != hs(d - 1)) { hs(d) = hs(st); d += 1 }
+      st += 1
+    }
+    new GenericArrayData(if (d == hs.length) hs else java.util.Arrays.copyOf(hs, d))
+  }
+
+  /** The five measures of [[graft.ops.Corpus.withQualitySignals]] from one
+    * tokenizing scan and one line/symbol scan of the UTF-8 bytes, as
+    * `(token_count, top_ngram_frac, mean_word_len, dup_line_frac,
+    * symbol_ratio)` — the same values as the HOF formulations, IEEE
+    * division included:
+    *   - tokens are maximal runs of bytes outside ASCII `[ \t\n\x0B\f\r]`
+    *     (`array_remove(split(t, "\\s+"), "")`);
+    *   - `mean_word_len` sums `numChars` over the tokens (the UTF-8 lead
+    *     bytes among them);
+    *   - `top_ngram_frac` is [[topNgramFraction]]: the most frequent
+    *     `n`-token window's count over the window count, 0.0 below `n`
+    *     tokens;
+    *   - lines are `split(t, "\n")` with trailing empty lines kept,
+    *     compared byte by byte;
+    *   - symbols are the leftmost non-overlapping matches of `#|…|\.\.\.`.
+    * Tokens, windows (as token-id runs) and lines are counted through
+    * [[SliceIds]], which compares bytes, so no `String` is built. Text that
+    * is not valid UTF-8 is decoded and re-encoded once first: the `String`
+    * path of `split` and `regexp_extract_all` sees every invalid sequence as
+    * U+FFFD, and so does the scan of the re-encoded bytes.
+    */
+  def qualitySignals(text: UTF8String, n: Int): InternalRow = {
+    val t = if (text.isValid) text else UTF8String.fromString(text.toString)
+    val base = t.getBaseObject
+    val off = t.getBaseOffset
+    val len = t.numBytes
+    val tk = new ByteTokens(base, off, len)
+    val k = tk.count
+    val topNgram =
+      if (k < n) 0.0
+      else {
+        val words = new SliceIds(base, off, k)
+        val ids = new Array[Int](k)
+        var j = 0
+        while (j < k) { ids(j) = words.id(tk.starts(j), tk.ends(j) - tk.starts(j)); j += 1 }
+        val total = k - n + 1
+        val grams = new SliceIds(ids, Platform.INT_ARRAY_OFFSET, total)
+        val counts = new Array[Int](total)
+        var best = 0
+        j = 0
+        while (j < total) {
+          val g = grams.id(4 * j, 4 * n)
+          counts(g) += 1
+          if (counts(g) > best) best = counts(g)
+          j += 1
+        }
+        best.toDouble / total
+      }
+    val lines = new SliceIds(base, off, tk.newlines + 1)
+    var symbols = 0
+    var lineStart = 0
+    var i = 0
+    while (i < len) {
+      val b = Platform.getByte(base, off + i)
+      if (b == '\n') {
+        lines.id(lineStart, i - lineStart)
+        lineStart = i + 1
+      } else if (b == '#') symbols += 1
+      else if (i + 2 < len && (
+          (b == '.' && Platform.getByte(base, off + i + 1) == '.' &&
+            Platform.getByte(base, off + i + 2) == '.') ||
+          (b == 0xE2.toByte && Platform.getByte(base, off + i + 1) == 0x80.toByte &&
+            Platform.getByte(base, off + i + 2) == 0xA6.toByte))) {
+        symbols += 1
+        i += 2
+      }
+      i += 1
+    }
+    lines.id(lineStart, len - lineStart)
+    val numLines = tk.newlines + 1
+    new GenericInternalRow(Array[Any](
+      k,
+      topNgram,
+      if (k == 0) 0.0 else tk.chars.toDouble / k,
+      (numLines - lines.size).toDouble / numLines,
+      if (k == 0) 0.0 else symbols.toDouble / k))
+  }
+
+  /** What the HOF formulations give for a null text: every measure null,
+    * or under `legacySizeOfNull` (`size(null)` = −1) the values that −1
+    * sizes produce — token_count −1, dup_line_frac 0/−1 = −0.0,
+    * symbol_ratio −1/−1 = 1.0.
+    */
+  def nullTextQuality(legacySizeOfNull: Boolean): InternalRow =
+    new GenericInternalRow(
+      if (legacySizeOfNull) Array[Any](-1, null, null, -0.0, 1.0)
+      else new Array[Any](5))
+
   /** Index of the nearest centroid by squared L2, centroids flattened
     * row-major (`k × dim`); ties keep the smaller index (matching the HOF
     * `array_min` over (dist, cell) structs). One fused pass per row — the
@@ -522,6 +693,84 @@ object SigKernels {
   }
 }
 
+/** Whitespace tokens of a UTF-8 byte range: maximal runs of bytes outside
+  * ASCII `[ \t\n\x0B\f\r]` (Java's `\s`, so `split(t, "\\s+")` minus its
+  * empty strings), as `[starts(j), ends(j))` byte offsets, plus the lead
+  * bytes inside tokens (`chars`, the summed `numChars` of valid UTF-8
+  * tokens) and the newline count.
+  */
+private[expr] final class ByteTokens(base: AnyRef, off: Long, len: Int) {
+  var starts: Array[Int] = _
+  var ends: Array[Int] = _
+  var count = 0
+  var chars = 0L
+  var newlines = 0
+  scan()
+
+  private def scan(): Unit = {
+    var ss = new Array[Int](16)
+    var es = new Array[Int](16)
+    var k = 0
+    var lead = 0L
+    var nl = 0
+    var inToken = false
+    var i = 0
+    while (i < len) {
+      val b = Platform.getByte(base, off + i)
+      if (b == ' ' || (b >= '\t' && b <= '\r')) {
+        if (b == '\n') nl += 1
+        if (inToken) { es(k) = i; k += 1; inToken = false }
+      } else {
+        if (!inToken) {
+          if (k == ss.length) {
+            ss = java.util.Arrays.copyOf(ss, 2 * k)
+            es = java.util.Arrays.copyOf(es, 2 * k)
+          }
+          ss(k) = i
+          inToken = true
+        }
+        if ((b & 0xC0) != 0x80) lead += 1
+      }
+      i += 1
+    }
+    if (inToken) { es(k) = len; k += 1 }
+    starts = ss; ends = es; count = k; chars = lead; newlines = nl
+  }
+}
+
+/** Dense ids for byte slices of one object: `id(start, len)` returns the id
+  * of the first slice with the same bytes, or the next free id. Open
+  * addressing with linear probing, sized for `capacity` slices up front;
+  * offsets are relative to `off`, so a slice of an `int[]` (a run of token
+  * ids) is keyed as its 4-byte words.
+  */
+private[expr] final class SliceIds(base: AnyRef, off: Long, capacity: Int) {
+  private val mask = (Integer.highestOneBit(2 * math.max(capacity, 1) - 1) << 1) - 1
+  private val slots = new Array[Int](mask + 1) // id + 1; 0 = empty
+  private val starts = new Array[Int](capacity)
+  private val lens = new Array[Int](capacity)
+  private val hashes = new Array[Int](capacity)
+  var size = 0
+
+  def id(start: Int, len: Int): Int = {
+    val h = XXH64.hashUnsafeBytes(base, off + start, len, 0L).toInt
+    var s = h & mask
+    var e = slots(s) - 1
+    while (e >= 0 && !(hashes(e) == h && lens(e) == len &&
+        ByteArrayMethods.arrayEquals(base, off + starts(e), base, off + start, len))) {
+      s = (s + 1) & mask
+      e = slots(s) - 1
+    }
+    if (e < 0) {
+      e = size
+      starts(e) = start; lens(e) = len; hashes(e) = h
+      size += 1
+      slots(s) = size
+    }
+    e
+  }
+}
+
 /** Native MinHash signature of an `array<string>` token/shingle column.
   *
   * Same contract as [[graft.ops.Dedup.minhashSignature]] composed with
@@ -537,7 +786,6 @@ case class MinHashSignature(child: Expression, numHashes: Int)
     val cs = graft.ops.Dedup.affineCoeffs(numHashes)
     (cs.map(_._1), cs.map(_._2))
   }
-  private val prime = 4294967311L
 
   // array<string> tokens, or array<bigint> pre-hashed grams from
   // hash_sorted_distinct — the longs ARE XXH64(token, Seed), so both paths
@@ -566,8 +814,8 @@ case class MinHashSignature(child: Expression, numHashes: Int)
   override protected def nullSafeEval(input: Any): Any = {
     val tokens = input.asInstanceOf[ArrayData]
     if (tokens.numElements() == 0) null
-    else if (longTyped) SigKernels.minhashLongs(tokens, aCoeffs, bCoeffs, prime)
-    else SigKernels.minhash(tokens, aCoeffs, bCoeffs, prime)
+    else if (longTyped) SigKernels.minhashLongs(tokens, aCoeffs, bCoeffs)
+    else SigKernels.minhash(tokens, aCoeffs, bCoeffs)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -578,7 +826,7 @@ case class MinHashSignature(child: Expression, numHashes: Int)
          |if ($c.numElements() == 0) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = graft.ops.expr.SigKernels.$kernel($c, $aRef, $bRef, ${prime}L);
+         |  ${ev.value} = graft.ops.expr.SigKernels.$kernel($c, $aRef, $bRef);
          |}
        """.stripMargin)
   }
@@ -708,6 +956,85 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.ops.expr.SigKernels.wordShingles($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
+    copy(child = newChild)
+}
+
+/** Native sorted distinct shingle hashes of a string column — see
+  * [[SigKernels.hashedShingles]]. Equal to
+  * `HashSortedDistinct(WordShingles(child, n))` on every input, null
+  * included, with no string built per shingle.
+  */
+case class HashedShingles(child: Expression, n: Int) extends UnaryExpression {
+
+  require(n >= 1, "shingle size must be >= 1")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other =>
+      TypeCheckResult.TypeCheckFailure(s"hashed_shingles needs a string column, got $other")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "hashed_shingles"
+
+  override protected def nullSafeEval(input: Any): Any =
+    SigKernels.hashedShingles(input.asInstanceOf[UTF8String], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.ops.expr.SigKernels.hashedShingles($c, $n)")
+
+  override protected def withNewChildInternal(newChild: Expression): HashedShingles =
+    copy(child = newChild)
+}
+
+/** Native Gopher quality measures of a string column — see
+  * [[SigKernels.qualitySignals]]. The struct is never null: a null text
+  * yields [[SigKernels.nullTextQuality]], what the HOF formulations give
+  * for it under the `size(null)` semantics captured in `legacySizeOfNull`
+  * (as `Size` captures them), and each field is nullable exactly where its
+  * HOF column is.
+  */
+case class QualitySignals(
+    child: Expression,
+    n: Int,
+    legacySizeOfNull: Boolean = SQLConf.get.legacySizeOfNull)
+    extends UnaryExpression {
+
+  require(n >= 1, "n-gram size must be >= 1")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other =>
+      TypeCheckResult.TypeCheckFailure(s"quality_signals needs a string column, got $other")
+  }
+  override def dataType: DataType = StructType(Seq(
+    StructField("token_count", IntegerType, nullable = !legacySizeOfNull && child.nullable),
+    StructField("top_ngram_frac", DoubleType, nullable = child.nullable),
+    // the HOF ratios are Divide results, which Spark declares nullable
+    StructField("mean_word_len", DoubleType, nullable = true),
+    StructField("dup_line_frac", DoubleType, nullable = true),
+    StructField("symbol_ratio", DoubleType, nullable = true)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "quality_signals"
+
+  override def eval(input: InternalRow): Any = {
+    val text = child.eval(input)
+    if (text == null) SigKernels.nullTextQuality(legacySizeOfNull)
+    else SigKernels.qualitySignals(text.asInstanceOf[UTF8String], n)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(
+      code = code"""
+        ${c.code}
+        InternalRow ${ev.value} = ${c.isNull}
+          ? graft.ops.expr.SigKernels.nullTextQuality($legacySizeOfNull)
+          : graft.ops.expr.SigKernels.qualitySignals(${c.value}, $n);
+      """,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): QualitySignals =
     copy(child = newChild)
 }
 
@@ -987,6 +1314,16 @@ object NativeSig {
   /** Column API for [[WordShingles]]. */
   def wordShingles(text: Column, n: Int): Column =
     ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
+
+  /** Column API for [[HashedShingles]]. */
+  def hashedShingles(text: Column, n: Int): Column =
+    ColumnBridge.column(HashedShingles(ColumnBridge.expression(text), n))
+
+  /** Column API for [[QualitySignals]]; `size(null)` semantics are read
+    * from the active session's conf here, as `size` reads them.
+    */
+  def qualitySignals(text: Column, n: Int): Column =
+    ColumnBridge.column(QualitySignals(ColumnBridge.expression(text), n))
 
   /** Column API for [[LangIdExpr]] — the [[LangModel]] linear classifier. */
   def langId(text: Column): Column =

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dftly.SparkTestBase
@@ -213,4 +214,70 @@ class CorpusSpec extends SparkTestBase {
     assert(out.select($"__rn").as[Long].collect().toSet == Set(77L, 99L))
   }
 
+  // --- withQualitySignals' one native kernel against the HOF formulations ---
+
+  /** withQualitySignals as the per-measure formulations spell it: the HOF
+    * columns, with the fused top-n-gram kernel (itself pinned to its HOF
+    * formulation above).
+    */
+  private def qualityReference(df: DataFrame, text: String, n: Int = 2): DataFrame = {
+    val t = col(text)
+    df.withColumn("token_count", size(TextStats.tokens(t)))
+      .withColumn("top_ngram_frac", graft.ops.expr.NativeSig.topNgramFraction(t, n))
+      .withColumn("mean_word_len", TextStats.meanTokenLength(t))
+      .withColumn("dup_line_frac", Corpus.duplicateLineFraction(t))
+      .withColumn("symbol_ratio", Corpus.symbolToWordRatio(t))
+      .withColumn("keep",
+        Corpus.gopherKeep(col("token_count"), col("top_ngram_frac"), col("mean_word_len")))
+  }
+
+  /** Rows as comparable values; doubles by their bits, so -0.0 != 0.0. */
+  private def cells(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    })
+
+  private def assertSameQuality(df: DataFrame, n: Int = 2): Unit = {
+    val got = Corpus.withQualitySignals(df, "text", n)
+    val want = qualityReference(df, "text", n)
+    assert(got.schema == want.schema, s"${got.schema.treeString}\n${want.schema.treeString}")
+    val (g, w) = (cells(got), cells(want))
+    val diff = g.zip(w).filter { case (a, b) => a != b }
+    assert(g.size == w.size && diff.isEmpty, s"n=$n first=${diff.headOption}")
+  }
+
+  test("quality kernel == HOF formulation on documents and edge texts, schema included") {
+    val texts = TextEdgeCases.withDocuments(spark)
+    assert(TextEdgeCases.invalidUtf8Rows(texts) == TextEdgeCases.invalidHex.size)
+    for (n <- Seq(1, 2, 3)) assertSameQuality(texts, n)
+    // a non-nullable text column keeps the non-nullable fields non-nullable
+    assertSameQuality(spark.range(3).select(lit("x y\nx y …").as("text"), $"id"))
+  }
+
+  test("a null text gives the HOF values under either size(null) semantics") {
+    val df = Seq(Some("a b\nc"), None).toDF("text")
+    assertSameQuality(df)
+    val confs = Seq("spark.sql.ansi.enabled" -> "false", "spark.sql.legacy.sizeOfNull" -> "true")
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      // legacy size(null) = -1: token_count -1, dup_line_frac -0.0, symbol_ratio 1.0
+      assertSameQuality(df)
+      assert(cells(Corpus.withQualitySignals(df, "text").filter($"text".isNull)
+        .select("token_count", "dup_line_frac", "symbol_ratio")) ==
+        Seq(Seq(-1, java.lang.Double.doubleToRawLongBits(-0.0),
+          java.lang.Double.doubleToRawLongBits(1.0))))
+    } finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("withQualitySignals computes the quality kernel in one place of the optimized plan") {
+    val q = Corpus.withQualitySignals(
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text")
+    val plan = q.queryExecution.optimizedPlan
+    val kernels = plan.collect { case node =>
+      node.expressions.flatMap(_.collect { case k: graft.ops.expr.QualitySignals => k })
+    }.flatten
+    assert(kernels.size == 1, plan.toString)
+  }
 }

@@ -19,13 +19,20 @@ object NativeKernelProps extends Properties("NativeKernels") {
   private val ws: Gen[String] =
     Gen.nonEmptyListOf(Gen.oneOf(" ", "\t", "\n", "\u000B", "\f", "\r", "  ")).map(_.mkString)
 
+  /** Multi-byte and symbol-bearing words: 2-, 3- and 4-byte UTF-8, `…`
+    * and the `#` / `...` symbol forms, so byte offsets, character counts
+    * and symbol matches diverge from an ASCII walk.
+    */
+  private val oddWords = Seq("é", "日本", "…", "a…b", "𝄞x", "#", "...", "x....", "#é")
+
   /** Text with random words separated by random whitespace runs, with
     * optional leading/trailing whitespace and a small vocabulary so n-grams
-    * actually repeat.
+    * actually repeat; the vocabulary mixes `w<i>` words with [[oddWords]].
     */
   private val text: Gen[String] = for {
     vocab <- Gen.choose(1, 5)
-    words <- Gen.listOf(Gen.oneOf((0 until vocab).map(i => s"w$i")))
+    odd <- Gen.someOf(oddWords)
+    words <- Gen.listOf(Gen.oneOf((0 until vocab).map(i => s"w$i") ++ odd))
     seps <- Gen.listOfN(math.max(words.size - 1, 0), ws)
     lead <- Gen.oneOf("", " ", "\t ")
     trail <- Gen.oneOf("", " ", "\n")
@@ -33,6 +40,29 @@ object NativeKernelProps extends Properties("NativeKernels") {
 
   private def tokens(s: String): Seq[String] =
     s.split("\\s+").filter(_.nonEmpty).toSeq
+
+  /** Invalid UTF-8: a stray continuation byte, a truncated 2- and 3-byte
+    * sequence, an encoded surrogate, an overlong '/', a code point above
+    * U+10FFFF and the never-valid 0xFE.
+    */
+  private val invalidSeqs: Seq[Array[Byte]] = Seq(
+    "80", "C3", "E280", "EDA080", "C0AF", "F4908080", "FE").map(h =>
+    h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+
+  /** [[text]]'s UTF-8 bytes, with an invalid sequence spliced in at a few
+    * random offsets in about one case in three.
+    */
+  private val textBytes: Gen[UTF8String] = for {
+    s <- text
+    cuts <- Gen.frequency(2 -> Gen.const(Nil),
+      1 -> Gen.listOf(Gen.zip(Gen.choose(0, 1000), Gen.oneOf(invalidSeqs))).map(_.take(3)))
+  } yield {
+    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    UTF8String.fromBytes(cuts.sortBy(-_._1).foldLeft(b) { case (acc, (at, bad)) =>
+      val i = if (acc.isEmpty) 0 else at % (acc.length + 1)
+      acc.take(i) ++ bad ++ acc.drop(i)
+    })
+  }
 
   private def refShingles(s: String, n: Int): Seq[String] = {
     val toks = tokens(s)
@@ -59,6 +89,52 @@ object NativeKernelProps extends Properties("NativeKernels") {
         }
       val got = SigKernels.topNgramFraction(UTF8String.fromString(s), n)
       got == expected
+    }
+
+  property("hashedShingles == hashSortedDistinct(wordShingles)") =
+    Prop.forAll(textBytes, Gen.choose(1, 4)) { (u, n) =>
+      val fused = SigKernels.hashedShingles(u, n).toLongArray().toSeq
+      fused == SigKernels.hashSortedDistinct(SigKernels.wordShingles(u, n)).toLongArray().toSeq
+    }
+
+  property("qualitySignals == straight-line reference over the decoded text") =
+    Prop.forAll(textBytes, Gen.choose(1, 4)) { (u, n) =>
+      val s = u.toString // invalid sequences decode to U+FFFD, as split/regex see them
+      val toks = tokens(s)
+      val k = toks.size
+      val top =
+        if (k < n) 0.0
+        else {
+          val grams = toks.sliding(n).toSeq
+          grams.groupBy(identity).values.map(_.size).max.toDouble / grams.size
+        }
+      val mean = if (k == 0) 0.0 else toks.map(t => t.codePointCount(0, t.length).toLong).sum.toDouble / k
+      val lines = s.split("\n", -1).toSeq
+      val dup = (lines.size - lines.distinct.size).toDouble / lines.size
+      val syms = "#|…|\\.\\.\\.".r.findAllIn(s).size
+      val ratio = if (k == 0) 0.0 else syms.toDouble / k
+      val r = SigKernels.qualitySignals(u, n)
+      def same(i: Int, want: Double) = java.lang.Double.compare(r.getDouble(i), want) == 0
+      (r.getInt(0) == k && same(1, top) && same(2, mean) && same(3, dup) && same(4, ratio)) :|
+        s"got ${(0 until 5).map(i => if (i == 0) r.getInt(0) else r.getDouble(i))}"
+    }
+
+  private val coeff: Gen[Long] =
+    Gen.frequency(4 -> Gen.choose(0L, (1L << 20) - 1), 1 -> Gen.oneOf(0L, 1L, (1L << 20) - 1))
+  private val hash32: Gen[Long] =
+    Gen.frequency(4 -> Gen.choose(0L, 0xFFFFFFFFL), 1 -> Gen.oneOf(0L, 1L, 0xFFFFFFFFL))
+
+  property("modMinHashPrime(a·h + b) == (a·h + b) % p, boundaries included") =
+    Prop.forAll(coeff, hash32, coeff) { (a, h, b) =>
+      val x = a * h + b
+      SigKernels.modMinHashPrime(x) == x % SigKernels.MinHashPrime
+    }
+
+  property("modMinHashPrime at and next to multiples of p below 2^52") =
+    Prop.forAll(Gen.choose(1L, ((1L << 52) - 2) / SigKernels.MinHashPrime), Gen.choose(-1L, 1L)) {
+      (m, d) =>
+        val x = m * SigKernels.MinHashPrime + d
+        SigKernels.modMinHashPrime(x) == x % SigKernels.MinHashPrime
     }
 
   private val sortedDistinct: Gen[Seq[String]] =

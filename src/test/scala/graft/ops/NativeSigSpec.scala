@@ -215,4 +215,110 @@ class NativeSigSpec extends SparkTestBase {
     assert(plan.contains("word_shingles"), plan)
   }
 
+  test("hashed shingles == hash_sorted_distinct(word_shingles) on documents and edge texts") {
+    val texts = TextEdgeCases.withDocuments(spark)
+    assert(TextEdgeCases.invalidUtf8Rows(texts) == TextEdgeCases.invalidHex.size)
+    for (n <- Seq(1, 2, 3, 5)) {
+      val both = texts.select(
+        NativeSig.hashedShingles($"text", n).as("fused"),
+        NativeSig.hashSortedDistinct(NativeSig.wordShingles($"text", n)).as("pair"))
+      val bad = both.filter(!($"fused" <=> $"pair")).collect()
+      assert(bad.isEmpty, s"n=$n first=${bad.headOption}")
+    }
+  }
+
+  test("hashed shingles and quality signals compile twice into one method, nullable or not") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.ops.expr.{HashedShingles, QualitySignals}
+    val texts = TextEdgeCases.strings.map(UTF8String.fromString) ++
+      TextEdgeCases.invalidHex.map(h => UTF8String.fromBytes(TextEdgeCases.bytes(h)))
+    for (nullable <- Seq(false, true)) {
+      val s = BoundReference(0, StringType, nullable)
+      val pairs: Seq[(String, Seq[Expression])] = Seq(
+        "hashed_shingles" -> Seq(HashedShingles(s, 3), HashedShingles(s, 1)),
+        "quality_signals" -> Seq(
+          QualitySignals(s, 2, legacySizeOfNull = false),
+          QualitySignals(s, 3, legacySizeOfNull = true)))
+      for ((name, exprs) <- pairs) {
+        // no interpreted fallback: a compile error in the generated code throws
+        val generated = GenerateUnsafeProjection.generate(exprs)
+        val interpreted = InterpretedUnsafeProjection.createProjection(exprs)
+        val rows = texts.map(t => InternalRow(t)) ++
+          (if (nullable) Seq(InternalRow(null)) else Nil)
+        rows.foreach { r =>
+          assert(generated(r).copy() == interpreted(r).copy(),
+            s"$name nullable=$nullable on ${r.getUTF8String(0)}")
+        }
+      }
+    }
+  }
+
+  test("hashed shingles and quality signals stay inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import graft.ops.expr.{HashedShingles, QualitySignals}
+    val q = docs.select(
+      NativeSig.hashedShingles($"text", 3).as("ss"),
+      NativeSig.qualitySignals($"text", 2).as("q"))
+    val plan = q.queryExecution.executedPlan
+    def fused(p: ProjectExec) = Seq(classOf[HashedShingles], classOf[QualitySignals]).forall(c =>
+      p.projectList.exists(_.find(e => c.isInstance(e)).isDefined))
+    val inStage = plan.collect { case w: WholeStageCodegenExec => w }
+      .exists(_.child.find { case p: ProjectExec => fused(p); case _ => false }.isDefined)
+    assert(inStage, s"expected both kernels in a codegen stage:\n$plan")
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false") // a generated-code compile error now throws
+    try assert(q.count() == docs.count() && q.collect().length == docs.count())
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+}
+
+/** Texts that stress the byte-level kernels: blank and single-token texts,
+  * every whitespace byte, leading and trailing newlines, repeated lines,
+  * the `#|…|...` symbol cases, multi-byte words, and bytes that are not
+  * valid UTF-8 (surrogate, overlong, truncated and stray sequences).
+  */
+private[ops] object TextEdgeCases {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  val strings: Seq[String] = Seq(
+    "", " ", "   \t  ", "\n", "one", "a b", "a b c", "a b c d e f",
+    "a\tb\u000Bc\fd\re\nf", "a\t\t\tb\r\r\nc \u000B\u000B d\f\fe",
+    "\n\nx\ny", "x\ny\n\n", "x\ny\nx\n", "x\ny\nx\nz",
+    "…", "....", "#...", "# a … b ... c", "..#…..…...",
+    "é café 日本 語 日本 語 … 𝄞 notes", "日本語 日本語 日本語", "a  b a  b a b",
+    "spam spam spam spam spam spam")
+
+  /** Hex byte strings; every one is invalid UTF-8. */
+  val invalidHex: Seq[String] = Seq(
+    "61FF62", "C3", "6120E280", "E28020E280A6", "EDA080206120EDA080",
+    "C0AF2061", "F4908080", "80808020612062", "2E2EC32E2023FE0A0A78")
+
+  def bytes(hex: String): Array[Byte] =
+    hex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+
+  /** One `text` column: the edge strings, a null, and the invalid bytes. */
+  def frame(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    strings.map(Option(_)).:+(Option.empty[String]).toDF("text")
+      .union(invalidHex.toDF("h").select(unhex($"h").cast("string").as("text")))
+  }
+
+  /** [[frame]] after the test corpus's documents. */
+  def withDocuments(spark: SparkSession): DataFrame =
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(col("text"))
+      .union(frame(spark))
+
+  /** Rows whose text bytes are not valid UTF-8 — checks that the cast from
+    * binary kept the invalid bytes.
+    */
+  def invalidUtf8Rows(df: DataFrame): Long =
+    df.select(col("text").cast("binary")).collect().count { r =>
+      val b = r.getAs[Array[Byte]](0)
+      b != null && !org.apache.spark.unsafe.types.UTF8String.fromBytes(b).isValid
+    }
 }
