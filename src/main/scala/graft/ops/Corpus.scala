@@ -75,11 +75,11 @@ object Corpus {
       tokenCount: Column,
       topNgramFrac: Column,
       meanWordLen: Column,
-      minTokens: Int = 20,
-      maxTokens: Int = 1000000,
-      maxRepetition: Double = 0.05,
-      minMeanWordLen: Double = 3.0,
-      maxMeanWordLen: Double = 10.0
+      minTokens: Int = graft.ops.expr.SigKernels.GopherMinTokens,
+      maxTokens: Int = graft.ops.expr.SigKernels.GopherMaxTokens,
+      maxRepetition: Double = graft.ops.expr.SigKernels.GopherMaxRepetition,
+      minMeanWordLen: Double = graft.ops.expr.SigKernels.GopherMinMeanWordLen,
+      maxMeanWordLen: Double = graft.ops.expr.SigKernels.GopherMaxMeanWordLen
   ): Column =
     tokenCount.between(minTokens, maxTokens) &&
       topNgramFrac < maxRepetition &&
@@ -737,15 +737,18 @@ object Corpus {
     * [[symbolToWordRatio]]), with the same column types and nullability, a
     * null text included. Those formulations split, regex-match and fold
     * every document once per measure, interpreted per token.
+    *
+    * `keep` is a field of the same struct: Catalyst pushes a filter on
+    * `keep` below the projection and substitutes its definition, so a
+    * `keep` built from the three measures costed five more kernel calls in
+    * the filter; one field costs one.
     */
   def withQualitySignals(df: DataFrame, textCol: String, ngramN: Int = 2): DataFrame = {
     val q = "__quality"
     df.withColumn(q, graft.ops.expr.NativeSig.qualitySignals(col(textCol), ngramN))
       .withColumns(scala.collection.immutable.ListMap(
-        Seq("token_count", "top_ngram_frac", "mean_word_len", "dup_line_frac", "symbol_ratio")
-          .map(f => f -> col(s"$q.$f")): _*))
+        Seq("token_count", "top_ngram_frac", "mean_word_len", "dup_line_frac", "symbol_ratio",
+          "keep").map(f => f -> col(s"$q.$f")): _*))
       .drop(q)
-      .withColumn("keep",
-        gopherKeep(col("token_count"), col("top_ngram_frac"), col("mean_word_len")))
   }
 }

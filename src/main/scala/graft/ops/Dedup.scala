@@ -11,15 +11,15 @@ import org.apache.spark.sql.types._
   * Scale design (the point of this engine):
   *   - exact dedup shuffles a 128-bit content digest, never the content,
   *     with map-side partial aggregation.
-  *   - MinHash signatures are computed per-row with higher-order functions
-  *     (no UDFs, no state); only (id, band, bandHash) triples — 24 bytes a
-  *     row — enter the LSH shuffle, never the shingle sets.
-  *   - candidate verification re-joins the shingle sets by id (sort-merge on
-  *     a compact key), so memory per task stays bounded by bucket size.
+  *   - MinHash signatures come from one native codegen'd kernel per row
+  *     (no UDFs, no state). [[lshCandidatePairs]] shuffles only
+  *     (id, band, band_hash) triples; [[nearDuplicatePairs]] ships each band
+  *     row with its gram-hash array and verifies candidates inside the
+  *     bucket, so pairs never enter an exchange with their arrays.
   *   - pathological buckets (boilerplate shared by millions of docs) are
   *     capped by `maxBucketSize` — the classic LSH skew guard; dropped
-  *     buckets are reported via an accumulator-free count column rather than
-  *     silently vanishing.
+  *     buckets are reported through a `CollectMetrics` observation
+  *     ([[observedBucketStats]]) rather than silently vanishing.
   */
 object Dedup {
 
@@ -422,7 +422,12 @@ object Dedup {
     *      instead of materializing B²/2-element arrays per bucket (measured
     *      3× slower via in-bucket HOF pair expansion on collision-heavy
     *      data), and the two sides reuse the same exchange.
-    * A window-count formulation would add a per-bucket sort for nothing.
+    * The partial collect leaves the sort to the exchange only while a task
+    * sees at most 128 bucket keys
+    * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`); past
+    * that it sorts its rows itself, and near-unique band keys pass it in
+    * every task. [[nearDuplicatePairs]] sizes its buckets with a window
+    * count instead; this id-only shape has not been measured that way.
     */
   private[ops] def bucketCandidatePairs(
       buckets: DataFrame,
@@ -472,13 +477,16 @@ object Dedup {
     */
   private val obsCounter = new java.util.concurrent.atomic.AtomicLong
 
-  private[ops] def observeBucketStats(sized: DataFrame, maxBucketSize: Int): DataFrame =
+  private[ops] def observeBucketStats(
+      sized: DataFrame, maxBucketSize: Int, first: Column = lit(true)): DataFrame = {
+    // `first` marks one row per bucket where `sized` has a row per member
+    val truncated = first && col("__bsz") > maxBucketSize
     sized.observe(s"graft_buckets_${obsCounter.incrementAndGet()}",
       coalesce(max(col("__bsz")).cast("long"), lit(0L)).as("max_bucket"),
-      coalesce(sum(when(col("__bsz") > maxBucketSize, 1L).otherwise(0L)), lit(0L))
-        .as("buckets_truncated"),
-      coalesce(sum(when(col("__bsz") > maxBucketSize, col("__bsz").cast("long"))
-        .otherwise(0L)), lit(0L)).as("rows_in_truncated"))
+      coalesce(sum(when(truncated, 1L).otherwise(0L)), lit(0L)).as("buckets_truncated"),
+      coalesce(sum(when(truncated, col("__bsz").cast("long")).otherwise(0L)), lit(0L))
+        .as("rows_in_truncated"))
+  }
 
   /** Observation for [[jaccardPairs]]'s `maxGramDf` stop-gram ceiling:
     * emitted on the PREFIX-ROW frame before the ceiling filter, so the
@@ -597,19 +605,40 @@ object Dedup {
     * `hash_sorted_distinct(word_shingles(...))` with no string per
     * shingle), the minhash kernel consumes those longs directly (the values
     * ARE XXH64(token) — signatures bit-identical to hashing the strings,
-    * pinned in NativeSigSpec), and the same array is the verify payload. The
-    * hashed arrays ride the single groupBy(band, band_hash) exchange inside
-    * the bucket structs; pairs are expanded and merge-verified map-side, so
-    * pairs-with-arrays never enter an exchange (the q29 sf1 lesson). The
-    * prior shape — candidate pairs first, arrays joined back per pair —
-    * scaled with candidates × array bytes: on a 100-clique corpus at sf10
-    * (500k docs, ~25M candidate pairs) it spilled 2.6 GB and failed one
-    * run outright; bucket-resident arrays scale with docs × bands instead.
+    * pinned in NativeSigSpec), and the same array is the verify payload.
+    *
+    * Buckets are sized by a window, not an aggregation. Band rows (one per
+    * document per band, each carrying its gram array) go straight into ONE
+    * exchange hash-partitioned on the bucket key and are sorted by
+    * `(band_hash, band, id)` — `band_hash` first, so the sort prefix is the
+    * 64-bit hash and nearly every comparison ends there. One window over
+    * that order gives each row its bucket's size (`count` over the whole
+    * bucket) and its rank by id; the `graft_buckets_<n>` observation reads
+    * the size on every row and counts truncated buckets and their rows on
+    * each bucket's first row, so the stats stay exact. Rows outside
+    * `size ∈ [2, maxBucketSize]` are dropped before any member list exists;
+    * a second `collect_list` window over the same order (no new exchange or
+    * sort) builds the `(id, len, ss)` member list of each surviving bucket,
+    * kept on its first row, and pairs are expanded and merge-verified
+    * map-side, so pairs-with-arrays never enter an exchange (the q29 sf1
+    * lesson). No aggregate sizes the buckets: their keys are nearly
+    * unique, so a map-side partial collect passes the 128-key object-hash
+    * limit in every task and sorts every band row, then the reducer sorts
+    * them again, for a ~6% row cut.
+    *
+    * Memory: an over-cap black-hole bucket is held in `WindowExec`'s
+    * spillable row buffer while its size is counted (it was a capped
+    * object buffer); member lists stay ≤ `maxBucketSize` by construction.
+    * The list window writes a bucket's list into each of its rows before
+    * all but the first are filtered, so a bucket of k members copies k
+    * lists — the same k² order as verifying its k²/2 pairs.
+    *
     * A pair sharing k bands is re-verified k times (≤ bands, with the
     * early-exit kernel) — CPU traded for never shuffling per-pair arrays.
-    * (The old optional `estimateMargin` signature pre-filter existed to
-    * thin exactly those per-pair joins; it has nothing left to save and is
-    * gone.)
+    * The earlier shape, candidate pairs first and arrays joined back per
+    * pair, scaled with candidates × array bytes: on a 100-clique corpus at
+    * sf10 (500k docs, ~25M candidate pairs) it spilled 2.6 GB and failed
+    * one run outright; bucket-resident arrays scale with docs × bands.
     */
   def nearDuplicatePairs(
       df: DataFrame,
@@ -640,17 +669,15 @@ object Dedup {
       .select(col("id"), col("len"), col("ss"),
         explode(when(col("len") > 0, lshBandHashes(col("sig"), bands, rowsPerBand))).as("bb"))
       .select(col("bb.band"), col("bb.band_hash"), col("id"), col("len"), col("ss"))
-    // bounded collect: over-cap buckets never materialize more than
-    // maxBucketSize (gram-array-carrying) members — see bucketCandidatePairs
-    observeBucketStats(
-      banded
-        .groupBy(col("band"), col("band_hash"))
-        .agg(graft.ops.expr.NativeSig.boundedCollectList(
-          struct(col("id"), col("len"), col("ss")), maxBucketSize).as("__bl"))
-        .select(col("band"), col("band_hash"),
-          col("__bl.items").as("ms"), col("__bl.cnt").as("__bsz")),
-      maxBucketSize)
+    val bucket = Window.partitionBy(col("band_hash"), col("band")).orderBy(col("id"))
+    val wholeBucket = bucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val sized = banded.select(col("*"),
+      count(lit(1)).over(wholeBucket).as("__bsz"), row_number().over(bucket).as("__rn"))
+    observeBucketStats(sized, maxBucketSize, first = col("__rn") === 1)
       .filter(col("__bsz").between(2, maxBucketSize))
+      .select(col("__rn"),
+        collect_list(struct(col("id"), col("len"), col("ss"))).over(wholeBucket).as("ms"))
+      .filter(col("__rn") === 1)
       // fused generator (3-field variant: no prefix rank, so length filter
       // + merge kernel only) — survivor-only allocation, same adjudication
       // as jaccardPairs' expansion

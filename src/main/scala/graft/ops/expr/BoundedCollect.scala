@@ -30,8 +30,13 @@ import org.apache.spark.sql.types._
   * size `cap` so that bound fits comfortably in one task's heap share.
   *
   * It is a [[TypedImperativeAggregate]] like `collect_list` itself, so it
-  * supports partial aggregation and plans through `ObjectHashAggregate` —
-  * the bucket exchange shape (one groupBy shuffle) is unchanged.
+  * supports partial aggregation and is planned as `ObjectHashAggregate`.
+  * That plan says nothing of how it runs: a task that sees more than
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (128) keys
+  * falls back to sorting its rows (`numTasksFallBacked` in the final plan's
+  * metrics), which near-unique bucket keys do in every task.
+  * [[graft.ops.Dedup.nearDuplicatePairs]] therefore sizes its buckets with
+  * a window count and no longer uses this aggregate.
   */
 case class BoundedCollectList(
     child: Expression,

@@ -3,7 +3,7 @@ package graft.ops.expr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -40,6 +40,12 @@ object SigKernels {
     y + ((y >> 63) & MinHashPrime)
   }
 
+  /** The first `n` values of `hs` as an array value, copied once and
+    * unboxed (a `GenericArrayData` boxes every long).
+    */
+  private def longArray(hs: Array[Long], n: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(hs, Platform.LONG_ARRAY_OFFSET, n, 8)
+
   /** One-pass MinHash: k minima of affine permutations of the token hashes.
     * ~k·n multiply-adds per row in a JIT-friendly loop; the HOF equivalent
     * (k array_min∘transform passes) allocates k intermediate arrays.
@@ -62,7 +68,7 @@ object SigKernels {
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    longArray(mins, k)
   }
 
   /** [[minhash]] over PRE-HASHED grams (`array<bigint>` from
@@ -94,7 +100,7 @@ object SigKernels {
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    longArray(mins, k)
   }
 
   /** Packed sign-bit LSH signature: bit `p` set when `vec · plane_p > 0`.
@@ -343,7 +349,7 @@ object SigKernels {
       if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
       i += 1
     }
-    new GenericArrayData(if (w == n) hs else java.util.Arrays.copyOf(hs, w))
+    longArray(hs, w)
   }
 
   /** `hashSortedDistinct(wordShingles(text, n))` without a `String`: the
@@ -362,7 +368,7 @@ object SigKernels {
     val off = text.getBaseOffset
     val tk = new ByteTokens(base, off, text.numBytes)
     val k = tk.count
-    if (k == 0) return new GenericArrayData(new Array[Long](0))
+    if (k == 0) return longArray(Array.emptyLongArray, 0)
     val w = math.min(n, k)
     // badGaps(j): separators among the first j gaps that are not one ' '
     val badGaps = new Array[Int](k)
@@ -403,7 +409,7 @@ object SigKernels {
       if (d == 0 || hs(st) != hs(d - 1)) { hs(d) = hs(st); d += 1 }
       st += 1
     }
-    new GenericArrayData(if (d == hs.length) hs else java.util.Arrays.copyOf(hs, d))
+    longArray(hs, d)
   }
 
   /** The five measures of [[graft.ops.Corpus.withQualitySignals]] from one
@@ -426,6 +432,10 @@ object SigKernels {
     * is not valid UTF-8 is decoded and re-encoded once first: the `String`
     * path of `split` and `regexp_extract_all` sees every invalid sequence as
     * U+FFFD, and so does the scan of the re-encoded bytes.
+    *
+    * A sixth field, `keep`, is [[graft.ops.Corpus.gopherKeep]] of the first
+    * three at its default thresholds, so a filter on it reads one field of
+    * one kernel call.
     */
   def qualitySignals(text: UTF8String, n: Int): InternalRow = {
     val t = if (text.isValid) text else UTF8String.fromString(text.toString)
@@ -476,23 +486,35 @@ object SigKernels {
     }
     lines.id(lineStart, len - lineStart)
     val numLines = tk.newlines + 1
+    val meanLen = if (k == 0) 0.0 else tk.chars.toDouble / k
     new GenericInternalRow(Array[Any](
       k,
       topNgram,
-      if (k == 0) 0.0 else tk.chars.toDouble / k,
+      meanLen,
       (numLines - lines.size).toDouble / numLines,
-      if (k == 0) 0.0 else symbols.toDouble / k))
+      if (k == 0) 0.0 else symbols.toDouble / k,
+      k >= GopherMinTokens && k <= GopherMaxTokens && topNgram < GopherMaxRepetition &&
+        meanLen >= GopherMinMeanWordLen && meanLen <= GopherMaxMeanWordLen))
   }
+
+  /** [[graft.ops.Corpus.gopherKeep]]'s default thresholds, which the `keep`
+    * field of [[qualitySignals]] applies.
+    */
+  val GopherMinTokens = 20
+  val GopherMaxTokens = 1000000
+  val GopherMaxRepetition = 0.05
+  val GopherMinMeanWordLen = 3.0
+  val GopherMaxMeanWordLen = 10.0
 
   /** What the HOF formulations give for a null text: every measure null,
     * or under `legacySizeOfNull` (`size(null)` = −1) the values that −1
     * sizes produce — token_count −1, dup_line_frac 0/−1 = −0.0,
-    * symbol_ratio −1/−1 = 1.0.
+    * symbol_ratio −1/−1 = 1.0, and `keep` false (−1 tokens is out of range).
     */
   def nullTextQuality(legacySizeOfNull: Boolean): InternalRow =
     new GenericInternalRow(
-      if (legacySizeOfNull) Array[Any](-1, null, null, -0.0, 1.0)
-      else new Array[Any](5))
+      if (legacySizeOfNull) Array[Any](-1, null, null, -0.0, 1.0, false)
+      else new Array[Any](6))
 
   /** Index of the nearest centroid by squared L2, centroids flattened
     * row-major (`k × dim`); ties keep the smaller index (matching the HOF
@@ -1012,7 +1034,9 @@ case class QualitySignals(
     // the HOF ratios are Divide results, which Spark declares nullable
     StructField("mean_word_len", DoubleType, nullable = true),
     StructField("dup_line_frac", DoubleType, nullable = true),
-    StructField("symbol_ratio", DoubleType, nullable = true)))
+    StructField("symbol_ratio", DoubleType, nullable = true),
+    // gopherKeep over mean_word_len, which is nullable
+    StructField("keep", BooleanType, nullable = true)))
   override def nullable: Boolean = false
   override def prettyName: String = "quality_signals"
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
@@ -25,7 +25,8 @@ import graft.dftly.SparkTestBase
   *     estimate it would ship the whole bucket table to every task);
   *   - the decontamination gram probe stays a broadcast LeftSemi;
   *   - top-k still lowers to TakeOrderedAndProject, never a global sort;
-  *   - the bounded bucket collect stays on the ObjectHashAggregate path;
+  *   - `nearDuplicatePairs` puts no aggregate below its band exchange, and
+  *     no object-hash aggregate falls back to sorting at run time;
   *   - corpus text still never rides a shuffle.
   */
 class AqePlanShapeSpec extends SparkTestBase {
@@ -144,12 +145,29 @@ class AqePlanShapeSpec extends SparkTestBase {
       "brute-force top-k must stay exchange-free under AQE")
   }
 
-  test("AQE: bounded bucket collect stays on ObjectHashAggregate (no sort-based fallback)") {
-    val docs = (1L to 40L).map(i => (i, s"alpha beta gamma ${i % 3} delta epsilon zeta eta"))
+  test("AQE: nearDuplicatePairs: no aggregate below the band exchange, no fallback") {
+    // 200 distinct texts, each twice: nearly every (band, band_hash) key is
+    // unique, the regime where a map-side partial collect passes the
+    // 128-key object-hash limit and sorts every band row; a plan check
+    // alone cannot see that fallback, so read the executed metric too
+    val docs = (1L to 400L)
+      .map(i => (i, s"alpha beta gamma ${i % 200} delta epsilon ${i % 200 * 7} zeta"))
       .toDF("doc_id", "text")
     val nodes = aqeFinal(Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.5))
-    assert(nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]))
-    assert(!nodes.exists(_.isInstanceOf[SortAggregateExec]))
+    val band = nodes.collect {
+      case s: ShuffleExchangeLike if s.output.exists(_.name == "band_hash") => s
+    }
+    assert(band.nonEmpty, s"no band exchange in:\n${nodes.head}")
+    for (s <- band) {
+      assert(s.child.find(_.isInstanceOf[BaseAggregateExec]).isEmpty,
+        s"an aggregate sits below the band exchange:\n${s.child}")
+      val perTask = s.metrics("shuffleRecordsWritten").value / s.numMappers
+      assert(perTask > 128, s"$perTask band rows per map task: the input must pass 128 keys")
+    }
+    val fellBack = nodes.collect {
+      case o: ObjectHashAggregateExec if o.metrics("numTasksFallBacked").value > 0 => o
+    }
+    assert(fellBack.isEmpty, s"object-hash aggregation fell back to sorting:\n$fellBack")
   }
 
   test("AQE: jaccardPairs — no exchange carries a pair with both gram arrays") {

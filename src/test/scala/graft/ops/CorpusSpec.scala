@@ -280,4 +280,18 @@ class CorpusSpec extends SparkTestBase {
     }.flatten
     assert(kernels.size == 1, plan.toString)
   }
+
+  test("a filter on keep reads one kernel field: at most two quality kernels, same rows") {
+    val docs = TextEdgeCases.withDocuments(spark)
+    val kept = Corpus.withQualitySignals(docs, "text").filter(col("keep"))
+    val plan = kept.queryExecution.optimizedPlan
+    val kernels = plan.collect { case node =>
+      node.expressions.flatMap(_.collect { case k: graft.ops.expr.QualitySignals => k })
+    }.flatten
+    // Catalyst pushes the predicate below the projection and substitutes
+    // `keep`'s definition: one kernel in the Filter, one in the Project
+    assert(kernels.size <= 2, plan.toString)
+    val want = qualityReference(docs, "text").filter(col("keep"))
+    assert(kept.count() > 0 && cells(kept).toSet == cells(want).toSet)
+  }
 }

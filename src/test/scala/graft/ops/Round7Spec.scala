@@ -6,7 +6,7 @@ import graft.dftly.SparkTestBase
 
 /** Round-7 regressions: exact-dedup drop-path edge cases (all-null id
   * groups, dotted column names) and the ObjectHashAggregate plan pin for
-  * the bounded bucket aggregation.
+  * `jaccardPairs`' bounded bucket aggregation.
   */
 class Round7Spec extends SparkTestBase {
 
@@ -237,23 +237,21 @@ class Round7Spec extends SparkTestBase {
     // the r6 memory-bound claim ("bucket exchange shape unchanged, buffers
     // O(cap)") presumes the TypedImperativeAggregate stays on the hash
     // aggregation path; a silent SortAggregate fallback would add a
-    // corpus-wide sort below every bucket exchange
+    // corpus-wide sort below every bucket exchange. This pins the planned
+    // node only; nearDuplicatePairs, which sizes buckets with a window, has
+    // its runtime pin in AqePlanShapeSpec.
     import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
     val docs = (1L to 40L).map(i => (i, s"alpha beta gamma ${i % 3} delta epsilon zeta eta"))
       .toDF("doc_id", "text")
-    val plans = Seq(
-      Dedup.nearDuplicatePairs(docs, "doc_id", "text", threshold = 0.5),
-      Dedup.jaccardPairs(docs, "doc_id", "text", 0.5))
-    for (q <- plans) {
-      val before = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val p = q.queryExecution.executedPlan
-        val objHash = p.collect { case o: ObjectHashAggregateExec => o }
-        val sortAgg = p.collect { case s: SortAggregateExec => s }
-        assert(objHash.nonEmpty, s"expected ObjectHashAggregate for the bucket collect:\n$p")
-        assert(sortAgg.isEmpty, s"bucket collect fell back to sort-based aggregation:\n$p")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", before)
-    }
+    val q = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
+    val before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val p = q.queryExecution.executedPlan
+      val objHash = p.collect { case o: ObjectHashAggregateExec => o }
+      val sortAgg = p.collect { case s: SortAggregateExec => s }
+      assert(objHash.nonEmpty, s"expected ObjectHashAggregate for the bucket collect:\n$p")
+      assert(sortAgg.isEmpty, s"bucket collect fell back to sort-based aggregation:\n$p")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }
 }
