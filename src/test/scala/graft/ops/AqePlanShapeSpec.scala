@@ -145,7 +145,7 @@ class AqePlanShapeSpec extends SparkTestBase {
       "brute-force top-k must stay exchange-free under AQE")
   }
 
-  test("AQE: nearDuplicatePairs: no aggregate below the band exchange, no fallback") {
+  test("AQE: nearDuplicatePairs: no aggregate below band exchange, no fallback") {
     // 200 distinct texts, each twice: nearly every (band, band_hash) key is
     // unique, the regime where a map-side partial collect passes the
     // 128-key object-hash limit and sorts every band row; a plan check
