@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
   * verification — the standard near-dup stack for web-scale corpus cleaning.
   *
   * Scale design (the point of this engine):
-  *   - exact dedup shuffles a 128-bit content digest, never the content,
-  *     with map-side partial aggregation.
+  *   - exact dedup groups on a 128-bit content digest: marking shuffles
+  *     only digests into its keeper, dropping shuffles whole rows.
   *   - MinHash signatures come from one native codegen'd kernel per row
   *     (no UDFs, no state). [[lshCandidatePairs]] shuffles only
   *     (id, band, band_hash) triples; [[nearDuplicatePairs]] ships each band
@@ -78,16 +78,12 @@ object Dedup {
     // included) on the digest: ONE corpus-wide shuffle, inherent to
     // attaching a per-row flag (any alternative shuffles the text by id
     // instead). Net: one corpus shuffle + a digest-only aggregate.
-    // to_json(struct(...)) gives an unambiguous, null-distinguishing
-    // serialization of multi-column keys; md5 collisions at 2^64 rows are
-    // ~1e-20 — far below any storage BER.
-    val contentKey = md5(to_binary(to_json(struct(keyCols.map(col): _*)), lit("utf-8")))
-    val withKey = df.withColumn("__content_key", contentKey)
+    val withKey = df.withColumn("__content_key", contentKey(df, keyCols))
     val keeper = withKey
       .groupBy(col("__content_key"))
-      .agg(min(col(idCol)).as("__keep_id"))
+      .agg(min(quoted(idCol)).as("__keep_id"))
     withKey.join(keeper, "__content_key")
-      .withColumn("is_dup", col(idCol) =!= col("__keep_id"))
+      .withColumn("is_dup", quoted(idCol) =!= col("__keep_id"))
       .drop("__keep_id", "__content_key")
   }
 
@@ -98,6 +94,8 @@ object Dedup {
     * keeps the whole winning row in ONE aggregation over the digest
     * (map-side partial min_by, a single exchange carrying one candidate
     * row per distinct content per map task, no second corpus shuffle).
+    * The `min_by` buffer is not fixed-width, so both aggregates plan as
+    * `SortAggregate`.
     *
     * A content group whose `idCol` is null on EVERY row has no min_by
     * winner (min_by skips null ordering values, yielding a null struct);
@@ -105,17 +103,31 @@ object Dedup {
     * is_dup)`, where `null =!= null` filters them out too.
     */
   def dropExactDuplicates(df: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame = {
-    // backtick-quoted so a dotted source column name resolves as one
-    // column, not a struct-field path (same for the __row re-projection)
-    def q(c: String): Column = col("`" + c.replace("`", "``") + "`")
-    val contentKey = md5(to_binary(to_json(struct(keyCols.map(q): _*)), lit("utf-8")))
     val cols = df.columns.toIndexedSeq
-    df.withColumn("__content_key", contentKey)
+    df.withColumn("__content_key", contentKey(df, keyCols))
       .groupBy(col("__content_key"))
-      .agg(min_by(struct(cols.map(q): _*), q(idCol)).as("__row"))
+      .agg(min_by(struct(cols.map(quoted): _*), quoted(idCol)).as("__row"))
       .filter(col("__row").isNotNull)
       .select(cols.map(c => col("__row").getField(c).as(c)): _*)
   }
+
+  // backtick-quoted: a dotted source column name is one column, not a path
+  private def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
+
+  /** md5 content digest: one string key hashes its UTF-8 bytes, other keys
+    * the unambiguous `to_json(struct(...))`. Collisions at 2^64 rows:
+    * ~1e-20. Never null — a null string key becomes "-" — so the mark's
+    * equi-join keeps null keys as one group, and Catalyst infers no
+    * `isnotnull` filter that would compute the digest a second time.
+    */
+  private def contentKey(df: DataFrame, keyCols: Seq[String]): Column = coalesce(keyCols match {
+    // the analyzed schema, not a probe `select`, which would add ~100
+    // analyzer rule runs to every pipeline build
+    case Seq(k) if df.schema.find(_.name == k).exists(_.dataType.isInstanceOf[StringType]) =>
+      md5(quoted(k).cast(BinaryType))
+    case _ =>
+      md5(to_binary(to_json(struct(keyCols.map(quoted): _*)), lit("utf-8")))
+  }, lit("-"))
 
   // ------------------------------------------------------------------
   // Substring-level dedup (repeated-span masking)
@@ -411,45 +423,19 @@ object Dedup {
       )
     }: _*)
 
-  /** Distinct candidate pairs from a (id, key...) bucket table.
-    *
-    * Shape, chosen for 100 TB survival:
-    *   1. ONE groupBy shuffle (map-side partial bounded collect) sizes every
-    *      bucket and applies the skew cap — boilerplate black-hole buckets
-    *      (quadratic pair blowup) are dropped before any pair exists;
-    *   2. surviving members re-explode linearly and self-join on the bucket
-    *      key — a codegen'd, spillable join that *streams* large buckets
-    *      instead of materializing B²/2-element arrays per bucket (measured
-    *      3× slower via in-bucket HOF pair expansion on collision-heavy
-    *      data), and the two sides reuse the same exchange.
-    * The partial collect leaves the sort to the exchange only while a task
-    * sees at most 128 bucket keys
-    * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`); past
-    * that it sorts its rows itself, and near-unique band keys pass it in
-    * every task. [[nearDuplicatePairs]] sizes its buckets with a window
-    * count instead; this id-only shape has not been measured that way.
+  /** Distinct candidate pairs from a (id, key...) bucket table: the
+    * [[cappedBuckets]] members re-explode and self-join on the bucket key —
+    * a spillable join that *streams* large buckets instead of materializing
+    * B²/2-element arrays (measured 3× slower via in-bucket HOF expansion),
+    * and the two sides reuse the same exchange.
     */
   private[ops] def bucketCandidatePairs(
       buckets: DataFrame,
       keyCols: Seq[String],
       maxBucketSize: Int
   ): DataFrame = {
-    val keys = keyCols.map(col)
-    // boundedCollectList: the aggregation buffer never holds more than
-    // maxBucketSize members, so an over-cap black-hole bucket costs the
-    // same memory as one at the cap (it used to be fully materialized
-    // before the size filter dropped it). `cnt` is still the TRUE size —
-    // the between() filter and truncation observation are exact. Input
-    // (id, key...) rows are distinct by construction (one row per id per
-    // band), so list-vs-set is equivalent here.
-    val members = observeBucketStats(
-      buckets
-        .groupBy(keys: _*)
-        .agg(graft.ops.expr.NativeSig.boundedCollectList(col("id"), maxBucketSize).as("__bl"))
-        .select(keys ++ Seq(col("__bl.items").as("ids"), col("__bl.cnt").as("__bsz")): _*),
-      maxBucketSize)
-      .filter(col("__bsz").between(2, maxBucketSize))
-      .select(keys :+ explode(col("ids")).as("id"): _*)
+    val members = cappedBuckets(buckets, keyCols, col("id"), maxBucketSize)
+      .select(keyCols.map(col) :+ explode(col("ms")).as("id"): _*)
     // hint("merge"): members are corpus-sized on both sides — a broadcast
     // picked off a lying size estimate (tiny compressed parquet under a
     // duplicate-heavy corpus) would ship the whole bucket table to every
@@ -460,6 +446,37 @@ object Dedup {
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
+  }
+
+  /** The skew-capped bucket step of the bucketed pair generators: one
+    * `groupBy(keys)` shuffle collects at most `maxBucketSize` `member`s per
+    * bucket (map-side partial), observes the sizes as `graft_buckets_<n>`,
+    * and returns `keys ++ ms` for buckets of 2..cap members, so black-hole
+    * buckets (quadratic pair blowup) drop before any pair exists. Callers
+    * expand pairs inside `ms`; pairs never shuffle with their payloads.
+    *
+    * The bounded buffer holds ≤ cap members (gram arrays or vectors, ~KB
+    * each) even for a bucket it drops, while its count stays the true size,
+    * so the filter and the stats are exact. Past 128 bucket keys per task
+    * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`) the
+    * partial collect sorts its rows. [[nearDuplicatePairs]] sizes buckets
+    * with a window instead, which copies a k-member list k times: fine for
+    * band buckets, not for IVF cells of thousands of vectors.
+    */
+  private[ops] def cappedBuckets(
+      rows: DataFrame,
+      keys: Seq[String],
+      member: Column,
+      maxBucketSize: Int
+  ): DataFrame = {
+    val ks = keys.map(col)
+    observeBucketStats(
+      rows.groupBy(ks: _*)
+        .agg(graft.ops.expr.NativeSig.boundedCollectList(member, maxBucketSize).as("__bl"))
+        .select(ks ++ Seq(col("__bl.items").as("ms"), col("__bl.cnt").as("__bsz")): _*),
+      maxBucketSize)
+      .filter(col("__bsz").between(2, maxBucketSize))
+      .select(ks :+ col("ms"): _*)
   }
 
   /** Every candidate generator runs under a skew cap, and a capped bucket is
@@ -477,7 +494,7 @@ object Dedup {
     */
   private val obsCounter = new java.util.concurrent.atomic.AtomicLong
 
-  private[ops] def observeBucketStats(
+  private def observeBucketStats(
       sized: DataFrame, maxBucketSize: Int, first: Column = lit(true)): DataFrame = {
     // `first` marks one row per bucket where `sized` has a row per member
     val truncated = first && col("__bsz") > maxBucketSize
@@ -669,6 +686,7 @@ object Dedup {
       .select(col("id"), col("len"), col("ss"),
         explode(when(col("len") > 0, lshBandHashes(col("sig"), bands, rowsPerBand))).as("bb"))
       .select(col("bb.band"), col("bb.band_hash"), col("id"), col("len"), col("ss"))
+    // not cappedBuckets: near-unique band keys would sort every band row
     val bucket = Window.partitionBy(col("band_hash"), col("band")).orderBy(col("id"))
     val wholeBucket = bucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val sized = banded.select(col("*"),
@@ -883,19 +901,10 @@ object Dedup {
             .bitwiseAND(lit(chunkMask(chunkBits))).as("chunk_val"))
       }: _*)).as("cc"))
       .select(col("id"), col("sig"), col("cc.chunk"), col("cc.chunk_val"))
-    // Skew-capped bucket membership in one groupBy; signatures (16 bytes)
-    // ride along so the hamming check is inline after the streaming
-    // self-join — no join-back stage (same shape as bucketCandidatePairs).
-    // Bounded collect: over-cap buckets never materialize past the cap.
-    val members = observeBucketStats(
-      chunks
-        .groupBy(col("chunk"), col("chunk_val"))
-        .agg(graft.ops.expr.NativeSig.boundedCollectList(
-          struct(col("id"), col("sig")), maxBucketSize).as("__bl"))
-        .select(col("chunk"), col("chunk_val"),
-          col("__bl.items").as("ms"), col("__bl.cnt").as("__bsz")),
-      maxBucketSize)
-      .filter(col("__bsz").between(2, maxBucketSize))
+    // signatures (16 bytes) ride in the buckets, so the hamming check is
+    // inline after the streaming self-join — no join-back stage
+    val members = cappedBuckets(chunks, Seq("chunk", "chunk_val"),
+      struct(col("id"), col("sig")), maxBucketSize)
       .select(col("chunk"), col("chunk_val"), explode(col("ms")).as("m"))
     members.as("a")
       .join(members.as("b"),
@@ -1056,6 +1065,7 @@ object Dedup {
     // (persist sits UNDER the observation: a CollectMetrics node absorbed
     // into the cached subtree never reaches the outer query's observed
     // metrics — the observation must live in the consuming plan)
+    // not cappedBuckets: a min(id) keeper, every group kept, under persist
     val members = observeBucketStats(
       sigs
         .groupBy(col("sig"))
@@ -1122,6 +1132,7 @@ object Dedup {
           .bitwiseAND(lit(chunkMask(chunkBits)))
           .bitwiseOR(lit(c.toLong << chunkBits))
       }: _*)).as("key"))
+    // not cappedBuckets: singletons and over-cap samples stay probe targets
     val anchors = observeBucketStats(
       chunks
         .groupBy(col("key"))
@@ -1181,8 +1192,8 @@ object Dedup {
   /** Near-dup REMOVAL: drops every row that appears as the higher id of a
     * verified near-duplicate pair (the "keep first, drop later copies"
     * policy — greedy, one pass; a doc surviving one pair can still be
-    * dropped by another, which is the standard corpus-cleaning behavior).
-    * One left-anti join against the pair table's id_b column.
+    * dropped by another, which is the standard corpus-cleaning behavior),
+    * through [[dropPairedIds]].
     */
   def dropNearDuplicates(
       df: DataFrame,
@@ -1193,10 +1204,16 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       maxBucketSize: Int = 1000
-  ): DataFrame = {
-    val drops = nearDuplicatePairs(df, idCol, textCol, threshold, shingleN,
-      numHashes, bands, maxBucketSize)
-      .select(col("id_b").as("__drop_id")).distinct()
+  ): DataFrame =
+    dropPairedIds(df, idCol, nearDuplicatePairs(df, idCol, textCol, threshold,
+      shingleN, numHashes, bands, maxBucketSize))
+
+  /** Keep-first removal: drops every `df` row whose `idCol` is some pair's
+    * `id_b`, by a left-anti join against the distinct `id_b`s (a k-clique
+    * has k² pairs but k ids).
+    */
+  private[graft] def dropPairedIds(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val drops = pairs.select(col("id_b").as("__drop_id")).distinct()
     df.join(drops, df(idCol) === col("__drop_id"), "left_anti")
   }
 
@@ -1218,9 +1235,6 @@ object Dedup {
       numHashes = h, bands = b, maxBucketSize = maxBucketSize)
   }
 
-  /** Brute-force all-pairs n-gram Jaccard (reference implementation for
-    * recall tests and small frames — O(n²), never for production scale).
-    */
   /** EXACT-threshold Jaccard self-join via prefix filtering (the
     * AllPairs/PPJoin family): if J(A,B) ≥ t, the rarest-first prefixes of
     * length `|X| − ⌈t·|X|⌉ + 1` (under one global shingle order) must share
@@ -1386,12 +1400,7 @@ object Dedup {
     // — never broadcastable at scale, whatever the estimates say
     val prefixArr = prefix.join(sorted.hint("merge"), "id")
     // the cap here drops EXACTNESS, not just candidates — all the more
-    // reason the truncation is observable (same CollectMetrics contract as
-    // the LSH paths; read with observedBucketStats). Bounded collect keeps
-    // the aggregation buffer ≤ maxBucketSize members even for a bucket it
-    // will drop — members here carry full gram arrays (~KB each), so an
-    // unbounded buffer on a boilerplate gram near the cap was a
-    // multi-hundred-MB single aggregation row.
+    // reason the truncation is observable (read with observedBucketStats).
     // Pair expansion + prune + verify FUSED in one generator
     // (BucketJaccardPairs): the former double-explode spelling wrote an
     // UnsafeRow carrying both members' full gram arrays per CANDIDATE —
@@ -1403,18 +1412,15 @@ object Dedup {
     // positional prune (documented above), and early-exit merge kernel —
     // and allocates only survivor triples, ~the true-pair count. Measured:
     // SF10 q29 408 → 82 s warm, spread 244-408 s → ±0.1 s.
-    observeBucketStats(
-      prefixArr
-        .groupBy(col("g"))
-        .agg(graft.ops.expr.NativeSig.boundedCollectList(
-          struct(col("id"), col("len"), col("rn"), col("ss")), maxBucketSize).as("__bl"))
-        .select(col("g"), col("__bl.items").as("ms"), col("__bl.cnt").as("__bsz")),
-      maxBucketSize)
-      .filter(col("__bsz").between(2, maxBucketSize))
+    cappedBuckets(prefixArr, Seq("g"),
+      struct(col("id"), col("len"), col("rn"), col("ss")), maxBucketSize)
       .select(graft.ops.expr.NativeSig.bucketJaccardPairs(col("ms"), threshold))
       .distinct()
   }
 
+  /** Brute-force all-pairs n-gram Jaccard (reference implementation for
+    * recall tests and small frames — O(n²), never for production scale).
+    */
   def bruteForceNearDuplicatePairs(
       df: DataFrame,
       idCol: String,

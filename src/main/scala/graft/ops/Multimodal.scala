@@ -822,6 +822,8 @@ object Multimodal {
     * the HIGHER id of a verified pair is dropped (keep first, drop later
     * copies — greedy, one pass). One broadcast anti-join against the
     * (small) pair table's id_b column; the media payloads never shuffle.
+    * Not [[Dedup.dropPairedIds]], whose corpus-sized text frames must not be
+    * forced to broadcast.
     */
   private def dropByPairs(media: Dataset[MediaRow], pairs: DataFrame): Dataset[MediaRow] = {
     import media.sparkSession.implicits._

@@ -274,22 +274,12 @@ object Similarity {
     // params) that was ~195M candidate pairs × two 256 B vectors = 68 GB
     // of verify-join spill. A pair sharing k tables is re-scored k times;
     // the final distinct dedups survivors (same trade as jaccardPairs /
-    // the IVF pairs path).
-    // bounded collect: an over-cap bucket never materializes more than
-    // maxBucketSize (vector-carrying) members in its aggregation buffer
-    // pair expansion + verify fused in a generator (survivor-only
-    // allocation — see BucketJaccardPairs for the adjudication that
-    // motivated the shape; the double-explode spelling materialized both
-    // vectors per candidate pair)
-    Dedup.observeBucketStats(
-      buckets
-        .groupBy(col("table"), col("sig"))
-        .agg(graft.ops.expr.NativeSig.boundedCollectList(
-          struct(col("id"), col("v")), maxBucketSize).as("__bl"))
-        .select(col("table"), col("sig"),
-          col("__bl.items").as("ms"), col("__bl.cnt").as("__bsz")),
-      maxBucketSize)
-      .filter(col("__bsz").between(2, maxBucketSize))
+    // the IVF pairs path). Pair expansion + verify are fused in a generator
+    // (survivor-only allocation — see BucketJaccardPairs for the
+    // adjudication that motivated the shape; the double-explode spelling
+    // materialized both vectors per candidate pair).
+    Dedup.cappedBuckets(buckets, Seq("table", "sig"),
+      struct(col("id"), col("v")), maxBucketSize)
       .select(graft.ops.expr.NativeSig.bucketCosinePairs(col("ms"), threshold))
       .distinct()
   }
@@ -536,32 +526,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF-bucketed cosine near-duplicate pairs — the LOW-threshold scale
-    * path. Sign-bit LSH's candidate cost is ∝ n^(1+ρ) with ρ ≈ 0.7 once
-    * the threshold angle widens (see [[lshParamsFor]]); cell buckets don't
-    * pay that: every vector is assigned to its `nProbe` nearest centroids
-    * (one fused codegen'd pass over a literal centroid table — no
-    * broadcast, no shuffle), pairs form inside cells only, and the exact
-    * cosine verifies inline in the bucket expansion — vectors ride the ONE
-    * groupBy(cell) exchange inside the bucket structs and pairs-with-
-    * vectors never enter an exchange (same shape as
-    * [[graft.ops.Dedup.jaccardPairs]]'s verify).
-    *
-    * Candidate volume is Σ over cells of |b|²/2 with |b| ≈ n·nProbe/cells
-    * on balanced cells — ~n²·nProbe²/(2·cells) total, so size `cells` ∝ n
-    * to hold per-cell population constant (the [[trainCentroids]] sample
-    * cost is k·dim doubles on the driver either way).
-    *
-    * RECALL: a pair is found iff its vectors share ≥ 1 probed cell.
-    * Identical vectors share ALL probes (the kernel's tie-break is
-    * deterministic) — the recall-floor guarantee the props oracle pins
-    * (with the skew cap lifted); near-boundary pairs rely on nProbe ≥ 2
-    * overlapping adjacent cells. Measure with `tools/RecallBench`-style
-    * sweeps before trusting a (cells, nProbe) setting at a new scale.
-    *
-    * @param maxBucketSize skew cap per (cell, probe-rank) bucket; dropped
-    *   buckets are observable via [[graft.ops.Dedup.observedBucketStats]].
-    */
   /** [[cosineNearDuplicatePairsIvf]] with int8-quantized bucket payloads —
     * the memory-lean variant for wide embeddings or deep probe settings.
     *
@@ -603,15 +567,8 @@ object Similarity {
         explode(probes).as("cell"))
     // fused generator over int8 payloads, filtering at threshold − margin
     // (the exact re-score below restores precision; see class scaladoc)
-    val cand = graft.ops.Dedup.observeBucketStats(
-      assigned
-        .groupBy(col("cell"))
-        .agg(graft.ops.expr.NativeSig.boundedCollectList(
-          struct(col("id"), col("qv")), maxBucketSize).as("__bl"))
-        .select(col("cell"),
-          col("__bl.items").as("ms"), col("__bl.cnt").as("__bsz")),
-      maxBucketSize)
-      .filter(col("__bsz").between(2, maxBucketSize))
+    val cand = Dedup.cappedBuckets(assigned, Seq("cell"),
+      struct(col("id"), col("qv")), maxBucketSize)
       .select(NativeSig.bucketCosinePairs(col("ms"), threshold - margin))
       .select(col("id_a"), col("id_b"))
       .distinct()
@@ -623,6 +580,32 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
+  /** IVF-bucketed cosine near-duplicate pairs — the LOW-threshold scale
+    * path. Sign-bit LSH's candidate cost is ∝ n^(1+ρ) with ρ ≈ 0.7 once
+    * the threshold angle widens (see [[lshParamsFor]]); cell buckets don't
+    * pay that: every vector is assigned to its `nProbe` nearest centroids
+    * (one fused codegen'd pass over a literal centroid table — no
+    * broadcast, no shuffle), pairs form inside cells only, and the exact
+    * cosine verifies inline in the bucket expansion — vectors ride the ONE
+    * groupBy(cell) exchange inside the bucket structs and pairs-with-
+    * vectors never enter an exchange (same shape as
+    * [[graft.ops.Dedup.jaccardPairs]]'s verify).
+    *
+    * Candidate volume is Σ over cells of |b|²/2 with |b| ≈ n·nProbe/cells
+    * on balanced cells — ~n²·nProbe²/(2·cells) total, so size `cells` ∝ n
+    * to hold per-cell population constant (the [[trainCentroids]] sample
+    * cost is k·dim doubles on the driver either way).
+    *
+    * RECALL: a pair is found iff its vectors share ≥ 1 probed cell.
+    * Identical vectors share ALL probes (the kernel's tie-break is
+    * deterministic) — the recall-floor guarantee the props oracle pins
+    * (with the skew cap lifted); near-boundary pairs rely on nProbe ≥ 2
+    * overlapping adjacent cells. Measure with `tools/RecallBench`-style
+    * sweeps before trusting a (cells, nProbe) setting at a new scale.
+    *
+    * @param maxBucketSize skew cap per cell; dropped buckets are
+    *   observable via [[graft.ops.Dedup.observedBucketStats]].
+    */
   def cosineNearDuplicatePairsIvf(
       df: DataFrame,
       idCol: String,
@@ -636,18 +619,9 @@ object Similarity {
     val probes = graft.ops.expr.NativeSig.nearestCentroids(col(vecCol), centroids, nProbe)
     val assigned = graft.ops.Dedup.ensureParallelism(df)
       .select(col(idCol).as("id"), col(vecCol).as("v"), explode(probes).as("cell"))
-    // bounded collect: same over-cap memory bound as the sign-bit path
     // fused generator (see BucketJaccardPairs for the motivating
     // adjudication): survivor-only allocation in the cell expansion
-    graft.ops.Dedup.observeBucketStats(
-      assigned
-        .groupBy(col("cell"))
-        .agg(graft.ops.expr.NativeSig.boundedCollectList(
-          struct(col("id"), col("v")), maxBucketSize).as("__bl"))
-        .select(col("cell"),
-          col("__bl.items").as("ms"), col("__bl.cnt").as("__bsz")),
-      maxBucketSize)
-      .filter(col("__bsz").between(2, maxBucketSize))
+    Dedup.cappedBuckets(assigned, Seq("cell"), struct(col("id"), col("v")), maxBucketSize)
       .select(graft.ops.expr.NativeSig.bucketCosinePairs(col("ms"), threshold))
       .distinct()
   }
@@ -692,7 +666,6 @@ object Similarity {
     // contract (cross-cell near-dups are the recall trade the paper makes)
     val pairs = cosineNearDuplicatePairsIvf(
       df, idCol, vecCol, threshold, cents, nProbe = 1, maxBucketSize = maxBucketSize)
-    val drops = pairs.select(col("id_b").as("__drop_id")).distinct()
-    df.join(drops, df(idCol) === col("__drop_id"), "left_anti")
+    Dedup.dropPairedIds(df, idCol, pairs)
   }
 }

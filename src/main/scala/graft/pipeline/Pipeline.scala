@@ -641,8 +641,7 @@ object Pipeline {
             else graft.ops.Similarity.cosineNearDuplicatePairsIvf(
               df, id, vec, thr, cents, nProbe)
         }
-        val drops = pairs.select(col("id_b").as("__drop_id")).distinct()
-        df.join(drops, df(id) === col("__drop_id"), "left_anti")
+        Dedup.dropPairedIds(df, id, pairs)
 
       case "asOfJoin" =>
         graft.ops.TemporalJoin.asOfJoin(

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dftly.SparkTestBase
@@ -87,33 +88,50 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("bucket truncation is observable: in-plan stats report the black hole") {
-    // 40 identical texts (the black hole, over the cap) + 3 copies of a
-    // second text (under the cap, so the query output is NON-empty — an
+    // 40 identical inputs (the black hole, over the cap) + 3 copies of a
+    // second input (under the cap, so the query output is NON-empty — an
     // all-empty output lets AQE's empty propagation discard the plan and
     // the observation with it, per the documented degenerate-empty caveat)
-    val df = ((1 to 40).map(i => (i.toLong, "same words every time here")) ++
-      (50 to 52).map(i => (i.toLong, "an entirely different sentence altogether")))
-      .toDF("id", "text")
-    val pairs = Dedup.lshCandidatePairs(df, "id", "text", maxBucketSize = 10)
-    // collect, not count: count() executes a derived agg plan, and the
-    // observation lands on the executing plan's QueryExecution
-    assert(pairs.collect().length == 3) // the under-cap trio's pairs survive
-    val stats = Dedup.observedBucketStats(pairs)
-    assert(stats.isDefined, "bucket observation must be present")
-    val (maxB, nTrunc, rowsTrunc) = stats.get
-    assert(maxB == 40L, s"max bucket should be the 40-doc black hole, got $maxB")
-    assert(nTrunc >= 1L && rowsTrunc >= 40L,
-      s"truncation must be reported: n=$nTrunc rows=$rowsTrunc")
-    // under-cap run: same observation, zero truncation
-    val uncapped = Dedup.lshCandidatePairs(df, "id", "text", maxBucketSize = 1000)
-    assert(uncapped.collect().length == 40 * 39 / 2 + 3)
-    assert(Dedup.observedBucketStats(uncapped)
-      .exists { case (m, n, r) => m == 40L && n == 0L && r == 0L },
-      "under-cap runs report zero truncation")
-    // simhash banding carries the same observation
-    val sh = Dedup.simhashNearDuplicatePairs(df, "id", "text", maxBucketSize = 10)
-    assert(sh.collect().length == 3)
-    assert(Dedup.observedBucketStats(sh).exists(_._2 >= 1L))
+    val ids = (1 to 40).map(_.toLong) ++ (50 to 52).map(_.toLong)
+    val texts = ids.map(i => (i, if (i <= 40) "same words every time here"
+      else "an entirely different sentence altogether")).toDF("id", "text")
+    // opposite vectors flip every sign bit, and each sits on its own
+    // centroid, so the two groups never share a bucket or a cell
+    val dim = 8
+    val hot = Array.tabulate(dim)(d => if (d % 2 == 0) 1.0f else 0.5f)
+    val vecs = ids.map(i => (i, if (i <= 40) hot else hot.map(-_))).toDF("id", "v")
+    val cents = Array(hot.map(_.toDouble), hot.map(-_.toDouble))
+    val generators: Seq[(String, Int => DataFrame)] = Seq(
+      "lshCandidatePairs" -> (cap => Dedup.lshCandidatePairs(texts, "id", "text", maxBucketSize = cap)),
+      "simhash banding" -> (cap => Dedup.simhashNearDuplicatePairs(texts, "id", "text", maxBucketSize = cap)),
+      "jaccardPairs" -> (cap => Dedup.jaccardPairs(texts, "id", "text", 0.8, maxBucketSize = cap)),
+      "cosine LSH" -> (cap => Similarity.cosineNearDuplicatePairs(vecs, "id", "v", 0.9, dim,
+        maxBucketSize = cap)),
+      "cosine IVF" -> (cap => Similarity.cosineNearDuplicatePairsIvf(vecs, "id", "v", 0.9, cents,
+        nProbe = 1, maxBucketSize = cap)),
+      "cosine IVF int8" -> (cap => Similarity.cosineNearDuplicatePairsIvfQuantized(vecs, "id", "v",
+        0.9, cents, nProbe = 1, maxBucketSize = cap)))
+    def pairsOf(q: DataFrame): Seq[(Long, Long)] =
+      q.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSeq.sorted
+    val trio = Seq((50L, 51L), (50L, 52L), (51L, 52L))
+    for ((name, pairs) <- generators) {
+      // collect, not count: count() executes a derived agg plan, and the
+      // observation lands on the executing plan's QueryExecution
+      val capped = pairs(10)
+      assert(pairsOf(capped) == trio, s"$name: only the under-cap trio's pairs survive")
+      val stats = Dedup.observedBucketStats(capped)
+      assert(stats.isDefined, s"$name: bucket observation must be present")
+      val (maxB, nTrunc, rowsTrunc) = stats.get
+      assert(maxB == 40L, s"$name: max bucket should be the 40-row black hole, got $maxB")
+      assert(nTrunc >= 1L && rowsTrunc >= 40L,
+        s"$name: truncation must be reported: n=$nTrunc rows=$rowsTrunc")
+      // under-cap run: same observation, zero truncation
+      val uncapped = pairs(1000)
+      assert(pairsOf(uncapped).size == 40 * 39 / 2 + 3, name)
+      assert(Dedup.observedBucketStats(uncapped)
+        .exists { case (m, n, r) => m == 40L && n == 0L && r == 0L },
+        s"$name: under-cap runs report zero truncation")
+    }
   }
 
   // ------------------------------------------------------------------

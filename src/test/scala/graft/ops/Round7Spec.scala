@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.dftly.SparkTestBase
 
-/** Round-7 regressions: exact-dedup drop-path edge cases (all-null id
-  * groups, dotted column names) and the ObjectHashAggregate plan pin for
-  * `jaccardPairs`' bounded bucket aggregation.
+/** Round-7 regressions: exact-dedup edge cases (all-null id groups,
+  * dotted column names, content-key collisions) and the
+  * ObjectHashAggregate plan pin for `jaccardPairs`' bounded bucket
+  * aggregation.
   */
 class Round7Spec extends SparkTestBase {
 
@@ -43,6 +44,22 @@ class Round7Spec extends SparkTestBase {
     assert(got.columns.toSeq == Seq("id", "a.b", "payload"))
     assert(got.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet ==
       Set((1L, "x", "p"), (3L, "y", "r")))
+    // content keys, marked and dropped under a plain and a dotted name: a
+    // null key is its own group (the mark equi-joins on the key, so it is
+    // never null), apart from ""; a text spelling another key's JSON
+    // serialization stays apart from it
+    val rows = Seq[(Long, String)](
+      (1L, null), (2L, null), (3L, ""), (4L, ""), (5L, """{"text":"x"}"""),
+      (6L, "x"), (7L, """{"text":"x"}"""), (8L, "x"), (9L, "\"x\""))
+    val firsts = Set(1L, 3L, 5L, 6L, 9L)
+    for (key <- Seq("text", "a.b")) {
+      val keyed = rows.toDF("id", key)
+      assert(Dedup.markExactDuplicates(keyed, "id", Seq(key)).filter(!col("is_dup"))
+        .select("id").as[Long].collect().toSet == firsts, key)
+      assert(Dedup.dropExactDuplicates(keyed, "id", Seq(key)).collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)))).toSet ==
+        rows.filter(r => firsts(r._1)).map(r => (r._1, Option(r._2))).toSet, key)
+    }
   }
 
   // ------------------------------------------------------------------
