@@ -69,7 +69,8 @@ object Dedup {
     * smaller `idCol`. One hash-partitioned shuffle on the content columns;
     * `min(id)` aggregates map-side before shuffling. `idCol` must be unique
     * per row — with duplicate ids, every row tied at the group minimum is
-    * kept.
+    * kept. `idCol` and `keyCols` name top-level columns: a dotted name is
+    * one column, not a struct-field path.
     */
   def markExactDuplicates(df: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame = {
     // The keeper AGGREGATION groups on a 128-bit content digest, not the
@@ -78,7 +79,7 @@ object Dedup {
     // included) on the digest: ONE corpus-wide shuffle, inherent to
     // attaching a per-row flag (any alternative shuffles the text by id
     // instead). Net: one corpus shuffle + a digest-only aggregate.
-    val withKey = df.withColumn("__content_key", contentKey(df, keyCols))
+    val withKey = df.withColumn("__content_key", contentKey(keyCols))
     val keeper = withKey
       .groupBy(col("__content_key"))
       .agg(min(quoted(idCol)).as("__keep_id"))
@@ -104,7 +105,7 @@ object Dedup {
     */
   def dropExactDuplicates(df: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame = {
     val cols = df.columns.toIndexedSeq
-    df.withColumn("__content_key", contentKey(df, keyCols))
+    df.withColumn("__content_key", contentKey(keyCols))
       .groupBy(col("__content_key"))
       .agg(min_by(struct(cols.map(quoted): _*), quoted(idCol)).as("__row"))
       .filter(col("__row").isNotNull)
@@ -114,20 +115,15 @@ object Dedup {
   // backtick-quoted: a dotted source column name is one column, not a path
   private def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
 
-  /** md5 content digest: one string key hashes its UTF-8 bytes, other keys
-    * the unambiguous `to_json(struct(...))`. Collisions at 2^64 rows:
-    * ~1e-20. Never null — a null string key becomes "-" — so the mark's
-    * equi-join keeps null keys as one group, and Catalyst infers no
-    * `isnotnull` filter that would compute the digest a second time.
+  /** md5 of `to_json(struct(keys))`, an unambiguous, null-distinguishing
+    * serialization (a null key serializes as `{}`, apart from `""`).
+    * Collisions at 2^64 rows: ~1e-20. The digest is typed nullable, so it
+    * is coalesced to "-" (never an md5 hex): Catalyst then infers no
+    * `isnotnull` filter on the mark's equi-join, which would compute the
+    * digest a second time per row.
     */
-  private def contentKey(df: DataFrame, keyCols: Seq[String]): Column = coalesce(keyCols match {
-    // the analyzed schema, not a probe `select`, which would add ~100
-    // analyzer rule runs to every pipeline build
-    case Seq(k) if df.schema.find(_.name == k).exists(_.dataType.isInstanceOf[StringType]) =>
-      md5(quoted(k).cast(BinaryType))
-    case _ =>
-      md5(to_binary(to_json(struct(keyCols.map(quoted): _*)), lit("utf-8")))
-  }, lit("-"))
+  private def contentKey(keyCols: Seq[String]): Column =
+    coalesce(md5(to_binary(to_json(struct(keyCols.map(quoted): _*)), lit("utf-8"))), lit("-"))
 
   // ------------------------------------------------------------------
   // Substring-level dedup (repeated-span masking)
@@ -453,7 +449,9 @@ object Dedup {
     * bucket (map-side partial), observes the sizes as `graft_buckets_<n>`,
     * and returns `keys ++ ms` for buckets of 2..cap members, so black-hole
     * buckets (quadratic pair blowup) drop before any pair exists. Callers
-    * expand pairs inside `ms`; pairs never shuffle with their payloads.
+    * either verify pairs inside `ms` or explode it and self-join on the
+    * keys. `ms` is a list, not a set: every caller's input has one row per
+    * member per bucket by construction, so list and set are equivalent.
     *
     * The bounded buffer holds ≤ cap members (gram arrays or vectors, ~KB
     * each) even for a bucket it drops, while its count stays the true size,
@@ -494,7 +492,7 @@ object Dedup {
     */
   private val obsCounter = new java.util.concurrent.atomic.AtomicLong
 
-  private def observeBucketStats(
+  private[ops] def observeBucketStats(
       sized: DataFrame, maxBucketSize: Int, first: Column = lit(true)): DataFrame = {
     // `first` marks one row per bucket where `sized` has a row per member
     val truncated = first && col("__bsz") > maxBucketSize

@@ -822,8 +822,9 @@ object Multimodal {
     * the HIGHER id of a verified pair is dropped (keep first, drop later
     * copies — greedy, one pass). One broadcast anti-join against the
     * (small) pair table's id_b column; the media payloads never shuffle.
-    * Not [[Dedup.dropPairedIds]], whose corpus-sized text frames must not be
-    * forced to broadcast.
+    * Not [[Dedup.dropPairedIds]]: media pair tables are small, so their id
+    * set is forced to broadcast; a text corpus's drop set (~10% of ids) is
+    * left to AQE.
     */
   private def dropByPairs(media: Dataset[MediaRow], pairs: DataFrame): Dataset[MediaRow] = {
     import media.sparkSession.implicits._

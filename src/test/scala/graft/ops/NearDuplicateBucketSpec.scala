@@ -7,8 +7,8 @@ import graft.dftly.SparkTestBase
 import graft.ops.expr.NativeSig
 
 /** `Dedup.nearDuplicatePairs` sizes its band buckets with a window count;
-  * the aggregation it replaced (`Dedup.cappedBuckets`: `groupBy` + bounded
-  * collect + bucket observation) is the oracle for its pairs and stats.
+  * the aggregation it replaced (`groupBy` + bounded collect + bucket
+  * observation) is spelled out here as the oracle for its pairs and stats.
   */
 class NearDuplicateBucketSpec extends SparkTestBase {
 
@@ -25,8 +25,12 @@ class NearDuplicateBucketSpec extends SparkTestBase {
       .select(col("id"), col("len"), col("ss"),
         explode(when(col("len") > 0, Dedup.lshBandHashes(col("sig"), 16, 4))).as("bb"))
       .select(col("bb.band"), col("bb.band_hash"), col("id"), col("len"), col("ss"))
-    Dedup.cappedBuckets(banded, Seq("band", "band_hash"),
-      struct(col("id"), col("len"), col("ss")), cap)
+    Dedup.observeBucketStats(
+      banded.groupBy(col("band"), col("band_hash"))
+        .agg(NativeSig.boundedCollectList(struct(col("id"), col("len"), col("ss")), cap).as("bl"))
+        .select(col("bl.items").as("ms"), col("bl.cnt").as("__bsz")),
+      cap)
+      .filter(col("__bsz").between(2, cap))
       .select(NativeSig.bucketJaccardPairs(col("ms"), threshold))
       .distinct()
   }
