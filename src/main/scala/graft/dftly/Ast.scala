@@ -65,8 +65,10 @@ final case class Col(name: String) extends Node {
 // ---------------------------------------------------------------------------
 
 /** Deterministic 64-bit hash; null-in → null-out (reference: arithmetic.py:27-104).
-  * Spark lowering uses xxhash64, so hash *bits* differ from Polars — determinism,
-  * null-propagation and signedness contracts are preserved (SURVEY.md §2.8.1).
+  * Lowers to the [[XxHash64OrNull]] kernel, which evaluates the argument once
+  * and gives `xxhash64`'s bits, so hash *bits* differ from Polars —
+  * determinism, null-propagation and signedness contracts are preserved
+  * (SURVEY.md §2.8.1).
   */
 final case class Hash(arg: Node) extends Node { def children = Seq(arg) }
 
@@ -188,9 +190,12 @@ final case class Split(source: Node, by: Node) extends Node { def children = Seq
 // ---------------------------------------------------------------------------
 
 /** Cast `source` to the type named by `typeName` (must const-evaluate to a string
-  * in [[Types.TYPES]]); `strict=false` → try_cast semantics. Implicit units
-  * (`seconds`…`years`, `year`) construct durations/dates instead of converting
-  * dtypes and reject strict=false (reference: types.py:79-323).
+  * in [[Types.TYPES]]); `strict=false` → try_cast semantics. A non-strict cast
+  * of a string to `float32`/`float64` runs the [[TryParseFloating]] kernel:
+  * `try_cast`'s results, without a `NumberFormatException` per unparseable
+  * row. Implicit units (`seconds`…`years`, `year`) construct durations/dates
+  * instead of converting dtypes and reject strict=false (reference:
+  * types.py:79-323).
   */
 final case class Cast(source: Node, typeName: Node, strict: Option[Node]) extends Node {
   def children: Seq[Node] = Seq(source, typeName) ++ strict

@@ -4,17 +4,19 @@ import java.time.{Instant, LocalDate, LocalDateTime, LocalTime}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Add => CAdd, Cast => CCast, Concat => CConcat, Divide => CDivide,
-  Expression, GetTimestamp, Literal, Subtract => CSubtract}
+  EvalMode, Expression, GetTimestamp, Literal, Subtract => CSubtract}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Lowers a [[Node]] tree to a single `org.apache.spark.sql.Column`.
   *
-  * Every node compiles to built-in Catalyst expressions — no UDFs anywhere — so
-  * whole-stage codegen, predicate pushdown and column pruning all apply
-  * unchanged (SURVEY.md §4). The right-hand "Spark mapping" column of
-  * SURVEY.md §2 is implemented here, with the null-safety rewrites the
+  * Every node compiles to Catalyst expressions — built-ins, or this package's
+  * codegen'd kernels `RegexExtractNull`, `XxHash64OrNull` and
+  * `TryParseFloating`; no UDFs anywhere — so whole-stage codegen, predicate
+  * pushdown and column pruning all apply unchanged (SURVEY.md §4). The
+  * right-hand "Spark mapping" column of SURVEY.md §2 is implemented here,
+  * with the null-safety rewrites the
   * reference encodes in its lowering (hash null-guard, regex-extract no-match
   * guard) reproduced exactly.
   *
@@ -23,7 +25,10 @@ import org.apache.spark.sql.types._
   *     `$code[4:]`) is one `substring(s, a + 1, max(b - a, 0))`; negative or
   *     computed bounds keep the clamped Python-slice form;
   *   - a non-strict datetime `strptime` is one `GetTimestamp` with
-  *     `failOnError` off, so each string is parsed once.
+  *     `failOnError` off, so each string is parsed once;
+  *   - `hash` is one `XxHash64OrNull`, which builds its argument once;
+  *   - a non-strict float cast of a string is one `TryParseFloating`, which
+  *     skips `valueOf` and its exception for a string that cannot parse.
   *
   * The type-directed decisions the reference leaves to Polars' runtime
   * dtypes — `+` over strings concatenates, a date ± duration stays a date,
@@ -43,12 +48,8 @@ object Compiler {
       case Col(n) => if (n.contains(".")) col(s"`$n`") else col(n)
 
       // --- arithmetic / logical -------------------------------------------
-      case Hash(a) =>
-        val c = lower(a)
-        when(c.isNull, lit(null).cast(LongType)).otherwise(xxhash64(c))
-      case SignedHash(a) =>
-        val c = lower(a)
-        when(c.isNull, lit(null).cast(LongType)).otherwise(xxhash64(c))
+      case Hash(a)       => hashOrNull(lower(a))
+      case SignedHash(a) => hashOrNull(lower(a))
       case Not(a)    => !lower(a)
       case Negate(a) => negate(lower(a))
       case And(args) => args.map(lower).reduce(_ && _)
@@ -220,7 +221,14 @@ object Compiler {
           make_date(src, lit(1), lit(1)) // ::year → date(x, 1, 1)
         } else {
           val dt = Types.DTYPES(name)
-          if (strict) src.cast(dt) else src.try_cast(dt)
+          if (strict) src.cast(dt)
+          else if (dt == DoubleType || dt == FloatType)
+            // a string source parses without a NumberFormatException per bad row
+            typeDirected("try_cast", Seq(src)) { case Seq(e) =>
+              if (e.dataType.isInstanceOf[StringType]) TryParseFloating(e, dt)
+              else CCast(e, dt, evalMode = EvalMode.TRY)
+            }
+          else src.try_cast(dt)
         }
 
       // --- datetime --------------------------------------------------------
@@ -283,6 +291,9 @@ object Compiler {
     /** A lowering chosen by the analyzed types of `cs` ([[TypeDirected]]). */
     private def typeDirected(op: String, cs: Seq[Column])(choose: Seq[Expression] => Expression): Column =
       ColumnBridge.column(TypeDirected.of(op, cs.map(ColumnBridge.convertedExpression))(choose))
+
+    private def hashOrNull(c: Column): Column =
+      ColumnBridge.column(XxHash64OrNull(ColumnBridge.convertedExpression(c)))
 
     private def isDuration(e: Expression): Boolean = e.dataType.isInstanceOf[DayTimeIntervalType]
 
