@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query wall times.
   *
@@ -26,8 +29,18 @@ package graft
   * -Xmx) and classpath verbatim.
   *
   * Knobs: SPARK_GRAFT_ONLY=q35_salted_join,… runs a subset in-process
-  * (the isolated-probe tool); SPARK_GRAFT_NOFORK=1 forces the legacy
-  * single-JVM sweep; SPARK_GRAFT_OUT overrides the output file.
+  * (the isolated-probe tool); SPARK_GRAFT_OUT overrides the output file.
+  *
+  * == What an in-process run prints on stderr ==
+  *
+  * Every run is measured under one [[QueryProfile]], so the cold and the
+  * timed runs all pay the same listener cost. After each query, the last
+  * timed run's profile prints as one `PROBE` line and its ten slowest
+  * stages. Wall − (task time / cores) ≈ the serial fraction: per-stage
+  * barriers, driver planning, task launch. A streaming query also prints
+  * one `BATCH` line per micro-batch with its `durationMs` breakdown (where
+  * the per-batch floor goes: walCommit vs addBatch vs state commit vs
+  * source discovery).
   */
 object Bench {
 
@@ -46,11 +59,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-    val nofork = sys.env.get("SPARK_GRAFT_NOFORK").contains("1")
     // a typo'd isolated probe must not emit an empty-but-legit-looking
     // artifact
     val names = SparkEntry.select(only)
-    if (only.isEmpty && !nofork) runForked(sfDir, names)
+    if (only.isEmpty) runForked(sfDir, names)
     else runInProcess(sfDir, names)
   }
 
@@ -101,7 +113,8 @@ object Bench {
           throw new RuntimeException(
             s"[bench] first child (rc=$rc) produced no artifact — aborting the " +
               s"forked sweep (launcher-only classpath? cp=$cp). Child output " +
-              s"tail:\n$tail\nUse SPARK_GRAFT_NOFORK=1 for an in-process sweep.")
+              s"tail:\n$tail\nLaunch with `sbt \"runMain graft.Bench\"` or " +
+              "`java -cp <full classpath> graft.Bench`.")
         }
         System.err.println(s"[bench] child $i (${bucket.mkString(",")}) rc=$rc — marking failed")
         (bucket.map(_ -> -1.0).toMap, bucket.map(_ -> 0.0).toMap, 0.0, bucket)
@@ -145,8 +158,11 @@ object Bench {
   // ----------------------------------------------------------------- child
 
   private def runInProcess(sfDir: String, names: Seq[String]): Unit = {
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local(GraftSession.cpus())
+    val profile = QueryProfile.attach(spark.sparkContext)
+    spark.streams.addListener(BatchLog)
     def once(name: String): Double = {
+      profile.reset()
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
@@ -165,17 +181,10 @@ object Bench {
     // stays the estimator — a delta smaller than its spread is noise. A
     // System.gc() between runs keeps one run's garbage off the next run's
     // clock.
-    val perQuery = names.map { n =>
-      SparkEntry.prepare.get(n).foreach { f =>
-        try f(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] prepare $n: $e") }
-      }
+    val perQuery = eachQuery(spark, sfDir, names, "bench") { n =>
       val c = once(n)
       val ts = Seq.fill(3) { System.gc(); once(n) }
-      try SparkEntry.releaseFixture(n, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] release $n: $e") }
+      if (ts.last >= 0) printProfile(n, ts.last, profile.snapshot())
       (n, c, ts)
     }
     val cold = perQuery.map { case (n, c, _) => n -> c }
@@ -200,6 +209,52 @@ object Bench {
     val coldTotal = cold.map(_._2).filter(_ >= 0).sum
     emit(names, results, spreads, coldTotal, failed, sfDir, forked = false)
     spark.stop()
+  }
+
+  /** Runs `body` on each query between its fixture's prepare and release.
+    * A failed prepare or release is logged under `tag` and does not stop
+    * the loop; a failed prepare leaves `body` to fail on the missing input.
+    */
+  private[graft] def eachQuery[A](spark: SparkSession, sfDir: String,
+      names: Seq[String], tag: String)(body: String => A): Seq[A] =
+    names.map { n =>
+      SparkEntry.prepare.get(n).foreach { f =>
+        try f(spark, sfDir)
+        catch { case e: Throwable => System.err.println(s"[$tag] prepare $n: $e") }
+      }
+      try body(n)
+      finally
+        try SparkEntry.releaseFixture(n, sfDir)
+        catch { case e: Throwable => System.err.println(s"[$tag] release $n: $e") }
+    }
+
+  private def printProfile(name: String, wall: Double, p: QueryProfile.Snapshot): Unit = {
+    System.err.println(f"PROBE $name%-28s wall=$wall%7.3f s jobs=${p.jobs}%3d " +
+      f"stages=${p.stages}%4d tasks=${p.tasks}%5d " +
+      f"taskTime=${p.runMs / 1e3}%8.2f s cpu=${p.cpuNs / 1e9}%8.2f s gc=${p.gcMs / 1e3}%6.2f s " +
+      f"deser=${p.deserMs / 1e3}%6.2f s resSer=${p.resultSerMs / 1e3}%5.2f s " +
+      f"parallel=${p.runMs / 1e3 / wall}%5.2f")
+    p.stageRows.toSeq.sortBy(-_._2.runMs).take(10).foreach { case (id, r) =>
+      System.err.println(f"  stage $id%4d tasks=${r.tasks}%4d taskTime=${r.runMs / 1e3}%7.2f s " +
+        f"gc=${r.gcMs / 1e3}%5.2f deser=${r.deserMs / 1e3}%5.2f  ${r.name}")
+    }
+  }
+
+  private object BatchLog extends StreamingQueryListener {
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val p = e.progress
+      val d = p.durationMs
+      System.err.println(s"BATCH ${p.batchId} rows=${p.numInputRows} " +
+        s"trigger=${d.get("triggerExecution")} addBatch=${d.get("addBatch")} " +
+        s"walCommit=${d.get("walCommit")} getBatch=${d.get("getBatch")} " +
+        s"latestOffset=${d.get("latestOffset")} " +
+        s"queryPlanning=${d.get("queryPlanning")} " +
+        s"commitOffsets=${d.get("commitOffsets")} " +
+        s"stateRows=${p.stateOperators.map(_.numRowsTotal).mkString("/")} " +
+        s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).mkString("/")}")
+    }
   }
 
   // ------------------------------------------------------------------ emit

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,33 +16,11 @@ import org.apache.spark.sql.functions._
   * `queries` is an optional comma-separated subset for iterating on one
   * hotspot. Env: SPARK_GRAFT_CPUS = cores, SPARK_GRAFT_SHUFFLE = shuffle
   * partition count — the knob a cluster run would raise for sort volume.)
+  *
+  * Shuffle, spill and peak memory come from a [[QueryProfile]]; the peak
+  * is the largest single task's.
   */
 object ScaleBench {
-
-  /** Aggregated per-stage task metrics between snapshots (listener events
-    * are async — callers drain the bus via ListenerBridge before reading).
-    */
-  private final class Metrics extends SparkListener {
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
-    val peakExec = new AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peakExec.updateAndGet(p => math.max(p, m.peakExecutionMemory))
-      }
-    }
-    def reset(): Unit = {
-      shuffleRead.set(0); shuffleWrite.set(0)
-      memSpill.set(0); diskSpill.set(0); peakExec.set(0)
-    }
-  }
 
   private case class Result(
       sec: Double, shuffleReadMb: Double, shuffleWriteMb: Double,
@@ -101,7 +76,8 @@ object ScaleBench {
 
   /** Scale-path variants that the gate runs in verification form: the
     * DEFAULT (approx) profile, and the forced-shuffle CC regime sized with
-    * the data (the gate's q48 pins a fixed 50k graph).
+    * the data (the gate's q48 pins a fixed 50k graph). `scaleNodes` sizes
+    * the synthetic graphs: 10 × the scale's document count.
     */
   private def custom(scaleNodes: Long): Map[String, (SparkSession, String) => DataFrame] = Map(
     "x_profile_approx_default" -> ((s, dir) =>
@@ -158,11 +134,6 @@ object ScaleBench {
         e, "vec_id", "embedding", threshold = 0.85,
         centroids = fixedCentroids(cells, 64))
     }),
-    // IVFADC top-k at pruned settings with a FIXED codebook (training out
-    // of the timed query, same reasoning as the IVF A/B rows): the per-row
-    // cost under measure is encode + m-lookup ADC over probed cells, and
-    // it must scale linearly with corpus rows at ~zero shuffle (TakeOrdered
-    // + a k·refine-row re-score join).
     "x_distinct_exact" -> ((s, dir) => distinctExact(s, dir)),
     // distinct-count A/B at HIGH cardinality (distincts ≈ rows — the
     // distinct-URL / content-hash profiling case the KMV sketch exists
@@ -237,10 +208,6 @@ object ScaleBench {
         .select(col("doc_id"),
           graft.ops.TextStats.tokenCountUnigram(col("text"), model).as("n"))
     }),
-    // DOM-block content extraction throughput (round 11): pages
-    // synthesized around the corpus text (nav chrome + content paragraph
-    // + link footer) so the extractor sees realistic block structure at
-    // any scale. Map-only codegen'd kernel, ~linear, zero shuffle.
     // Validated-PII scrub throughput (round 12): the full composed scrub
     // (Luhn card scan + mod-97 IBAN scan + entropy-gated secrets + the
     // three regex classes) over corpus text with a Luhn-valid card planted
@@ -253,6 +220,10 @@ object ScaleBench {
             concat(col("text"), lit(" pay 4111111111111111 now"))))
             .as("n_clean")),
     ),
+    // DOM-block content extraction throughput (round 11): pages
+    // synthesized around the corpus text (nav chrome + content paragraph
+    // + link footer) so the extractor sees realistic block structure at
+    // any scale. Map-only codegen'd kernel, ~linear, zero shuffle.
     "x_html_extract" -> ((s, dir) => {
       val page = concat(
         lit("<html><head><title>t</title></head><body>" +
@@ -368,6 +339,11 @@ object ScaleBench {
         .select(col("doc_id"), length(col("text_dedup")).as("n_kept"),
           col("n_segments_removed"))
     }),
+    // IVFADC top-k at pruned settings with a FIXED codebook (training out
+    // of the timed query, same reasoning as the IVF A/B rows): the per-row
+    // cost under measure is encode + m-lookup ADC over probed cells, and
+    // it must scale linearly with corpus rows at ~zero shuffle (TakeOrdered
+    // + a k·refine-row re-score join).
     "x_pq_topk" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
@@ -432,20 +408,19 @@ object ScaleBench {
     val outFile = if (args.length > 2) args(2) else "SF1_BENCH.json"
     val onlyQs: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cpus()
     val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE").fold(cpus)(_.toInt)
     val spark = GraftSession.local(cpus, shufflePartitions)
-    val metrics = new Metrics
-    spark.sparkContext.addSparkListener(metrics)
+    val profile = QueryProfile.attach(spark.sparkContext)
 
-    def run(dir: String, nodes: Long): Seq[(String, Result)] = {
+    def run(dir: String): Seq[(String, Result)] = {
+      val nodes = 10L * spark.read.parquet(s"$dir/documents.parquet").count()
       val qs = (reused.map(n => n -> SparkEntry.queries(n)) ++ custom(nodes).toSeq)
         .filter { case (n, _) => onlyQs.isEmpty || onlyQs.contains(n) }
       qs.map { case (name, fn) =>
         def once(): Result = {
           System.gc()
-          org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-          metrics.reset()
+          profile.reset()
           val rowsObs = s"graft_scalebench_rows_${obsId.incrementAndGet()}"
           val t0 = System.nanoTime()
           val observed =
@@ -470,15 +445,15 @@ object ScaleBench {
               return Result(-1, 0, 0, 0, 0, 0)
           }
           val sec = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+          val p = profile.snapshot()
           val rowsOut = org.apache.spark.sql.graft.ColumnBridge
             .observedMetricsAll(observed).get(rowsObs)
             .map(_.getLong(0)).getOrElse(-1L)
           val trunc = graft.ops.Dedup.observedBucketStats(observed)
             .map(_._2).getOrElse(-1L)
-          def mb(l: AtomicLong) = l.get() / 1048576.0
-          Result(sec, mb(metrics.shuffleRead), mb(metrics.shuffleWrite),
-            mb(metrics.memSpill), mb(metrics.diskSpill), mb(metrics.peakExec),
+          def mb(bytes: Long) = bytes / 1048576.0
+          Result(sec, mb(p.shuffleReadBytes), mb(p.shuffleWriteBytes),
+            mb(p.memSpillBytes), mb(p.diskSpillBytes), mb(p.peakExecBytes),
             rowsOut, trunc)
         }
         once() // warm-up: JIT, codegen, parquet footers
@@ -491,12 +466,8 @@ object ScaleBench {
       }
     }
 
-    // synthetic-graph size for the CC shuffle row: base at the small scale,
-    // 10× at the big — override the base (default 50k) when rehearsing a
-    // different scale pair (e.g. SPARK_GRAFT_CC_BASE=500000 for sf1 vs sf10)
-    val ccBase = sys.env.getOrElse("SPARK_GRAFT_CC_BASE", "50000").toLong
-    val small = run(smallDir, ccBase)
-    val big = run(bigDir, ccBase * 10)
+    val small = run(smallDir)
+    val big = run(bigDir)
     val ratios = small.map(_._1).map { n =>
       val s = small.find(_._1 == n).get._2.sec
       val b = big.find(_._1 == n).get._2.sec

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-level performance settings shared by every entry point (Bench,
-  * Verify, ScaleBench, plan/probe tools, all through [[GraftSession]]), so
+  * Verify, ScaleBench and the tools, all through [[GraftSession]]), so
   * the measured configuration is the shipped one. A session built
   * elsewhere (a downstream job, another harness) should apply it too:
   * `SparkSession.builder().pipe(SessionTuning.apply)`.
@@ -29,10 +29,10 @@ import org.apache.spark.sql.SparkSession
   * eligible when R ≤ 200 and there is no map-side aggregation — at
   * production scale (R in the thousands) it never fires, so this changes
   * nothing there; it exists to stop a toy-scale pathology from dominating
-  * the local measurement. Override via SPARK_GRAFT_BYPASS_MERGE.
+  * the local measurement. A `.config` of the same key after `apply`
+  * overrides it.
   */
 object SessionTuning {
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
+    b.config("spark.shuffle.sort.bypassMergeThreshold", "1")
 }

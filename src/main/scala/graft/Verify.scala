@@ -8,7 +8,7 @@ object Verify {
     // dev convenience: SPARK_GRAFT_ONLY=q52_substring_mask,q14_textstats
     // restricts the dump to the named queries (driver sets nothing → all)
     val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = GraftSession.local(GraftSession.cpus(default = 4))
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try {

@@ -42,7 +42,7 @@ object GenScale {
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
     val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, shufflePartitions = 32)
+      graft.GraftSession.cpus(), shufflePartitions = 32)
 
     // Output parallelism is explicit: the crossJoin inherits the SOURCE's
     // read partitioning, and a driver-written sf dir can be one row group

@@ -6,10 +6,10 @@ package graft.tools
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <label> <q1,q2,...|all>
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32).
+  *      SPARK_GRAFT_CPUS (default: all cores).
   *
   * Runs each query's `prepare` hook first so fixture-backed queries plan
-  * against real inputs, and releases fixtures after, mirroring Bench.
+  * against real inputs, and releases fixtures after, through Bench's loop.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,35 +17,25 @@ object PlanDump {
       System.err.println(
         "usage: runMain graft.tools.PlanDump <outDir> <label> <q1,q2,...|all>\n" +
           "env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), " +
-          "SPARK_GRAFT_CPUS (default 32)")
+          "SPARK_GRAFT_CPUS (default: all cores)")
       sys.exit(2)
     }
     val Array(outDir, label, qlist) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = graft.SparkEntry.select(Some(qlist).filter(_ != "all"))
-    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { n =>
-      val fn = graft.SparkEntry.queries(n)
-      graft.SparkEntry.prepare.get(n).foreach { f =>
-        try f(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[plandump] prepare $n: $e") }
-      }
+    graft.Bench.eachQuery(spark, sfDir, names, "plandump") { n =>
       try {
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = graft.SparkEntry.queries(n)(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${n}_$label.txt"),
           txt.getBytes("UTF-8"))
         println(s"[plandump] wrote $outDir/${n}_$label.txt")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n failed: $e")
-      } finally {
-        try graft.SparkEntry.releaseFixture(n, sfDir)
-        catch { case _: Throwable => () }
       }
     }
     spark.stop()

@@ -26,7 +26,7 @@ object RecallBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outFile = if (args.length > 1) args(1) else "RECALL.json"
     val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, shufflePartitions = 32)
+      graft.GraftSession.cpus(), shufflePartitions = 32)
     import spark.implicits._
 
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
