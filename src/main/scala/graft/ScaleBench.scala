@@ -413,11 +413,13 @@ object ScaleBench {
     val spark = GraftSession.local(cpus, shufflePartitions)
     val profile = QueryProfile.attach(spark.sparkContext)
 
-    def run(dir: String): Seq[(String, Result)] = {
-      val nodes = 10L * spark.read.parquet(s"$dir/documents.parquet").count()
+    /** The dir's `documents.parquet` row count and its per-query results. */
+    def run(dir: String): (Long, Seq[(String, Result)]) = {
+      val docs = spark.read.parquet(s"$dir/documents.parquet").count()
+      val nodes = 10L * docs
       val qs = (reused.map(n => n -> SparkEntry.queries(n)) ++ custom(nodes).toSeq)
         .filter { case (n, _) => onlyQs.isEmpty || onlyQs.contains(n) }
-      qs.map { case (name, fn) =>
+      docs -> qs.map { case (name, fn) =>
         def once(): Result = {
           System.gc()
           profile.reset()
@@ -466,8 +468,9 @@ object ScaleBench {
       }
     }
 
-    val small = run(smallDir)
-    val big = run(bigDir)
+    val (smallDocs, small) = run(smallDir)
+    val (bigDocs, big) = run(bigDir)
+    val dataFactor = if (smallDocs > 0) bigDocs.toDouble / smallDocs else -1.0
     val ratios = small.map(_._1).map { n =>
       val s = small.find(_._1 == n).get._2.sec
       val b = big.find(_._1 == n).get._2.sec
@@ -478,8 +481,9 @@ object ScaleBench {
     val ratioJson = ratios.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
     val json =
-      s"""{"metric":"sf1_total","value":${big.map(_._2.sec).filter(_ > 0).sum},"unit":"sec",""" +
-        s""""small_dir":"$smallDir","big_dir":"$bigDir","data_factor":10,""" +
+      s"""{"metric":"big_total","value":${big.map(_._2.sec).filter(_ > 0).sum},"unit":"sec",""" +
+        s""""small_dir":"$smallDir","big_dir":"$bigDir",""" +
+        f""""data_factor":$dataFactor%.2f,""" +
         s""""small":${obj(small)},"big":${obj(big)},"time_ratio_big_over_small":$ratioJson}"""
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),

@@ -221,34 +221,6 @@ object Pipeline {
     }._1
   }
 
-  /** Driver-side artifact write with the shard commit protocol: create a
-    * dot-prefixed temp, rename into place. Rename failure with the
-    * destination absent throws (transient fs fault — don't leave the
-    * caller believing a model was written); destination present means a
-    * concurrent writer won, and this content is discarded.
-    */
-  private def writeArtifact(
-      spark: SparkSession, out: String, lines: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(out), spark.sparkContext.hadoopConfiguration)
-    val dest = new Path(out)
-    val parent = dest.getParent
-    if (parent != null) fs.mkdirs(parent)
-    val tmp = new Path(parent,
-      "." + dest.getName + ".inprogress-" + java.util.UUID.randomUUID())
-    val os = fs.create(tmp, true)
-    try os.write(lines.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    if (!fs.rename(tmp, dest)) {
-      if (fs.exists(dest)) fs.delete(tmp, false)
-      else throw new java.io.IOException(
-        s"trainTokenizer: rename $tmp -> $dest failed and the destination " +
-          "does not exist; the artifact was NOT written")
-    }
-  }
-
   /** Run a pipeline over `resolve`-provided tables. The `source` is a table
     * name for `resolve`, or an inline reader spec (`Keys.sources`).
     */
@@ -1016,9 +988,8 @@ object Pipeline {
         // user can build the vocabulary AND apply it without touching
         // Scala. EAGER (training is an action); the frame passes through
         // unchanged so tokenize can follow in the same pipeline. The
-        // artifact commits via write-temp-then-rename (the tar-shard
-        // protocol): a transient rename failure throws rather than
-        // leaving a half-written model.
+        // artifact commits through ShardCommit: a transient rename
+        // failure throws rather than leaving a half-written model.
         val (text, artifact) = (o.str("text"), o.str("out"))
         val maxWords = o.get("maxWords", 65536)
         val lines: Seq[String] = o.oneOf("kind", "bpe|unigram|wordpiece") match {
@@ -1033,7 +1004,10 @@ object Pipeline {
               vocabSize = o.need[Int]("vocabSize"), maxWords = maxWords,
               lowercase = o.get("lowercase", false))._2
         }
-        writeArtifact(df.sparkSession, artifact, lines)
+        graft.sources.ShardCommit.writeLines(
+          org.apache.hadoop.fs.FileSystem.get(new java.net.URI(artifact),
+            df.sparkSession.sparkContext.hadoopConfiguration),
+          new org.apache.hadoop.fs.Path(artifact), lines, "trainTokenizer")
         df
 
       case "fixEncoding" =>

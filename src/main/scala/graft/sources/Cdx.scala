@@ -317,9 +317,9 @@ object Cdx {
     * into gzip blocks of `linesPerBlock` lines, one member per block,
     * concatenated into `cdx-NNNNN.gz` shards with a `cdx-NNNNN.idx`
     * cluster sidecar per shard (glob `*.idx` reads the full cluster
-    * index). One range exchange, then each task streams its shard —
-    * same temp+rename commit and non-empty-dir refusal as the WARC
-    * writer. `seq` in the sidecar is the block ordinal within its shard.
+    * index). One range exchange, then each task streams its shard,
+    * committed through [[ShardCommit]] like the WARC writer. `seq` in the
+    * sidecar is the block ordinal within its shard.
     */
   def writeZipnum(
       lines: DataFrame,
@@ -339,27 +339,14 @@ object Cdx {
       .sortWithinPartitions(col("__line"))
     val conf = new org.apache.spark.util.SerializableConfiguration(
       lines.sparkSession.sparkContext.hadoopConfiguration)
-    val outPath = new Path(outDir)
-    val driverFs = FileSystem.get(new java.net.URI(outDir), conf.value)
-    if (driverFs.exists(outPath)) {
-      val existing = driverFs.listStatus(outPath)
-      if (existing.nonEmpty) {
-        if (overwrite) existing.foreach(st => driverFs.delete(st.getPath, true))
-        else throw new IllegalArgumentException(
-          s"writeZipnum: output directory $outDir is not empty " +
-            s"(${existing.length} entries); pass overwrite = true or " +
-            "choose a fresh directory")
-      }
-    }
+    ShardCommit.prepare(outDir, conf.value, overwrite, "writeZipnum")
     sorted.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.nonEmpty) {
-        val tc = TaskContext.get()
-        val pid = tc.partitionId()
-        val attempt = tc.taskAttemptId()
+        val pid = TaskContext.getPartitionId()
         val fs = FileSystem.get(new java.net.URI(outDir), conf.value)
         val shardName = f"cdx-$pid%05d.gz"
-        val tmp = new Path(outDir, f".inprogress-$attempt%d-$shardName%s")
-        val out = fs.create(tmp, true)
+        val shard = ShardCommit.open(fs, outDir, shardName)
+        val out = shard.out
         val idx = new scala.collection.mutable.ArrayBuffer[String]()
         var seq = 0
         try {
@@ -374,13 +361,7 @@ object Cdx {
             val sp2 = if (sp1 < 0) -1 else first.indexOf(' ', sp1 + 1)
             val key = if (sp2 > 0) first.substring(0, sp2) else first
             val posBefore = out.getPos
-            val shard = out
-            val gz = new GZIPOutputStream(
-              new java.io.FilterOutputStream(shard) {
-                override def write(b: Array[Byte], off: Int, len: Int): Unit =
-                  shard.write(b, off, len) // bulk passthrough (default is per-byte)
-                override def close(): Unit = {} // block boundary, not file end
-              }, 1 << 16)
+            val gz = new GZIPOutputStream(new MemberSink(out), 1 << 16)
             buf.foreach { l =>
               gz.write(l.getBytes(java.nio.charset.StandardCharsets.UTF_8))
               gz.write('\n')
@@ -396,28 +377,8 @@ object Cdx {
           }
           flush()
         } finally out.close()
-        val finalPath = new Path(outDir, shardName)
-        if (!fs.rename(tmp, finalPath)) {
-          if (fs.exists(finalPath)) fs.delete(tmp, false)
-          else throw new java.io.IOException(
-            s"writeZipnum: rename $tmp -> $finalPath failed and the " +
-              "destination does not exist; failing the task so it retries")
-        }
-        val idxName = f"cdx-$pid%05d.idx"
-        val idxTmp = new Path(outDir, f".inprogress-$attempt%d-$idxName%s")
-        val os = fs.create(idxTmp, true)
-        try os.write(idx.mkString("", "\n", "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally os.close()
-        val idxFinal = new Path(outDir, idxName)
-        if (!fs.rename(idxTmp, idxFinal)) {
-          if (fs.exists(idxFinal)) fs.delete(idxTmp, false)
-          else throw new java.io.IOException(
-            s"writeZipnum: rename $idxTmp -> $idxFinal failed and the " +
-              "destination does not exist; failing the task so the shard " +
-              "is retried, not silently unindexed")
-        }
-        ()
+        ShardCommit.commit(fs, shard.tmp, shard.dest, "writeZipnum")
+        ShardCommit.writeLines(fs, new Path(outDir, f"cdx-$pid%05d.idx"), idx, "writeZipnum")
       }
     }
   }

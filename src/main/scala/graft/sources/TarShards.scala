@@ -3,7 +3,7 @@ package graft.sources
 import java.io.ByteArrayInputStream
 
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,16 +49,8 @@ object TarShards {
     * column unique per row if the dataset is to round-trip sample-exact.
     * Null parts are skipped (a sample may lack an extension).
     *
-    * Commit protocol: each task streams its shard to an attempt-unique
-    * `.inprogress-*` temp file and renames to the final `part-*.tar` name
-    * only after the tar is finished — a speculative or retried attempt
-    * either loses the rename race (dest exists ⇒ it deletes its temp) or
-    * never renames at all, so readers only ever see complete shards. The
-    * directory-level contract stays NON-transactional (no `_SUCCESS`
-    * marker, no job-level rollback): a failed JOB can leave a renamed
-    * prefix of shards behind. To keep a re-run from silently mixing with
-    * them (deterministic part names would otherwise leave stale shards
-    * from a previous larger run), a non-empty `outDir` is refused unless
+    * Each task writes its shards through [[ShardCommit]]: readers only
+    * ever see complete shards, and a non-empty `outDir` is refused unless
     * `overwrite = true`, which clears it first.
     */
   def writeTarShards(
@@ -76,53 +68,26 @@ object TarShards {
       col(keyCol).cast("string").as("__key") +: parts.map { case (e, c) => c.cast("binary").as(s"__p_$e") }: _*)
     val conf = new SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
-    // refuse-or-clear BEFORE any task writes: stale part-*.tar from a
-    // previous larger run would otherwise survive next to this run's
-    // output and readTarShards would emit stale/duplicate samples
-    val driverFs = FileSystem.get(new java.net.URI(outDir), conf.value)
-    val outPath = new Path(outDir)
-    if (driverFs.exists(outPath)) {
-      val existing = driverFs.listStatus(outPath)
-      if (existing.nonEmpty) {
-        if (overwrite) existing.foreach(st => driverFs.delete(st.getPath, true))
-        else throw new IllegalArgumentException(
-          s"writeTarShards: output directory $outDir is not empty " +
-            s"(${existing.length} entries, e.g. ${existing.head.getPath.getName}); " +
-            "pass overwrite = true to clear it, or choose a fresh directory")
-      }
-    }
+    // stale part-*.tar from a previous larger run would otherwise
+    // survive next to this run's output and readTarShards would emit
+    // stale/duplicate samples
+    ShardCommit.prepare(outDir, conf.value, overwrite, "writeTarShards")
     projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.nonEmpty) {
-        val tc = TaskContext.get()
-        val pid = tc.partitionId()
-        val attempt = tc.taskAttemptId()
+        val pid = TaskContext.getPartitionId()
         val fs = FileSystem.get(new java.net.URI(outDir), conf.value)
         var shardNo = 0
         var inShard = 0
         var out: TarArchiveOutputStream = null
-        var tmpPath: Path = null
+        var shard: ShardCommit.Temp = null
         def open(): Unit = {
-          tmpPath = new Path(outDir,
-            f".inprogress-$attempt%d-part-$pid%05d-$shardNo%04d.tar")
-          out = new TarArchiveOutputStream(fs.create(tmpPath, true))
+          shard = ShardCommit.open(fs, outDir, f"part-$pid%05d-$shardNo%04d.tar")
+          out = new TarArchiveOutputStream(shard.out)
           out.setLongFileMode(TarArchiveOutputStream.LONGFILE_POSIX)
         }
         def close(): Unit = if (out != null) {
           out.finish(); out.close(); out = null
-          val finalPath = new Path(outDir, f"part-$pid%05d-$shardNo%04d.tar")
-          // first completed attempt wins; a losing speculative attempt
-          // finds dest occupied and discards its temp. A rename failure
-          // with NO destination is a transient fs fault, not a lost race —
-          // fail the task so it retries instead of silently dropping the
-          // shard
-          if (!fs.rename(tmpPath, finalPath)) {
-            if (fs.exists(finalPath)) fs.delete(tmpPath, false)
-            else throw new java.io.IOException(
-              s"writeTarShards: rename $tmpPath -> $finalPath failed and " +
-                "the destination does not exist; failing the task so it " +
-                "retries instead of dropping the shard")
-          }
-          tmpPath = null
+          ShardCommit.commit(fs, shard.tmp, shard.dest, "writeTarShards")
         }
         open()
         rows.foreach { r =>

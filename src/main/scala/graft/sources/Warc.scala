@@ -34,9 +34,9 @@ import org.apache.spark.util.SerializableConfiguration
   *     Per-record memory is bounded by `maxPayloadBytes`: larger payloads
   *     are truncated (flagged in the `truncated` column), never buffered.
   *   - WRITE: one `.warc.gz` per task (rolled every `maxRecordsPerShard`),
-  *     record-per-gzip-member, streamed to the Hadoop filesystem with the
-  *     attempt-unique-temp + rename-on-finish commit protocol and the
-  *     non-empty-dir refusal (same contract as [[TarShards.writeTarShards]]).
+  *     record-per-gzip-member, streamed to the Hadoop filesystem and
+  *     committed through [[ShardCommit]] (attempt-unique temp, rename on
+  *     finish, non-empty-dir refusal).
   */
 object Warc {
 
@@ -1548,8 +1548,8 @@ object Warc {
     * [[writeWetConversions]]: one `.warc.gz`/`.warc.zst` per task (rolled
     * every `maxRecordsPerShard`), member-per-record framing in all codecs
     * (gzip members per the WARC spec's recommendation, concatenated zstd
-    * frames for `.warc.zst`), attempt-unique-temp + rename-on-finish
-    * commit, non-empty-dir refusal. `zstd-dict` additionally trains a
+    * frames for `.warc.zst`), committed through [[ShardCommit]] (`.cdxj`
+    * sidecars too). `zstd-dict` additionally trains a
     * PER-SHARD dictionary on the shard's first records and emits it in
     * the iipc 0x184D2A5D skippable frame — member-per-record framing
     * compresses each small record in isolation, which is exactly where a
@@ -1594,71 +1594,32 @@ object Warc {
       else ".warc.gz"
     val conf = new SerializableConfiguration(
       projected.sparkSession.sparkContext.hadoopConfiguration)
-    val driverFs = FileSystem.get(new java.net.URI(outDir), conf.value)
-    val outPath = new Path(outDir)
-    if (driverFs.exists(outPath)) {
-      val existing = driverFs.listStatus(outPath)
-      if (existing.nonEmpty) {
-        if (overwrite) existing.foreach(st => driverFs.delete(st.getPath, true))
-        else throw new IllegalArgumentException(
-          s"$errName: output directory $outDir is not empty " +
-            s"(${existing.length} entries, e.g. ${existing.head.getPath.getName}); " +
-            "pass overwrite = true to clear it, or choose a fresh directory")
-      }
-    }
+    ShardCommit.prepare(outDir, conf.value, overwrite, errName)
     projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.nonEmpty) {
-        val tc = TaskContext.get()
-        val pid = tc.partitionId()
-        val attempt = tc.taskAttemptId()
+        val pid = TaskContext.getPartitionId()
         val fs = FileSystem.get(new java.net.URI(outDir), conf.value)
         var shardNo = 0
         var inShard = 0
         var out: org.apache.hadoop.fs.FSDataOutputStream = null
-        var tmpPath: Path = null
+        var shard: ShardCommit.Temp = null
         def open(): Unit = {
-          tmpPath = new Path(outDir,
-            f".inprogress-$attempt%d-part-$pid%05d-$shardNo%04d$ext")
-          out = fs.create(tmpPath, true)
+          shard = ShardCommit.open(fs, outDir, f"part-$pid%05d-$shardNo%04d$ext")
+          out = shard.out
         }
         val idxEntries: scala.collection.mutable.ArrayBuffer[String => String] =
           if (indexFor.isDefined) new scala.collection.mutable.ArrayBuffer()
           else null
         def close(): Unit = if (out != null) {
           out.close(); out = null
-          val finalName = f"part-$pid%05d-$shardNo%04d$ext"
-          val finalPath = new Path(outDir, finalName)
-          if (!fs.rename(tmpPath, finalPath)) {
-            // discard the temp ONLY for a lost speculative race (dest
-            // already complete); a transient rename failure must FAIL the
-            // task so it retries — silently deleting here would lose up
-            // to maxRecordsPerShard records with a green job status
-            if (fs.exists(finalPath)) fs.delete(tmpPath, false)
-            else throw new java.io.IOException(
-              s"$errName: rename $tmpPath -> $finalPath failed " +
-                "and the destination does not exist; failing the task so " +
-                "it retries instead of dropping the shard")
-          }
-          tmpPath = null
+          ShardCommit.commit(fs, shard.tmp, shard.dest, errName)
           if (idxEntries != null && idxEntries.nonEmpty) {
-            // sidecar: same temp+rename commit; named part-…-….cdxj so the
-            // readers' "*.warc*" glob never sees it
-            val base = finalName.stripSuffix(ext)
-            val idxTmp = new Path(outDir,
-              f".inprogress-$attempt%d-$base%s.cdxj")
-            val os = fs.create(idxTmp, true)
-            try os.write(idxEntries.iterator.map(_(finalName))
-              .mkString("", "\n", "\n")
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally os.close()
-            val idxFinal = new Path(outDir, base + ".cdxj")
-            if (!fs.rename(idxTmp, idxFinal)) {
-              if (fs.exists(idxFinal)) fs.delete(idxTmp, false)
-              else throw new java.io.IOException(
-                s"$errName: rename $idxTmp -> $idxFinal failed and the " +
-                  "destination does not exist; failing the task so the " +
-                  "shard (and its index) is retried, not silently unindexed")
-            }
+            // sidecar named part-…-….cdxj so the readers' "*.warc*" glob
+            // never sees it
+            val finalName = shard.dest.getName
+            ShardCommit.writeLines(fs,
+              new Path(outDir, finalName.stripSuffix(ext) + ".cdxj"),
+              idxEntries.iterator.map(_(finalName)), errName)
             idxEntries.clear()
           }
         }
@@ -1686,14 +1647,9 @@ object Warc {
           // "none": the record bytes ARE the member (plain .warc —
           // offsets then bracket raw record extents).
           val posBefore = out.getPos
-          val shard = out
-          if (codec == "none") shard.write(bytes)
+          if (codec == "none") out.write(bytes)
           else {
-            val noClose = new java.io.FilterOutputStream(shard) {
-              override def write(b: Array[Byte], off: Int, len: Int): Unit =
-                shard.write(b, off, len) // bulk passthrough (default is per-byte)
-              override def close(): Unit = {} // member boundary, not file end
-            }
+            val noClose = new MemberSink(out)
             val member: java.io.OutputStream =
               if (codec.startsWith("zstd")) {
                 val z = new com.github.luben.zstd.ZstdOutputStreamNoFinalizer(noClose)

@@ -10,8 +10,19 @@ package graft.tools
   *
   * Runs each query's `prepare` hook first so fixture-backed queries plan
   * against real inputs, and releases fixtures after, through Bench's loop.
+  * Scratch paths are written with fixed tokens for the process id and
+  * the streaming fixtures' run tag, so two dumps of one plan differ only
+  * in plan and expression ids.
   */
 object PlanDump {
+
+  /** `plan` with this process's id (the `_<pid>` suffix of driver scratch
+    * dirs) and the `sink_`/`ckpt_` run tags replaced by fixed tokens.
+    */
+  private def stable(plan: String): String =
+    plan.replaceAll(s"_${ProcessHandle.current().pid()}(?![0-9])", "_<pid>")
+      .replaceAll("\\b(sink|ckpt)_[0-9a-f]+", "$1_<run>")
+
   def main(args: Array[String]): Unit = {
     if (args.length != 3) {
       System.err.println(
@@ -32,7 +43,7 @@ object PlanDump {
           .explainString(org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${n}_$label.txt"),
-          txt.getBytes("UTF-8"))
+          stable(txt).getBytes("UTF-8"))
         println(s"[plandump] wrote $outDir/${n}_$label.txt")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n failed: $e")

@@ -113,6 +113,15 @@ class TarShardsSpec extends SparkTestBase {
     }
     assert(e.getCause != null &&
       e.getCause.getMessage.contains("cannot round-trip"))
+    // the failed attempt deleted its temp, so no shard was committed and
+    // nothing is left to refuse a re-run into the same dir
+    val leftover = new java.io.File(dir).listFiles
+      .filter(_.getName.contains(".inprogress"))
+    assert(leftover.isEmpty, leftover.map(_.getName).mkString(", "))
+    TarShards.writeTarShards(Seq(("good", "y")).toDF("k", "txt"), dir, "k",
+      Seq("txt" -> col("txt")))
+    assert(TarShards.readTarShards(spark, dir).select(col("key")).as[String]
+      .collect().toSeq == Seq("good"))
   }
 
   test("non-empty output dir is refused; overwrite=true clears stale shards") {
